@@ -3,7 +3,6 @@ package graft
 import graft.analysis.Analyzers
 import graft.build.IndexBuilder
 import graft.corpus.{DocIds, TranscriptGen}
-import org.apache.spark.sql.SparkSession
 
 /** One timed index build in a FRESH JVM (spawned by [[Bench]]).
   *
@@ -39,62 +38,6 @@ object BenchBuild {
       case _ => -1.0
     }
 
-  /** Per-job wall/gap/task-time decomposition of the timed build
-    * (GRAFT_BUILD_PROFILE=1). Gaps between jobs are driver-serial time
-    * (planning, codegen, parquet commitJob, collects) — exactly the
-    * Amdahl floor the scaling pair exposes at 32 cores. */
-  private final class JobProfiler extends org.apache.spark.scheduler.SparkListener {
-    final case class JobRec(id: Int, desc: String, start: Long, var end: Long,
-                            var tasks: Int, var taskMs: Long, var gcMs: Long = 0L,
-                            var cpuMs: Long = 0L)
-    val jobs = new scala.collection.mutable.ArrayBuffer[JobRec]
-    private val byId = new scala.collection.mutable.HashMap[Int, JobRec]
-    private val stageToJob = new scala.collection.mutable.HashMap[Int, JobRec]
-    override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-      synchronized {
-        val desc = Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .orElse(Option(e.properties)
-            .flatMap(p => Option(p.getProperty("callSite.short"))))
-          .getOrElse("?")
-        val r = JobRec(e.jobId, desc.take(80), e.time, e.time, 0, 0L)
-        jobs += r; byId(e.jobId) = r
-        e.stageIds.foreach(stageToJob(_) = r)
-      }
-    override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
-      synchronized { byId.get(e.jobId).foreach(_.end = e.time) }
-    override def onStageCompleted(
-        e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-      synchronized {
-        stageToJob.get(e.stageInfo.stageId).foreach { r =>
-          r.tasks += e.stageInfo.numTasks
-          r.taskMs += e.stageInfo.taskMetrics.executorRunTime
-          r.gcMs += e.stageInfo.taskMetrics.jvmGCTime
-          r.cpuMs += e.stageInfo.taskMetrics.executorCpuTime / 1000000
-        }
-      }
-    def report(t0Nanos: Long, wallSecs: Double, cores: Int): Unit = synchronized {
-      val t0Ms = System.currentTimeMillis() - ((System.nanoTime() - t0Nanos) / 1000000)
-      var prevEnd = t0Ms
-      var jobWall = 0.0
-      jobs.sortBy(_.start).foreach { r =>
-        val gap = (r.start - prevEnd) / 1000.0
-        val wall = (r.end - r.start) / 1000.0
-        jobWall += wall
-        val par = if (wall > 0) r.taskMs / 1000.0 / wall else 0.0
-        System.err.println(
-          f"PROF job=${r.id}%3d gap=${gap}%6.2f wall=${wall}%6.2f " +
-          f"taskSum=${r.taskMs / 1000.0}%7.1f cpu=${r.cpuMs / 1000.0}%7.1f " +
-          f"gc=${r.gcMs / 1000.0}%6.1f par=${par}%5.1f/$cores tasks=${r.tasks}%4d ${r.desc}")
-        prevEnd = math.max(prevEnd, r.end)
-      }
-      val tail = wallSecs - (prevEnd - t0Ms) / 1000.0
-      System.err.println(
-        f"PROF total=${wallSecs}%.2f jobWall=${jobWall}%.2f " +
-        f"gaps=${wallSecs - jobWall}%.2f tailAfterLastJob=${tail}%.2f")
-    }
-  }
-
   def main(args: Array[String]): Unit = {
     val cores = args(0).toInt
     val numConvs = args(1).toLong
@@ -102,33 +45,24 @@ object BenchBuild {
     val warmConvs = args(3).toLong
     val localDir = args(4)
 
-    // tasks-per-core multiplier for every stage of the build: 2 gives a
-    // straggler half a wave of exposure at the stage tail; the knob is
-    // overridable for tail experiments (GRAFT_BUILD_TPC)
-    val tasksPerCore = sys.env.getOrElse("GRAFT_BUILD_TPC", "2").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(s"graft-bench-build-$cores")
-      .config("spark.sql.shuffle.partitions", cores * tasksPerCore)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.host", "127.0.0.1")
-      .config("spark.local.dir", localDir)
-      // Execution memory off-heap: the postings sort/parquet stage's
-      // sorter pages are task-lifetime objects that G1 keeps evacuating
-      // and ParallelGC keeps survivor-copying (measured 185 s GC @8 /
-      // 1,835 core-s GC @32 in one window); off-heap removes them from
-      // the GC entirely (same stage, same weather: 0.2–6 s GC).
-      .config("spark.memory.offHeap.enabled", "true")
-      .config("spark.memory.offHeap.size", "16g")
-      // AQE partition coalescing folds the volume-sized postings
-      // exchange back to ≤ core-count partitions (64→32 at 32 cores,
-      // 16→9 at 8), turning the sort/write reduce into a single
-      // straggler-exposed wave; the explicit partition count IS the
-      // tail-hiding choice, so keep it.
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // two tasks per core for every stage of the build: a straggler gets
+    // half a wave of exposure at the stage tail
+    val spark = LocalSpark.session(cores, s"graft-bench-build-$cores",
+      shufflePartitions = cores * 2, extra = Seq(
+        "spark.local.dir" -> localDir,
+        // Execution memory off-heap: the postings sort/parquet stage's
+        // sorter pages are task-lifetime objects that G1 keeps evacuating
+        // and ParallelGC keeps survivor-copying (measured 185 s GC @8 /
+        // 1,835 core-s GC @32 in one window); off-heap removes them from
+        // the GC entirely (same stage, same weather: 0.2–6 s GC).
+        "spark.memory.offHeap.enabled" -> "true",
+        "spark.memory.offHeap.size" -> "16g",
+        // AQE partition coalescing folds the volume-sized postings
+        // exchange back to ≤ core-count partitions (64→32 at 32 cores,
+        // 16→9 at 8), turning the sort/write reduce into a single
+        // straggler-exposed wave; the explicit partition count IS the
+        // tail-hiding choice, so keep it.
+        "spark.sql.adaptive.coalescePartitions.enabled" -> "false"))
     try {
       if (warmConvs > 0) {
         val warmTurns = TranscriptGen.generate(spark, warmConvs)
@@ -145,13 +79,6 @@ object BenchBuild {
       val nTurns = turns.count()
       System.gc()
 
-      val profiler =
-        if (sys.env.get("GRAFT_BUILD_PROFILE").contains("1")) {
-          val p = new JobProfiler
-          spark.sparkContext.addSparkListener(p)
-          Some(p)
-        } else None
-
       val steal0 = stealJiffies(); val cpu0 = processCpuSecs()
       val t0 = System.nanoTime()
       // assignLazy: turns is cached above, so id materialization fuses
@@ -160,7 +87,6 @@ object BenchBuild {
         DocIds.assignLazy(turns.toDF(), Seq("conv_id", "turn_idx")),
         Analyzers.Icat, outDir, hotDfThreshold = 10000L, writeCorpus = false)
       val secs = (System.nanoTime() - t0) / 1e9
-      profiler.foreach(_.report(t0, secs, cores))
       val stealC = (stealJiffies() - steal0) / 100.0 / secs
       val deliv = if (cpu0 < 0) -1.0 else (processCpuSecs() - cpu0) / secs
 

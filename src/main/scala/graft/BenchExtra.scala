@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Round-6 optimization measurement harness — SEPARATE from the frozen
   * graft.Bench (driver contract). Nothing here feeds the driver's
   * artifacts; it exists so optimization work can time individual pieces
@@ -28,19 +26,6 @@ object BenchExtra {
     (r, (System.nanoTime() - t0) / 1e9)
   }
 
-  private def session(cores: Int): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName("graft-bench-extra")
-      .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.host", "127.0.0.1")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
-
   def main(args: Array[String]): Unit = {
     val mode = args.headOption.getOrElse("gates")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
@@ -48,7 +33,7 @@ object BenchExtra {
       case "gates" =>
         val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
         val only = args.drop(2).toSet
-        val spark = session(cpus)
+        val spark = LocalSpark.session(cpus, "graft-bench-extra")
         // same one-time index warms as Bench's gate section
         Seq("ann_lsh", "bm25_term", "bm25_wand").foreach { n =>
           try { SparkEntry.queries(n)(spark, sfDir).count(); () }
@@ -78,7 +63,7 @@ object BenchExtra {
         val sfDir = args.lift(2).getOrElse("/root/testdata/sf0.1")
         val only = args.drop(3).toSet
         java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-        val spark = session(cpus)
+        val spark = LocalSpark.session(cpus, "graft-bench-extra")
         SparkEntry.queries.toSeq.sortBy(_._1)
           .filter { case (n, _) => only.isEmpty || only.contains(n) }
           .foreach { case (name, fn) =>
@@ -99,7 +84,7 @@ object BenchExtra {
         // query actually spends its time at local[32]
         val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
         val names = args.drop(2).toSeq
-        val spark = session(cpus)
+        val spark = LocalSpark.session(cpus, "graft-bench-extra")
         Seq("ann_lsh", "bm25_term", "bm25_wand").foreach { n =>
           try { SparkEntry.queries(n)(spark, sfDir).count(); () }
           catch { case _: Throwable => () }
@@ -153,7 +138,7 @@ object BenchExtra {
 
       case "gen" =>
         val numConvs = args.lift(1).map(_.toLong).getOrElse(24000L)
-        val spark = session(cpus)
+        val spark = LocalSpark.session(cpus, "graft-bench-extra")
         import spark.implicits._
         // cold + warm generation timing (count materializes every row)
         (1 to 2).foreach { pass =>

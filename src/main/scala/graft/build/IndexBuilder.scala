@@ -97,29 +97,34 @@ object IndexBuilder {
     */
   def build(corpusWithIds: DataFrame, analyzer: TextAnalyzer,
             withPositions: Boolean = false): Index = {
-    // persist: stats, termStats, save and every query reuse this table —
-    // without it the analyze DAG re-runs per downstream action. (For
-    // at-scale builds use buildAndSave, which streams postings to storage
-    // instead of caching them.)
-    val postings = analyzedPostings(corpusWithIds, analyzer,
-        withPositions = withPositions)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-    val termStats = postings
-      .groupBy(col("term"))
-      .agg(count(lit(1)).as("df"), sum(col("tf")).as("cf"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-    val stats = computeStats(postings)
-    Index(corpusWithIds, postings, termStats, stats, analyzer.name)
+    // fromPostings persists the postings: stats, termStats, save and every
+    // query reuse them — without it the analyze DAG re-runs per
+    // downstream action. (For at-scale builds use buildAndSave, which
+    // streams postings to storage instead of caching them.)
+    fromPostings(corpusWithIds,
+      analyzedPostings(corpusWithIds, analyzer, withPositions = withPositions),
+      analyzer.name)
   }
 
-  private def computeStats(postings: DataFrame): CorpusStats = {
+  /** The cached Index over a postings frame: persists `postings` and its
+    * per-term stats table (term, df, cf) MEMORY_AND_DISK, then derives the
+    * global stats in one collect — the action that materializes the
+    * postings cache, so a caller replacing an older generation can drop
+    * that generation's caches once this returns. Shared by the in-memory
+    * build, every Maintenance mutation and streaming compaction. */
+  private[graft] def fromPostings(corpus: DataFrame, postings: DataFrame,
+                                  analyzerName: String): Index = {
+    postings.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val termStats = postings.groupBy(col("term"))
+      .agg(count(lit(1)).as("df"), sum(col("tf")).as("cf"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val row = postings
       .agg(countDistinct(col("docId")).as("docCount"), sum(col("tf")).as("sttf"))
       .collect()(0)
-    if (row.isNullAt(0) || row.isNullAt(1)) CorpusStats(0L, 0L)
-    else CorpusStats(row.getLong(0), row.getLong(1))
+    val stats =
+      if (row.isNullAt(0) || row.isNullAt(1)) CorpusStats(0L, 0L)
+      else CorpusStats(row.getLong(0), row.getLong(1))
+    Index(corpus, postings, termStats, stats, analyzerName)
   }
 
   /** Analyzed narrow projection: one finished posting row per (doc, term)
@@ -241,12 +246,6 @@ object IndexBuilder {
                    saltBuckets: Int = 16, writeCorpus: Boolean = true,
                    sampleRate: Int = 100, withPositions: Boolean = false): Index = {
     val spark = corpusWithIds.sparkSession
-    // driver-phase wall timestamps (GRAFT_BUILD_PROFILE=1): splits the
-    // build's serial floor into its driver legs for the scaling work
-    val profT0 = System.nanoTime()
-    def prof(tag: String): Unit =
-      if (sys.env.get("GRAFT_BUILD_PROFILE").contains("1"))
-        System.err.println(f"PROFPH ${(System.nanoTime() - profT0) / 1e9}%7.2f $tag")
 
     // heavy-hitter + volume estimate from one deterministic doc sample —
     // ONE job: the posting-row count (volume estimate) rides the same
@@ -260,7 +259,6 @@ object IndexBuilder {
       .groupBy("term").agg(count(lit(1)).as("sdf"))
       .filter(col("sdf") * sampleRate >= hotDfThreshold)
       .select("term").collect().map(_.getString(0)).toSet
-    prof("hot_terms_collected")
     val estPostings = obsLong(sampleObs, "rows", 0L) * sampleRate
     val bHot = spark.sparkContext.broadcast(hotTerms)
     val isHot = udf((t: String) => bHot.value.contains(t))
@@ -303,7 +301,6 @@ object IndexBuilder {
       .drop("_salt")
       .sortWithinPartitions("term", "docId")
       .write.mode("overwrite").parquet(s"$dir/postings")
-    prof("postings_written")
     val sttf = obsLong(buildObs, "sttf", 0L)
     val emptyDocs = obsLong(buildObs, "emptyDocs", 0L)
 
@@ -320,20 +317,14 @@ object IndexBuilder {
       // no extra exchange — the groupBy's own partitioning is kept
       .sortWithinPartitions("term")
       .write.mode("overwrite").parquet(s"$dir/termstats")
-    prof("termstats_written")
     // docCount needs only the corpus row count (cached by DocIds.assign)
     val docCount = corpusWithIds.count() - emptyDocs
     val stats =
       if (docCount == 0L) CorpusStats(0L, 0L) else CorpusStats(docCount, sttf)
     if (writeCorpus) corpusWithIds.write.mode("overwrite").parquet(s"$dir/corpus")
 
-    val meta =
-      s"""{"analyzer":"${analyzer.name}","docCount":${stats.docCount},""" +
-        s""""sumTotalTermFreq":${stats.sumTotalTermFreq},"segSize":${Segments.DefaultSegSize},""" +
-        s""""hasSegments":false,"version":1}"""
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/meta.json"), meta)
+    writeMeta(dir, analyzer.name, stats, Segments.DefaultSegSize, hasSegments = false)
 
-    prof("done")
     Index(corpusWithIds, postings, spark.read.parquet(s"$dir/termstats"),
       stats, analyzer.name)
   }
@@ -376,10 +367,17 @@ object IndexBuilder {
     if (writeSegments)
       Segments.save(Segments.pack(index.postings, index.stats, segSize), s"$dir/segments", n)
 
+    writeMeta(dir, index.analyzerName, index.stats, segSize, writeSegments)
+  }
+
+  /** The index's `meta.json`: analyzer, global stats and segment layout,
+    * read back by [[load]]. */
+  private def writeMeta(dir: String, analyzerName: String, stats: CorpusStats,
+                        segSize: Int, hasSegments: Boolean): Unit = {
     val meta =
-      s"""{"analyzer":"${index.analyzerName}","docCount":${index.stats.docCount},""" +
-        s""""sumTotalTermFreq":${index.stats.sumTotalTermFreq},"segSize":$segSize,""" +
-        s""""hasSegments":$writeSegments,"version":1}"""
+      s"""{"analyzer":"$analyzerName","docCount":${stats.docCount},""" +
+        s""""sumTotalTermFreq":${stats.sumTotalTermFreq},"segSize":$segSize,""" +
+        s""""hasSegments":$hasSegments,"version":1}"""
     java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/meta.json"), meta)
   }
 

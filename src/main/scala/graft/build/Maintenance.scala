@@ -28,7 +28,6 @@ object Maintenance {
     val ids = docIds.toDF("docId")
     val corpus = index.corpus.join(broadcast(ids), Seq("docId"), "left_anti")
     val postings = index.postings.join(broadcast(ids), Seq("docId"), "left_anti")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     rebuild(index, corpus, postings, unpersistOld)
   }
 
@@ -48,7 +47,6 @@ object Maintenance {
     val delta = IndexBuilder.build(newCorpus, analyzer, index.hasPositions)
     val corpus = index.corpus.unionByName(newCorpus)
     val postings = index.postings.unionByName(delta.postings)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val out = rebuild(index, corpus, postings, unpersistOld)
     // the merged postings cache is materialized by rebuild's stats action;
     // the delta's own caches are now redundant intermediates
@@ -65,7 +63,6 @@ object Maintenance {
     val delta = IndexBuilder.build(updated, analyzer, index.hasPositions)
     val corpus = corpusKept.unionByName(updated)
     val postings = postingsKept.unionByName(delta.postings)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val out = rebuild(index, corpus, postings)
     delta.unpersistAll(includeCorpus = false)
     out
@@ -124,14 +121,9 @@ object Maintenance {
     * predecessor (original cache-hygiene semantics). */
   private def rebuild(old: Index, corpus: DataFrame, postings: DataFrame,
                       unpersistOld: Boolean = true): Index = {
-    val termStats = postings.groupBy(col("term"))
-      .agg(count(lit(1)).as("df"), sum(col("tf")).as("cf"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // this action materializes the NEW postings cache (the scan below
-    // writes its blocks), so the predecessor's cache can be dropped next
-    val row = postings
-      .agg(countDistinct(col("docId")).as("docCount"), sum(col("tf")).as("sttf"))
-      .collect()(0)
+    // fromPostings' stats action materializes the NEW postings cache (the
+    // scan writes its blocks), so the predecessor's cache can be dropped next
+    val out = IndexBuilder.fromPostings(corpus, postings, old.analyzerName)
     // cache hygiene: a mutation SUPERSEDES `old` — without this, a chain
     // of N updates pins N index generations in executor storage. The old
     // bundle stays queryable (its tables recompute from lineage), just
@@ -140,9 +132,6 @@ object Maintenance {
       old.postings.unpersist()
       old.termStats.unpersist()
     }
-    val stats =
-      if (row.isNullAt(0) || row.isNullAt(1)) CorpusStats(0L, 0L)
-      else CorpusStats(row.getLong(0), row.getLong(1))
-    Index(corpus, postings, termStats, stats, old.analyzerName)
+    out
   }
 }

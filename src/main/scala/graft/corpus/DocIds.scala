@@ -85,7 +85,7 @@ object DocIds {
     * materializes its physical plan once — executing it after a cache
     * drop/re-persist silently recomputes every partition from lineage
     * (measured: a 2 s cached key scan ballooning to a 40 s full
-    * regeneration inside ProfilePhases). A narrow projection preserves
+    * regeneration in a per-phase build profile). A narrow projection preserves
     * partition indices, so pids stay aligned with [[mint]]'s scan. */
   private def scanOrder(df: DataFrame, orderCols: Seq[String]): Array[PartOrder] = {
     val keyed = df.select(orderCols.map(col): _*)

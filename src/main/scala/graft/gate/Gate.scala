@@ -3,7 +3,7 @@ package graft.gate
 import graft.analysis.Analyzers
 import graft.build.{Index, IndexBuilder, Segments, SmallFloat}
 import graft.model._
-import graft.score.{Bm25, QueryExec, Wand}
+import graft.score.{QueryExec, Wand}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -662,12 +662,8 @@ object Gate {
       (s, d) => {
         // the block-max WAND segment kernel, exact-score mode: must equal
         // the flat OR query (same oracle SQL as bm25_or)
-        val (idx, _) = gate(s, d)
-        val terms = Seq("spark", "merge")
-        val dfm = idx.termStats.filter(col("term").isin(terms: _*))
-          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-        val idf = terms.flatMap(t => dfm.get(t).map(df =>
-          t -> Bm25.idf(idx.stats.docCount, df))).toMap
+        val (idx, exec) = gate(s, d)
+        val idf = exec.termIdf(Seq("spark", "merge"))
         Wand.topK(gateSegments(s, d), idx.stats, idf, 20, GateSegSize, exact = true)
           .select(col("docId").as("doc_id"), round(col("score"), 4).as("score"))
       },

@@ -94,23 +94,28 @@ final class QueryExec(val index: Index, val exact: Boolean = false) {
     out
   }
 
+  /** Global (double) idf of each of `terms` the index holds; absent terms
+    * have no entry. df is read from the termStats table in ONE pushed-down
+    * `isin` scan collected to the driver (query terms are few, mirroring
+    * Lucene reading per-term stats at query-plan time). */
+  private[graft] def termIdf(terms: Seq[String]): Map[String, Double] = {
+    val distinct = terms.distinct
+    val dfMap: Map[String, Long] = index.termStats
+      .filter(col("term").isin(distinct: _*))
+      .select("term", "df").as[(String, Long)].collect().toMap
+    distinct.flatMap(t => dfMap.get(t).map(df =>
+      t -> Bm25.idf(index.stats.docCount, df))).toMap
+  }
+
   /** Broadcast frame of (term, groupId, weightF) for the query's terms.
-    * df is read from the termStats table (collected: query terms are few,
-    * mirroring Lucene reading per-term stats at query-plan time). The
-    * per-term weight folds the clause boost in exactly Lucene's float op
-    * order: weight = boost × (float)idf (BM25Similarity.scorer receives
+    * The per-term weight folds the clause boost in exactly Lucene's float
+    * op order: weight = boost × (float)idf (BM25Similarity.scorer receives
     * the propagated boost); the exact/double path mirrors it so the
     * DuckDB oracle can replay `boost * ln(…)` literally. */
   private def weightsFrame(termGroups: Seq[(String, Int, Float)]): DataFrame = {
-    val terms = termGroups.map(_._1).distinct
-    val dfMap: Map[String, Long] = index.termStats
-      .filter(col("term").isin(terms: _*))
-      .select("term", "df").as[(String, Long)].collect().toMap
+    val idf = termIdf(termGroups.map(_._1))
     val rows = termGroups.flatMap { case (t, g, b) =>
-      dfMap.get(t).map { df =>
-        val idfD = Bm25.idf(index.stats.docCount, df)
-        (t, g, b * idfD.toFloat, b.toDouble * idfD)
-      }
+      idf.get(t).map(idfD => (t, g, b * idfD.toFloat, b.toDouble * idfD))
     }
     spark.createDataFrame(rows).toDF("term", "groupId", "weightF", "weightD")
   }
@@ -296,20 +301,15 @@ final class QueryExec(val index: Index, val exact: Boolean = false) {
     val slotTerms: Seq[(String, Int, Int)] = p.slots.zipWithIndex.flatMap {
       case ((pos, ts), i) => ts.map(t => (t, i, pos))
     }
-    val distinctTerms = slotTerms.map(_._1).distinct
-    val dfMap: Map[String, Long] = index.termStats
-      .filter(col("term").isin(distinctTerms: _*))
-      .select("term", "df").as[(String, Long)].collect().toMap
+    val idf = termIdf(slotTerms.map(_._1))
     // weight: per (slot, term) occurrence with index presence (a missing
     // term contributes nothing — its scorer would be null in Lucene)
-    val sumIdfD = slotTerms.iterator
-      .flatMap { case (t, _, _) => dfMap.get(t) }
-      .map(df => Bm25.idf(index.stats.docCount, df)).sum
+    val sumIdfD = slotTerms.iterator.flatMap { case (t, _, _) => idf.get(t) }.sum
     val nSlots = p.slots.size
     // a slot whose terms are ALL absent can never match — short-circuit
     val slotsAlive = slotTerms.groupBy(_._2).values
-      .forall(_.exists { case (t, _, _) => dfMap.contains(t) })
-    if (!slotsAlive || dfMap.isEmpty) return matches(MatchNone, filters)
+      .forall(_.exists { case (t, _, _) => idf.contains(t) })
+    if (!slotsAlive || idf.isEmpty) return matches(MatchNone, filters)
 
     val freq =
       if (p.slop > 0) phraseFreqSloppy(p, filters)
@@ -536,10 +536,7 @@ final class QueryExec(val index: Index, val exact: Boolean = false) {
     // cursor route to the block-max WAND kernel when segments exist
     if (after.isEmpty && filters.isEmpty && index.segments.isDefined) {
       pureShouldTerms(q).foreach { terms =>
-        val dfm = index.termStats.filter(col("term").isin(terms: _*))
-          .select("term", "df").as[(String, Long)].collect().toMap
-        val idf = terms.flatMap(t => dfm.get(t).map(d =>
-          t -> Bm25.idf(index.stats.docCount, d))).toMap
+        val idf = termIdf(terms)
         if (idf.isEmpty)
           return matches(MatchNone).orderBy(col("score").desc, col("docId").asc)
         return Wand.topK(index.segments.get, index.stats, idf, k,

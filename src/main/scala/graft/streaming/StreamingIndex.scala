@@ -117,17 +117,7 @@ object StreamingIndex {
       .join(mapping, Seq("conv_id", "turn_idx"))
       .select(Seq(col("__denseId").as("docId"), col("norm"), col("term"),
         col("tf")) ++ posCols ++ Seq(col("role"), col("tool"), col("ts")): _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val termStats = postings.groupBy(col("term"))
-      .agg(count(lit(1)).as("df"), sum(col("tf")).as("cf"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val row = postings
-      .agg(countDistinct(col("docId")).as("docCount"), sum(col("tf")).as("sttf"))
-      .collect()(0)
-    val stats =
-      if (row.isNullAt(0) || row.isNullAt(1)) graft.build.CorpusStats(0L, 0L)
-      else graft.build.CorpusStats(row.getLong(0), row.getLong(1))
-    graft.build.Index(corpus, postings, termStats, stats, analyzer.name)
+    graft.build.IndexBuilder.fromPostings(corpus, postings, analyzer.name)
   }
 
   private val turnSchema = org.apache.spark.sql.types.StructType(Seq(

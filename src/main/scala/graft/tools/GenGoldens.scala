@@ -30,11 +30,7 @@ object GenGoldens {
     ("q12", "rare_00* hydrogen", Nil))
 
   def main(args: Array[String]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]").config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.host", "127.0.0.1").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.LocalSpark.session(4, "graft-gen-goldens")
 
     val engine = SearchEngine.build(TranscriptGen.tiny(spark), Analyzers.Icat)
     val rows = engine.index.corpus

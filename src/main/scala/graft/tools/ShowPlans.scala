@@ -6,7 +6,6 @@ import graft.build.IndexBuilder
 import graft.corpus.{DocIds, TranscriptGen}
 import graft.model._
 import graft.score.QueryExec
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev utility: dump formatted physical plans for the load-bearing
@@ -14,12 +13,7 @@ import org.apache.spark.sql.functions._
   * count) can be reviewed — see PLANS.md. */
 object ShowPlans {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.host", "127.0.0.1")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.LocalSpark.session(4, "graft-show-plans")
 
     val dir = java.nio.file.Files.createTempDirectory("plans").toString
     val idx0 = IndexBuilder.build(

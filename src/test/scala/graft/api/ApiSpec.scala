@@ -77,6 +77,42 @@ class ApiSpec extends SparkSuite {
     assert(!Json.renderResponse(plain).contains(""""joined""""))
   }
 
+  test("joinFetch limit above 100 clamps to the reference's 100 joined docs per hit") {
+    val req = Json.parseRequest(
+      """{"query":{"text":"needle_3"},"maxResults":5,
+        |"joinFetch":{"key":"role","limit":5000}}""".stripMargin)
+    assert(req.joinFetch === Some(JoinFetchSpec("role", 5000)))
+    val resp = engine.search(req)
+    assert(resp.hits.nonEmpty)
+    val perRole = engine.index.corpus.groupBy("role").count().collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    // the clamp is only exercised when some hit's role has > 100 docs
+    assert(resp.hits.exists(h => perRole(h.role) > 100))
+    resp.hits.foreach { h =>
+      val rel = resp.joined(h.docId)
+      assert(rel.size === math.min(100L, perRole(h.role)))
+      assert(rel.forall(_.role == h.role))
+    }
+  }
+
+  test("joinFetch object without a key is ignored: no joined docs") {
+    val req = Json.parseRequest(
+      """{"query":{"text":"needle_3"},"maxResults":1,"joinFetch":{"limit":2}}""")
+    assert(req.joinFetch === None)
+    val resp = engine.search(req)
+    assert(resp.hits.nonEmpty)
+    assert(resp.joined.isEmpty)
+    assert(!Json.renderResponse(resp).contains(""""joined""""))
+  }
+
+  test("joinFetch on an unknown column fails the request with an analysis error") {
+    val req = Json.parseRequest(
+      """{"query":{"text":"needle_3"},"maxResults":1,"joinFetch":{"key":"nope","limit":2}}""")
+    assert(req.joinFetch === Some(JoinFetchSpec("nope", 2)))
+    val e = intercept[org.apache.spark.sql.AnalysisException](engine.search(req))
+    assert(e.getMessage.contains("nope"))
+  }
+
   test("single-pass facetStrings equals the per-dim variant and scans once") {
     val req = SearchRequest(text = Some("ambiguous"))
     val dims = Seq("role", "tool")
