@@ -52,15 +52,12 @@ object Checkpoint {
   }
 
   /** Build (or resume building) the flat postings table for
-    * `corpusWithIds`, one group at a time. Returns which groups ran. */
+    * `corpusWithIds` — the posting rows of [[IndexBuilder.build]] — one
+    * group at a time. Returns which groups ran. */
   def buildPostings(corpusWithIds: DataFrame, analyzer: TextAnalyzer,
                     outDir: String, nGroups: Int): BuildReport = {
     val spark = corpusWithIds.sparkSession
-    val analyzeUdf = udf((s: String) => {
-      val a = analyzer(if (s == null) "" else s)
-      (a.terms, a.positions)
-    })
-    val normUdf = udf((p: Int) => SmallFloat.intToByte4(p))
+    val input = IndexBuilder.postingsInput(corpusWithIds)
 
     val built = scala.collection.mutable.ArrayBuffer.empty[Int]
     val skipped = scala.collection.mutable.ArrayBuffer.empty[Int]
@@ -71,18 +68,8 @@ object Checkpoint {
         case Some(m) =>
           skipped += g; manifests += m
         case None =>
-          val part = corpusWithIds.filter(pmod(col("docId"), lit(nGroups)) === g)
-          val analyzed = part.select(
-            col("docId"),
-            analyzeUdf(col("text")).as("a"),
-            col("role"), col("tool"), col("ts"))
-          val tokens = analyzed.select(
-            col("docId"), normUdf(col("a._2")).as("norm"),
-            explode(col("a._1")).as("term"),
-            col("role"), col("tool"), col("ts"))
-          val postings = tokens
-            .groupBy("term", "docId", "norm", "role", "tool", "ts")
-            .agg(count(lit(1)).cast("int").as("tf"))
+          val part = input.filter(pmod(col("docId"), lit(nGroups)) === g)
+          val postings = IndexBuilder.analyzedPostings(part, analyzer)
 
           // stage to a temp dir, collect lineage counters in the same
           // pass, then atomically publish

@@ -79,6 +79,14 @@ object IndexBuilder {
     * execution memory share at the default heap. */
   val TargetShuffleRows: Long = 4000000L
 
+  /** Salt buckets a hot term's postings are spread over in the sorted
+    * postings write. */
+  private val SaltBuckets = 16
+
+  /** buildAndSave analyzes a 1-in-`SampleRate` doc sample to find hot
+    * terms and estimate the posting volume. */
+  private val SampleRate = 100
+
   /** Build the inverted index tables from a corpus with docIds.
     *
     * Shuffle plan (scale notes):
@@ -90,10 +98,10 @@ object IndexBuilder {
     *    same way while inverting a document)
     *  - termStats groupBy(term): the ONE shuffle, over distinct
     *    (term,doc) pairs, partial-aggregated map-side; a hot term arrives
-    *    at its reducer as at most numPartitions pre-summed rows — no skew
-    * Salted repartitioning for hot terms applies to the term-major packed
-    * layout (graft.build.SaltedPostings) where whole posting lists must be
-    * assembled on one task, and to the sorted save layout below.
+    *    at its reducer as at most one pre-summed row per map partition —
+    *    no skew
+    * Salted repartitioning for hot terms applies to the sorted save
+    * layout (see [[save]] / [[buildAndSave]]).
     */
   def build(corpusWithIds: DataFrame, analyzer: TextAnalyzer,
             withPositions: Boolean = false): Index = {
@@ -102,8 +110,18 @@ object IndexBuilder {
     // downstream action. (For at-scale builds use buildAndSave, which
     // streams postings to storage instead of caching them.)
     fromPostings(corpusWithIds,
-      analyzedPostings(corpusWithIds, analyzer, withPositions = withPositions),
+      analyzedPostings(postingsInput(corpusWithIds), analyzer,
+        withPositions = withPositions),
       analyzer.name)
+  }
+
+  /** The corpus columns a batch posting row is made from: `docId, text`,
+    * plus the denormalized `role, tool, ts` when the corpus has all
+    * three. */
+  private[build] def postingsInput(corpusWithIds: DataFrame): DataFrame = {
+    val attrs = Seq("role", "tool", "ts")
+    val keep = if (attrs.forall(corpusWithIds.columns.contains)) attrs else Nil
+    corpusWithIds.select((Seq("docId", "text") ++ keep).map(col): _*)
   }
 
   /** The cached Index over a postings frame: persists `postings` and its
@@ -128,7 +146,15 @@ object IndexBuilder {
   }
 
   /** Analyzed narrow projection: one finished posting row per (doc, term)
-    * — per-doc tf counted inside the projection, no shuffle.
+    * — per-doc tf counted inside the projection, no shuffle. This is the
+    * one place text becomes posting rows (batch build, at-scale build,
+    * checkpointed build and every streaming micro-batch).
+    *
+    * `input` has `docId` and `text`; every other input column is carried
+    * through unchanged onto each of the doc's rows, after
+    * `docId, norm, term, tf[, positions]` (batch builds carry
+    * `role, tool, ts` — see [[postingsInput]]; streaming also carries the
+    * natural key `conv_id, turn_idx`).
     *
     * `keepEmptyDocs = true` emits ONE sentinel row (term = null, tf =
     * null) for a doc whose text analyzes to zero tokens, so the at-scale
@@ -141,14 +167,13 @@ object IndexBuilder {
     * — the proximity data phrase queries need (Lucene's .pos file; same
     * narrow no-shuffle pipeline, bigger rows). Stopword gaps and
     * synonym-shared positions come from the analyzer's positional mode. */
-  private[graft] def analyzedPostings(corpusWithIds: DataFrame,
+  private[graft] def analyzedPostings(input: DataFrame,
                                       analyzer: TextAnalyzer,
                                       keepEmptyDocs: Boolean = false,
                                       withPositions: Boolean = false): DataFrame = {
-    val hasAttrs = Seq("role", "tool", "ts").forall(corpusWithIds.columns.contains)
-    val attrCols = if (hasAttrs) Seq(col("role"), col("tool"), col("ts")) else Nil
+    val attrCols = input.columns.toSeq.filterNot(Set("docId", "text")).map(col)
     val normUdf = udf((positions: Int) => SmallFloat.intToByte4(positions))
-    // Both branches return the per-doc groups as an ARRAY of (term, …)
+    // Both UDFs return the per-doc groups as an ARRAY of (term, …)
     // tuples (encoded array<struct>) rather than a Scala Map: the array
     // is built in one pass over the LinkedHashMap entries, where the old
     // `asScala.toMap` rebuilt an immutable HashMap per document — pure
@@ -157,8 +182,8 @@ object IndexBuilder {
     // explodes array<struct> exactly as explode/explode_outer did the
     // map (one row per entry; one null row per empty doc when
     // keepEmptyDocs), with identical row order and values.
-    if (withPositions) {
-      val analyzeUdf = udf((s: String) => {
+    val analyzeUdf =
+      if (withPositions) udf((s: String) => {
         val a = analyzer.positional(if (s == null) "" else s)
         val posLists = new java.util.LinkedHashMap[String, scala.collection.mutable.ArrayBuffer[Int]]()
         var i = 0
@@ -179,20 +204,7 @@ object IndexBuilder {
         }
         (arr, a.positions)
       })
-      val exploded =
-        if (keepEmptyDocs) inline_outer(col("plists")) else inline(col("plists"))
-      corpusWithIds
-        .select(Seq(col("docId"), analyzeUdf(col("text")).as("a")) ++ attrCols: _*)
-        .select(Seq(col("docId"), col("a._1").as("plists"), normUdf(col("a._2")).as("norm")) ++ attrCols: _*)
-        .select((Seq(col("docId"), col("norm")) ++ attrCols :+ exploded): _*)
-        .withColumnRenamed("_1", "term")
-        .withColumnRenamed("_2", "positions")
-        .withColumn("tf", size(col("positions")))
-        .withColumn("tf", when(col("term").isNull, lit(null)).otherwise(col("tf")).cast("int"))
-        .select(Seq(col("docId"), col("norm"), col("term"), col("tf"), col("positions"))
-          ++ attrCols: _*)
-    } else {
-      val analyzeUdf = udf((s: String) => {
+      else udf((s: String) => {
         val a = analyzer(if (s == null) "" else s)
         val counts = new java.util.LinkedHashMap[String, Integer]()
         var i = 0
@@ -212,18 +224,26 @@ object IndexBuilder {
         }
         (arr, a.positions)
       })
-      val exploded =
-        if (keepEmptyDocs) inline_outer(col("tfs")) else inline(col("tfs"))
-      corpusWithIds
-        .select(Seq(col("docId"), analyzeUdf(col("text")).as("a")) ++ attrCols: _*)
-        .select(Seq(col("docId"), col("a._1").as("tfs"), normUdf(col("a._2")).as("norm")) ++ attrCols: _*)
-        .select((Seq(col("docId"), col("norm")) ++ attrCols :+ exploded): _*)
-        .withColumnRenamed("_1", "term")
+    val exploded =
+      if (keepEmptyDocs) inline_outer(col("entries")) else inline(col("entries"))
+    val rows = input
+      .select(Seq(col("docId"), analyzeUdf(col("text")).as("a")) ++ attrCols: _*)
+      .select(Seq(col("docId"), col("a._1").as("entries"), normUdf(col("a._2")).as("norm")) ++ attrCols: _*)
+      .select((Seq(col("docId"), col("norm")) ++ attrCols :+ exploded): _*)
+      .withColumnRenamed("_1", "term")
+    if (withPositions)
+      rows
+        .withColumnRenamed("_2", "positions")
+        .withColumn("tf", size(col("positions")))
+        .withColumn("tf", when(col("term").isNull, lit(null)).otherwise(col("tf")).cast("int"))
+        .select(Seq(col("docId"), col("norm"), col("term"), col("tf"), col("positions"))
+          ++ attrCols: _*)
+    else
+      rows
         .withColumnRenamed("_2", "tf")
         .withColumn("tf", col("tf").cast("int"))
         .select(Seq(col("docId"), col("norm"), col("term"), col("tf"))
           ++ attrCols: _*)
-    }
   }
 
   /** At-scale build: analyze → ONE salted shuffle → sorted parquet write,
@@ -232,36 +252,34 @@ object IndexBuilder {
     * at 100 TB you cannot hold the postings of a build in executor
     * memory, and even locally the cache write is the non-scaling step.
     * Passes over the data:
-    *   1. a 1/`sampleRate` deterministic doc sample is analyzed to
+    *   1. a 1/`SampleRate` deterministic doc sample is analyzed to
     *      estimate hot terms (heavy-hitter sketch — a term whose sampled
-    *      df clears threshold/sampleRate is salted);
-    *   2. the full narrow analyze feeds repartition(n, term, salt) +
-    *      sortWithinPartitions(term, docId) + parquet write — the one
-    *      shuffle, carrying finished posting rows;
+    *      df clears threshold/SampleRate is salted);
+    *   2. the full narrow analyze feeds the salted, sorted postings write
+    *      ([[writePostings]]) — the one shuffle, carrying finished
+    *      posting rows;
     *   3. termStats + global stats aggregate over the WRITTEN columnar
     *      table, reading only (term, docId, tf).
     */
   def buildAndSave(corpusWithIds: DataFrame, analyzer: TextAnalyzer, dir: String,
-                   numPartitions: Int = 0, hotDfThreshold: Long = 1000000L,
-                   saltBuckets: Int = 16, writeCorpus: Boolean = true,
-                   sampleRate: Int = 100, withPositions: Boolean = false): Index = {
+                   hotDfThreshold: Long = 1000000L, writeCorpus: Boolean = true,
+                   withPositions: Boolean = false): Index = {
     val spark = corpusWithIds.sparkSession
+    val input = postingsInput(corpusWithIds)
 
     // heavy-hitter + volume estimate from one deterministic doc sample —
     // ONE job: the posting-row count (volume estimate) rides the same
     // action as the hot-term collect via an Observation on the pre-agg
     // frame, instead of a persist + second aggregate job (each small
     // serial job in this path idles every core at high parallelism)
-    val sampled = corpusWithIds.filter(pmod(xxhash64(col("docId")), lit(sampleRate)) === 0)
+    val sampled = input.filter(pmod(xxhash64(col("docId")), lit(SampleRate)) === 0)
     val sampleObs = org.apache.spark.sql.Observation()
     val hotTerms = analyzedPostings(sampled, analyzer)
       .observe(sampleObs, count(lit(1)).as("rows"))
       .groupBy("term").agg(count(lit(1)).as("sdf"))
-      .filter(col("sdf") * sampleRate >= hotDfThreshold)
+      .filter(col("sdf") * SampleRate >= hotDfThreshold)
       .select("term").collect().map(_.getString(0)).toSet
-    val estPostings = obsLong(sampleObs, "rows", 0L) * sampleRate
-    val bHot = spark.sparkContext.broadcast(hotTerms)
-    val isHot = udf((t: String) => bHot.value.contains(t))
+    val estPostings = obsLong(sampleObs, "rows", 0L) * SampleRate
 
     // Partition the ONE salted shuffle by DATA VOLUME, not core count:
     // with partitions tied to parallelism, per-partition sort volume
@@ -272,9 +290,8 @@ object IndexBuilder {
     // corpus size — at 10^12 postings this yields ~250k tasks, the
     // shape a 1000-executor cluster wants — while the numShufflePartitions
     // floor keeps every core busy on small corpora.
-    val n = if (numPartitions > 0) numPartitions
-            else math.max(spark.sessionState.conf.numShufflePartitions.toLong,
-                          estPostings / TargetShuffleRows + 1).toInt
+    val n = math.max(spark.sessionState.conf.numShufflePartitions.toLong,
+                     estPostings / TargetShuffleRows + 1).toInt
 
     // zero-token docs ride along as ONE null-term sentinel row each, so
     // the exact Lucene docCount (docs with ≥1 term) falls out of
@@ -290,33 +307,23 @@ object IndexBuilder {
     // persisted post-write aggregate with two collect jobs — serial
     // floor on every build.
     val buildObs = org.apache.spark.sql.Observation()
-    analyzedPostings(corpusWithIds, analyzer, keepEmptyDocs = true,
-        withPositions = withPositions)
-      .observe(buildObs,
-        sum(col("tf").cast("long")).as("sttf"),
-        count(when(col("term").isNull, lit(1))).as("emptyDocs"))
-      .withColumn("_salt",
-        when(isHot(col("term")), pmod(hash(col("docId")), lit(saltBuckets))).otherwise(lit(0)))
-      .repartition(n, col("term"), col("_salt"))
-      .drop("_salt")
-      .sortWithinPartitions("term", "docId")
-      .write.mode("overwrite").parquet(s"$dir/postings")
+    writePostings(
+      analyzedPostings(input, analyzer, keepEmptyDocs = true,
+          withPositions = withPositions)
+        .observe(buildObs,
+          sum(col("tf").cast("long")).as("sttf"),
+          count(when(col("term").isNull, lit(1))).as("emptyDocs")),
+      hotTerms, n, dir)
     val sttf = obsLong(buildObs, "sttf", 0L)
     val emptyDocs = obsLong(buildObs, "emptyDocs", 0L)
 
     // ONE post-write job: the per-term stats table, aggregated from the
-    // written columnar postings (reads only term + tf)
+    // written columnar postings (reads only term + tf); no extra exchange
+    // — the groupBy's own partitioning is kept
     val written = spark.read.parquet(s"$dir/postings")
     val postings = written.filter(col("term").isNotNull)
-    postings.groupBy(col("term"))
-      .agg(count(lit(1)).as("df"), sum(col("tf")).as("cf"))
-      // sorted within each written file so query-time per-term lookups
-      // (weightsFrame / phraseMatches / WAND idf collects — each a
-      // pushed-down isin scan) prune to ~one row group per file via
-      // parquet min/max stats instead of decoding the whole dictionary;
-      // no extra exchange — the groupBy's own partitioning is kept
-      .sortWithinPartitions("term")
-      .write.mode("overwrite").parquet(s"$dir/termstats")
+    writeTermStats(postings.groupBy(col("term"))
+      .agg(count(lit(1)).as("df"), sum(col("tf")).as("cf")), dir)
     // docCount needs only the corpus row count (cached by DocIds.assign)
     val docCount = corpusWithIds.count() - emptyDocs
     val stats =
@@ -329,46 +336,58 @@ object IndexBuilder {
       stats, analyzer.name)
   }
 
-  /** Persist the index as a directory of parquet tables + metadata.
-    *
-    * Postings are written hash-distributed on (term, salt) — hot terms
-    * (df above `hotDfThreshold`) are salted across `salt` buckets so no
-    * single write task owns a Zipf head term — and sorted by (term, docId)
-    * within partitions so parquet row-group min/max stats on `term` give
-    * file/row-group pruning for query-term lookups.
+  /** Persist the index as a directory of parquet tables + metadata, in
+    * the same layout as [[buildAndSave]]: salted, term-sorted postings
+    * ([[writePostings]]; a term is hot when its df ≥ `hotDfThreshold`)
+    * and term-sorted termstats.
     */
-  def save(index: Index, dir: String, numPartitions: Int = 0,
-           hotDfThreshold: Long = 1000000L, saltBuckets: Int = 16,
+  def save(index: Index, dir: String, hotDfThreshold: Long = 1000000L,
            writeSegments: Boolean = false, segSize: Int = Segments.DefaultSegSize,
            writeCorpus: Boolean = true): Unit = {
-    val spark = index.corpus.sparkSession
-    val n = if (numPartitions > 0) numPartitions
-            else spark.sessionState.conf.numShufflePartitions
-
     // stored fields: when the corpus already lives in a source table the
     // rewrite is optional (Lucene must store fields; we have the table)
     if (writeCorpus) index.corpus.write.mode("overwrite").parquet(s"$dir/corpus")
-    index.termStats.sortWithinPartitions("term") // row-group-pruned lookups
-      .write.mode("overwrite").parquet(s"$dir/termstats")
+    writeTermStats(index.termStats, dir)
 
     val hotTerms = index.termStats
       .filter(col("df") >= hotDfThreshold)
       .select("term").collect().map(_.getString(0)).toSet
-    val bHot = spark.sparkContext.broadcast(hotTerms)
+    writePostings(index.postings, hotTerms,
+      index.corpus.sparkSession.sessionState.conf.numShufflePartitions, dir)
+
+    if (writeSegments)
+      Segments.save(Segments.pack(index.postings, index.stats, segSize), s"$dir/segments")
+
+    writeMeta(dir, index.analyzerName, index.stats, segSize, writeSegments)
+  }
+
+  /** The saved postings layout: hash-distributed over `n` partitions on
+    * (term, salt) — a hot term's rows are salted by docId across
+    * `SaltBuckets` buckets so no single write task owns a Zipf head term;
+    * other terms use salt 0 — and sorted by (term, docId) within each
+    * partition, so parquet row-group min/max stats on `term` prune
+    * query-term lookups. */
+  private def writePostings(postings: DataFrame, hotTerms: Set[String], n: Int,
+                            dir: String): Unit = {
+    val bHot = postings.sparkSession.sparkContext.broadcast(hotTerms)
     val isHot = udf((t: String) => bHot.value.contains(t))
-    index.postings
+    postings
       .withColumn("_salt",
-        when(isHot(col("term")), pmod(hash(col("docId")), lit(saltBuckets))).otherwise(lit(0)))
+        when(isHot(col("term")), pmod(hash(col("docId")), lit(SaltBuckets))).otherwise(lit(0)))
       .repartition(n, col("term"), col("_salt"))
       .drop("_salt")
       .sortWithinPartitions("term", "docId")
       .write.mode("overwrite").parquet(s"$dir/postings")
-
-    if (writeSegments)
-      Segments.save(Segments.pack(index.postings, index.stats, segSize), s"$dir/segments", n)
-
-    writeMeta(dir, index.analyzerName, index.stats, segSize, writeSegments)
   }
+
+  /** The saved termstats layout: sorted by term within each written file,
+    * so query-time per-term lookups (weightsFrame / phraseMatches / WAND
+    * idf collects — each a pushed-down isin scan) prune to ~one row group
+    * per file via parquet min/max stats instead of decoding the whole
+    * dictionary. */
+  private def writeTermStats(termStats: DataFrame, dir: String): Unit =
+    termStats.sortWithinPartitions("term")
+      .write.mode("overwrite").parquet(s"$dir/termstats")
 
   /** The index's `meta.json`: analyzer, global stats and segment layout,
     * read back by [[load]]. */

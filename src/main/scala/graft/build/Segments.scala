@@ -27,8 +27,8 @@ import org.apache.spark.sql.functions._
   * segment holds at most segSize entries, so the Zipf head spreads across
   * segments instead of landing on one task (the groupBy key is
   * (segId, term)). Cross-segment skew of a single term is therefore
-  * impossible by construction; the salted build path (SaltedPostings)
-  * covers the term-major layout where it is not.
+  * impossible by construction; the flat term-sorted postings table gets
+  * the same protection from the salted write in IndexBuilder.save.
   */
 object Segments {
 
@@ -93,12 +93,9 @@ object Segments {
 
   /** Persist segments partitioned by segId hash, term-sorted within
     * partitions (parquet row-group min/max on `term` prunes query scans). */
-  def save(segments: DataFrame, dir: String, numPartitions: Int = 0): Unit = {
-    val spark = segments.sparkSession
-    val n = if (numPartitions > 0) numPartitions
-            else spark.sessionState.conf.numShufflePartitions
+  def save(segments: DataFrame, dir: String): Unit = {
     segments
-      .repartition(n, col("segId"))
+      .repartition(segments.sparkSession.sessionState.conf.numShufflePartitions, col("segId"))
       .sortWithinPartitions("term", "segId")
       .write.mode("overwrite").parquet(dir)
   }

@@ -29,23 +29,20 @@ object Curation {
     * counts. Shingle dedup is per-document `array_distinct` inside the
     * row (shuffle-free, see Dedup.shingleSets). */
   def decontaminate(corpus: DataFrame, benchmark: DataFrame, n: Int = 8,
-                    idCol: String = "doc_id", textCol: String = "text",
-                    eager: Boolean = true): DataFrame = {
+                    idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     val benchSh = Dedup.shingles(benchmark, n, idCol, textCol)
       .select(xxhash64(col("shingle")).as("sh")).distinct()
     // the corpus-side shingle sets feed TWO plan legs (the hits join and
-    // the final per-doc left join) — persist + materialize in eager mode
-    // so the tokenize+shingle pipeline runs once, not per leg (the same
-    // recompute pitfall ngramJaccardPairs fixed); eager = false composes
-    // lazily and recomputes
-    val sets0 = Dedup.hashedShingleSets(corpus, n, idCol, textCol)
-    val sets = if (eager) sets0.persist() else sets0
-    if (eager) sets.count()
+    // the final per-doc left join) — persist + materialize so the
+    // tokenize+shingle pipeline runs once, not per leg (the same
+    // recompute pitfall ngramJaccardPairs fixed)
+    val sets = Dedup.hashedShingleSets(corpus, n, idCol, textCol).persist()
+    sets.count()
     val hits = sets
       .select(col("id"), explode(col("hset")).as("sh"))
       .join(broadcast(benchSh), "sh")
       .groupBy("id").agg(count(lit(1)).as("n_contaminated"))
-    val lazyOut = sets.select(col("id"), col("sz").as("n_shingles"))
+    val out = sets.select(col("id"), col("sz").as("n_shingles"))
       .join(hits, Seq("id"), "left")
       .na.fill(0L, Seq("n_contaminated"))
       .select(
@@ -54,8 +51,7 @@ object Curation {
         col("n_contaminated"),
         round(col("n_contaminated") * lit(1.0) / col("n_shingles"), 4).as("contam_frac"),
         (col("n_contaminated") > 0).as("contaminated"))
-    if (!eager) return lazyOut
-    val out = lazyOut.persist()
+      .persist()
     out.count() // materialize before dropping the shingle cache
     sets.unpersist()
     out

@@ -132,7 +132,10 @@ object Dedup {
     * one aligned pair per first-seen window (distinctness by the
     * xxhash64 key, as in [[hashedShingleSetsFromTokens]]). The FNV keys
     * feed the signature (the oracle replays FNV over gram strings), the
-    * xxhash64 keys feed the exact-verify overlap join. */
+    * xxhash64 keys feed the exact-verify overlap join. A 64-bit xxhash64
+    * collision between two distinct shingles of one document drops the
+    * second shingle's FNV key from `fset`, so the signature can then
+    * differ from the string-replaying oracle. */
   private[pipeline] def dualHashedShingleSets(df: DataFrame, n: Int, idCol: String,
                                               textCol: String): DataFrame = {
     val shUdf = udf { (w: Seq[String]) =>
@@ -270,7 +273,7 @@ object Dedup {
     * duplicated spans keeps all its tokens; a fully-duplicated doc
     * becomes the empty string): (idCol, clean_text, n_removed).
     *
-    * Plan: ONE tokenize pass persisted (eager, mirroring
+    * Plan: ONE tokenize pass persisted (mirroring
     * [[ngramJaccardPairs]]) feeds both the span detection and the
     * rebuild; spans come back id-keyed and are collapsed to a per-doc
     * span ARRAY (tiny — spans are maximal and disjoint) joined back on
@@ -278,12 +281,11 @@ object Dedup {
     * positions. Exchanges: the span pipeline's 8-byte-key shuffles plus
     * one id-keyed join — no text bytes beyond the final projection. */
   def applySpans(df: DataFrame, n: Int = 8, minDocs: Int = 2,
-                 idCol: String = "doc_id", textCol: String = "text",
-                 eager: Boolean = true): DataFrame = {
+                 idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     require(n >= 2 && minDocs >= 2, s"need n >= 2 and minDocs >= 2; got n=$n minDocs=$minDocs")
-    val toks0 = spread(df).select(col(idCol).as("id"), tokensCol(col(textCol)).as("w"))
-    val toks = if (eager) toks0.persist() else toks0
-    if (eager) toks.count()
+    val toks = spread(df).select(col(idCol).as("id"), tokensCol(col(textCol)).as("w"))
+      .persist()
+    toks.count()
     val spans = spansFromTokens(toks, n, minDocs)
       .groupBy("id")
       .agg(collect_list(struct(col("span_start").as("s"), col("span_end").as("e"))).as("spans"))
@@ -300,7 +302,6 @@ object Dedup {
         concat_ws(" ", transform(col("kept"), i => element_at(col("w"), i + 1)))
           .as("clean_text"),
         (size(col("w")) - size(col("kept"))).cast("long").as("n_removed"))
-    if (!eager) return out
     val res = out.persist()
     res.count()
     toks.unpersist()
@@ -417,29 +418,24 @@ object Dedup {
     * are fully hot (invisible to blocking) is logged so the truncation is
     * visible — route such docs through minhashLshPairs if they matter.
     *
-    * With `eager = true` (default) the result is materialized (persisted
-    * + counted) so the shingle intermediates can be unpersisted before
-    * returning — two extra jobs, and the returned persisted frame is
-    * owned by the caller. `eager = false` returns a LAZY composable frame
-    * (no persist, no count, no truncation-diagnostic job); the shingle
-    * stage may then recompute across the plan's self-join legs. */
+    * The result is materialized (persisted + counted) so the shingle
+    * intermediates can be unpersisted before returning — two extra jobs,
+    * and the returned persisted frame is owned by the caller. */
   def ngramJaccardPairs(df: DataFrame, n: Int, threshold: Double,
                         idCol: String = "doc_id", textCol: String = "text",
-                        hotShingleDfCap: Long = Long.MaxValue,
-                        eager: Boolean = true): DataFrame = {
+                        hotShingleDfCap: Long = Long.MaxValue): DataFrame = {
     // shuffle inventory (the 100 TB budget): the per-doc distinct and the
     // set sizes are shuffle-FREE (array_distinct inside the row); every
     // exchange that remains moves xxhash64 keys, never the ~n-word
     // shingle string (the DuckDB gate oracle replays over the strings and
     // stays hash-identical). Uncapped: self-join + pair agg. Capped: hot
     // df agg, rare self-join + pair agg, hot-rows-only per-doc agg.
-    val sets0 = hashedShingleSets(df, n, idCol, textCol)
-    val sets = if (eager) sets0.persist() else sets0
+    val sets = hashedShingleSets(df, n, idCol, textCol).persist()
     // materialize the cache BEFORE the multi-leg plan below: its legs
     // launch concurrent stages, and a cold cache makes each of them
     // recompute the whole tokenize+shingle pipeline (measured 6× on the
     // sf0.1 gate) instead of reading the one materialized copy
-    if (eager) sets.count()
+    sets.count()
     val sh = sets.select(col("id"), explode(col("hset")).as("shingle"))
     val sizes = sets.select(col("id"), col("sz"))
     val capped = hotShingleDfCap != Long.MaxValue
@@ -458,7 +454,7 @@ object Dedup {
           .select("shingle").withColumn("ish", lit(true))
         val flagged = sh.join(hotShingles, Seq("shingle"), "left")
           .select(col("id"), col("shingle"), coalesce(col("ish"), lit(false)).as("hot"))
-        val flaggedP = if (eager) flagged.persist() else flagged
+        val flaggedP = flagged.persist()
         val rare = flaggedP.where(!col("hot"))
         val commonRare = rare.select(col("id").as("ida"), col("shingle"))
           .join(rare.select(col("id").as("idb"), col("shingle")), "shingle")
@@ -470,7 +466,7 @@ object Dedup {
         // rows only
         val hotPerDoc = flaggedP.where(col("hot"))
           .groupBy("id").agg(collect_list(col("shingle")).as("hs"))
-        val hotPerDocP = if (eager) hotPerDoc.persist() else hotPerDoc
+        val hotPerDocP = hotPerDoc.persist()
         val c = commonRare
           .join(hotPerDocP.select(col("id").as("ida"), col("hs").as("ha")), Seq("ida"), "left")
           .join(hotPerDocP.select(col("id").as("idb"), col("hs").as("hb")), Seq("idb"), "left")
@@ -480,9 +476,7 @@ object Dedup {
           .select("ida", "idb", "common")
         (c, Some((flaggedP, hotPerDocP)))
       }
-    val lazyOut = joinJaccard(common, sizes, threshold)
-    if (!eager) return lazyOut
-    val out = lazyOut.persist()
+    val out = joinJaccard(common, sizes, threshold).persist()
     out.count() // materialize before dropping the intermediates
     hotPerDocOpt.foreach { case (flaggedP, hotPerDocP) =>
       // truncation visibility: a doc whose EVERY shingle is hot generates
@@ -616,19 +610,17 @@ object Dedup {
     * any quadratic step. */
   def minhashLshPairs(df: DataFrame, threshold: Double, numHashes: Int = 64,
                       bands: Int = 16, seed: Long = 42L, n: Int = 5,
-                      idCol: String = "doc_id", textCol: String = "text",
-                      eager: Boolean = true): DataFrame = {
+                      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     require(numHashes % bands == 0)
     val rows = numHashes / bands
     // the per-doc shingle arrays feed FOUR plan legs (signatures, both
     // verify-join sides, sizes); with no exchange left to reuse after the
-    // shuffle-free distinct, persist them once in eager mode instead of
-    // re-tokenizing per leg (eager = false composes lazily and recomputes)
-    val sets0 = dualHashedShingleSets(df, n, idCol, textCol)
-    val sets = if (eager) sets0.persist() else sets0
+    // shuffle-free distinct, persist them once instead of re-tokenizing
+    // per leg
+    val sets = dualHashedShingleSets(df, n, idCol, textCol).persist()
     // materialize before the multi-leg plan (same reason as
     // ngramJaccardPairs: cold-cache legs each recompute the pipeline)
-    if (eager) sets.count()
+    sets.count()
     val sig = sets.select(col("id"),
       minhashSigFromFnvUdf(numHashes, seed)(col("fset")).as("sig"))
     val banded = bandKeys(sig, bands, rows)
@@ -648,9 +640,7 @@ object Dedup {
       .join(sh.toDF("idb", "shingle2"), "idb")
       .where(col("shingle") === col("shingle2"))
       .groupBy("ida", "idb").agg(count(lit(1)).as("common"))
-    val lazyOut = joinJaccard(common, sizes, threshold)
-    if (!eager) return lazyOut
-    val out = lazyOut.persist()
+    val out = joinJaccard(common, sizes, threshold).persist()
     out.count() // materialize before dropping the shingle-set cache
     sets.unpersist()
     out

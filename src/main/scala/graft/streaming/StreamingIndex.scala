@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.analysis.{Analyzers, TextAnalyzer}
-import graft.build.SmallFloat
+import graft.build.IndexBuilder
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -33,53 +33,20 @@ object StreamingIndex {
   def defaultSurrogate: org.apache.spark.sql.Column =
     xxhash64(col("conv_id"), col("turn_idx"))
 
-  /** Postings transform for one micro-batch of turns. `withPositions`
-    * carries per-term Lucene position lists so a streamed (and compacted)
-    * index can serve phrase queries, matching the batch builder's
-    * positional layout. `surrogate` is the docId-minting expression —
-    * injectable so tests can force collisions; production uses the
-    * xxhash64 default. */
+  /** Postings transform for one micro-batch of turns: the batch
+    * builder's posting rows (IndexBuilder.analyzedPostings) over the
+    * surrogate docId, each carrying its natural key `conv_id, turn_idx`
+    * for [[compact]]. `withPositions` carries per-term Lucene position
+    * lists so a streamed (and compacted) index can serve phrase queries.
+    * `surrogate` is the docId-minting expression — injectable so tests
+    * can force collisions; production uses the xxhash64 default. */
   def postingsFor(turns: DataFrame, analyzer: TextAnalyzer,
                   withPositions: Boolean = false,
-                  surrogate: org.apache.spark.sql.Column = defaultSurrogate): DataFrame = {
-    val normUdf = udf((p: Int) => SmallFloat.intToByte4(p))
-    if (withPositions) {
-      val analyzeUdf = udf((s: String) => {
-        val a = analyzer.positional(if (s == null) "" else s)
-        val posLists = new java.util.LinkedHashMap[String, scala.collection.mutable.ArrayBuffer[Int]]()
-        a.terms.foreach { t =>
-          var buf = posLists.get(t.term)
-          if (buf == null) { buf = scala.collection.mutable.ArrayBuffer.empty[Int]; posLists.put(t.term, buf) }
-          buf += t.pos
-        }
-        (scala.jdk.CollectionConverters.MapHasAsScala(posLists).asScala
-          .view.mapValues(_.toSeq).toMap, a.positions)
-      })
-      turns
-        .withColumn("docId", surrogate)
-        .withColumn("a", analyzeUdf(col("text")))
-        .select(col("docId"), col("conv_id"), col("turn_idx"),
-          normUdf(col("a._2")).as("norm"),
-          explode(col("a._1")).as(Seq("term", "positions")),
-          col("role"), col("tool"), col("ts"))
-        .withColumn("tf", size(col("positions")).cast("int"))
-    } else {
-      val analyzeUdf = udf((s: String) => {
-        val a = analyzer(if (s == null) "" else s)
-        val counts = new java.util.LinkedHashMap[String, Int]()
-        a.terms.foreach(t => counts.put(t, counts.getOrDefault(t, 0) + 1))
-        (scala.jdk.CollectionConverters.MapHasAsScala(counts).asScala.toMap, a.positions)
-      })
-      turns
-        .withColumn("docId", surrogate)
-        .withColumn("a", analyzeUdf(col("text")))
-        .select(col("docId"), col("conv_id"), col("turn_idx"),
-          normUdf(col("a._2")).as("norm"),
-          explode(col("a._1")).as(Seq("term", "tf")),
-          col("role"), col("tool"), col("ts"))
-        .withColumn("tf", col("tf").cast("int"))
-    }
-  }
+                  surrogate: org.apache.spark.sql.Column = defaultSurrogate): DataFrame =
+    IndexBuilder.analyzedPostings(
+      turns.select(surrogate.as("docId"), col("conv_id"), col("turn_idx"),
+        col("text"), col("role"), col("tool"), col("ts")),
+      analyzer, withPositions = withPositions)
 
   /** Batch compaction of a streamed postings table: re-mints DENSE docIds
     * (the batch builder's stable (conv_id, turn_idx) ordering) from the
@@ -117,7 +84,7 @@ object StreamingIndex {
       .join(mapping, Seq("conv_id", "turn_idx"))
       .select(Seq(col("__denseId").as("docId"), col("norm"), col("term"),
         col("tf")) ++ posCols ++ Seq(col("role"), col("tool"), col("ts")): _*)
-    graft.build.IndexBuilder.fromPostings(corpus, postings, analyzer.name)
+    IndexBuilder.fromPostings(corpus, postings, analyzer.name)
   }
 
   private val turnSchema = org.apache.spark.sql.types.StructType(Seq(

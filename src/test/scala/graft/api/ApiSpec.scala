@@ -351,12 +351,28 @@ class ApiSpec extends SparkSuite {
 
   test("streaming batch transform emits the same postings as the batch builder") {
     import org.apache.spark.sql.functions._
-    val turns = TranscriptGen.tiny(spark).toDF()
-    val streamed = graft.streaming.StreamingIndex.postingsFor(turns, Analyzers.Icat)
-    // same (term, tf) multiset per (conv_id-derived doc); compare totals
-    val a = streamed.agg(sum(col("tf")), count(lit(1))).collect()(0)
-    val b = engine.index.postings.agg(sum(col("tf")), count(lit(1))).collect()(0)
-    assert(a.getLong(0) === b.getLong(0))
-    assert(a.getLong(1) === b.getLong(1))
+    val turns = TranscriptGen.tiny(spark)
+    // surrogate and dense docIds differ, so both sides are keyed by the
+    // natural key: one row per (conv_id, turn_idx, term)
+    def rows(df: org.apache.spark.sql.DataFrame, cols: Seq[String]) =
+      df.select((Seq("conv_id", "turn_idx", "term") ++ cols).map(col): _*)
+        .orderBy("conv_id", "turn_idx", "term")
+        .collect().map(_.toSeq).toSeq
+    def batchRows(index: graft.build.Index, cols: Seq[String]) =
+      rows(index.postings.join(
+        index.corpus.select("docId", "conv_id", "turn_idx"), "docId"), cols)
+    val streamed = graft.streaming.StreamingIndex.postingsFor(turns.toDF(), Analyzers.Icat)
+    val want = batchRows(engine.index, Seq("tf", "norm"))
+    assert(want.nonEmpty)
+    assert(rows(streamed, Seq("tf", "norm")) === want)
+
+    // positional: the same rows plus identical position lists
+    val positional = graft.build.IndexBuilder.build(
+      graft.corpus.DocIds.forTurns(turns), Analyzers.Icat, withPositions = true)
+    val streamedPos = graft.streaming.StreamingIndex.postingsFor(
+      turns.toDF(), Analyzers.Icat, withPositions = true)
+    val cols = Seq("tf", "norm", "positions")
+    assert(rows(streamedPos, cols) === batchRows(positional, cols))
+    positional.unpersistAll()
   }
 }

@@ -29,6 +29,18 @@ class BuildSpec extends SparkSuite {
     val loaded = IndexBuilder.load(spark, dir)
     assert(loaded.stats === index.stats)
     assert(loaded.analyzerName === "icat")
+
+    // salted ≡ unsalted: save() with a threshold that salts nearly every
+    // term writes back exactly the in-memory postings, row for row
+    val dir2 = java.nio.file.Files.createTempDirectory("graft-save").toString
+    IndexBuilder.save(index, dir2, hotDfThreshold = 2)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select(index.postings.columns.toSeq.map(col): _*).orderBy("term", "docId")
+        .collect().map(_.toSeq).toSeq
+    val saved = IndexBuilder.load(spark, dir2)
+    assert(saved.postings.columns.toSeq === index.postings.columns.toSeq)
+    assert(rows(saved.postings) === rows(index.postings))
+    assert(saved.stats === index.stats)
   }
 
   test("buildAndSave docCount excludes zero-token docs (Terms.getDocCount semantics)") {
@@ -52,43 +64,6 @@ class BuildSpec extends SparkSuite {
     assert(loaded.postings.filter(col("term").isNull).count() === 0L)
     assert(loaded.stats.docCount === 2L)
     assert(loaded.termStats.filter(col("term").isNull).count() === 0L)
-  }
-
-  test("salted term-major build ≡ unsalted build (any salt bucket count)") {
-    val unsalted = SaltedPostings.build(index.postings, index.termStats,
-      hotDfThreshold = Long.MaxValue, saltBuckets = 1)
-    val salted = SaltedPostings.build(index.postings, index.termStats,
-      hotDfThreshold = 2, saltBuckets = 8) // nearly every term treated hot
-    val a = unsalted.orderBy("term").collect()
-    val b = salted.orderBy("term").collect()
-    assert(a.length === b.length)
-    a.zip(b).foreach { case (x, y) =>
-      assert(x.getString(0) === y.getString(0))
-      assert(x.getLong(1) === y.getLong(1))
-      assert(x.getSeq[Long](2) === y.getSeq[Long](2), s"deltas differ for ${x.getString(0)}")
-      assert(x.getSeq[Int](3) === y.getSeq[Int](3))
-    }
-  }
-
-  test("term-major lists decode back to the flat postings") {
-    val lists = SaltedPostings.build(index.postings, index.termStats,
-      hotDfThreshold = 3, saltBuckets = 4)
-    val decoded = SaltedPostings.decode(lists)
-      .orderBy("term", "docId").collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getInt(2)))
-    val flat = index.postings.select("term", "docId", "tf")
-      .orderBy("term", "docId").collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getInt(2)))
-    assert(decoded === flat)
-  }
-
-  test("df in term-major lists matches termStats") {
-    val lists = SaltedPostings.build(index.postings, index.termStats, 5, 4)
-    val got = lists.select("term", "df").collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val want = index.termStats.select("term", "df").collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(got === want)
   }
 
   test("checkpointed build resumes without recomputing finished groups") {
