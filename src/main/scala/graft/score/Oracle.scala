@@ -135,8 +135,12 @@ final class NaiveOracle(docs: Seq[NaiveOracle.Doc]) {
   /** Exact MultiPhraseQuery scoring (see graft.model.PhraseQuery): count
     * base offsets where every slot has an alternative at base + relPos;
     * BM25 with tf = that count and weight = Σ idf per (slot, term) listed
-    * occurrence present in the index. Naive nested loops by design. */
+    * occurrence present in the index. Naive nested loops by design.
+    * Sloppy phrases are refused: scoring one as exact would blame the
+    * engine for a mismatch the oracle made. */
   private def phraseScore(p: PhraseQuery, d: Doc, boost: Float = 1.0f): Option[Float] = {
+    require(p.slop == 0,
+      s"NaiveOracle scores exact phrases only; it does not model sloppy phrases (slop ${p.slop})")
     val termsAt: Map[Int, Set[String]] =
       d.posTerms.groupBy(_.pos).map { case (k, v) => k -> v.map(_.term).toSet }
     val p0 = p.slots.head._1

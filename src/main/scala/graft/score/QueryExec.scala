@@ -4,8 +4,17 @@ import graft.build.Index
 import graft.model._
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.ArrayType
 
 /** Distributed boolean/BM25 query evaluation over the flat postings table.
+  *
+  * One recursive evaluator, `matches(q, filters, boost)` — the shape of
+  * [[NaiveOracle]]'s `scoreDoc(q, d, boost)`: a `Boosted` wrapper
+  * multiplies the propagated boost (outer × inner), booleans hand it to
+  * their MUST/SHOULD legs, BM25 leaves fold it into their weight and
+  * constant-score leaves score it. Its leaves share four building blocks:
+  * `keywordLeg` (every fielded keyword query), `scoredScan` (every BM25
+  * term scan), the phrase leg-join and `dictionaryExpand`.
   *
   * Plan shape (the Spark-native replacement for the reference's
   * per-shard sequential search loop, Lucene.java:1467-1516):
@@ -33,7 +42,8 @@ final class QueryExec(val index: Index, val exact: Boolean = false) {
   private val cache: Array[Float] = Bm25.normCache(avgdlF)
   private val cacheD: Array[Double] = Bm25.normCacheExact(avgdlD)
   private val scoreType = if (exact) "double" else "float"
-  private def one = if (exact) lit(1.0d) else lit(1.0f)
+  private def constScore(boost: Float): Column =
+    if (exact) lit(boost.toDouble) else lit(boost)
 
   // occur markers for the single-pass aggregation
   private val OccShould = -1
@@ -59,7 +69,7 @@ final class QueryExec(val index: Index, val exact: Boolean = false) {
       mustGroups: Seq[Seq[(String, Float)]], should: Seq[(String, Float)],
       mustNot: Seq[String])
 
-  private def flatten(q: BoolQuery): Option[Flat] = {
+  private def flatten(q: BoolQuery, boost: Float): Option[Flat] = {
     def asTerms(n: Query, b: Float): Option[Seq[(String, Float)]] = n match {
       case TermQuery(t)     => Some(Seq((t, b)))
       case Boosted(q2, b2)  => asTerms(q2, b * b2)
@@ -68,8 +78,8 @@ final class QueryExec(val index: Index, val exact: Boolean = false) {
         if (ts.forall(_.isDefined)) Some(ts.flatMap(_.get)) else None
       case _ => None
     }
-    val must = q.must.map(asTerms(_, 1.0f))
-    val should = q.should.map(asTerms(_, 1.0f))
+    val must = q.must.map(asTerms(_, boost))
+    val should = q.should.map(asTerms(_, boost))
     val mustNot = q.mustNot.map(asTerms(_, 1.0f))
     if ((must ++ should ++ mustNot).forall(_.isDefined))
       Some(Flat(must.map(_.get), should.flatMap(_.get),
@@ -121,85 +131,55 @@ final class QueryExec(val index: Index, val exact: Boolean = false) {
   }
 
   /** Evaluate to a frame of (docId, score: float) — matching docs only. */
-  def matches(q: Query, filters: Seq[AttrPredicate] = Nil): DataFrame = q match {
+  def matches(q: Query, filters: Seq[AttrPredicate] = Nil): DataFrame =
+    matches(q, filters, 1.0f)
+
+  /** The evaluator. `boost` is the propagated Lucene BoostQuery factor
+    * (see [[graft.model.Boosted]]): BM25 leaves fold it into their index
+    * weight, constant-score leaves score `boost` instead of 1.0. */
+  private def matches(q: Query, filters: Seq[AttrPredicate], boost: Float): DataFrame = q match {
     case MatchNone =>
       if (exact) spark.emptyDataset[(Long, Double)].toDF("docId", "score")
       else spark.emptyDataset[(Long, Float)].toDF("docId", "score")
     case MatchAll =>
-      applyFilters(index.corpus, filters).select(col("docId"), one.as("score"))
+      applyFilters(index.corpus, filters).select(col("docId"), constScore(boost).as("score"))
+    case Boosted(q2, b) =>
+      matches(q2, filters, boost * b)
     case FieldMatchQuery(f, v) =>
-      // keyword-field term: constant score 1.0 over docs whose attribute
-      // equals the value (reference exact-field semantics,
-      // SearchBucket.java:438-452; constant score as with wildcards). An
-      // ARRAY column (a PathFields `_exact` hierarchy view) matches when
-      // any prefix token equals the value, case-sensitively.
-      val eqCond = index.corpus.schema(f).dataType match {
-        case _: org.apache.spark.sql.types.ArrayType => array_contains(col(f), v)
-        case _                                       => col(f) === lit(v)
-      }
-      applyFilters(index.corpus.filter(eqCond), filters)
-        .select(col("docId"), one.as("score"))
+      // keyword-field term: reference exact-field semantics,
+      // SearchBucket.java:438-452; constant score as with wildcards
+      keywordLeg(f, filters, boost)(_ === lit(v))
     case w: FieldWildcardQuery =>
-      // fielded wildcard against the attribute column: case-sensitive
-      // rlike of the (conditionally lowercased) pattern regex — raw
-      // keyword values are indexed unlowered, exactly the reference's
-      // behavior of lowercasing the PATTERN, not the terms. An ARRAY
-      // column (a PathFields `_exact` hierarchy view) matches when any
-      // element does.
-      val cond = index.corpus.schema(w.field).dataType match {
-        case _: org.apache.spark.sql.types.ArrayType =>
-          exists(col(w.field), t => t.rlike(w.regex))
-        case _ => col(w.field).rlike(w.regex)
-      }
-      applyFilters(index.corpus.filter(cond), filters)
-        .select(col("docId"), one.as("score"))
-    case TermQuery(t) =>
-      matches(BoolQuery(should = Seq(TermQuery(t))), filters)
-    case p: PhraseQuery =>
-      phraseMatches(p, filters)
-    case f: FuzzyQuery =>
-      fuzzyMatches(f, filters)
+      // case-sensitive rlike of the (conditionally lowercased) pattern
+      // regex — raw keyword values are indexed unlowered, exactly the
+      // reference's behavior of lowercasing the PATTERN, not the terms
+      keywordLeg(w.field, filters, boost)(_.rlike(w.regex))
+    case r: FieldRegexpQuery =>
+      keywordLeg(r.field, filters, boost)(_.rlike(r.regex))
     case f: FieldFuzzyQuery =>
-      // fielded fuzzy against the keyword attribute column: bounded edit
-      // distance as a scan predicate, constant score 1.0 (the same
-      // constant-score convention as fielded wildcards). Keyword values
-      // are short, so the per-row DP is cheap; the length prefilter below
-      // is sargable and prunes most rows before the UDF runs. An ARRAY
-      // column (a PathFields `_exact` hierarchy view) matches when any
-      // element is within the edit bound — same shape as the wildcard/
-      // regexp/exact-match siblings.
+      // bounded edit distance as a scan predicate. Keyword values are
+      // short, so the per-row DP is cheap; the length prefilter is
+      // sargable and prunes most rows before the UDF runs.
       val okUdf = udf((v: String) => v != null &&
         graft.model.EditDistance.bounded(v, f.value, f.maxEdits, f.transpositions) >= 0)
-      def lenOk(c: Column): Column = length(c)
-        .between(lit(f.value.length - f.maxEdits), lit(f.value.length + f.maxEdits))
-      val cond = index.corpus.schema(f.field).dataType match {
-        case _: org.apache.spark.sql.types.ArrayType =>
-          exists(col(f.field), v => lenOk(v) && okUdf(v))
-        case _ => lenOk(col(f.field)) && okUdf(col(f.field))
-      }
-      applyFilters(index.corpus.filter(cond), filters)
-        .select(col("docId"), one.as("score"))
+      keywordLeg(f.field, filters, boost)(c => length(c)
+        .between(lit(f.value.length - f.maxEdits), lit(f.value.length + f.maxEdits)) &&
+        okUdf(c))
+    case TermQuery(t) =>
+      matches(BoolQuery(should = Seq(TermQuery(t))), filters, boost)
+    case p: PhraseQuery =>
+      phraseMatches(p, filters, boost)
+    case f: FuzzyQuery =>
+      fuzzyMatches(f, filters, boost)
     case w: WildcardQuery =>
       // Lucene multi-term rewrite: expand against the term dictionary,
-      // constant score 1.0 per matching doc. The dictionary scan stays
+      // constant score per matching doc. The dictionary scan stays
       // distributed (semi-join postings ⟕ matched terms).
-      dictionaryExpand(w.regex, filters)
+      dictionaryExpand(w.regex, filters, boost)
     case r: RegexpQuery =>
       // same CONSTANT_SCORE multi-term rewrite as wildcards, arbitrary
       // anchored regex against the term dictionary
-      dictionaryExpand(r.regex, filters)
-    case r: FieldRegexpQuery =>
-      // anchored regexp on a keyword attribute column, constant score
-      // (array columns = PathFields hierarchy views: any element matches)
-      val cond = index.corpus.schema(r.field).dataType match {
-        case _: org.apache.spark.sql.types.ArrayType =>
-          exists(col(r.field), t => t.rlike(r.regex))
-        case _ => col(r.field).rlike(r.regex)
-      }
-      applyFilters(index.corpus.filter(cond), filters)
-        .select(col("docId"), one.as("score"))
-    case Boosted(q2, b) =>
-      matchesBoosted(q2, b, filters)
+      dictionaryExpand(r.regex, filters, boost)
     case bq: BoolQuery =>
       // Lucene BooleanQuery with ONLY prohibited clauses matches nothing:
       // the reference falls back to MatchAllDocsQuery only when the query
@@ -210,38 +190,38 @@ final class QueryExec(val index: Index, val exact: Boolean = false) {
       val withFilters =
         if (bq.filter.nonEmpty) bq.copy(filter = Nil) else bq
       val allFilters = filters ++ bq.filter
-      flatten(withFilters) match {
+      flatten(withFilters, boost) match {
         case Some(f) if f.mustGroups.nonEmpty || f.should.nonEmpty =>
           flatMatches(f, allFilters)
-        case _ => recursiveMatches(withFilters, allFilters)
+        case _ => recursiveMatches(withFilters, allFilters, boost)
       }
   }
 
-  /** Boosted evaluation — Lucene BoostQuery semantics (see
-    * [[graft.model.Boosted]]): the boost PROPAGATES into scoring leaves
-    * (BooleanWeight passes its boost to every scoring sub-weight), so a
-    * boolean distributes the factor into its must/should clauses
-    * (MUST_NOT is non-scoring), a BM25 leaf folds it into the index
-    * weight, and a constant-score leaf scores `boost` instead of 1.0. */
-  private def matchesBoosted(q: Query, boost: Float,
-                             filters: Seq[AttrPredicate]): DataFrame = {
-    if (boost == 1.0f) return matches(q, filters)
-    def constScore: Column = if (exact) lit(boost.toDouble) else lit(boost)
-    q match {
-      case Boosted(q2, b2) => matchesBoosted(q2, boost * b2, filters)
-      case bq: BoolQuery =>
-        matches(bq.copy(
-          must = bq.must.map(Boosted(_, boost)),
-          should = bq.should.map(Boosted(_, boost))), filters)
-      case t: TermQuery =>
-        matches(BoolQuery(should = Seq(Boosted(t, boost))), filters)
-      case p: PhraseQuery => phraseMatches(p, filters, boost)
-      case f: FuzzyQuery  => fuzzyMatches(f, filters, boost)
-      case MatchNone      => matches(MatchNone, filters)
-      case constantScored => // MatchAll / field / wildcard / regexp legs
-        matches(constantScored, filters).withColumn("score", constScore)
+  /** Constant-score leg over a keyword attribute column: docs whose value
+    * satisfies `pred` score `boost`. An ARRAY column (a PathFields
+    * `_exact` hierarchy view) matches when any element does. */
+  private def keywordLeg(field: String, filters: Seq[AttrPredicate], boost: Float)(
+      pred: Column => Column): DataFrame = {
+    val cond = index.corpus.schema(field).dataType match {
+      case _: ArrayType => exists(col(field), pred)
+      case _            => pred(col(field))
     }
+    applyFilters(index.corpus.filter(cond), filters)
+      .select(col("docId"), constScore(boost).as("score"))
   }
+
+  /** The BM25 term scan: postings pushed-filtered to `terms` and the
+    * non-scoring attribute legs, broadcast-joined with `weights` (term,
+    * weightF, weightD, …), plus the per-row score `tscore`. Filtering
+    * first is sound for MUST_NOT terms too: a doc failing the attribute
+    * filter can never match, and MUST_NOT only removes docs. */
+  private def scoredScan(terms: Seq[String], weights: DataFrame,
+                         filters: Seq[AttrPredicate]): DataFrame =
+    applyFilters(index.postings.filter(col("term").isin(terms: _*)), filters)
+      .join(broadcast(weights), "term")
+      .withColumn("tscore",
+        if (exact) Bm25.scoreColExact(col("tf"), col("norm"), col("weightD"), cacheD)
+        else Bm25.scoreCol(col("tf"), col("norm"), col("weightF"), cache))
 
   /** Single-pass path: one postings scan, one aggregation. */
   private def flatMatches(f: Flat, filters: Seq[AttrPredicate]): DataFrame = {
@@ -251,150 +231,50 @@ final class QueryExec(val index: Index, val exact: Boolean = false) {
         f.should.map { case (t, b) => (t, OccShould, b) } ++
         f.mustNot.map(t => (t, OccNot, 1.0f))
     if (termGroups.isEmpty) return matches(MatchAll, filters)
-    val weights = weightsFrame(termGroups)
     val nMust = f.mustGroups.size
-
-    val allTerms = termGroups.map(_._1).distinct
-    // non-scoring FILTER legs: pushed-down predicates on the denormalized
-    // attribute columns — but MUST_NOT terms must still be observed on
-    // excluded-attribute rows? No: a doc failing the attr filter can never
-    // match, and MUST_NOT only removes docs — filtering first is sound.
-    val scan = applyFilters(
-      index.postings.filter(col("term").isin(allTerms: _*)), filters)
-
-    val scored = scan
-      .join(broadcast(weights), "term")
-      .withColumn("tscore",
-        if (exact) Bm25.scoreColExact(col("tf"), col("norm"), col("weightD"), cacheD)
-        else Bm25.scoreCol(col("tf"), col("norm"), col("weightF"), cache))
-
-    val agg = scored
+    scoredScan(termGroups.map(_._1).distinct, weightsFrame(termGroups), filters)
       .groupBy(col("docId"))
       .agg(
         sum(when(col("groupId") =!= OccNot, col("tscore"))).as("scoreSum"),
         size(collect_set(when(col("groupId") >= 0, col("groupId")))).as("mustHit"),
         max(when(col("groupId") === OccNot, 1)).as("notHit"),
         max(when(col("groupId") =!= OccNot, 1)).as("anyHit"))
-
-    agg
       .filter(col("mustHit") === nMust && col("notHit").isNull && col("anyHit") === 1)
       .select(col("docId"), col("scoreSum").cast(scoreType).as("score"))
   }
 
-  /** Exact (multi-)phrase evaluation over positional postings — Lucene
-    * MultiPhraseQuery semantics (see [[graft.model.PhraseQuery]]).
+  /** (Multi-)phrase evaluation over positional postings — Lucene
+    * MultiPhraseQuery semantics, exact or sloppy (see
+    * [[graft.model.PhraseQuery]]); BM25 with weight = boost × Σ idf over
+    * the listed terms (MultiPhraseWeight sums termStatistics per slot
+    * occurrence).
     *
-    * Plan: postings scan pushed-filtered to the phrase's terms (plus the
-    * non-scoring attribute legs) → broadcast join with the (term, slot,
-    * relPos) query frame → explode position lists, base = pos − relPos →
-    * ONE aggregation by (docId, base) counting distinct matched slots →
-    * occurrences (all slots present) → ONE aggregation by docId for the
-    * exact phrase freq → BM25 with weight = Σ idf over listed terms
-    * (MultiPhraseWeight sums termStatistics per slot occurrence). Two
-    * narrow-key shuffles, both partial-aggregated map-side; the scan reads
-    * only the phrase's terms at 100 TB exactly like a term query. */
+    * Plan: one posting-granular leg per slot, joined on docId — NO
+    * position explode and no occurrence-level aggregation. A single-term
+    * slot is one pruned postings scan projecting its rebased position
+    * array (`pos − relPos`); a synonym-stacked slot unions its
+    * alternatives' rebased positions per doc (one narrow docId
+    * aggregation — stacks are rare). The attribute FILTER legs apply once,
+    * on the first leg. A phrase of two hot terms touches 2×docCount rows
+    * instead of Σ tf occurrence rows. Repeated-term phrases self-join the
+    * same leg and overlapping occurrences count (gate bm25_phrase_rep).
+    *
+    * The exact freq is `size(array_intersect(...))` folded across legs
+    * (array_intersect dedups, so a base counts once however many stacked
+    * alternatives hit it); the sloppy freq is [[QueryExec.sloppyTfKernel]]
+    * over the k rebased arrays — O(Σ tf) per doc, one Scala UDF. */
   private def phraseMatches(p: PhraseQuery, filters: Seq[AttrPredicate],
-                            boost: Float = 1.0f): DataFrame = {
+                            boost: Float): DataFrame = {
     require(index.hasPositions,
       "phrase query over an index built without positions — rebuild with withPositions = true")
-    // (term, slot index, relative position) — one row per slot alternative
-    val slotTerms: Seq[(String, Int, Int)] = p.slots.zipWithIndex.flatMap {
-      case ((pos, ts), i) => ts.map(t => (t, i, pos))
-    }
-    val idf = termIdf(slotTerms.map(_._1))
+    val idf = termIdf(p.slots.flatMap(_._2))
     // weight: per (slot, term) occurrence with index presence (a missing
     // term contributes nothing — its scorer would be null in Lucene)
-    val sumIdfD = slotTerms.iterator.flatMap { case (t, _, _) => idf.get(t) }.sum
-    val nSlots = p.slots.size
+    val sumIdfD = p.slots.iterator.flatMap(_._2).flatMap(idf.get).sum
     // a slot whose terms are ALL absent can never match — short-circuit
-    val slotsAlive = slotTerms.groupBy(_._2).values
-      .forall(_.exists { case (t, _, _) => idf.contains(t) })
-    if (!slotsAlive || idf.isEmpty) return matches(MatchNone, filters)
+    if (idf.isEmpty || !p.slots.forall(_._2.exists(idf.contains)))
+      return matches(MatchNone, filters)
 
-    val freq =
-      if (p.slop > 0) phraseFreqSloppy(p, filters)
-      else if (p.slots.forall(_._2.size == 1)) phraseFreqFast(p, filters)
-      else phraseFreqGeneral(slotTerms, nSlots, filters)
-    freq.select(col("docId"),
-      // weight = boost × Σidf — MultiPhraseWeight under a propagated
-      // boost (1.0f × x ≡ x, so the unboosted path is bit-unchanged)
-      (if (exact) Bm25.scoreColExact(col("tf"), col("norm"),
-        lit(boost.toDouble * sumIdfD), cacheD)
-       else Bm25.scoreCol(col("tf"), col("norm"),
-        lit(boost * sumIdfD.toFloat), cache))
-        .as("score"))
-  }
-
-  /** General multi-alternative-slot path (synonym stacks): explode
-    * position lists to occurrence rows, count distinct matched slots per
-    * (docId, base), then phrase freq per doc — two narrow-key
-    * partial-aggregated shuffles. Occurrence-granular, so a phrase of
-    * HOT terms explodes tf× the posting rows. */
-  private def phraseFreqGeneral(slotTerms: Seq[(String, Int, Int)], nSlots: Int,
-                                filters: Seq[AttrPredicate]): DataFrame = {
-    val distinctTerms = slotTerms.map(_._1).distinct
-    val qframe = spark.createDataFrame(slotTerms).toDF("term", "slot", "relPos")
-    val scan = applyFilters(
-      index.postings.filter(col("term").isin(distinctTerms: _*)), filters)
-    scan
-      .join(broadcast(qframe), "term")
-      .select(col("docId"), col("norm"), col("slot"), col("relPos"),
-        explode(col("positions")).as("pos"))
-      .select(col("docId"), col("norm"), col("slot"),
-        (col("pos") - col("relPos")).as("base"))
-      .groupBy(col("docId"), col("base"))
-      .agg(countDistinct(col("slot")).as("nslot"), first(col("norm")).as("norm"))
-      .filter(col("nslot") === nSlots)
-      .groupBy(col("docId"))
-      .agg(count(lit(1)).cast("int").as("tf"), first(col("norm")).as("norm"))
-  }
-
-  /** Single-term-per-slot fast path (the common case — every plain
-    * quoted phrase): NO position explode and NO occurrence-level
-    * aggregation. Each slot is one pruned postings scan projecting its
-    * rebased position array (`pos − relPos`); the k legs join on docId
-    * and the phrase freq is `size(array_intersect(...))` folded across
-    * legs — pure whole-stage-codegen array math over posting-granular
-    * rows. A phrase of two hot terms touches 2×docCount rows instead of
-    * Σ tf occurrence rows (the round-4 q_phrase fix: 2.55 s → posting
-    * granular). Repeated-term phrases work unchanged: the same leg
-    * self-joins and overlapping occurrences count, MultiPhrase
-    * semantics (gate bm25_phrase_rep). */
-  private def phraseFreqFast(p: PhraseQuery,
-                             filters: Seq[AttrPredicate]): DataFrame = {
-    val slots = p.slots.map { case (rel, ts) => (rel, ts.head) }
-    val legs = slots.zipWithIndex.map { case ((rel, term), i) =>
-      val scan0 = index.postings.filter(col("term") === term)
-      // attribute FILTER legs need applying once only — the first leg
-      val scan = if (i == 0) applyFilters(scan0, filters) else scan0
-      val cols = Seq(col("docId")) ++ (if (i == 0) Seq(col("norm")) else Nil) ++
-        Seq(transform(col("positions"), x => x - lit(rel)).as(s"base$i"))
-      scan.select(cols: _*)
-    }
-    val joined = legs.reduce((a, b) => a.join(b, "docId"))
-    val baseSet = (1 until slots.size).foldLeft(col("base0")) { (acc, i) =>
-      array_intersect(acc, col(s"base$i"))
-    }
-    joined
-      .select(col("docId"), col("norm"), size(baseSet).as("tf"))
-      .filter(col("tf") >= 1)
-  }
-
-  /** Sloppy-phrase frequency (slop > 0) — semantics documented on
-    * [[graft.model.PhraseQuery]]: per-anchor greedy nearest-occurrence
-    * matching, matchLength = signed-displacement spread, sloppyWeight
-    * 1/(1+matchLength) accumulated into a fractional freq.
-    *
-    * Plan: same posting-granular leg join as the exact fast path (k
-    * pruned term scans joined on docId), but instead of array_intersect
-    * the per-anchor fold scans each slot's rebased position array for the
-    * nearest occurrence — O(anchors × Σ positions) per candidate doc,
-    * pure per-row array math, no explode and no occurrence-level shuffle.
-    * A synonym-stacked slot unions its alternatives' rebased positions
-    * per doc first (one narrow docId aggregation per stacked slot —
-    * stacks are rare). */
-  private def phraseFreqSloppy(p: PhraseQuery,
-                               filters: Seq[AttrPredicate]): DataFrame = {
     val legs = p.slots.zipWithIndex.map { case ((rel, ts), i) =>
       val scan0 = index.postings.filter(
         if (ts.size == 1) col("term") === ts.head else col("term").isin(ts: _*))
@@ -414,33 +294,44 @@ final class QueryExec(val index: Index, val exact: Boolean = false) {
       }
     }
     val joined = legs.reduce((a, b) => a.join(b, "docId"))
-    // sloppyWeight of one anchor b0: each later slot's nearest occurrence
-    // (ties → the earlier position), spread about 0, gate at slop.
-    //
-    // Evaluated by ONE Scala UDF over the k rebased position arrays —
-    // a two-pointer merge (each slot's nearest-occurrence cursor only
-    // moves forward as anchors ascend), O(Σ tf) per doc. The previous
-    // nested higher-order `aggregate` folds had identical semantics but
-    // are CodegenFallback — interpreted per element at O(tf₀ × Σ tfᵢ),
-    // which made hot-term sloppy phrases ~8× slower than the exact fast
-    // path on the bench corpus. Double accumulation order (ascending
-    // anchors) and the first-minimum tie rule are preserved bit-exactly.
-    val slopV = p.slop
-    val sloppyTf = udf((bases: Seq[Seq[Int]]) => QueryExec.sloppyTfKernel(bases, slopV))
-    val baseCols = array(p.slots.indices.map(i => col(s"base$i")): _*)
-    joined
-      .select(col("docId"), col("norm"), sloppyTf(baseCols).as("tf"))
-      .filter(col("tf") > 0.0)
+    val freq = if (p.slop > 0) {
+      val slopV = p.slop
+      val sloppyTf = udf((bases: Seq[Seq[Int]]) => QueryExec.sloppyTfKernel(bases, slopV))
+      joined
+        .select(col("docId"), col("norm"),
+          sloppyTf(array(p.slots.indices.map(i => col(s"base$i")): _*)).as("tf"))
+        .filter(col("tf") > 0.0)
+    } else {
+      val baseSet = (1 until p.slots.size).foldLeft(col("base0")) { (acc, i) =>
+        array_intersect(acc, col(s"base$i"))
+      }
+      // a lone stacked slot repeats a base its alternatives share (`h` and
+      // `hydrogen` under IcatSynonym); with ≥ 2 slots array_intersect dedups
+      val bases = if (p.slots.size == 1 && p.slots.head._2.size > 1)
+        array_distinct(baseSet) else baseSet
+      joined
+        .select(col("docId"), col("norm"), size(bases).as("tf"))
+        .filter(col("tf") >= 1)
+    }
+    freq.select(col("docId"),
+      // weight = boost × Σidf — MultiPhraseWeight under a propagated
+      // boost (1.0f × x ≡ x, so the unboosted path is bit-unchanged)
+      (if (exact) Bm25.scoreColExact(col("tf"), col("norm"),
+        lit(boost.toDouble * sumIdfD), cacheD)
+       else Bm25.scoreCol(col("tf"), col("norm"),
+        lit(boost * sumIdfD.toFloat), cache))
+        .as("score"))
   }
 
   /** Multi-term CONSTANT_SCORE rewrite: docs containing any dictionary
-    * term matching the anchored regex, score 1.0 (wildcard + regexp). */
-  private def dictionaryExpand(regex: String, filters: Seq[AttrPredicate]): DataFrame = {
+    * term matching the anchored regex score `boost` (wildcard + regexp). */
+  private def dictionaryExpand(regex: String, filters: Seq[AttrPredicate],
+                               boost: Float): DataFrame = {
     val matched = index.termStats
       .filter(col("term").rlike(regex)).select("term")
     val scan = applyFilters(index.postings.join(matched, "term"), filters)
     scan.select(col("docId")).distinct()
-      .withColumn("score", one)
+      .withColumn("score", constScore(boost))
   }
 
   /** Fuzzy term evaluation — Lucene FuzzyQuery with its default
@@ -452,14 +343,14 @@ final class QueryExec(val index: Index, val exact: Boolean = false) {
     * top-`maxExpansions` by (boost desc, term asc) — TakeOrderedAndProject,
     * the same shape as Lucene's TopTermsRewrite priority queue → collect
     * the ≤50 expansion rows → blend df = max over the expansion set
-    * (BlendedTermQuery.adjustFrequencies) → broadcast-join the postings
-    * scan (filtered to the expanded terms, like any term query) → per-row
-    * boost × BM25 with the blended idf → one aggregation by docId summing
-    * matched expansions (BOOLEAN_REWRITE: SHOULD clauses sum). */
+    * (BlendedTermQuery.adjustFrequencies) → the BM25 term scan over the
+    * expanded terms with per-row boost × BM25 and the blended idf → one
+    * aggregation by docId summing matched expansions (BOOLEAN_REWRITE:
+    * SHOULD clauses sum). */
   private def fuzzyMatches(f: FuzzyQuery, filters: Seq[AttrPredicate],
-                           qBoost: Float = 1.0f): DataFrame = {
+                           qBoost: Float): DataFrame = {
     if (f.maxEdits <= 0)
-      return matchesBoosted(TermQuery(f.term), qBoost, filters)
+      return matches(TermQuery(f.term), filters, qBoost)
     val q = f.term
     val distUdf = udf((t: String) =>
       graft.model.EditDistance.bounded(t, q, f.maxEdits, f.transpositions))
@@ -491,26 +382,20 @@ final class QueryExec(val index: Index, val exact: Boolean = false) {
         (qBoost.toDouble * boost) * idfD)
     }.toSeq
     val weights = spark.createDataFrame(rows).toDF("term", "weightF", "weightD")
-    val terms = rows.map(_._1)
-    val scan = applyFilters(
-      index.postings.filter(col("term").isin(terms: _*)), filters)
-    scan
-      .join(broadcast(weights), "term")
-      .withColumn("tscore",
-        if (exact) Bm25.scoreColExact(col("tf"), col("norm"), col("weightD"), cacheD)
-        else Bm25.scoreCol(col("tf"), col("norm"), col("weightF"), cache))
+    scoredScan(rows.map(_._1), weights, filters)
       .groupBy(col("docId"))
       .agg(sum(col("tscore")).cast(scoreType).as("score"))
   }
 
-  /** General recursive path for arbitrarily nested boolean trees. */
-  private def recursiveMatches(bq: BoolQuery, filters: Seq[AttrPredicate]): DataFrame = {
-    def ev(q: Query): DataFrame = matches(q, filters)
-    val mustFrames = bq.must.map(ev)
-    val shouldFrames = bq.should.map(ev)
+  /** General recursive path for arbitrarily nested boolean trees: the
+    * boost reaches the MUST and SHOULD legs; MUST_NOT legs are non-scoring. */
+  private def recursiveMatches(bq: BoolQuery, filters: Seq[AttrPredicate],
+                               boost: Float): DataFrame = {
+    val mustFrames = bq.must.map(matches(_, filters, boost))
+    val shouldFrames = bq.should.map(matches(_, filters, boost))
 
     val scoringUnion = (mustFrames ++ shouldFrames) match {
-      case Nil => matches(MatchAll, filters)
+      case Nil => matches(MatchAll, filters, boost)
       case fs  => fs.reduce(_ unionAll _)
         .groupBy("docId").agg(sum(col("score")).cast(scoreType).as("score"))
     }
@@ -520,7 +405,7 @@ final class QueryExec(val index: Index, val exact: Boolean = false) {
         col("docId") === col("mdocId"), "left_semi")
     }
     // MUST_NOT: anti join
-    bq.mustNot.map(ev).foldLeft(withMust) { (acc, n) =>
+    bq.mustNot.map(matches(_, filters, 1.0f)).foldLeft(withMust) { (acc, n) =>
       acc.join(n.select(col("docId").as("ndocId")).distinct(),
         col("docId") === col("ndocId"), "left_anti")
     }
@@ -633,7 +518,7 @@ object QueryExec {
     * per doc where the semantically identical nested higher-order
     * `aggregate` fold this replaced was CodegenFallback (interpreted,
     * O(tf₀ × Σ tfᵢ)) and made hot-term sloppy phrases ~8× slower than
-    * the exact fast path. Accumulation order (ascending anchors, double
+    * the exact phrase path. Accumulation order (ascending anchors, double
     * adds) matches the old fold bit-exactly. Unit-tested against a
     * brute-force rescan in PhraseSpec. */
   private[graft] def sloppyTfKernel(bases: Seq[Seq[Int]], slop: Int): Double = {

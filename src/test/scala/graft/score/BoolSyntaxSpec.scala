@@ -32,8 +32,10 @@ class BoolSyntaxSpec extends SparkSuite {
     QueryText.parse(text, s => Analyzers.Icat(s).terms,
       analyzePos = s => Analyzers.Icat.positional(s))
 
-  private def checkParity(text: String, k: Int = 20): Unit = {
-    val q = parse(text)
+  private def checkParity(text: String, k: Int = 20): Unit =
+    checkParity(parse(text), text, k)
+
+  private def checkParity(q: Query, text: String, k: Int): Unit = {
     val want = oracle.topK(q, Nil, k)
     val got = new QueryExec(engine.index).topK(q, Nil, k)
       .collect().map(r => (r.getLong(0), r.getFloat(1))).toSeq
@@ -137,10 +139,16 @@ class BoolSyntaxSpec extends SparkSuite {
 
   test("boosted group distributes into leaves (Lucene boost propagation)") {
     checkParity("(needle_3 hydrogen)^2 +ambiguous")
+    checkParity("\"w0000 w0001\"^2 needle_3")
+    checkParity("((needle_3 hydrogen)^2 ambiguous)^3")
+    checkParity("(needle_3 \"w0000 w0001\")^2 +ambiguous")
   }
 
   test("boosted constant-score leg parity: fielded keyword ^3") {
     checkParity("role:assistant^3 needle_3")
+    checkParity("needle_*^2 hydrogen")
+    checkParity("/rare_00[0-9]/^2 needle_3")
+    checkParity("tool:b*^3 needle_3")
   }
 
   test("boosted fuzzy parity") {
@@ -149,5 +157,18 @@ class BoolSyntaxSpec extends SparkSuite {
 
   test("AND NOT parity") {
     checkParity("needle_3 AND NOT ambiguous")
+  }
+
+  test("boosted filter-only group scores its boost, like any match-all leg") {
+    val filterOnly = BoolQuery(filter = Seq(FieldEquals("role", "assistant")))
+    checkParity(BoolQuery(should = Seq(Boosted(filterOnly, 3.0f), TermQuery("needle_3"))),
+      "(FILTER role:assistant)^3 needle_3", 20)
+  }
+
+  test("oracle refuses sloppy phrases instead of scoring them as exact") {
+    val e = intercept[IllegalArgumentException] {
+      oracle.topK(parse("\"w0000 w0001\"~2^2 needle_3"), Nil, 20)
+    }
+    assert(e.getMessage.contains("sloppy"))
   }
 }
