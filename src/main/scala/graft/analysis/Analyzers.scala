@@ -12,27 +12,31 @@ package graft.analysis
   */
 final case class Analyzed(terms: Array[String], positions: Int)
 
-/** One token with its Lucene position (stopword removal leaves gaps —
-  * StopFilter accumulates positionIncrement; synonym-injected tokens
-  * share the position of the token they expand). */
-final case class PosTerm(term: String, pos: Int)
+/** Position-annotated analysis result: `terms` in emission order and,
+  * index for index, each term's Lucene position in `pos` (stopword removal
+  * leaves gaps — StopFilter accumulates positionIncrement; synonym-injected
+  * tokens share the position of the token they expand). `positions` is
+  * the same norm-length count as [[Analyzed.positions]] (tokens/slots
+  * consumed, NOT max position — gaps don't add length, Lucene
+  * discountOverlaps). */
+final case class PosAnalyzed(terms: Array[String], pos: Array[Int], positions: Int)
 
-/** Position-annotated analysis result; `positions` is the same
-  * norm-length count as [[Analyzed.positions]] (tokens/slots consumed,
-  * NOT max position — gaps don't add length, Lucene discountOverlaps). */
-final case class PosAnalyzed(terms: Array[PosTerm], positions: Int)
+object PosAnalyzed {
+  /** Terms at positions 0, 1, 2, … — the stream of a chain with no stop or
+    * synonym filter. */
+  def contiguous(terms: Array[String]): PosAnalyzed =
+    PosAnalyzed(terms, Array.range(0, terms.length), terms.length)
+}
 
+/** An analysis chain. Each analyzer implements only [[positional]], the
+  * token stream Lucene indexes (terms with positions); the term view
+  * [[apply]] is a projection of it, so the two can never disagree. */
 trait TextAnalyzer extends Serializable {
-  def apply(text: String): Analyzed
+  def positional(text: String): PosAnalyzed
 
-  /** Position-annotated analysis (the token stream Lucene indexes for
-    * proximity/phrase queries). Default: contiguous positions — correct
-    * for chains with no stop/synonym filter; Icat chains override. The
-    * emitted term SEQUENCE is always identical to `apply(text).terms`. */
-  def positional(text: String): PosAnalyzed = {
-    val a = apply(text)
-    PosAnalyzed(a.terms.zipWithIndex.map { case (t, i) => PosTerm(t, i) },
-      a.positions)
+  final def apply(text: String): Analyzed = {
+    val a = positional(text)
+    Analyzed(a.terms, a.positions)
   }
 
   /** Name used to key persisted index metadata so query-time analysis
@@ -65,50 +69,32 @@ object Analyzers {
 
   @inline def lowercase(tok: String): String = tok.toLowerCase(java.util.Locale.ROOT)
 
-  /** tokenize → possessive → lowercase → stop → Porter (IcatAnalyzer). */
-  def icatTokens(text: String): Array[String] = {
+  /** tokenize → possessive → lowercase → stop → Porter (IcatAnalyzer).
+    * Position = RAW token index, so a removed stopword leaves a position
+    * hole exactly like Lucene's StopFilter positionIncrement accumulation
+    * (pinned by the reference's phrase golden `"path ? data …"`,
+    * TestLucene.java:144-171). */
+  def icatChain(text: String): PosAnalyzed = {
     val raw = WordBreak.tokenize(text)
-    // flat array + cursor instead of ArrayBuffer+toArray: one allocation
-    // when nothing is a stopword (the common case), one copy otherwise
-    val out = new Array[String](raw.length)
+    // flat arrays + cursor instead of ArrayBuffer+toArray: one allocation
+    // each when nothing is a stopword (the common case), one copy otherwise
+    val terms = new Array[String](raw.length)
+    val pos = new Array[Int](raw.length)
     var n = 0
     var i = 0
     while (i < raw.length) {
       val t = lowercase(stripPossessive(raw(i)))
-      if (!ScientificStopWords.contains(t)) { out(n) = PorterStemmer.stem(t); n += 1 }
+      if (!ScientificStopWords.contains(t)) { terms(n) = PorterStemmer.stem(t); pos(n) = i; n += 1 }
       i += 1
     }
-    if (n == raw.length) out else java.util.Arrays.copyOf(out, n)
-  }
-
-  /** Gap-aware positional Icat chain: position = RAW token index, so a
-    * removed stopword leaves a position hole exactly like Lucene's
-    * StopFilter positionIncrement accumulation (pinned by the reference's
-    * phrase golden `"path ? data …"`, TestLucene.java:144-171). */
-  def icatTokensPos(text: String): Array[PosTerm] = {
-    val raw = WordBreak.tokenize(text)
-    val out = new Array[PosTerm](raw.length)
-    var n = 0
-    var i = 0
-    while (i < raw.length) {
-      val t = lowercase(stripPossessive(raw(i)))
-      if (!ScientificStopWords.contains(t)) { out(n) = PosTerm(PorterStemmer.stem(t), i); n += 1 }
-      i += 1
-    }
-    if (n == raw.length) out else java.util.Arrays.copyOf(out, n)
+    if (n == raw.length) PosAnalyzed(terms, pos, n)
+    else PosAnalyzed(java.util.Arrays.copyOf(terms, n), java.util.Arrays.copyOf(pos, n), n)
   }
 
   /** IcatAnalyzer equivalent: full-text analysis without synonyms. */
   object Icat extends TextAnalyzer {
     val name = "icat"
-    def apply(text: String): Analyzed = {
-      val toks = icatTokens(text)
-      Analyzed(toks, toks.length)
-    }
-    override def positional(text: String): PosAnalyzed = {
-      val toks = icatTokensPos(text)
-      PosAnalyzed(toks, toks.length)
-    }
+    def positional(text: String): PosAnalyzed = icatChain(text)
   }
 
   /** IcatSynonymAnalyzer equivalent: Icat chain + post-stem synonym graph
@@ -116,26 +102,17 @@ object Analyzers {
   object IcatSynonym extends TextAnalyzer {
     val name = "icat_synonym"
     // built once per JVM; SynonymSet is serializable for executor shipping
-    lazy val synonyms: SynonymSet = SynonymSet.bundled(icatTokens)
-    def apply(text: String): Analyzed = {
-      val (toks, positions) = synonyms(icatTokens(text))
-      Analyzed(toks, positions)
-    }
-    override def positional(text: String): PosAnalyzed = {
-      val (toks, positions) = synonyms.applyPositional(icatTokensPos(text))
-      PosAnalyzed(toks, positions)
-    }
+    lazy val synonyms: SynonymSet = SynonymSet.bundled(icatChain(_).terms)
+    def positional(text: String): PosAnalyzed = synonyms(icatChain(text))
   }
 
   /** Separator analyzer (IcatSeparatorAnalyzer): split on one char, then
     * lowercase — used by the reference for path-like fields. */
   final case class Separator(sep: Char) extends TextAnalyzer {
     val name = s"sep_$sep"
-    def apply(text: String): Analyzed = {
-      val toks = text.split(java.util.regex.Pattern.quote(sep.toString))
-        .iterator.filter(_.nonEmpty).map(lowercase).toArray
-      Analyzed(toks, toks.length)
-    }
+    def positional(text: String): PosAnalyzed = PosAnalyzed.contiguous(
+      text.split(java.util.regex.Pattern.quote(sep.toString))
+        .iterator.filter(_.nonEmpty).map(lowercase).toArray)
   }
 
   /** PathHierarchy analyzer (Lucene PathHierarchyTokenizer defaults —
@@ -146,10 +123,8 @@ object Analyzers {
     * DocumentMapping.java:133). */
   object PathHierarchy extends TextAnalyzer {
     val name = "path_hierarchy"
-    def apply(text: String): Analyzed = {
-      val toks = PathFields.hierarchyPrefixes(text)
-      Analyzed(toks, toks.length)
-    }
+    def positional(text: String): PosAnalyzed =
+      PosAnalyzed.contiguous(PathFields.hierarchyPrefixes(text))
   }
 
   /** Simple analyzer: lowercase, split on non-alphanumeric runs. Exactly
@@ -157,10 +132,8 @@ object Analyzers {
     * '[^a-z0-9]+')), used for the DuckDB-verified correctness gate. */
   object Simple extends TextAnalyzer {
     val name = "simple"
-    def apply(text: String): Analyzed = {
-      val toks = lowercase(text).split("[^a-z0-9]+").filter(_.nonEmpty)
-      Analyzed(toks, toks.length)
-    }
+    def positional(text: String): PosAnalyzed =
+      PosAnalyzed.contiguous(lowercase(text).split("[^a-z0-9]+").filter(_.nonEmpty))
   }
 
   def byName(n: String): TextAnalyzer = n match {

@@ -28,66 +28,10 @@ final class SynonymSet private (
     val maxKeyLen: Int
 ) extends Serializable {
 
-  /** Apply synonym injection to a post-stem token stream.
-    * Returns (tokens, positionCount). Greedy longest-match, left to right,
-    * no overlapping matches (as the FST-backed SynonymGraphFilter does).
-    */
-  def apply(tokens: Array[String]): (Array[String], Int) = {
-    if (rules.isEmpty) return (tokens, tokens.length)
-    val out = mutable.ArrayBuffer.empty[String]
-    var positions = 0
-    var i = 0
-    val n = tokens.length
-    while (i < n) {
-      var matched: Option[(List[String], List[List[String]])] = None
-      var len = math.min(maxKeyLen, n - i)
-      while (matched.isEmpty && len >= 1) {
-        val key = tokens.slice(i, i + len).toList
-        rules.get(key) match {
-          case Some(alts) => matched = Some((key, alts))
-          case None       => len -= 1
-        }
-      }
-      matched match {
-        case Some((key, alts)) =>
-          val original = key
-          // alternatives that are not literally the original token sequence
-          val others = alts.filterNot(_ == original)
-          val slots = math.max(original.length, (original :: others).map(_.length).max)
-          // lay out each path over `slots` position slots: first token of a
-          // path shorter than `slots` spans the remainder (posLength), the
-          // rest are single-slot
-          final case class Tok(term: String, slot: Int, posLen: Int, orig: Boolean, ord: Int)
-          val toks = mutable.ArrayBuffer.empty[Tok]
-          var ord = 0
-          others.foreach { path =>
-            path.zipWithIndex.foreach { case (t, idx) =>
-              val pl = if (idx == 0) slots - path.length + 1 else 1
-              toks += Tok(t, idx, pl, orig = false, ord)
-            }
-            ord += 1
-          }
-          original.zipWithIndex.foreach { case (t, idx) =>
-            val pl = if (idx == 0) slots - original.length + 1 else 1
-            toks += Tok(t, idx, pl, orig = true, ord)
-          }
-          toks
-            .sortBy(t => (t.slot, -t.posLen, if (t.orig) 1 else 0, t.ord))
-            .foreach(t => out += t.term)
-          positions += slots
-          i += key.length
-        case None =>
-          out += tokens(i)
-          positions += 1
-          i += 1
-      }
-    }
-    (out.toArray, positions)
-  }
-
-  /** Position-annotated synonym injection over a gap-aware token stream.
-    * Same matching and emission order as [[apply]]; additionally lays the
-    * graph out on Lucene positions (pinned by the reference phrase golden
+  /** Apply synonym injection to a post-stem, gap-aware token stream.
+    * Greedy longest-match, left to right, no overlapping matches (as the
+    * FST-backed SynonymGraphFilter does). The graph is laid out on Lucene
+    * positions (pinned by the reference phrase golden
     * `location:"path ? data (mr molecular) replac file.txt"`,
     * TestLucene.java:144-171):
     *
@@ -99,60 +43,53 @@ final class SynonymSet private (
     *    every later token shifts right by (slots - key span), exactly as
     *    an unflattened SynonymGraphFilter stream indexes.
     *
-    * Returns (tokens, positionCount) with positionCount identical to
-    * [[apply]]'s (slots consumed, gaps excluded). */
-  def applyPositional(tokens: Array[PosTerm]): (Array[PosTerm], Int) = {
-    if (rules.isEmpty) return (tokens, tokens.length)
-    val out = mutable.ArrayBuffer.empty[PosTerm]
+    * The result's `positions` counts slots consumed, gaps excluded. */
+  def apply(in: PosAnalyzed): PosAnalyzed = {
+    if (rules.isEmpty) return in
+    val terms = mutable.ArrayBuffer.empty[String]
+    val pos = new mutable.ArrayBuilder.ofInt
     var positions = 0
     var shift = 0
     var i = 0
-    val n = tokens.length
+    val n = in.terms.length
     while (i < n) {
-      var matched: Option[(List[String], List[List[String]])] = None
+      var key: List[String] = Nil
+      var alts: List[List[String]] = null
       var len = math.min(maxKeyLen, n - i)
-      while (matched.isEmpty && len >= 1) {
-        val key = tokens.slice(i, i + len).map(_.term).toList
-        rules.get(key) match {
-          case Some(alts) => matched = Some((key, alts))
-          case None       => len -= 1
-        }
+      while (alts == null && len >= 1) {
+        key = in.terms.slice(i, i + len).toList
+        alts = rules.getOrElse(key, null)
+        len -= 1
       }
-      matched match {
-        case Some((key, alts)) =>
-          val base = tokens(i).pos + shift
-          val lastKeyPos = tokens(i + key.length - 1).pos
-          val original = key
-          val others = alts.filterNot(_ == original)
-          val slots = math.max(original.length, (original :: others).map(_.length).max)
-          final case class Tok(term: String, slot: Int, posLen: Int, orig: Boolean, ord: Int)
-          val toks = mutable.ArrayBuffer.empty[Tok]
-          var ord = 0
-          others.foreach { path =>
-            path.zipWithIndex.foreach { case (t, idx) =>
-              val pl = if (idx == 0) slots - path.length + 1 else 1
-              toks += Tok(t, idx, pl, orig = false, ord)
+      if (alts == null) {
+        terms += in.terms(i)
+        pos += in.pos(i) + shift
+        positions += 1
+        i += 1
+      } else {
+        // alternatives that are not literally the original token sequence
+        val others = alts.filterNot(_ == key)
+        val slots = (key :: others).map(_.length).max
+        val base = in.pos(i) + shift
+        // lay each path over `slots` position slots: the first token of a
+        // path shorter than `slots` spans the remainder (posLength), the
+        // rest are single-slot; emit slot-ascending, longer spans first,
+        // alternatives (in rule order — the sort is stable) before the original
+        (others.map((_, 1)) :+ ((key, 2)))
+          .flatMap { case (path, rank) =>
+            path.zipWithIndex.map { case (t, slot) =>
+              (slot, if (slot == 0) slots - path.length + 1 else 1, rank, t)
             }
-            ord += 1
           }
-          original.zipWithIndex.foreach { case (t, idx) =>
-            val pl = if (idx == 0) slots - original.length + 1 else 1
-            toks += Tok(t, idx, pl, orig = true, ord)
-          }
-          toks
-            .sortBy(t => (t.slot, -t.posLen, if (t.orig) 1 else 0, t.ord))
-            .foreach(t => out += PosTerm(t.term, base + t.slot))
-          positions += slots
-          // align the next incoming position with the end of the graph
-          shift = base + slots - 1 - lastKeyPos
-          i += key.length
-        case None =>
-          out += PosTerm(tokens(i).term, tokens(i).pos + shift)
-          positions += 1
-          i += 1
+          .sortBy { case (slot, posLen, rank, _) => (slot, -posLen, rank) }
+          .foreach { case (slot, _, _, t) => terms += t; pos += base + slot }
+        positions += slots
+        // align the next incoming position with the end of the graph
+        shift = base + slots - 1 - in.pos(i + key.length - 1)
+        i += key.length
       }
     }
-    (out.toArray, positions)
+    PosAnalyzed(terms.toArray, pos.result(), positions)
   }
 }
 

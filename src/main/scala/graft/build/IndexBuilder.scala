@@ -189,9 +189,9 @@ object IndexBuilder {
         var i = 0
         while (i < a.terms.length) {
           val t = a.terms(i)
-          var buf = posLists.get(t.term)
-          if (buf == null) { buf = scala.collection.mutable.ArrayBuffer.empty[Int]; posLists.put(t.term, buf) }
-          buf += t.pos
+          var buf = posLists.get(t)
+          if (buf == null) { buf = scala.collection.mutable.ArrayBuffer.empty[Int]; posLists.put(t, buf) }
+          buf += a.pos(i)
           i += 1
         }
         val arr = new Array[(String, Array[Int])](posLists.size())

@@ -146,18 +146,14 @@ object DocIds {
     * racing first action mints identical ids from the FIXED cached
     * layout. On the shuffle path (whose intermediate cache is dropped
     * before returning) this behaves exactly like [[assign]]. */
-  private[graft] def assignLazy(df: DataFrame, orderCols: Seq[String],
-                                numPartitions: Int = 0): DataFrame =
-    assignImpl(df, orderCols, numPartitions, eager = false)
+  private[graft] def assignLazy(df: DataFrame, orderCols: Seq[String]): DataFrame =
+    assignImpl(df, orderCols, eager = false)
 
-  def assign(df: DataFrame, orderCols: Seq[String], numPartitions: Int = 0): DataFrame =
-    assignImpl(df, orderCols, numPartitions, eager = true)
+  def assign(df: DataFrame, orderCols: Seq[String]): DataFrame =
+    assignImpl(df, orderCols, eager = true)
 
-  private def assignImpl(df: DataFrame, orderCols: Seq[String], numPartitions: Int,
-                         eager: Boolean): DataFrame = {
-    val spark = df.sparkSession
-    val n = if (numPartitions > 0) numPartitions
-            else spark.sessionState.conf.numShufflePartitions
+  private def assignImpl(df: DataFrame, orderCols: Seq[String], eager: Boolean): DataFrame = {
+    val n = df.sparkSession.sessionState.conf.numShufflePartitions
     val cols = orderCols.map(col)
 
     // PRESORTED FAST PATH: when the input already arrives globally sorted

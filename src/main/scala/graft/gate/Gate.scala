@@ -148,26 +148,7 @@ object Gate {
       |)""".stripMargin
 
   private val cte =
-    """WITH toks AS (
-      |  SELECT doc_id, unnest(list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'), t -> t <> '')) AS term
-      |  FROM documents
-      |), dl AS (
-      |  SELECT doc_id, count(*) AS dl FROM toks GROUP BY doc_id
-      |), dlq AS (
-      |  SELECT doc_id, CASE WHEN dl < 8 THEN dl
-      |    ELSE ((((dl >> (CAST(floor(log2(dl)) AS INT) - 3)) & 7) | 8) << (CAST(floor(log2(dl)) AS INT) - 3)) END AS dlq
-      |  FROM dl
-      |), stats AS (
-      |  SELECT count(*) AS n, sum(dl) * 1.0 / count(*) AS avgdl FROM dl
-      |), post AS (
-      |  SELECT term, doc_id, count(*) AS tf FROM toks GROUP BY term, doc_id
-      |), tstat AS (
-      |  SELECT term, count(*) AS df FROM post GROUP BY term
-      |), scores AS (
-      |  SELECT p.term, p.doc_id,
-      |    ln(1 + (s.n - t.df + 0.5) / (t.df + 0.5)) * p.tf / (p.tf + 1.2 * (0.25 + 0.75 * q.dlq / s.avgdl)) AS tscore
-      |  FROM post p JOIN dlq q USING (doc_id) JOIN tstat t USING (term) CROSS JOIN stats s
-      |), ptoks AS (
+    "WITH " + mutCte("documents") + """, ptoks AS (
       |  SELECT doc_id, unnest(toks) AS term, generate_subscripts(toks, 1) - 1 AS pos
       |  FROM (SELECT doc_id, list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'), t -> t <> '') AS toks
       |        FROM documents)

@@ -118,9 +118,9 @@ object PhraseQuery {
     * Lucene's QueryBuilder does (slop is meaningless for one term). */
   def fromAnalysis(a: graft.analysis.PosAnalyzed, slop: Int = 0): Option[Query] = {
     if (a.terms.isEmpty) return None
-    val slots: Seq[(Int, Seq[String])] = a.terms
-      .groupBy(_.pos).toSeq.sortBy(_._1)
-      .map { case (p, ts) => (p, ts.map(_.term).distinct.toSeq) }
+    val slots: Seq[(Int, Seq[String])] = a.terms.indices
+      .groupBy(i => a.pos(i)).toSeq.sortBy(_._1)
+      .map { case (p, is) => (p, is.map(i => a.terms(i)).distinct) }
     slots match {
       case Seq((_, Seq(t))) => Some(TermQuery(t))
       case s                => Some(PhraseQuery(s, slop))
@@ -286,13 +286,10 @@ object QueryText {
   def parse(text: String, analyze: String => Array[String],
             keywordFields: Set[String] = KeywordFields,
             analyzePos: String => graft.analysis.PosAnalyzed = null): Query = {
-    import graft.analysis.{PosAnalyzed, PosTerm}
+    import graft.analysis.PosAnalyzed
     val aPos: String => PosAnalyzed =
       if (analyzePos != null) analyzePos
-      else s => {
-        val ts = analyze(s)
-        PosAnalyzed(ts.zipWithIndex.map { case (t, i) => PosTerm(t, i) }, ts.length)
-      }
+      else s => PosAnalyzed.contiguous(analyze(s))
 
     // ---- lexer ----------------------------------------------------
     // tokens: optionally-occur-prefixed, optionally-field-prefixed quoted

@@ -142,13 +142,13 @@ final class NaiveOracle(docs: Seq[NaiveOracle.Doc]) {
     require(p.slop == 0,
       s"NaiveOracle scores exact phrases only; it does not model sloppy phrases (slop ${p.slop})")
     val termsAt: Map[Int, Set[String]] =
-      d.posTerms.groupBy(_.pos).map { case (k, v) => k -> v.map(_.term).toSet }
+      d.terms.indices.groupBy(i => d.pos(i)).map { case (k, is) => k -> is.map(i => d.terms(i)).toSet }
     val p0 = p.slots.head._1
     // candidate bases from the first slot's matches
-    val bases = d.posTerms.iterator
-      .filter(t => p.slots.head._2.contains(t.term))
-      .map(_.pos)
-      .toSeq.distinct
+    val bases = d.terms.indices
+      .filter(i => p.slots.head._2.contains(d.terms(i)))
+      .map(i => d.pos(i))
+      .distinct
     val freq = bases.count { basePos =>
       p.slots.forall { case (rp, alts) =>
         termsAt.get(basePos - p0 + rp).exists(ts => alts.exists(ts.contains))
@@ -333,14 +333,12 @@ object NaiveOracle {
 
   final case class Doc(
       docId: Long, convId: String, turnIdx: Int, role: String,
-      tool: Option[String], tsMs: Long, terms: Array[String], positions: Int,
-      posTerms: Array[graft.analysis.PosTerm] = Array.empty)
+      tool: Option[String], tsMs: Long, terms: Array[String], pos: Array[Int],
+      positions: Int)
 
   def fromTurns(turns: Seq[(Long, Turn)], analyzer: TextAnalyzer): NaiveOracle =
     new NaiveOracle(turns.map { case (id, t) =>
-      val a = analyzer(t.text)
-      val ap = analyzer.positional(t.text)
-      Doc(id, t.conv_id, t.turn_idx, t.role, t.tool, t.ts.getTime, a.terms,
-        a.positions, ap.terms)
+      val a = analyzer.positional(t.text)
+      Doc(id, t.conv_id, t.turn_idx, t.role, t.tool, t.ts.getTime, a.terms, a.pos, a.positions)
     })
 }

@@ -418,7 +418,8 @@ final class QueryExec(val index: Index, val exact: Boolean = false) {
   def topK(q: Query, filters: Seq[AttrPredicate], k: Int,
            after: Option[AfterToken] = None): DataFrame = {
     // fast path: pure-should distinct-term queries with no filters or
-    // cursor route to the block-max WAND kernel when segments exist
+    // cursor route to the WAND kernel (per-term whole-list bounds) when
+    // segments exist
     if (after.isEmpty && filters.isEmpty && index.segments.isDefined) {
       pureShouldTerms(q).foreach { terms =>
         val idf = termIdf(terms)

@@ -4,9 +4,12 @@ import graft.build.{CorpusStats, Segments}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
-/** Block-max WAND top-k over the packed segment layout — the one custom
-  * physical kernel (SURVEY.md §4: Catalyst's TakeOrderedAndProject sorts
-  * every match; Lucene prunes with totalHitsThreshold, Lucene.java:1490).
+/** WAND top-k over the packed segment layout — the one custom physical
+  * kernel (SURVEY.md §4: Catalyst's TakeOrderedAndProject sorts every
+  * match; Lucene prunes with totalHitsThreshold, Lucene.java:1490). Not
+  * block-max: each term is bounded by its maximum impact over its whole
+  * posting list in the segment; the `blockLast`/`blockMax` columns that
+  * Segments.pack writes are not read.
   *
   * Plan: parquet scan of segments filtered to the query terms (term
   * pushdown + row-group pruning) → groupByKey(segId) → per-segment WAND
@@ -88,7 +91,8 @@ object Wand {
       out
     }
     var pos: Int = 0
-    // conservative per-term upper bound: max block impact × weight, padded
+    // conservative per-term upper bound: max impact over the whole list
+    // × weight, padded
     // one float-ulp-ish to stay a true bound under float rounding
     val maxScore: Double = {
       if (exact) {

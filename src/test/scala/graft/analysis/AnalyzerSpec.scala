@@ -8,6 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class AnalyzerSpec extends AnyFunSuite {
 
+  /** A positional analysis as (term, position) pairs in emission order. */
+  private def termsAt(a: PosAnalyzed): Seq[(String, Int)] = a.terms.toSeq.zip(a.pos)
+
   test("IcatAnalyzer golden: demo sentence (TestLucene.java:91-112)") {
     val text = "This is a demo   of the 1st (or is it number 2) all singing and dancing TokenStream's API with added aardvarks"
     val got = Analyzers.Icat(text)
@@ -44,16 +47,51 @@ class AnalyzerSpec extends AnyFunSuite {
     // i.e. path@0, GAP@1 (stopword 'to'), data@2, mr@3 (posLen 2) with
     // molecular@3 + replac@4 injected, file.txt shifted to @5
     val got = Analyzers.IcatSynonym.positional("/path/to/data/mr/file.txt")
-    assert(got.terms.toSeq === Seq(
-      PosTerm("path", 0), PosTerm("data", 2), PosTerm("mr", 3),
-      PosTerm("molecular", 3), PosTerm("replac", 4), PosTerm("file.txt", 5)))
+    assert(termsAt(got) === Seq(
+      "path" -> 0, "data" -> 2, "mr" -> 3,
+      "molecular" -> 3, "replac" -> 4, "file.txt" -> 5))
     // norm length counts slots, not max position: 1+1+2+1
     assert(got.positions === 5)
     // gap-aware Icat chain without synonyms
     val icat = Analyzers.Icat.positional("time of the flight")
-    assert(icat.terms.toSeq === Seq(
-      PosTerm("time", 0), PosTerm("of", 1), PosTerm("flight", 3)))
+    assert(termsAt(icat) === Seq("time" -> 0, "of" -> 1, "flight" -> 3))
     assert(icat.positions === 3)
+    // a one-token key expanding to a three-token path (tof → time of
+    // flight) shifts every later token right by two; the stopword gap
+    // ('to') survives before the four-slot arpes expansion
+    val tof = Analyzers.IcatSynonym.positional("tof of be to arpes")
+    assert(termsAt(tof) === Seq(
+      "tof" -> 0, "time" -> 0, "of" -> 1, "flight" -> 2, "of" -> 3,
+      "beryllium" -> 4, "be" -> 4, "arp" -> 6, "angl" -> 6, "resolv" -> 7,
+      "photoemiss" -> 8, "spectroscopi" -> 9))
+    assert(tof.positions === 9)
+    // a three-token key (time of flight) after a hyphen split: its
+    // one-token alternative (tof) stacks on the key's first slot and the
+    // key keeps its own positions
+    val xray = Analyzers.IcatSynonym.positional("x-ray time of flight")
+    assert(termsAt(xray) === Seq(
+      "x" -> 0, "rai" -> 1, "tof" -> 2, "time" -> 2, "of" -> 3, "flight" -> 4))
+    assert(xray.positions === 5)
+  }
+
+  test("analysis digest: apply and positional output over generated turns") {
+    // one line per (analyzer, text): name|apply terms|apply positions|
+    // positional term@pos|positional positions — any change to any
+    // analyzer's output moves the digest
+    val texts = (0 until 300).flatMap(c => graft.corpus.TranscriptGen.turnsOf(c.toLong)).map(_.text)
+    val sb = new StringBuilder
+    for (a <- Seq(Analyzers.Icat, Analyzers.IcatSynonym, Analyzers.Simple); t <- texts) {
+      val plain = a(t)
+      val pos = a.positional(t)
+      sb.append(a.name).append('|').append(plain.terms.mkString(" ")).append('|')
+        .append(plain.positions).append('|')
+        .append(termsAt(pos).map { case (term, p) => s"$term@$p" }.mkString(" ")).append('|')
+        .append(pos.positions).append('\n')
+    }
+    val digest = java.security.MessageDigest.getInstance("SHA-256")
+      .digest(sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      .map(b => f"${b & 0xff}%02x").mkString
+    assert(digest === "46fee27bc7863e146397282b6037e186f98bdec07b5735fb7423f428f6c42023")
   }
 
   test("positional analysis emits the same term sequence as apply()") {
@@ -64,7 +102,7 @@ class AnalyzerSpec extends AnyFunSuite {
       "", "   ", "a the to with")
     for (a <- Seq(Analyzers.Icat, Analyzers.IcatSynonym, Analyzers.Simple);
          t <- texts) {
-      assert(a.positional(t).terms.map(_.term).toSeq === a(t).terms.toSeq,
+      assert(termsAt(a.positional(t)).map(_._1) === a(t).terms.toSeq,
         s"${a.name} on '$t'")
       assert(a.positional(t).positions === a(t).positions, s"${a.name} on '$t'")
     }
