@@ -5,7 +5,7 @@ import graft.analysis.{Analyzers, TextAnalyzer}
 import graft.corpus.DocIds
 import graft.model._
 import graft.score.QueryExec
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Engine facade mirroring the reference's search service surface
@@ -47,81 +47,73 @@ final class SearchEngine(val index: Index) {
     * the k winning docIds back to the corpus table). */
   def search(req: SearchRequest): SearchResponse = {
     val (q, filters) = plan(req)
-    val top =
-      if (req.sort.isScore) exec.topK(q, filters, req.maxResults, req.searchAfter)
-      else exec.topKSorted(q, filters, req.sort, req.maxResults, req.searchAfter)
     // Collect the ordered top-k FIRST (≤ k rows) and keep ITS row order —
     // the limited frame is already in the engine's full lexicographic sort
-    // order (all sort fields + docId tiebreak); re-sorting driver-side by a
+    // order (all sort keys + docId tiebreak); re-sorting driver-side by a
     // subset of keys would mis-order multi-field sorts and mint a wrong
     // search_after token.
-    val topRows = top.collect()
-    val orderedIds: Array[Long] = topRows.map(_.getLong(0))
-    val scoreOf: Map[Long, Float] =
-      topRows.map(r => r.getLong(0) -> toFloatScore(r.get(1))).toMap
-    import spark.implicits._
-    val fetched = index.corpus
-      .join(broadcast(spark.createDataset(orderedIds.toSeq).toDF("docId")), "docId")
-      .select("docId", "conv_id", "turn_idx", "role", "text", "tool", "ts")
+    val topRows = exec.topKSorted(q, filters, req.sort, req.maxResults, req.searchAfter)
       .collect()
-      .map { r =>
-        val id = r.getLong(0)
-        id -> ScoredHit(id, scoreOf(id), r.getString(1), r.getInt(2), r.getString(3),
-          r.getString(4), Option(r.getString(5)), r.getTimestamp(6))
-      }.toMap
-    val ordered: Seq[ScoredHit] = orderedIds.flatMap(fetched.get).toSeq
-    // after token from the last TOP row: field values come off the sorted
-    // frame itself (topKSorted selects every sort column); timestamps are
+    import spark.implicits._
+    // a joinFetch reads each hit's key value (column 7) from this same fetch
+    val keyCol = req.joinFetch.map(spec => col(spec.key).cast("string").as("__k")).toSeq
+    val fetched: Map[Long, Row] = index.corpus
+      .join(broadcast(spark.createDataset(topRows.map(_.getLong(0)).toSeq).toDF("docId")),
+        "docId")
+      .select((Seq("docId", "conv_id", "turn_idx", "role", "text", "tool", "ts")
+        .map(col) ++ keyCol): _*)
+      .collect()
+      .map(r => r.getLong(0) -> r).toMap
+    val hitRows: Seq[(Float, Row)] = topRows.toSeq.flatMap(t =>
+      fetched.get(t.getLong(0)).map(toFloatScore(t.get(1)) -> _))
+    val hits = hitRows.map { case (score, r) =>
+      ScoredHit(r.getLong(0), score, r.getString(1), r.getInt(2), r.getString(3),
+        r.getString(4), Option(r.getString(5)), r.getTimestamp(6))
+    }
+    // after token from the last TOP row: the sort keys' values come off the
+    // sorted frame itself (docId, score, sort fields…); timestamps are
     // encoded as epoch ms, the reference's token wire shape
     // (Lucene.java:1544-1561).
-    val afterTok = topRows.lastOption.map { r =>
-      if (req.sort.isScore) AfterToken(r.getLong(0), Some(toFloatScore(r.get(1))), Nil)
-      else AfterToken(r.getLong(0), None, req.sort.fields.zipWithIndex.map {
-        case ((_, _), i) =>
-          r.get(i + 2) match {
-            case t: java.sql.Timestamp => t.getTime
-            case v                     => v
-          }
-      })
+    val afterTok = topRows.lastOption.map(r => AfterToken(r.getLong(0),
+      Option.when(req.sort.isScore)(toFloatScore(r.get(1))),
+      req.sort.fields.indices.map(i => r.get(i + 2) match {
+        case t: java.sql.Timestamp => t.getTime
+        case v                     => v
+      })))
+    val joined = req.joinFetch.fold(Map.empty[Long, Seq[JoinedDoc]]) { spec =>
+      joinedFor(spec, hitRows.flatMap { case (_, r) =>
+        Option(r.getString(7)).map(r.getLong(0) -> _) })
     }
-    SearchResponse(ordered, afterTok, joinedFor(req, orderedIds))
+    SearchResponse(hits, afterTok, joined)
   }
 
   /** fields[]-style joined-entity fetch for the winning hits (reference:
     * SearchBucket.java:755-778 request parse; Lucene.java:869-901 returns
     * ≤100 related docs inline per hit): related corpus rows sharing each
     * hit's `key` value, ≤ limit per hit by docId asc, via the same
-    * broadcast-hits + bounded-window plan as Joins.joinedFetch. */
-  private def joinedFor(req: SearchRequest,
-                        orderedIds: Array[Long]): Map[Long, Seq[JoinedDoc]] =
-    req.joinFetch match {
-      case None => Map.empty
-      case Some(spec) =>
-        if (orderedIds.isEmpty) return Map.empty
-        val cap = math.min(spec.limit, 100) // the reference's hard cap
-        import spark.implicits._
-        val hitsDf = index.corpus
-          .join(broadcast(spark.createDataset(orderedIds.toSeq).toDF("docId")), "docId")
-          .select(col("docId"), col(spec.key).cast("string").as("__k"))
-        // hit docId → its key value (≤ k rows)
-        val hitKey: Map[Long, String] = hitsDf.collect()
-          .flatMap(r => Option(r.getString(1)).map(r.getLong(0) -> _)).toMap
-        val related = graft.score.Joins.joinedFetch(
-            hitsDf, "__k", index.corpus.withColumn("__k", col(spec.key).cast("string")),
-            "__k", "docId", cap)
-          .select(col("__k"), col("docId"), col("conv_id"), col("turn_idx"),
-            col("role"), col("text"), col("tool"), col("ts"))
-          .collect() // bounded: ≤ k × cap rows, the reference's inline shape
-        val byKey: Map[String, Seq[JoinedDoc]] = related
-          .groupBy(_.getString(0))
-          .map { case (k, rs) =>
-            k -> rs.sortBy(_.getLong(1)).map(r =>
-              JoinedDoc(r.getLong(1), r.getString(2), r.getInt(3), r.getString(4),
-                r.getString(5), Option(r.getString(6)), r.getTimestamp(7))).toSeq
-          }
-        orderedIds.flatMap(id =>
-          hitKey.get(id).flatMap(byKey.get).map(id -> _)).toMap
-    }
+    * broadcast-hits + bounded-window plan as Joins.joinedFetch, started
+    * from the (hit docId, key value) pairs of the hit fetch. */
+  private def joinedFor(spec: JoinFetchSpec,
+                        hitKeys: Seq[(Long, String)]): Map[Long, Seq[JoinedDoc]] = {
+    if (hitKeys.isEmpty) return Map.empty
+    val cap = math.min(spec.limit, 100) // the reference's hard cap
+    import spark.implicits._
+    val related = graft.score.Joins.joinedFetch(
+        hitKeys.toDF("docId", "__k"), "__k",
+        index.corpus.withColumn("__k", col(spec.key).cast("string")),
+        "__k", "docId", cap)
+      .select(col("__k"), col("docId"), col("conv_id"), col("turn_idx"),
+        col("role"), col("text"), col("tool"), col("ts"))
+      .collect() // bounded: ≤ k × cap rows, the reference's inline shape
+    val byKey: Map[String, Seq[JoinedDoc]] = related
+      .groupBy(_.getString(0))
+      .map { case (k, rs) =>
+        k -> rs.sortBy(_.getLong(1)).map(r =>
+          JoinedDoc(r.getLong(1), r.getString(2), r.getInt(3), r.getString(4),
+            r.getString(5), Option(r.getString(6)), r.getTimestamp(7))).toSeq
+      }
+    hitKeys.flatMap { case (id, k) => byKey.get(k).map(id -> _) }.toMap
+  }
 
   private def toFloatScore(v: Any): Float = v match {
     case f: Float  => f
@@ -198,20 +190,24 @@ final class SearchEngine(val index: Index) {
     }.toSeq
   }
 
+  /** The corpus rows of the request's matches — the one frame every facet
+    * counts over. */
+  private def matchedDocs(req: SearchRequest): DataFrame = {
+    val (q, filters) = plan(req)
+    index.corpus.join(exec.matches(q, filters).select("docId"), "docId")
+  }
+
   /** The single-pass facet frame: (dim, label, doc_count), ≤ maxLabels
     * rows per dim. Exposed for plan assertions. */
   private[graft] def facetFrame(req: SearchRequest, dimensions: Seq[String],
                                 maxLabels: Int): DataFrame = {
     require(dimensions.nonEmpty, "facetFrame needs at least one dimension")
-    val (q, filters) = plan(req)
-    val m = exec.matches(q, filters).select("docId")
-    val joined = index.corpus.join(m, "docId")
     val entries = array(dimensions.map(d =>
       struct(lit(d).as("dim"), col(d).cast("string").as("label"))): _*)
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col("dim"))
       .orderBy(col("doc_count").desc, col("label").asc)
-    joined
+    matchedDocs(req)
       .select(explode(entries).as("e"))
       .select(col("e.dim").as("dim"), col("e.label").as("label"))
       .filter(col("label").isNotNull)
@@ -220,24 +216,6 @@ final class SearchEngine(val index: Index) {
       .filter(col("__rn") <= maxLabels)
       .drop("__rn")
       .orderBy(col("dim").asc, col("doc_count").desc, col("label").asc)
-  }
-
-  /** The per-dimension variant (one aggregation job per dim) — kept for
-    * parity testing against the single-pass implementation. */
-  private[graft] def facetStringsPerDim(req: SearchRequest, dimensions: Seq[String],
-                                        maxLabels: Int = 10): Map[String, Seq[(String, Long)]] = {
-    val (q, filters) = plan(req)
-    val m = exec.matches(q, filters).select("docId")
-    val joined = index.corpus.join(m, "docId")
-    dimensions.map { dim =>
-      val rows = joined.filter(col(dim).isNotNull)
-        .groupBy(col(dim)).agg(count(lit(1)).as("doc_count"))
-        .orderBy(col("doc_count").desc, col(dim).asc)
-        .limit(maxLabels)
-        .collect()
-        .map(r => (r.get(0).toString, r.getLong(1)))
-      dim -> rows.toSeq
-    }.toMap
   }
 
   /** Range facets on a numeric/timestamp expression: [from, to) buckets
@@ -249,9 +227,6 @@ final class SearchEngine(val index: Index) {
   def facetRanges(req: SearchRequest, field: String,
                   ranges: Seq[(String, Long, Long)]): Seq[(String, Long)] = {
     if (ranges.isEmpty) return Nil
-    val (q, filters) = plan(req)
-    val m = exec.matches(q, filters).select("docId")
-    val joined = index.corpus.join(m, "docId")
     val valueCol = field match {
       case "ts" => col("ts").cast("double") * 1000.0 // epoch ms
       case f    => col(f).cast("double")
@@ -259,7 +234,7 @@ final class SearchEngine(val index: Index) {
     val aggs = ranges.map { case (_, lo, hi) =>
       sum(when(valueCol >= lo && valueCol < hi, 1L).otherwise(0L))
     }
-    val row = joined.agg(aggs.head, aggs.tail: _*).collect()(0)
+    val row = matchedDocs(req).agg(aggs.head, aggs.tail: _*).collect()(0)
     ranges.zipWithIndex.map { case ((label, _, _), i) =>
       label -> (if (row.isNullAt(i)) 0L else row.getLong(i))
     }

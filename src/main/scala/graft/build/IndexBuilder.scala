@@ -3,6 +3,8 @@ package graft.build
 import graft.analysis.{Analyzers, TextAnalyzer}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.json4s._
+import org.json4s.jackson.JsonMethods
 
 /** Global collection statistics needed by BM25 (reference semantics:
   * Lucene's per-index CollectionStatistics; we use one logical index —
@@ -393,11 +395,15 @@ object IndexBuilder {
     * read back by [[load]]. */
   private def writeMeta(dir: String, analyzerName: String, stats: CorpusStats,
                         segSize: Int, hasSegments: Boolean): Unit = {
-    val meta =
-      s"""{"analyzer":"$analyzerName","docCount":${stats.docCount},""" +
-        s""""sumTotalTermFreq":${stats.sumTotalTermFreq},"segSize":$segSize,""" +
-        s""""hasSegments":$hasSegments,"version":1}"""
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/meta.json"), meta)
+    val meta = JObject(
+      "analyzer" -> JString(analyzerName),
+      "docCount" -> JLong(stats.docCount),
+      "sumTotalTermFreq" -> JLong(stats.sumTotalTermFreq),
+      "segSize" -> JInt(segSize),
+      "hasSegments" -> JBool(hasSegments),
+      "version" -> JInt(1))
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/meta.json"),
+      JsonMethods.compact(JsonMethods.render(meta)))
   }
 
   /** Load a persisted index. The directory must contain a corpus table
@@ -406,12 +412,18 @@ object IndexBuilder {
   def load(spark: SparkSession, dir: String): Index = {
     require(java.nio.file.Files.exists(java.nio.file.Paths.get(s"$dir/corpus")),
       s"$dir has no corpus table — saved with writeCorpus=false?")
-    val meta = java.nio.file.Files.readString(java.nio.file.Paths.get(s"$dir/meta.json"))
-    def field(k: String): String = {
-      val m = java.util.regex.Pattern.compile("\"" + k + "\":\"?([^,}\"]+)").matcher(meta)
-      require(m.find(), s"missing $k in meta.json"); m.group(1)
+    val meta = JsonMethods.parse(
+      java.nio.file.Files.readString(java.nio.file.Paths.get(s"$dir/meta.json")))
+    def long(k: String): Long = meta \ k match {
+      case JInt(i)  => i.toLong
+      case JLong(l) => l
+      case _        => throw new IllegalArgumentException(s"missing $k in meta.json")
     }
-    val hasSegments = meta.contains("\"hasSegments\":true")
+    val analyzerName = meta \ "analyzer" match {
+      case JString(a) => a
+      case _          => throw new IllegalArgumentException("missing analyzer in meta.json")
+    }
+    val hasSegments = meta \ "hasSegments" == JBool(true)
     Index(
       corpus = spark.read.parquet(s"$dir/corpus"),
       // buildAndSave artifacts carry one null-term sentinel row per
@@ -419,10 +431,11 @@ object IndexBuilder {
       // (pushed to the scan, free on sentinel-less save() artifacts)
       postings = spark.read.parquet(s"$dir/postings").filter(col("term").isNotNull),
       termStats = spark.read.parquet(s"$dir/termstats"),
-      stats = CorpusStats(field("docCount").toLong, field("sumTotalTermFreq").toLong),
-      analyzerName = field("analyzer"),
+      stats = CorpusStats(long("docCount"), long("sumTotalTermFreq")),
+      analyzerName = analyzerName,
       segments = if (hasSegments) Some(spark.read.parquet(s"$dir/segments")) else None,
-      segSize = if (meta.contains("\"segSize\"")) field("segSize").toInt
-                else Segments.DefaultSegSize)
+      // files written before segSize was recorded use the default layout
+      segSize = if (meta \ "segSize" == JNothing) Segments.DefaultSegSize
+                else long("segSize").toInt)
   }
 }

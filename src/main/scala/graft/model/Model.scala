@@ -540,6 +540,14 @@ object Dates {
   * no sort ⇒ score desc, id asc). */
 final case class SortSpec(fields: Seq[(String, Boolean)]) {
   def isScore: Boolean = fields.isEmpty
+
+  /** The sort keys before the docId tiebreak: relevance (score desc)
+    * when no field is given. */
+  def keys: Seq[(String, Boolean)] = if (isScore) Seq(("score", false)) else fields
+
+  /** A search_after token's values for `keys`: its score under the
+    * relevance sort, its field values otherwise. */
+  def afterValues(a: AfterToken): Seq[Any] = if (isScore) a.score.toSeq else a.fields
 }
 
 /** Keyset-pagination token, mirroring the reference's search_after shape

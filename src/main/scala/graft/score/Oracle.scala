@@ -221,10 +221,13 @@ final class NaiveOracle(docs: Seq[NaiveOracle.Doc]) {
       }
       (if (loInc) v >= lo else v > lo) && (if (hiInc) v <= hi else v < hi)
     case p: ExactOrEnclosing => sys.error(s"no range fields in transcript corpus: $p")
+    case p: SiNumRange =>
+      throw new UnsupportedOperationException(s"NaiveOracle does not model numeric SI fields: $p")
   }
 
   /** Full-scan top-k: score every doc, sort (score desc, docId asc),
-    * apply the keyset search_after predicate, take k. */
+    * apply the keyset search_after predicate, take k. A token without a
+    * score keeps the docs after its docId, whatever their score. */
   def topK(q: Query, filters: Seq[AttrPredicate], k: Int,
            after: Option[AfterToken] = None): Seq[(Long, Float)] = {
     val hits = docs.flatMap { d =>
@@ -234,8 +237,12 @@ final class NaiveOracle(docs: Seq[NaiveOracle.Doc]) {
     val sorted = hits.sortBy { case (id, s) => (-s, id) }
     val paged = after match {
       case Some(a) =>
-        val s = a.score.get
-        sorted.filter { case (id, sc) => sc < s || (sc == s && id > a.docId) }
+        sorted.filter { case (id, sc) =>
+          a.score match {
+            case Some(s) => sc < s || (sc == s && id > a.docId)
+            case None    => id > a.docId
+          }
+        }
       case None => sorted
     }
     paged.take(k)

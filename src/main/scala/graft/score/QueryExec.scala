@@ -36,6 +36,7 @@ import org.apache.spark.sql.types.ArrayType
 final class QueryExec(val index: Index, val exact: Boolean = false) {
   private val spark = index.corpus.sparkSession
   import spark.implicits._
+  import QueryExec.Flat
 
   private val avgdlD: Double = index.stats.sumTotalTermFreq / index.stats.docCount.toDouble
   private val avgdlF: Float = avgdlD.toFloat
@@ -48,26 +49,6 @@ final class QueryExec(val index: Index, val exact: Boolean = false) {
   // occur markers for the single-pass aggregation
   private val OccShould = -1
   private val OccNot = -2
-
-  /** A flattened boolean query: MUST groups (a group matches when any of
-    * its terms match — the multi-token-analysis/synonym case), flat
-    * SHOULD terms, flat MUST_NOT terms. Every scoring term carries its
-    * cumulative boost (Lucene propagates boosts into leaf weights —
-    * BooleanWeight hands its boost to every scoring sub-weight — so a
-    * `Boosted` wrapper distributes multiplicatively while flattening;
-    * MUST_NOT legs are non-scoring and drop boosts).
-    *
-    * Documented rounding deviation: flattening a nested pure-SHOULD group
-    * folds its terms into ONE double-accumulated sum, whereas Lucene (and
-    * the NaiveOracle) cast each nested clause's sum to float at the
-    * clause boundary before the outer sum. The difference is ≤ a few ulps
-    * of float and can only flip the order of score-TIES' neighbours; we
-    * accept it for the single-pass plan (one aggregation instead of one
-    * per nesting level). The recursive path (used whenever flattening
-    * fails) matches the reference's clause-boundary rounding exactly. */
-  private final case class Flat(
-      mustGroups: Seq[Seq[(String, Float)]], should: Seq[(String, Float)],
-      mustNot: Seq[String])
 
   private def flatten(q: BoolQuery, boost: Float): Option[Flat] = {
     def asTerms(n: Query, b: Float): Option[Seq[(String, Float)]] = n match {
@@ -411,16 +392,26 @@ final class QueryExec(val index: Index, val exact: Boolean = false) {
     }
   }
 
-  /** Top-k by (score desc, docId asc) with optional keyset pagination
-    * (reference: SearchBucket.java:959-992 default sort; search_after
-    * clamp semantics SearchBucket.java:892-949). Returns
-    * (docId, score) limited to k — Catalyst plans TakeOrderedAndProject.  */
+  /** Top-k by relevance, the default sort (see [[topKSorted]]). */
   def topK(q: Query, filters: Seq[AttrPredicate], k: Int,
-           after: Option[AfterToken] = None): DataFrame = {
-    // fast path: pure-should distinct-term queries with no filters or
-    // cursor route to the WAND kernel (per-term whole-list bounds) when
-    // segments exist
-    if (after.isEmpty && filters.isEmpty && index.segments.isDefined) {
+           after: Option[AfterToken] = None): DataFrame =
+    topKSorted(q, filters, SortSpec(Nil), k, after)
+
+  /** The one top-k entry (reference: one `Sort` per search,
+    * SearchBucket.java:959-992 — no sort given ⇒ score desc; search_after
+    * clamp semantics SearchBucket.java:892-949). Sort keys are
+    * `sort.keys` — relevance (score desc) by default, else corpus columns
+    * — and docId asc is always the final tiebreak; scores are kept
+    * through a field sort (populateScores, Lucene.java:1498-1500).
+    * Returns (docId, score, sort fields…) limited to k — Catalyst plans
+    * TakeOrderedAndProject.
+    *
+    * A relevance-sorted first page of a pure-should disjunction with no
+    * filters routes to the WAND kernel (per-term whole-list bounds) when
+    * segments exist. */
+  def topKSorted(q: Query, filters: Seq[AttrPredicate], sort: SortSpec, k: Int,
+                 after: Option[AfterToken] = None): DataFrame = {
+    if (sort.isScore && after.isEmpty && filters.isEmpty && index.segments.isDefined) {
       pureShouldTerms(q).foreach { terms =>
         val idf = termIdf(terms)
         if (idf.isEmpty)
@@ -429,15 +420,14 @@ final class QueryExec(val index: Index, val exact: Boolean = false) {
           index.segSize, exact)
       }
     }
-    var m = matches(q, filters)
-    after.foreach { a =>
-      a.score.foreach { s =>
-        m = m.filter(col("score") < lit(s) ||
-          (col("score") === lit(s) && col("docId") > lit(a.docId)))
-      }
-      if (a.score.isEmpty) m = m.filter(col("docId") > lit(a.docId))
-    }
-    m.orderBy(col("score").desc, col("docId").asc).limit(k)
+    val m = matches(q, filters)
+    val keyed = if (sort.isScore) m else index.corpus.join(m, "docId")
+    val sortCols = sort.keys.map { case (f, asc) =>
+      if (asc) col(f).asc else col(f).desc
+    } :+ col("docId").asc
+    after.map(a => keyed.filter(afterPredicate(keyed, sort, a))).getOrElse(keyed)
+      .orderBy(sortCols: _*).limit(k)
+      .select((Seq(col("docId"), col("score")) ++ sort.fields.map(f => col(f._1))): _*)
   }
 
   /** Pure-should distinct analyzed terms, when the query is exactly that
@@ -454,42 +444,24 @@ final class QueryExec(val index: Index, val exact: Boolean = false) {
     case _ => None
   }
 
-  /** Field-sorted top-k (reference: typed sort fields via doc values,
-    * SearchBucket.java:959-992): sort keys are corpus columns; docId asc
-    * is always the final tiebreak; scores are kept through the sort
-    * (populateScores, Lucene.java:1498-1500). */
-  def topKSorted(q: Query, filters: Seq[AttrPredicate], sort: SortSpec, k: Int,
-                 after: Option[AfterToken] = None): DataFrame = {
-    if (sort.isScore) return topK(q, filters, k, after)
-    val m = matches(q, filters)
-    val joined = index.corpus.join(m, "docId")
-    val sortCols = sort.fields.map { case (f, asc) =>
-      if (asc) col(f).asc else col(f).desc
-    } :+ col("docId").asc
-    var res = joined
-    after.foreach { a =>
-      // lexicographic keyset predicate over (sort fields..., docId).
-      // After-token values arrive in wire shape (timestamps as epoch-millis
-      // longs, Lucene.java:1544-1561 token encoding) — coerce each to its
-      // sort column's Catalyst type, or Spark 4 rejects e.g. a
-      // TIMESTAMP-vs-BIGINT comparison outright.
-      val fieldCols = sort.fields.map { case (f, _) => col(f) }
-      val afterVals = sort.fields.map(_._1).zip(a.fields).map { case (f, v) =>
-        coerceToColumnType(joined.schema(f).dataType, v)
-      } :+ lit(a.docId)
-      val allCols = fieldCols :+ col("docId")
-      val ascFlags = sort.fields.map(_._2) :+ true
-      var pred: Column = lit(false)
-      var eqs: Column = lit(true)
-      allCols.zip(afterVals).zip(ascFlags).foreach { case ((c, v), asc) =>
-        val cmp = if (asc) c > v else c < v
-        pred = pred || (eqs && cmp)
-        eqs = eqs && (c === v)
-      }
-      res = res.filter(pred)
+  /** The keyset search_after predicate: rows strictly after the token in
+    * the lexicographic (sort keys…, docId) order. The token's key values
+    * pair with the leading keys (a token without a score pages a relevance
+    * sort by docId alone). Values arrive in wire shape (timestamps as
+    * epoch-millis longs, Lucene.java:1544-1561 token encoding) — each is
+    * coerced to its sort column's Catalyst type, or Spark 4 rejects e.g. a
+    * TIMESTAMP-vs-BIGINT comparison outright. */
+  private def afterPredicate(keyed: DataFrame, sort: SortSpec, a: AfterToken): Column = {
+    val keys = sort.keys.zip(sort.afterValues(a)).map { case ((f, asc), v) =>
+      (col(f), coerceToColumnType(keyed.schema(f).dataType, v), asc)
+    } :+ ((col("docId"), lit(a.docId), true))
+    var pred: Column = lit(false)
+    var eqs: Column = lit(true)
+    keys.foreach { case (c, v, asc) =>
+      pred = pred || (eqs && (if (asc) c > v else c < v))
+      eqs = eqs && (c === v)
     }
-    res.orderBy(sortCols: _*).limit(k)
-      .select((Seq(col("docId"), col("score")) ++ sort.fields.map(f => col(f._1))): _*)
+    pred
   }
 
   /** Coerce a wire-shaped after-token value to a sort column's type:
@@ -507,6 +479,26 @@ final class QueryExec(val index: Index, val exact: Boolean = false) {
 }
 
 object QueryExec {
+  /** A flattened boolean query: MUST groups (a group matches when any of
+    * its terms match — the multi-token-analysis/synonym case), flat
+    * SHOULD terms, flat MUST_NOT terms. Every scoring term carries its
+    * cumulative boost (Lucene propagates boosts into leaf weights —
+    * BooleanWeight hands its boost to every scoring sub-weight — so a
+    * `Boosted` wrapper distributes multiplicatively while flattening;
+    * MUST_NOT legs are non-scoring and drop boosts).
+    *
+    * Documented rounding deviation: flattening a nested pure-SHOULD group
+    * folds its terms into ONE double-accumulated sum, whereas Lucene (and
+    * the NaiveOracle) cast each nested clause's sum to float at the
+    * clause boundary before the outer sum. The difference is ≤ a few ulps
+    * of float and can only flip the order of score-TIES' neighbours; we
+    * accept it for the single-pass plan (one aggregation instead of one
+    * per nesting level). The recursive path (used whenever flattening
+    * fails) matches the reference's clause-boundary rounding exactly. */
+  private final case class Flat(
+      mustGroups: Seq[Seq[(String, Float)]], should: Seq[(String, Float)],
+      mustNot: Seq[String])
+
   /** Sloppy-phrase fractional frequency over the k rebased, ascending
     * position arrays of one document (slot 0 = anchors). Semantics are
     * Lucene-sloppy as documented on [[graft.model.PhraseQuery]]: per

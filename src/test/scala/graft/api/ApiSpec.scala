@@ -5,13 +5,23 @@ import graft.analysis.Analyzers
 import graft.build.Maintenance
 import graft.corpus.TranscriptGen
 import graft.model._
-import graft.score.QueryExec
+import graft.score.{NaiveOracle, QueryExec}
 
 /** JSON surface, facet response shape, maintenance ops, streaming batch
   * transform. */
 class ApiSpec extends SparkSuite {
 
   private lazy val engine = SearchEngine.build(TranscriptGen.tiny(spark), Analyzers.Icat)
+  private lazy val oracle: NaiveOracle = {
+    val rows = engine.index.corpus
+      .select("docId", "conv_id", "turn_idx", "role", "text", "tool", "ts")
+      .collect()
+      .map { r =>
+        (r.getLong(0), Turn(r.getString(1), r.getInt(2), r.getString(3),
+          r.getString(4), Option(r.getString(5)), r.getTimestamp(6)))
+      }
+    NaiveOracle.fromTurns(rows.toIndexedSeq, Analyzers.Icat)
+  }
 
   test("JSON request parse mirrors the reference shape") {
     val req = Json.parseRequest(
@@ -113,10 +123,22 @@ class ApiSpec extends SparkSuite {
     assert(e.getMessage.contains("nope"))
   }
 
-  test("single-pass facetStrings equals the per-dim variant and scans once") {
-    val req = SearchRequest(text = Some("ambiguous"))
-    val dims = Seq("role", "tool")
-    assert(engine.facetStrings(req, dims) === engine.facetStringsPerDim(req, dims))
+  test("single-pass facetStrings matches the oracle's counts and scans once") {
+    Seq(SearchRequest(text = Some("ambiguous")),
+        SearchRequest(text = Some("ambiguous"), filter = Map("role" -> Seq("tool", "system"))))
+      .foreach { req =>
+        val (q, filters) = engine.plan(req)
+        val matching = oracle.topK(q, filters, Int.MaxValue).map(_._1).toSet
+        val docs = engine.index.corpus.select("docId", "role", "tool").collect()
+          .filter(r => matching.contains(r.getLong(0)))
+        def counts(label: org.apache.spark.sql.Row => Option[String]): Seq[(String, Long)] =
+          docs.flatMap(label(_)).groupBy(identity).map { case (l, ls) => l -> ls.length.toLong }
+            .toSeq.sortBy { case (l, n) => (-n, l) }.take(10)
+        val want = Map("role" -> counts(r => Option(r.getString(1))),
+          "tool" -> counts(r => Option(r.getString(2))))
+        assert(want("role").nonEmpty && want("tool").nonEmpty, req)
+        assert(engine.facetStrings(req, Seq("role", "tool")) === want, req)
+      }
     // a MatchAll request isolates the facet aggregation in the plan:
     // ONE explode (Generate) + ONE aggregation (partial+final pair) for
     // ALL dims, instead of one aggregation job per dim

@@ -43,6 +43,36 @@ class BuildSpec extends SparkSuite {
     assert(saved.stats === index.stats)
   }
 
+  test("meta.json round trip keeps a separator analyzer whose char is JSON syntax") {
+    import spark.implicits._
+    val ts = java.sql.Timestamp.valueOf("2026-01-01 00:00:00")
+    Seq(',', '"').foreach { sep =>
+      val turns = Seq("alpha beta", "beta gamma", "gamma", "delta alpha").zipWithIndex
+        .map { case (t, i) =>
+          graft.model.Turn("c0", i, "user", t.replace(' ', sep), None, ts) }.toDS()
+      val engine = graft.api.SearchEngine.build(turns, Analyzers.Separator(sep))
+      val dir = java.nio.file.Files.createTempDirectory("graft-sep").toString
+      IndexBuilder.save(engine.index, dir, segSize = 64)
+      val meta = org.json4s.jackson.JsonMethods.parse(
+        java.nio.file.Files.readString(java.nio.file.Paths.get(s"$dir/meta.json")))
+      assert((meta \ "analyzer") === org.json4s.JString(s"sep_$sep"))
+      val loaded = graft.api.SearchEngine.load(spark, dir)
+      assert(loaded.index.analyzerName === s"sep_$sep")
+      assert(loaded.index.analyzer === Analyzers.Separator(sep))
+      assert(loaded.index.segSize === 64)
+      val req = graft.model.SearchRequest(text = Some("gamma"))
+      val got = loaded.search(req).hits
+      assert(got.map(_.text).sorted === Seq(s"beta${sep}gamma", "gamma"))
+      assert(got === engine.search(req).hits)
+      // a meta.json written before segSize was recorded loads the default layout
+      val metaPath = java.nio.file.Paths.get(s"$dir/meta.json")
+      java.nio.file.Files.writeString(metaPath,
+        java.nio.file.Files.readString(metaPath).replaceAll(""""segSize":[0-9]+,""", ""))
+      val old = IndexBuilder.load(spark, dir)
+      assert(old.segSize === Segments.DefaultSegSize && old.analyzerName === s"sep_$sep")
+    }
+  }
+
   test("buildAndSave docCount excludes zero-token docs (Terms.getDocCount semantics)") {
     import spark.implicits._
     val ts = new java.sql.Timestamp(0L)

@@ -189,6 +189,22 @@ class EngineSpec extends SparkSuite {
     assert((p1 ++ p2 ++ p3).map(_._1) === full.map(_._1))
   }
 
+  test("q08b a score-less token pages by docId alone, in the engine and the oracle") {
+    // the wire token {"doc":N} parses to AfterToken(N, None, Nil)
+    val q = parse("ambiguous needle_3")
+    val mid = oracle.topK(q, Nil, 20).map(_._1).sorted.apply(5)
+    val tok = Some(AfterToken(mid, None, Nil))
+    val want = oracle.topK(q, Nil, 10, tok)
+    assert(want.nonEmpty && want.forall(_._1 > mid))
+    assert(engineTopK(q, Nil, 10, tok).map(_._1) === want.map(_._1))
+  }
+
+  test("the oracle refuses numeric SI range filters with a stated cause") {
+    val e = intercept[UnsupportedOperationException](
+      oracle.topK(MatchAll, Seq(SiNumRange("ts", 0, 1, "s")), 10))
+    assert(e.getMessage.contains("NaiveOracle does not model numeric SI fields"))
+  }
+
   test("q09 match-all with ts sort desc") {
     val got = new QueryExec(engine.index)
       .topKSorted(MatchAll, Nil, SortSpec(Seq(("ts", false))), 10)
