@@ -92,14 +92,14 @@ final class SearchEngine(val index: Index) {
     * ≤100 related docs inline per hit): related corpus rows sharing each
     * hit's `key` value, ≤ limit per hit by docId asc, via the same
     * broadcast-hits + bounded-window plan as Joins.joinedFetch, started
-    * from the (hit docId, key value) pairs of the hit fetch. */
+    * from the hit fetch's key values, deduplicated on the driver. */
   private def joinedFor(spec: JoinFetchSpec,
                         hitKeys: Seq[(Long, String)]): Map[Long, Seq[JoinedDoc]] = {
     if (hitKeys.isEmpty) return Map.empty
     val cap = math.min(spec.limit, 100) // the reference's hard cap
     import spark.implicits._
     val related = graft.score.Joins.joinedFetch(
-        hitKeys.toDF("docId", "__k"), "__k",
+        hitKeys.map(_._2).distinct.toDF("__k"), "__k",
         index.corpus.withColumn("__k", col(spec.key).cast("string")),
         "__k", "docId", cap)
       .select(col("__k"), col("docId"), col("conv_id"), col("turn_idx"),
@@ -240,32 +240,19 @@ final class SearchEngine(val index: Index) {
     }
   }
 
-  /** Reference-shaped facet JSON:
-    * {"aggregations":{dim:{"buckets":{label:{"doc_count":n}}}}}
-    * for string dimensions, and range dimensions additionally carry the
-    * bucket's bounds — {label:{"doc_count":n,"from":lo,"to":hi}} —
-    * mirroring the reference's LongRange bucket serialization
-    * (reference: FacetedDimension.java:70-88 adds `from`/`to` inside each
-    * range bucket). Range buckets keep their request order (the reference
-    * serializes ranges in the order the request listed them). */
+  /** Reference-shaped facet JSON ([[Json.renderFacets]]): the string
+    * dimensions' buckets, then each range dimension's buckets in the
+    * order the request listed them (the reference serializes ranges in
+    * request order). */
   def facetJson(req: SearchRequest, dimensions: Seq[String], maxLabels: Int = 10,
                 rangeDims: Seq[(String, Seq[(String, Long, Long)])] = Nil): String = {
     val dims = if (dimensions.isEmpty && rangeDims.nonEmpty) Map.empty[String, Seq[(String, Long)]]
                else facetStrings(req, dimensions, maxLabels)
-    val body = dims.map { case (dim, labels) =>
-      val buckets = labels
-        .map { case (l, n) => s""""$l":{"doc_count":$n}""" }
-        .mkString("{", ",", "}")
-      s""""$dim":{"buckets":$buckets}"""
-    }
-    val rangeBody = rangeDims.map { case (field, ranges) =>
-      val counts = facetRanges(req, field, ranges).toMap
-      val buckets = ranges.map { case (label, lo, hi) =>
-        s""""$label":{"doc_count":${counts(label)},"from":$lo,"to":$hi}"""
-      }.mkString("{", ",", "}")
-      s""""$field":{"buckets":$buckets}"""
-    }
-    s"""{"aggregations":{${(body ++ rangeBody).mkString(",")}}}"""
+    Json.renderFacets(dims, rangeDims.map { case (field, ranges) =>
+      field -> ranges.zip(facetRanges(req, field, ranges)).map {
+        case ((label, lo, hi), (_, n)) => (label, n, lo, hi)
+      }
+    })
   }
 }
 

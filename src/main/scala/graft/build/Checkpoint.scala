@@ -1,8 +1,10 @@
 package graft.build
 
 import graft.analysis.TextAnalyzer
+import graft.api.Json
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.json4s._
 import java.nio.file.{Files, Paths}
 
 /** Checkpointed, resumable index build with per-partition lineage and
@@ -29,24 +31,21 @@ object Checkpoint {
   final case class BuildReport(
       groupsBuilt: Seq[Int], groupsSkipped: Seq[Int], manifests: Seq[GroupManifest])
 
-  private def manifestPath(outDir: String, g: Int) = Paths.get(s"$outDir/manifests/$g.json")
+  private def manifestPath(outDir: String, g: Int) = s"$outDir/manifests/$g.json"
 
   private def writeManifest(outDir: String, m: GroupManifest): Unit = {
     Files.createDirectories(Paths.get(s"$outDir/manifests"))
-    Files.writeString(manifestPath(outDir, m.group),
-      s"""{"group":${m.group},"rows":${m.rows},"tokens":${m.tokens},""" +
-        s""""postings":${m.postings},"checksum":${m.checksum}}""")
+    Json.writeFile(manifestPath(outDir, m.group), JObject("group" -> JInt(m.group),
+      "rows" -> JLong(m.rows), "tokens" -> JLong(m.tokens), "postings" -> JLong(m.postings),
+      "checksum" -> JLong(m.checksum)))
   }
 
   def readManifest(outDir: String, g: Int): Option[GroupManifest] = {
     val p = manifestPath(outDir, g)
-    if (!Files.exists(p)) None
+    if (!Files.exists(Paths.get(p))) None
     else {
-      val s = Files.readString(p)
-      def f(k: String): Long = {
-        val m = java.util.regex.Pattern.compile("\"" + k + "\":(-?\\d+)").matcher(s)
-        require(m.find(), s"missing $k"); m.group(1).toLong
-      }
+      val m = Json.readFile(p)
+      def f(k: String): Long = Json.long(m \ k).getOrElse(sys.error(s"missing $k in $p"))
       Some(GroupManifest(g, f("rows"), f("tokens"), f("postings"), f("checksum")))
     }
   }
@@ -102,9 +101,9 @@ object Checkpoint {
     // global stats + meta "commit"
     val all = spark.read.parquet(s"$outDir/postings")
     val s = all.agg(countDistinct(col("docId")), sum(col("tf"))).collect()(0)
-    Files.writeString(Paths.get(s"$outDir/meta.json"),
-      s"""{"analyzer":"${analyzer.name}","docCount":${s.getLong(0)},""" +
-        s""""sumTotalTermFreq":${s.getLong(1)},"nGroups":$nGroups,"version":1}""")
+    Json.writeFile(s"$outDir/meta.json", JObject("analyzer" -> JString(analyzer.name),
+      "docCount" -> JLong(s.getLong(0)), "sumTotalTermFreq" -> JLong(s.getLong(1)),
+      "nGroups" -> JInt(nGroups), "version" -> JInt(1)))
     BuildReport(built.toSeq, skipped.toSeq, manifests.toSeq)
   }
 

@@ -4,7 +4,6 @@ import graft.analysis.{Analyzers, TextAnalyzer}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.json4s._
-import org.json4s.jackson.JsonMethods
 
 /** Global collection statistics needed by BM25 (reference semantics:
   * Lucene's per-index CollectionStatistics; we use one logical index —
@@ -402,8 +401,7 @@ object IndexBuilder {
       "segSize" -> JInt(segSize),
       "hasSegments" -> JBool(hasSegments),
       "version" -> JInt(1))
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/meta.json"),
-      JsonMethods.compact(JsonMethods.render(meta)))
+    graft.api.Json.writeFile(s"$dir/meta.json", meta)
   }
 
   /** Load a persisted index. The directory must contain a corpus table
@@ -412,13 +410,9 @@ object IndexBuilder {
   def load(spark: SparkSession, dir: String): Index = {
     require(java.nio.file.Files.exists(java.nio.file.Paths.get(s"$dir/corpus")),
       s"$dir has no corpus table — saved with writeCorpus=false?")
-    val meta = JsonMethods.parse(
-      java.nio.file.Files.readString(java.nio.file.Paths.get(s"$dir/meta.json")))
-    def long(k: String): Long = meta \ k match {
-      case JInt(i)  => i.toLong
-      case JLong(l) => l
-      case _        => throw new IllegalArgumentException(s"missing $k in meta.json")
-    }
+    val meta = graft.api.Json.readFile(s"$dir/meta.json")
+    def long(k: String): Long = graft.api.Json.long(meta \ k)
+      .getOrElse(throw new IllegalArgumentException(s"missing $k in meta.json"))
     val analyzerName = meta \ "analyzer" match {
       case JString(a) => a
       case _          => throw new IllegalArgumentException("missing analyzer in meta.json")

@@ -64,7 +64,6 @@ object Segments {
       val nBlocks = (n + BlockSize - 1) / BlockSize
       val blockLast = new Array[Int](nBlocks)
       val blockMax = new Array[Float](nBlocks)
-      var b = 0
       var abs = 0L
       i = 0
       while (i < n) {

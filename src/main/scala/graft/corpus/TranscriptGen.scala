@@ -51,7 +51,6 @@ object TranscriptGen {
     "cobalt", "nickel", "copper", "zinc", "gallium", "germanium")
   private val rareVocab: Array[String] =
     Array.tabulate(470)(i => f"rare_$i%03d") ++ elements
-  private val roles = Array("user", "assistant", "system", "tool")
   private val tools = Array("bash", "search", "browser", "editor", "python")
 
   /** Mix-split so conversation streams are independent of each other. */

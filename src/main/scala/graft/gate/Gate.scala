@@ -96,12 +96,8 @@ object Gate {
       Segments.pack(idx.postings, idx.stats, GateSegSize).persist()
     })
 
-  private def docs(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(s"$sfDir/documents.parquet")
   private def events(spark: SparkSession, sfDir: String): DataFrame =
     spark.read.parquet(s"$sfDir/events.parquet")
-  private def embeddings(spark: SparkSession, sfDir: String): DataFrame =
-    spark.read.parquet(s"$sfDir/embeddings.parquet")
 
   private def parse(text: String): Query =
     QueryText.parse(text, s => Analyzers.Simple(s).terms,
@@ -815,7 +811,7 @@ object Gate {
         val (idx, exec) = gate(s, d)
         val top5 = exec.topK(parse("spark"), Nil, 5)
         val hits = idx.corpus.join(top5.select("docId"), "docId")
-          .select("docId", "tool")
+          .select("tool").distinct()
         graft.score.Joins.joinedFetch(
             hits, "tool", idx.corpus.select("docId", "tool"), "tool", "docId", 3)
           .select(col("docId").as("doc_id"), col("tool"))

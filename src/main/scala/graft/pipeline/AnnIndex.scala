@@ -1,7 +1,9 @@
 package graft.pipeline
 
+import graft.api.Json
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.json4s._
 
 /** Materialized ANN indexes: the build step computes and PERSISTS the
   * signature/cell assignment partitioned by bucket, so a probe prunes
@@ -40,17 +42,17 @@ object AnnIndex {
     sig.select(payload :+ posexplode(bandArr).as(Seq("band", "bv")): _*)
       .write.mode("overwrite").partitionBy("band", "bv")
       .parquet(s"$dir/lsh_buckets")
-    val meta = s"""{"numPlanes":$numPlanes,"bands":$bands,"seed":$seed,"dim":$dim,""" +
-      s""""storeVectors":${if (storeVectors) 1 else 0}}"""
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/lsh_meta.json"), meta)
+    Json.writeFile(s"$dir/lsh_meta.json", JObject("numPlanes" -> JInt(numPlanes),
+      "bands" -> JInt(bands), "seed" -> JLong(seed), "dim" -> JInt(dim),
+      "storeVectors" -> JInt(if (storeVectors) 1 else 0)))
   }
 
   /** The bucket frame a probe scans (exposed for plan assertions). */
   def lshProbeScan(spark: SparkSession, dir: String, query: Array[Float]): DataFrame = {
-    val meta = readMeta(s"$dir/lsh_meta.json")
+    val meta = lshMeta(dir)
     val numPlanes = meta("numPlanes").toInt
     val bands = meta("bands").toInt
-    val seed = meta("seed").toLong
+    val seed = meta("seed")
     val rows = numPlanes / bands
     val mask = (1L << rows) - 1
     val planes = Similarity.hyperplanes(query.length, numPlanes, seed)
@@ -80,8 +82,7 @@ object AnnIndex {
               emb: DataFrame, idCol: String = "vec_id",
               vecCol: String = "embedding",
               excludeId: Option[Long] = None): DataFrame = {
-    val meta = readMeta(s"$dir/lsh_meta.json")
-    val hasVectors = meta.get("storeVectors").exists(_.toInt == 1)
+    val hasVectors = lshMeta(dir)("storeVectors") == 1
     var cands =
       if (hasVectors)
         lshProbeScan(spark, dir, query).select(col(idCol), col(vecCol)).distinct()
@@ -120,17 +121,13 @@ object AnnIndex {
     emb.withColumn("cell", cellUdf(col(vecCol)))
       .write.mode("overwrite").partitionBy("cell")
       .parquet(s"$dir/ivf_cells")
-    val centJson = cents.map(_.mkString("[", ",", "]")).mkString("[", ",", "]")
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$dir/ivf_centroids.json"), centJson)
+    Json.writeFile(s"$dir/ivf_centroids.json",
+      JArray(cents.map(c => JArray(c.map(JLong(_)).toList)).toList))
   }
 
-  def readCentroids(dir: String): Array[Array[Long]] = {
-    val s = java.nio.file.Files.readString(
-      java.nio.file.Paths.get(s"$dir/ivf_centroids.json"))
-    s.stripPrefix("[[").stripSuffix("]]").split("\\],\\[")
-      .map(_.split(",").map(_.toLong))
-  }
+  def readCentroids(dir: String): Array[Array[Long]] =
+    Json.readFile(s"$dir/ivf_centroids.json").children
+      .map(_.children.map(v => Json.long(v).get).toArray).toArray
 
   /** The cell frame a probe scans (exposed for plan assertions). */
   def ivfProbeScan(spark: SparkSession, dir: String, query: Array[Float],
@@ -156,9 +153,9 @@ object AnnIndex {
       .select(col(idCol), round(col("cos"), 4).as("cos"))
   }
 
-  private def readMeta(path: String): Map[String, String] = {
-    val s = java.nio.file.Files.readString(java.nio.file.Paths.get(path))
-    "\"(\\w+)\":([-\\d.]+)".r.findAllMatchIn(s)
-      .map(m => m.group(1) -> m.group(2)).toMap
+  /** `lsh_meta.json`: the build's integer parameters by name. */
+  private def lshMeta(dir: String): String => Long = {
+    val meta = Json.readFile(s"$dir/lsh_meta.json")
+    k => Json.long(meta \ k).getOrElse(sys.error(s"missing $k in $dir/lsh_meta.json"))
   }
 }

@@ -9,6 +9,7 @@ import org.apache.spark.sql.functions._
   * full cross join — so they scale to cluster-sized corpora.
   */
 object Dedup {
+  import TextAnalysis.simpleToks
 
   /** Deterministic 64-bit FNV-1a string hash (stable across JVMs/runs,
     * unlike String.hashCode on other types or Random-seeded schemes). */
@@ -23,11 +24,6 @@ object Dedup {
     h
   }
   val fnv1a64Udf = udf(fnv1a64 _)
-
-  /** Simple tokenization used by the dedup family (lower, non-alnum split)
-    * — matches Analyzers.Simple so SQL oracles can reproduce it. */
-  private def tokensCol(text: Column): Column =
-    filter(split(lower(text), "[^a-z0-9]+"), t => t =!= "")
 
   /** JVM evaluation of Spark's `xxhash64` (seed 42) over the space-joined
     * n-token window w(i..i+n) — BIT-IDENTICAL to
@@ -110,7 +106,7 @@ object Dedup {
   private[pipeline] def hashedShingleSets(df: DataFrame, n: Int, idCol: String,
                                           textCol: String): DataFrame =
     hashedShingleSetsFromTokens(
-      spread(df).select(col(idCol).as("id"), tokensCol(col(textCol)).as("w")), n)
+      spread(df).select(col(idCol).as("id"), simpleToks(col(textCol)).as("w")), n)
 
   /** FNV-1a64 of the space-joined n-token window — char-fold identical to
     * [[fnv1a64]] of the joined string, with no string materialized. */
@@ -159,7 +155,7 @@ object Dedup {
       }
     }
     spread(df)
-      .select(col(idCol).as("id"), tokensCol(col(textCol)).as("w"))
+      .select(col(idCol).as("id"), simpleToks(col(textCol)).as("w"))
       .where(size(col("w")) >= n)
       .select(col("id"), shUdf(col("w")).as("hs"))
       .select(col("id"), col("hs._1").as("hset"), col("hs._2").as("fset"))
@@ -229,7 +225,7 @@ object Dedup {
                      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     require(n >= 2 && minDocs >= 2, s"need n >= 2 and minDocs >= 2; got n=$n minDocs=$minDocs")
     spansFromTokens(
-      spread(df).select(col(idCol).as("id"), tokensCol(col(textCol)).as("w")), n, minDocs)
+      spread(df).select(col(idCol).as("id"), simpleToks(col(textCol)).as("w")), n, minDocs)
   }
 
   /** [[duplicateSpans]] over an already-tokenized (id, w) frame — lets
@@ -283,7 +279,7 @@ object Dedup {
   def applySpans(df: DataFrame, n: Int = 8, minDocs: Int = 2,
                  idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     require(n >= 2 && minDocs >= 2, s"need n >= 2 and minDocs >= 2; got n=$n minDocs=$minDocs")
-    val toks = spread(df).select(col(idCol).as("id"), tokensCol(col(textCol)).as("w"))
+    val toks = spread(df).select(col(idCol).as("id"), simpleToks(col(textCol)).as("w"))
       .persist()
     toks.count()
     val spans = spansFromTokens(toks, n, minDocs)
@@ -318,7 +314,7 @@ object Dedup {
   private[pipeline] def shingleSets(df: DataFrame, n: Int, idCol: String,
                                     textCol: String): DataFrame =
     shingleSetsFromTokens(
-      spread(df).select(col(idCol).as("id"), tokensCol(col(textCol)).as("w")), n)
+      spread(df).select(col(idCol).as("id"), simpleToks(col(textCol)).as("w")), n)
 
   /** [[shingleSets]] over an already-tokenized (id, w) frame — the entry
     * point Curation.pipeline uses so one persisted token pass feeds the
@@ -364,16 +360,6 @@ object Dedup {
                textCol: String = "text"): DataFrame =
     shingleSets(df, n, idCol, textCol)
       .select(col("id"), explode(col("set")).as("shingle"))
-
-  /** Distinct 64-bit-hashed shingles: (id, shingle: long) — every later
-    * shuffle of the stream (self-joins, overlap counts) then moves 16
-    * bytes per row instead of the ~n-word shingle text. Overlap counts
-    * are unchanged unless two distinct shingles collide in 64 bits
-    * (birthday-safe until ~10^9 distinct shingles per job). */
-  private def hashedShingles(df: DataFrame, n: Int, idCol: String,
-                             textCol: String): DataFrame =
-    shingles(df, n, idCol, textCol)
-      .select(col("id"), xxhash64(col("shingle")).as("shingle"))
 
   /** Pair (ida, idb, jaccard ≥ threshold) from a (ida, idb, common) frame
     * plus the per-doc set sizes — the tail every Jaccard variant shares. */
@@ -511,10 +497,10 @@ object Dedup {
     res
   }
 
-  /** Per-doc MinHash signature over the doc's DISTINCT shingle array:
-    * elementwise min over the shingle hashes under `numHashes`
-    * independent affine hash functions h_i(x) = (a_i*x + b_i) mod p
-    * (p = 2^61 - 1).
+  /** Per-doc MinHash signature over the doc's DISTINCT shingle keys,
+    * pre-hashed with FNV-1a (the dual-hashed set form): elementwise min
+    * over the keys under `numHashes` independent affine hash functions
+    * h_i(x) = (a_i*x + b_i) mod p (p = 2^61 - 1).
     *
     * A NARROW per-row UDF, not an aggregator: the distinct shingles
     * already sit inside each document's row (shingleSets), so the
@@ -530,26 +516,6 @@ object Dedup {
     * signature → banding → candidates → exact-Jaccard verify end to
     * end), with the same independence properties as RNG-drawn affine
     * coefficients. */
-  private def minhashSigUdf(numHashes: Int, seed: Long) = {
-    val coeffs = minhashCoeffs(numHashes, seed) // tiny; serialized in closure
-    udf((shingles: Seq[String]) => {
-      val buf = Array.fill(numHashes)(Long.MaxValue)
-      shingles.foreach { s =>
-        val x = fnv1a64(s)
-        var i = 0
-        while (i < numHashes) {
-          val (a, b) = coeffs(i)
-          val v = affineHash(a, b, x)
-          if (v < buf(i)) buf(i) = v
-          i += 1
-        }
-      }
-      buf.toSeq
-    })
-  }
-
-  /** [[minhashSigUdf]] over PRE-FNV-HASHED shingle keys (the dual-hashed
-    * set form) — same arithmetic from the first affine evaluation on. */
   private def minhashSigFromFnvUdf(numHashes: Int, seed: Long) = {
     val coeffs = minhashCoeffs(numHashes, seed)
     udf((fnvs: Seq[Long]) => {
@@ -675,7 +641,7 @@ object Dedup {
     * with every other at distance 0 (the explode+groupBy form this
     * per-row map replaced likewise emitted no row for them). */
   def simhash(df: DataFrame, idCol: String = "doc_id", textCol: String = "text"): DataFrame =
-    spread(df).select(col(idCol).as("id"), tokensCol(col(textCol)).as("w"))
+    spread(df).select(col(idCol).as("id"), simpleToks(col(textCol)).as("w"))
       .where(size(col("w")) > 0)
       .select(col("id"), simhashUdf(col("w")).as("simhash"))
 

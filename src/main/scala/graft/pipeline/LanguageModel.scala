@@ -35,6 +35,7 @@ import org.apache.spark.sql.functions._
   * hot needs S dropped to 10^6 (still 6 exact digits).
   */
 object LanguageModel {
+  import TextAnalysis.simpleToks
 
   /** Fixed-point probability scale (9 exact decimal digits). */
   val Scale = 1000000000L
@@ -46,9 +47,6 @@ object LanguageModel {
   final case class BigramLm(vocab: Map[String, Int], v: Int,
                             c12: Map[Long, Long], c1: Map[Long, Long])
 
-  private def toks(c: org.apache.spark.sql.Column) =
-    filter(split(lower(c), "[^a-z0-9]+"), t => t =!= "")
-
   /** Train a bigram LM over the corpus. Vocabulary = the `vocabSize`
     * most frequent tokens (count desc, token asc — a deterministic
     * total order); every other token maps to the OOV symbol. The
@@ -57,7 +55,7 @@ object LanguageModel {
     * exchange is the bigram-count groupBy on packed 8-byte keys. */
   def train(df: DataFrame, vocabSize: Int = 512,
             textCol: String = "text"): BigramLm =
-    trainFromTokens(Dedup.spread(df).select(toks(col(textCol)).as("w")), vocabSize)
+    trainFromTokens(Dedup.spread(df).select(simpleToks(col(textCol)).as("w")), vocabSize)
 
   /** [[train]] over an already-tokenized single-column ("w") frame —
     * lets [[lmScore]] tokenize the corpus once for train AND score. */
@@ -98,7 +96,7 @@ object LanguageModel {
     * model rides a broadcast, no shuffle. */
   def score(df: DataFrame, lm: BigramLm, idCol: String = "doc_id",
             textCol: String = "text"): DataFrame =
-    scoreFromTokens(Dedup.spread(df).select(col(idCol), toks(col(textCol)).as("w")),
+    scoreFromTokens(Dedup.spread(df).select(col(idCol), simpleToks(col(textCol)).as("w")),
       lm, idCol)
 
   /** [[score]] over an already-tokenized (id, "w") frame. */
@@ -143,7 +141,7 @@ object LanguageModel {
   def lmScore(df: DataFrame, vocabSize: Int = 512,
               idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     val tdf = Dedup.spread(df)
-      .select(col(idCol), toks(col(textCol)).as("w")).persist()
+      .select(col(idCol), simpleToks(col(textCol)).as("w")).persist()
     tdf.count()
     val lm = trainFromTokens(tdf.select(col("w")), vocabSize)
     val out = scoreFromTokens(tdf, lm, idCol).persist()

@@ -48,7 +48,6 @@ object Multimodal {
     * (the Scala analogue of a Pandas-UDF mapInPandas batch), emitting
     * typed metadata + fake-decoded dimensions. */
   def decode(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
     val enc = org.apache.spark.sql.Encoders.row(decodedSchema)
     media.select("doc_id", "media", "media_type").mapPartitions { it =>
       it.map { r =>

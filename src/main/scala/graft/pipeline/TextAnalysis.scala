@@ -9,7 +9,10 @@ import org.apache.spark.sql.functions._
   * path except the fingerprint hash). */
 object TextAnalysis {
 
-  private def toks(text: Column): Column =
+  /** The pipeline tokenizer (lower, non-alnum split, empties dropped) —
+    * Analyzers.Simple as one column expression, so SQL oracles reproduce
+    * it. Dedup, Curation and LanguageModel tokenize with it too. */
+  private[pipeline] def simpleToks(text: Column): Column =
     filter(split(lower(text), "[^a-z0-9]+"), t => t =!= "")
 
   /** English function words used by the stopword-ratio heuristic. */
@@ -19,7 +22,7 @@ object TextAnalysis {
   /** Per-doc quality metrics: chars, tokens, distinct tokens, type-token
     * ratio, mean token length, alpha ratio. */
   def quality(df: DataFrame, idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val t = toks(col(textCol))
+    val t = simpleToks(col(textCol))
     df.select(
         col(idCol),
         length(col(textCol)).as("n_chars"),
@@ -35,7 +38,7 @@ object TextAnalysis {
   /** Stopword ratio per doc (language-ID style heuristic feature). */
   def stopwordRatio(df: DataFrame, stopwords: Seq[String] = EnglishStopwords,
                     idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val t = toks(col(textCol))
+    val t = simpleToks(col(textCol))
     val sw = typedlit(stopwords)
     df.select(col(idCol), t.as("w"))
       .select(col(idCol),
@@ -82,13 +85,9 @@ object TextAnalysis {
     (topItem, topCount)
   }
 
-  /** The dedup-family tokenization as a reusable column (lower, non-alnum
-    * split) — identical to the private `toks` so Curation shares it. */
-  private[pipeline] def simpleToks(text: Column): Column = toks(text)
-
   def repetitionStats(df: DataFrame, idCol: String = "doc_id",
                       textCol: String = "text"): DataFrame = {
-    val base = df.select(col(idCol), toks(col(textCol)).as("w"))
+    val base = df.select(col(idCol), simpleToks(col(textCol)).as("w"))
       .withColumn("n", size(col("w")).cast("long"))
       .withColumn("sw", sort_array(col("w")))
       .withColumn("bg", sort_array(zip_with(
@@ -223,7 +222,7 @@ object TextAnalysis {
     * (rolling content hash — equal normalized content ⇒ equal print). */
   def fingerprint(df: DataFrame, idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     val fp = udf((ws: Seq[String]) => Dedup.fnv1a64(ws.mkString(" ")))
-    df.select(col(idCol), toks(col(textCol)).as("w"))
+    df.select(col(idCol), simpleToks(col(textCol)).as("w"))
       .select(col(idCol), fp(col("w")).as("fingerprint"))
   }
 
@@ -246,7 +245,7 @@ object TextAnalysis {
   def topTfidfTerms(df: DataFrame, k: Int = 5, idCol: String = "doc_id",
                     textCol: String = "text"): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
-    val base = df.select(col(idCol).as("id"), toks(col(textCol)).as("w"))
+    val base = df.select(col(idCol).as("id"), simpleToks(col(textCol)).as("w"))
       .withColumn("n", size(col("w")))
       .where(col("n") > 0)
       .withColumn("sw", sort_array(col("w")))
@@ -290,7 +289,7 @@ object TextAnalysis {
     // no spread(): interleaved A/B vs the round-5 tree measured the added
     // text exchange as a net +0.1 s here (the explode feeds a hash
     // aggregate that redistributes anyway)
-    df.select(toks(col(textCol)).as("w"))
+    df.select(simpleToks(col(textCol)).as("w"))
       .where(size(col("w")) >= n)
       // guard repeated inside the expr, see shingleSetsFromTokens
       .select(explode(when(size(col("w")) >= n,
@@ -450,7 +449,7 @@ object TextAnalysis {
     import org.apache.spark.sql.expressions.Window
     val hist = df.where(col(srcCol).isNotNull)
       .select(col(srcCol).cast("string").as("src"),
-        coalesce(size(toks(col(textCol))), lit(0)).cast("long").as("n"))
+        coalesce(size(simpleToks(col(textCol))), lit(0)).cast("long").as("n"))
       .groupBy("src", "n").agg(count(lit(1)).as("c"))
     val cum = hist
       .withColumn("cum", sum(col("c")).over(

@@ -55,13 +55,16 @@ object Joins {
 
   /** Per-hit joined-entity fetch with a cap (reference: ≤100 related docs
     * per hit sorted by id, Lucene.java:869-901): returns `related` rows
-    * matched to each hit key, at most `limit` per key by `idCol` asc. */
+    * matched to each hit key, at most `limit` per key by `idCol` asc.
+    * `hits` holds each key at most once — the caller deduplicates (a
+    * driver-side key list, or `.distinct()` on a distributed frame), so a
+    * local key relation broadcasts without a shuffle. */
   def joinedFetch(hits: DataFrame, hitKey: String,
                   related: DataFrame, relatedKey: String,
                   idCol: String, limit: Int = 100): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val joined = related.join(
-      broadcast(hits.select(col(hitKey).as("__hk")).distinct()),
+      broadcast(hits.select(col(hitKey).as("__hk"))),
       col(relatedKey) === col("__hk")).drop("__hk")
     val w = Window.partitionBy(col(relatedKey)).orderBy(col(idCol).asc)
     joined.withColumn("__rn", row_number().over(w))

@@ -20,8 +20,6 @@ import scala.collection.mutable
 final class NaiveOracle(docs: Seq[NaiveOracle.Doc]) {
   import NaiveOracle.Doc
 
-  private val byId: Map[Long, Doc] = docs.map(d => d.docId -> d).toMap
-
   // term -> docId -> tf (plain nested maps; clarity over speed)
   private val postings: Map[String, Map[Long, Int]] = {
     val m = mutable.HashMap.empty[String, mutable.HashMap[Long, Int]]
@@ -138,7 +136,7 @@ final class NaiveOracle(docs: Seq[NaiveOracle.Doc]) {
     * occurrence present in the index. Naive nested loops by design.
     * Sloppy phrases are refused: scoring one as exact would blame the
     * engine for a mismatch the oracle made. */
-  private def phraseScore(p: PhraseQuery, d: Doc, boost: Float = 1.0f): Option[Float] = {
+  private def phraseScore(p: PhraseQuery, d: Doc, boost: Float): Option[Float] = {
     require(p.slop == 0,
       s"NaiveOracle scores exact phrases only; it does not model sloppy phrases (slop ${p.slop})")
     val termsAt: Map[Int, Set[String]] =
@@ -171,7 +169,7 @@ final class NaiveOracle(docs: Seq[NaiveOracle.Doc]) {
     * maxEdits, top-maxExpansions by (boost desc, term asc), df blended to
     * the expansion max, score = Σ boost × BM25(tf, blended idf) over the
     * doc's matching expanded terms. */
-  private def fuzzyScore(f: FuzzyQuery, d: Doc, qBoost: Float = 1.0f): Option[Float] = {
+  private def fuzzyScore(f: FuzzyQuery, d: Doc, qBoost: Float): Option[Float] = {
     if (f.maxEdits <= 0) return termScore(f.term, d, qBoost)
     val prefix = f.term.substring(0, math.min(f.prefixLength, f.term.length))
     val expansion: Seq[(String, Double)] = postings.keys.toSeq

@@ -63,7 +63,6 @@ object StreamingIndex {
     */
   def compact(streamed: DataFrame, turns: org.apache.spark.sql.Dataset[graft.model.Turn],
               analyzer: TextAnalyzer = Analyzers.Icat): graft.build.Index = {
-    val spark = streamed.sparkSession
     // surrogate-collision check: a surrogate docId must map to exactly ONE
     // natural key pair
     val collided = streamed.select("docId", "conv_id", "turn_idx").distinct()

@@ -1,10 +1,11 @@
 package graft.tools
 
 import graft.analysis.Analyzers
-import graft.api.SearchEngine
+import graft.api.{Json, SearchEngine}
 import graft.corpus.TranscriptGen
 import graft.model._
 import graft.score.NaiveOracle
+import org.json4s._
 
 /** Generates the committed golden files (FIXTURES.md §3) from the naive
   * oracle over the tiny seed-42 corpus: frozen query set top-k +
@@ -46,20 +47,17 @@ object GenGoldens {
       val q = if (text.isEmpty) MatchAll
               else QueryText.parse(text, s => Analyzers.Icat(s).terms)
       val hits = oracle.topK(q, filters, 20)
-      val json = hits.map { case (d, s) => s"""{"docId":$d,"score":$s}""" }
-        .mkString("[", ",", "]")
-      java.nio.file.Files.writeString(dir.resolve(s"$id.json"),
-        s"""{"id":"$id","text":"$text","hits":$json}""")
+      Json.writeFile(dir.resolve(s"$id.json").toString, JObject("id" -> JString(id),
+        "text" -> JString(text), "hits" -> JArray(hits.map { case (d, s) =>
+          JObject("docId" -> JLong(d), "score" -> Json.encode(s)) }.toList)))
       println(s"golden $id: ${hits.size} hits")
     }
 
     def dfOf(word: String): Long = oracle.df(Analyzers.Icat(word).terms.head)
-    val stats =
-      s"""{"docCount":${oracle.docCount},"sumTotalTermFreq":${oracle.sumTotalTermFreq},""" +
-        s""""df":{"needle_3":${dfOf("needle_3")},"ambiguous":${dfOf("ambiguous")},""" +
-        s""""hydrogen":${dfOf("hydrogen")},"w0000":${dfOf("w0000")}}}"""
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("src/test/resources/golden/stats.json"), stats)
+    Json.writeFile("src/test/resources/golden/stats.json", JObject(
+      "docCount" -> JLong(oracle.docCount), "sumTotalTermFreq" -> JLong(oracle.sumTotalTermFreq),
+      "df" -> JObject(Seq("needle_3", "ambiguous", "hydrogen", "w0000")
+        .map(w => JField(w, JLong(dfOf(w)))).toList)))
     println("golden stats written")
     spark.stop()
   }

@@ -206,6 +206,35 @@ class ApiSpec extends SparkSuite {
     assert(both.contains(""""ts":{"buckets":{"early":{"doc_count":"""))
   }
 
+  test("JSON request scalars: numbers, booleans and null decode to their values") {
+    val req = Json.parseRequest(
+      """{"query":{"filter":{"turn_idx":3,"tool":["bash",2.5,false]}},
+        |"search_after":{"doc":7,"fields":[null,true,4,"x"]}}""".stripMargin)
+    assert(req.filter("turn_idx") === Seq("3"))
+    assert(req.filter("tool") === Seq("bash", "2.5", "false"))
+    assert(req.searchAfter === Some(AfterToken(7L, None, Seq(null, true, 4L, "x"))))
+  }
+
+  test("facet JSON: labels with quotes and backslashes parse and round-trip") {
+    import org.json4s._
+    import spark.implicits._
+    val ts = java.sql.Timestamp.valueOf("2026-01-01 00:00:00")
+    val tools = Seq("say \"hi\"", "c:\\tmp", "plain")
+    val eng = SearchEngine.build(tools.zipWithIndex.map { case (t, i) =>
+      Turn("c0", i, "user", "alpha", Some(t), ts) }.toDS(), Analyzers.Icat)
+    val req = SearchRequest(text = Some("alpha"))
+    val ranges = Seq(("a\"b", 0L, Long.MaxValue), ("c\\d", Long.MinValue, 0L))
+    val doc = org.json4s.jackson.JsonMethods.parse(
+      eng.facetJson(req, Seq("tool"), rangeDims = Seq("ts" -> ranges)))
+    def buckets(dim: String): List[(String, JValue)] =
+      (doc \ "aggregations" \ dim \ "buckets").asInstanceOf[JObject].obj
+    assert(buckets("tool").map { case (l, b) => l -> (b \ "doc_count") } ===
+      eng.facetStrings(req, Seq("tool"))("tool").map { case (l, n) => l -> JInt(n) })
+    assert(buckets("tool").map(_._1).sorted === tools.sorted)
+    assert(buckets("ts").map(_._1) === ranges.map(_._1))
+    assert(buckets("ts").map(_._2 \ "doc_count") === Seq(JInt(3), JInt(0)))
+  }
+
   test("maintenance: delete removes docs from results and stats") {
     val before = engine.search(SearchRequest(text = Some("needle_3"), maxResults = 5))
     val victim = before.hits.head.docId

@@ -133,6 +133,20 @@ class BuildSpec extends SparkSuite {
     assert(r2.manifests.map(_.rows).sum === corpus.count())
   }
 
+  test("checkpoint meta.json parses when the analyzer name holds a quote") {
+    import org.json4s._
+    val sep = Analyzers.Separator('"')
+    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt-sep").toString
+    val r = Checkpoint.buildPostings(corpus.limit(40), sep, dir, 2)
+    val meta = org.json4s.jackson.JsonMethods.parse(
+      java.nio.file.Files.readString(java.nio.file.Paths.get(s"$dir/meta.json")))
+    assert((meta \ "analyzer") === JString("sep_\""))
+    assert((meta \ "sumTotalTermFreq") === JInt(r.manifests.map(_.tokens).sum))
+    assert((meta \ "nGroups") === JInt(2))
+    assert(r.manifests.map(m => Checkpoint.readManifest(dir, m.group)) ===
+      r.manifests.map(Some(_)))
+  }
+
   test("checkpointed postings equal the one-shot builder's postings") {
     val dir = java.nio.file.Files.createTempDirectory("graft-ckpt2").toString
     Checkpoint.buildPostings(corpus, Analyzers.Icat, dir, 3)

@@ -2,7 +2,7 @@ package graft.score
 
 import graft.SparkSuite
 import graft.analysis.Analyzers
-import graft.api.SearchEngine
+import graft.api.{Json, SearchEngine}
 import graft.build.IndexBuilder
 import graft.corpus.{DocIds, TranscriptGen}
 import graft.model._
@@ -268,6 +268,20 @@ class EngineSpec extends SparkSuite {
     assert(gotIds === want)
     // hits come back in engine order, not re-sorted by a subset of keys
     assert(r1.hits.map(_.docId) === want.take(6))
+    // tool is null on all but two matches: nulls sort first asc and last
+    // desc. Each token travels through the wire codec: asc page 1 ends on
+    // a null, desc page 1 on the last non-null tool.
+    Seq(true -> 5, false -> 2).foreach { case (asc, size) =>
+      val sortFields = Seq(("tool", asc))
+      val first = req.copy(sort = SortSpec(sortFields), maxResults = size)
+      val pages = Iterator.iterate(engine.search(first)) { r =>
+        val tok = Json.parseRequest(Json.renderResponse(r)).searchAfter
+        engine.search(first.copy(searchAfter = tok))
+      }.takeWhile(_.hits.nonEmpty).take(40).toSeq
+      val all = oracle.topKSorted(parse("ambiguous"), Nil, sortFields, Int.MaxValue)
+      assert(all.nonEmpty && pages.size > 2, s"tool asc=$asc")
+      assert(pages.flatMap(_.hits.map(_.docId)) === all.map(_._1), s"tool asc=$asc")
+    }
   }
 
   test("empty text = match-all scores 1.0") {

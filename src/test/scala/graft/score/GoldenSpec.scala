@@ -5,6 +5,8 @@ import graft.analysis.Analyzers
 import graft.api.SearchEngine
 import graft.corpus.TranscriptGen
 import graft.model._
+import org.json4s._
+import org.json4s.jackson.JsonMethods
 
 /** Committed golden files (FIXTURES.md §3): the frozen query set's top-20
   * (docId, score) over the tiny seed-42 corpus. Asserts BOTH
@@ -24,13 +26,18 @@ class GoldenSpec extends SparkSuite {
     NaiveOracle.fromTurns(rows.toIndexedSeq, Analyzers.Icat)
   }
 
+  /** A golden file's document; decimals stay exact so a score reads
+    * back as the Float its digits name. */
+  private def resource(path: String): JValue = {
+    val src = scala.io.Source.fromResource(path)
+    try JsonMethods.parse(src.mkString, useBigDecimalForDouble = true) finally src.close()
+  }
+
   private def golden(id: String): (String, Seq[(Long, Float)]) = {
-    val src = scala.io.Source.fromResource(s"golden/topk/$id.json")
-    val s = try src.mkString finally src.close()
-    val text = "\"text\":\"([^\"]*)\"".r.findFirstMatchIn(s).get.group(1)
-    val hits = """\{"docId":(\d+),"score":([0-9.Ee+-]+)\}""".r
-      .findAllMatchIn(s).map(m => (m.group(1).toLong, m.group(2).toFloat)).toSeq
-    (text, hits)
+    val doc = resource(s"golden/topk/$id.json")
+    val hits = (doc \ "hits").children.map(h =>
+      ((h \ "docId").values.toString.toLong, (h \ "score").values.toString.toFloat))
+    ((doc \ "text").values.toString, hits)
   }
 
   graft.tools.GenGoldens.queries.foreach { case (id, _, filters) =>
@@ -51,10 +58,8 @@ class GoldenSpec extends SparkSuite {
   }
 
   test("golden stats: docCount / sumTotalTermFreq / df") {
-    val src = scala.io.Source.fromResource("golden/stats.json")
-    val s = try src.mkString finally src.close()
-    def num(k: String): Long =
-      ("\"" + k + "\":(\\d+)").r.findFirstMatchIn(s).get.group(1).toLong
+    val stats = resource("golden/stats.json")
+    def num(k: String): Long = (stats \\ k).values.toString.toLong
     assert(engine.index.stats.docCount === num("docCount"))
     assert(engine.index.stats.sumTotalTermFreq === num("sumTotalTermFreq"))
     assert(oracle.df(Analyzers.Icat("ambiguous").terms.head) === num("ambiguous"))
