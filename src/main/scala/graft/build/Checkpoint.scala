@@ -82,8 +82,7 @@ object Checkpoint {
             coalesce(
               pmod(sum(xxhash64(col("term"), col("docId"), col("tf")).cast("decimal(38,0)")),
                 lit(BigDecimal("4611686018427387904"))).cast("long"),
-              lit(0L)).as("checksum"),
-            countDistinct(col("docId")).as("docs")).collect()(0)
+              lit(0L)).as("checksum")).collect()(0)
           val rows = part.count()
           val m = GroupManifest(g, rows, statsRow.getLong(1),
             statsRow.getLong(0), statsRow.getLong(2))

@@ -40,8 +40,10 @@ final case class Index(
     * `withPositions` — the proximity data phrase queries require). */
   def hasPositions: Boolean = postings.columns.contains("positions")
 
-  /** Cache-ownership hook: drop every cached table of this bundle (the
-    * close() of a long-lived service — see IndexRegistry.drop/clear).
+  /** Drop every cached table of this bundle. The ownership rule: the
+    * caller owns what an operator returns, and no operator releases its
+    * input — so whoever replaces a generation (a mutation chain, the
+    * close() of IndexRegistry.drop/clear) releases the old one here.
     * No-op for tables that were never persisted; the bundle itself stays
     * queryable afterwards, recomputing from lineage/storage. Corpus
     * inclusion is optional because the corpus cache is minted by
@@ -128,9 +130,10 @@ object IndexBuilder {
   /** The cached Index over a postings frame: persists `postings` and its
     * per-term stats table (term, df, cf) MEMORY_AND_DISK, then derives the
     * global stats in one collect — the action that materializes the
-    * postings cache, so a caller replacing an older generation can drop
-    * that generation's caches once this returns. Shared by the in-memory
-    * build, every Maintenance mutation and streaming compaction. */
+    * postings cache. The caller owns the returned caches (see
+    * [[Index.unpersistAll]]); a caller replacing an older generation can
+    * release that one once this returns. Shared by the in-memory build,
+    * every Maintenance mutation and streaming compaction. */
   private[graft] def fromPostings(corpus: DataFrame, postings: DataFrame,
                                   analyzerName: String): Index = {
     postings.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

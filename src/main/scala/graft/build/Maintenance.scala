@@ -21,14 +21,10 @@ object Maintenance {
   /** Delete documents by id across all index tables (reference:
     * LongPoint exact-query delete, Lucene.java:301-317 — here an
     * anti-join, with stats recomputed from the surviving postings). */
-  def deleteDocs(index: Index, docIds: Seq[Long],
-                 unpersistOld: Boolean = true): Index = {
+  def deleteDocs(index: Index, docIds: Seq[Long]): Index = {
     val spark = index.corpus.sparkSession
     import spark.implicits._
-    val ids = docIds.toDF("docId")
-    val corpus = index.corpus.join(broadcast(ids), Seq("docId"), "left_anti")
-    val postings = index.postings.join(broadcast(ids), Seq("docId"), "left_anti")
-    rebuild(index, corpus, postings, unpersistOld)
+    mutate(index, removed = Some(docIds.toDF("docId")), added = None)
   }
 
   /** Create (append) new turns: analyze and append their postings.
@@ -37,35 +33,47 @@ object Maintenance {
     * break the global (conv_id, turn_idx) dense ordering (ids mirror
     * insertion order, exactly like the reference's upstream-assigned ids);
     * a compaction that re-runs DocIds.assign over the merged corpus
-    * restores the global invariant. */
-  def addTurns(index: Index, turns: Dataset[Turn], analyzer: TextAnalyzer,
-               unpersistOld: Boolean = true): Index = {
+    * restores the global invariant. The appended turns' DocIds mint is a
+    * cache this call leaves behind: their docIds exist only in it, so it
+    * must stay cached while any generation built on it is live. */
+  def addTurns(index: Index, turns: Dataset[Turn], analyzer: TextAnalyzer): Index = {
+    requireAnalyzer(index, analyzer)
     val base = index.corpus.agg(coalesce(max(col("docId")), lit(-1L))).collect()(0).getLong(0)
     val newCorpus = graft.corpus.DocIds.forTurns(turns)
       .withColumn("docId", col("docId") + lit(base + 1))
-    // a positional index's delta must be positional too, or the union fails
-    val delta = IndexBuilder.build(newCorpus, analyzer, index.hasPositions)
-    val corpus = index.corpus.unionByName(newCorpus)
-    val postings = index.postings.unionByName(delta.postings)
-    val out = rebuild(index, corpus, postings, unpersistOld)
-    // the merged postings cache is materialized by rebuild's stats action;
-    // the delta's own caches are now redundant intermediates
-    delta.unpersistAll(includeCorpus = false)
-    out
+    mutate(index, removed = None, added = Some(newCorpus))
   }
 
   /** Update = delete + add (reference: Lucene.java:327-330, 1788-1830).
     * `updated` carries the replacement text for existing docIds. */
   def updateDocs(index: Index, updated: DataFrame, analyzer: TextAnalyzer): Index = {
-    val ids = updated.select("docId")
-    val corpusKept = index.corpus.join(broadcast(ids), Seq("docId"), "left_anti")
-    val postingsKept = index.postings.join(broadcast(ids), Seq("docId"), "left_anti")
-    val delta = IndexBuilder.build(updated, analyzer, index.hasPositions)
-    val corpus = corpusKept.unionByName(updated)
-    val postings = postingsKept.unionByName(delta.postings)
-    val out = rebuild(index, corpus, postings)
-    delta.unpersistAll(includeCorpus = false)
-    out
+    requireAnalyzer(index, analyzer)
+    mutate(index, removed = Some(updated.select("docId")), added = Some(updated))
+  }
+
+  /** Queries are analyzed with the index's analyzer, so added rows must be
+    * too — another analyzer would mix two analyses in one index. */
+  private def requireAnalyzer(index: Index, analyzer: TextAnalyzer): Unit =
+    require(analyzer.name == index.analyzerName,
+      s"analyzer ${analyzer.name} does not match the index's analyzer ${index.analyzerName}")
+
+  /** The one write path of a modify batch: anti-join the `removed` docIds
+    * out of the corpus and the postings, union in the `added` corpus rows
+    * and their postings (analyzed like the index: its analyzer, positions
+    * iff it has them), and cache the result with [[IndexBuilder.fromPostings]],
+    * whose stats job analyzes the added rows. `index` is left as it was,
+    * caches included (the caller owns them). */
+  private def mutate(index: Index, removed: Option[DataFrame],
+                     added: Option[DataFrame]): Index = {
+    def mutated(table: DataFrame, rowsOf: DataFrame => DataFrame) = {
+      val kept = removed.fold(table)(ids => table.join(broadcast(ids), Seq("docId"), "left_anti"))
+      added.fold(kept)(a => kept.unionByName(rowsOf(a)))
+    }
+    IndexBuilder.fromPostings(
+      mutated(index.corpus, identity),
+      mutated(index.postings, a => IndexBuilder.analyzedPostings(IndexBuilder.postingsInput(a),
+        index.analyzer, withPositions = index.hasPositions)),
+      index.analyzerName)
   }
 
   /** Denormalization refresh (reference: updateByRelation,
@@ -112,26 +120,4 @@ object Maintenance {
         count(lit(1)).as("turn_count"),
         sum(length(col("text"))).cast("long").as("total_chars"),
         max(col("ts")).as("last_ts"))
-
-  /** `unpersistOld = false` keeps the predecessor's caches alive — for
-    * callers mutating a long-lived STANDING index (a serving deployment's
-    * modify(), the gate's cached base index) where the original bundle
-    * keeps serving queries after the mutation; the caller then owns both
-    * generations' caches. Default true: a mutation CHAIN supersedes its
-    * predecessor (original cache-hygiene semantics). */
-  private def rebuild(old: Index, corpus: DataFrame, postings: DataFrame,
-                      unpersistOld: Boolean = true): Index = {
-    // fromPostings' stats action materializes the NEW postings cache (the
-    // scan writes its blocks), so the predecessor's cache can be dropped next
-    val out = IndexBuilder.fromPostings(corpus, postings, old.analyzerName)
-    // cache hygiene: a mutation SUPERSEDES `old` — without this, a chain
-    // of N updates pins N index generations in executor storage. The old
-    // bundle stays queryable (its tables recompute from lineage), just
-    // uncached; its corpus is owned by DocIds/the caller and untouched.
-    if (unpersistOld) {
-      old.postings.unpersist()
-      old.termStats.unpersist()
-    }
-    out
-  }
 }

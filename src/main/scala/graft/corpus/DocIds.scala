@@ -260,7 +260,7 @@ object DocIds {
       .withColumn("_mono", monotonically_increasing_id())
       .select((element_at(offArr, shiftright(col("_mono"), 33).cast("int") + 1) +
           col("_mono").bitwiseAND(lit((1L << 33) - 1))).as("docId")
-        +: parted.columns.map(col): _*)
+        +: parted.columns.toSeq.map(col): _*)
       .persist()
     // mint: every downstream plan reads these cached rows, never re-runs
     // the pid-dependent assignment. With materialize=false the caller's

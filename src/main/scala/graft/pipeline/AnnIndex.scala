@@ -133,7 +133,7 @@ object AnnIndex {
   def ivfProbeScan(spark: SparkSession, dir: String, query: Array[Float],
                    nProbe: Int = 4): DataFrame = {
     val cents = readCentroids(dir)
-    val probeCells = Similarity.probeCellsQ(Similarity.quantize(query), cents, nProbe)
+    val probeCells = Similarity.probeCellsQ(Similarity.quantize(query.toIndexedSeq), cents, nProbe)
     spark.read.parquet(s"$dir/ivf_cells")
       .filter(col("cell").isin(probeCells.toSeq: _*)) // partition pruning
   }

@@ -252,7 +252,7 @@ object Similarity {
     val cents = kmeansCentroidsQ(sample, math.min(cells, sample.length))
     val bCents = base.sparkSession.sparkContext.broadcast(cents)
     val cellUdf = udf((v: Seq[Float]) => nearestCentroidQ(quantize(v), bCents.value))
-    val probeCells = probeCellsQ(quantize(query), cents, nProbe)
+    val probeCells = probeCellsQ(quantize(query.toIndexedSeq), cents, nProbe)
     base.withColumn("__cell", cellUdf(col(vecCol)))
       .filter(col("__cell").isin(probeCells.toSeq: _*))
       .select(col(idCol), cosineCol(col(vecCol), query).as("cos"))

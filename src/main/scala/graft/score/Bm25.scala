@@ -1,7 +1,7 @@
 package graft.score
 
-import graft.build.{Index, SmallFloat}
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.build.SmallFloat
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Lucene-8.11-semantics BM25 scoring (k1 = 1.2, b = 0.75 — the defaults

@@ -446,8 +446,9 @@ final class QueryExec(val index: Index, val exact: Boolean = false) {
 
   /** The keyset search_after predicate: rows strictly after the token in
     * the lexicographic (sort keys…, docId) order, with nulls where Spark
-    * sorts them — first asc, last desc — so a null-valued key (a token
-    * value or a row's) pages like any other. The token's key values
+    * sorts them — first asc, last desc — so a null-valued field key (a
+    * token value or a row's) pages like any other; `matches` scores every
+    * hit, so the score key has no null term. The token's key values
     * pair with the leading keys (a token without a score pages a relevance
     * sort by docId alone). Values arrive in wire shape (timestamps as
     * epoch-millis longs, Lucene.java:1544-1561 token encoding) — each is
@@ -455,15 +456,15 @@ final class QueryExec(val index: Index, val exact: Boolean = false) {
     * TIMESTAMP-vs-BIGINT comparison outright. */
   private def afterPredicate(keyed: DataFrame, sort: SortSpec, a: AfterToken): Column = {
     val keys = sort.keys.zip(sort.afterValues(a)).map { case ((f, asc), v) =>
-      (col(f), coerceToColumnType(keyed.schema(f).dataType, v), v == null, asc)
-    } :+ ((col("docId"), lit(a.docId), false, true))
+      (col(f), coerceToColumnType(keyed.schema(f).dataType, v), v == null, asc, f != "score")
+    } :+ ((col("docId"), lit(a.docId), false, true, false))
     var pred: Column = lit(false)
     var eqs: Column = lit(true)
-    keys.foreach { case (c, v, isNull, asc) =>
+    keys.foreach { case (c, v, isNull, asc, nullable) =>
       val beyond = (asc, isNull) match {
         case (true, false)  => Some(c > v)
         case (true, true)   => Some(c.isNotNull)
-        case (false, false) => Some(c < v || c.isNull)
+        case (false, false) => Some(if (nullable) c < v || c.isNull else c < v)
         case (false, true)  => None // nothing sorts after a null on desc
       }
       beyond.foreach(b => pred = pred || (eqs && b))

@@ -1,6 +1,6 @@
 package graft.score
 
-import graft.build.{CorpusStats, Segments}
+import graft.build.CorpusStats
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
@@ -146,7 +146,7 @@ object Wand {
     val heap = scala.collection.mutable.PriorityQueue.empty[(Long, Double)](ord.reverse)
     def threshold: Double = if (heap.size < k) -1d else heap.head._2
 
-    val live = scala.collection.mutable.ArrayBuffer(its.filter(!_.exhausted): _*)
+    val live = scala.collection.mutable.ArrayBuffer.from(its.filter(!_.exhausted))
     while (live.nonEmpty) {
       val sorted = live.sortBy(_.doc)
       // find pivot: smallest prefix whose UB sum can beat the threshold

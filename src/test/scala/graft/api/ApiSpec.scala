@@ -51,19 +51,54 @@ class ApiSpec extends SparkSuite {
 
   test("maintenance chain keeps ONE index generation cached") {
     import org.apache.spark.storage.StorageLevel
+    import org.apache.spark.sql.functions.{col, lit}
+    import spark.implicits._
+    val sc = spark.sparkContext
+    def cached(i: graft.build.Index) =
+      i.postings.storageLevel != StorageLevel.NONE && i.termStats.storageLevel != StorageLevel.NONE
     val base = SearchEngine.build(TranscriptGen.tiny(spark), Analyzers.Icat).index
-    assert(base.postings.storageLevel !== StorageLevel.NONE)
-    val g1 = Maintenance.deleteDocs(base, Seq(0L))
-    assert(base.postings.storageLevel === StorageLevel.NONE)
-    assert(base.termStats.storageLevel === StorageLevel.NONE)
-    assert(g1.postings.storageLevel !== StorageLevel.NONE)
-    val g2 = Maintenance.deleteDocs(g1, Seq(1L))
-    assert(g1.postings.storageLevel === StorageLevel.NONE)
-    assert(g1.termStats.storageLevel === StorageLevel.NONE)
-    assert(g2.postings.storageLevel !== StorageLevel.NONE)
-    // superseded generations stay queryable — they recompute from lineage
-    assert(g1.postings.filter(org.apache.spark.sql.functions.col("docId") === 2L).count() > 0)
-    assert(g2.stats.docCount === base.stats.docCount - 2)
+    val before = sc.getPersistentRDDs.keySet.toSet
+    // the caller owns every generation: a mutation leaves its input
+    // cached, and the caller releases the generation it replaces
+    def replace(old: graft.build.Index, mutated: graft.build.Index) = {
+      assert(cached(old), "a mutation must not release its input")
+      assert(cached(mutated))
+      old.unpersistAll(includeCorpus = false)
+      mutated
+    }
+    val g1 = replace(base, Maintenance.deleteDocs(base, Seq(0L)))
+    val turns = Seq(Turn("zz-chain", 0, "user", "needle_3 appended turn", None,
+      new java.sql.Timestamp(1767225600000L))).toDS()
+    val beforeAdd = sc.getPersistentRDDs.keySet.toSet
+    val g2 = replace(g1, Maintenance.addTurns(g1, turns, Analyzers.Icat))
+    val addMinted = sc.getPersistentRDDs.keySet.toSet -- beforeAdd
+    val updated = g2.corpus.filter(col("docId") === 1L)
+      .withColumn("text", lit("zzzchainterm zzzchainterm"))
+    val g3 = replace(g2, Maintenance.updateDocs(g2, updated, Analyzers.Icat))
+    assert(Seq(base, g1, g2, g3).count(cached) === 1)
+    assert(cached(g3))
+    g3.unpersistAll(includeCorpus = false)
+    // no delta cache survives: only the appended turns' DocIds mint, where
+    // their docIds live, outlasts the chain
+    val leaked = sc.getPersistentRDDs.keySet.toSet -- before
+    assert(leaked.size === 1)
+    assert(leaked.subsetOf(addMinted))
+    // released generations stay queryable — they recompute from lineage
+    assert(g1.postings.filter(col("docId") === 2L).count() > 0)
+    assert(g3.stats.docCount === base.stats.docCount)
+    val hits = new QueryExec(g3).topK(TermQuery("zzzchainterm"), Nil, 5).collect()
+    assert(hits.map(_.getLong(0)).toSeq === Seq(1L))
+  }
+
+  test("maintenance: adding rows with another analyzer than the index's is rejected") {
+    import spark.implicits._
+    val turns = Seq(Turn("zz-simple", 0, "user", "needle_3", None,
+      new java.sql.Timestamp(1767225600000L))).toDS()
+    val e = intercept[IllegalArgumentException](
+      Maintenance.addTurns(engine.index, turns, Analyzers.Simple))
+    assert(e.getMessage.contains("simple") && e.getMessage.contains("icat"))
+    intercept[IllegalArgumentException](
+      Maintenance.updateDocs(engine.index, engine.index.corpus.limit(1), Analyzers.Simple))
   }
 
   test("joinFetch round trip: ≤limit related docs per hit, inline in JSON") {
@@ -257,7 +292,6 @@ class ApiSpec extends SparkSuite {
 
   test("updateByRelation rewrites denormalized columns from a changed dimension") {
     import spark.implicits._
-    import org.apache.spark.sql.functions._
     val corpus = Seq((0L, "c0", "oldA"), (1L, "c0", "oldA"), (2L, "c1", "oldB"))
       .toDF("docId", "conv_id", "convTitle")
     val dim = Seq(("c0", "newA")).toDF("conv_id", "convTitle")
@@ -351,7 +385,6 @@ class ApiSpec extends SparkSuite {
     assert(Units.convertValueToSiUnits(5.0, "furlong") === None)
     // column path: shadow fields appear, unknown units give nulls
     import spark.implicits._
-    import org.apache.spark.sql.functions._
     val df = Seq((1L, 2.0, "eV"), (2L, 0.0, "celsius"), (3L, 1.0, "furlong"))
       .toDF("id", "value", "unit")
     val out = Units.withSiColumns(df, "unit", Seq("value")).orderBy("id").collect()
@@ -384,7 +417,6 @@ class ApiSpec extends SparkSuite {
 
   test("streaming surrogate docIds survive >256-turn conversations without collision") {
     import spark.implicits._
-    import org.apache.spark.sql.functions._
     val ts = new java.sql.Timestamp(1767225600000L)
     // conv "a" with 300 turns (incl. turn_idx 300-adjacent range) + a
     // second conversation: packed (hash<<8 | turn) schemes bleed here

@@ -2,9 +2,8 @@ package graft.build
 
 import graft.SparkSuite
 import graft.analysis.Analyzers
-import graft.api.SearchEngine
 import graft.corpus.{DocIds, TranscriptGen}
-import graft.model.{SearchRequest, TermQuery}
+import graft.model.TermQuery
 import graft.score.QueryExec
 
 /** Snapshot isolation: readers keep the version they opened; commits are

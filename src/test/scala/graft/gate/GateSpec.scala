@@ -84,7 +84,7 @@ class GateSpec extends SparkSuite {
       "second gate generation should persist new frames")
     Gate.evictAll()
     val after = sc.getPersistentRDDs.keySet
-    assert((after -- before).isEmpty,
+    assert(after.diff(before).isEmpty,
       "frames minted by the second generation outlived evictAll")
     assert(after.size < before.size,
       "the first generation's gate caches should be gone too")

@@ -7,8 +7,7 @@ import org.apache.spark.sql.functions._
   * scratch-buffer window hashes must be BIT-IDENTICAL to Spark's
   * `xxhash64` / the repo's `fnv1a64` over the joined gram string —
   * including the non-ASCII fallback path the gate corpora (pure
-  * [a-z0-9] tokens) never exercise — and the maintenance standing-index
-  * cache contract must hold. */
+  * [a-z0-9] tokens) never exercise. */
 class HashedShingleSpec extends SparkSuite {
   import spark.implicits._
 
@@ -55,23 +54,5 @@ class HashedShingleSpec extends SparkSuite {
         .distinct.map(s => (id, Dedup.fnv1a64(s)))
     }.toSet
     assert(dual === expected)
-  }
-
-  test("maintenance with unpersistOld=false keeps the standing index cached") {
-    val corpus = graft.corpus.DocIds.forTurns(
-      graft.corpus.TranscriptGen.generate(spark, 30))
-    val idx = graft.build.IndexBuilder.build(corpus, graft.analysis.Analyzers.Simple)
-    assert(idx.postings.storageLevel.useMemory)
-    val after = graft.build.Maintenance.deleteDocs(idx, Seq(0L, 1L),
-      unpersistOld = false)
-    assert(idx.postings.storageLevel.useMemory,
-      "standing index postings cache must survive the mutation")
-    assert(idx.termStats.storageLevel.useMemory)
-    // default path still drops the predecessor's caches (chain hygiene)
-    val after2 = graft.build.Maintenance.deleteDocs(after, Seq(2L))
-    assert(!after.postings.storageLevel.useMemory)
-    after2.unpersistAll(includeCorpus = false)
-    after.unpersistAll(includeCorpus = false)
-    idx.unpersistAll(includeCorpus = true)
   }
 }

@@ -4,7 +4,7 @@ import graft.SparkSuite
 import graft.analysis.Analyzers
 import graft.api.{Json, SearchEngine}
 import graft.build.IndexBuilder
-import graft.corpus.{DocIds, TranscriptGen}
+import graft.corpus.TranscriptGen
 import graft.model._
 
 /** Engine-vs-oracle parity on the deterministic seed-42 transcript corpus:
@@ -17,7 +17,6 @@ class EngineSpec extends SparkSuite {
   private lazy val turns = TranscriptGen.tiny(spark)
   private lazy val engine = SearchEngine.build(turns, Analyzers.Icat, withPositions = true)
   private lazy val oracle: NaiveOracle = {
-    import spark.implicits._
     val rows = engine.index.corpus
       .select("docId", "conv_id", "turn_idx", "role", "text", "tool", "ts")
       .collect()
