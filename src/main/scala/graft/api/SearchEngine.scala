@@ -43,8 +43,9 @@ final class SearchEngine(val index: Index) {
   }
 
   /** Top-k search; hits carry stored fields (the reference's per-hit
-    * stored-field fetch, Lucene.java:859, realized as a broadcast join of
-    * the k winning docIds back to the corpus table). */
+    * stored-field fetch by docId, Lucene.java:859, realized as one corpus
+    * scan filtered to the k winning docIds — a literal set pushed to the
+    * scan; no fetch when nothing matched). */
   def search(req: SearchRequest): SearchResponse = {
     val (q, filters) = plan(req)
     // Collect the ordered top-k FIRST (≤ k rows) and keep ITS row order —
@@ -54,16 +55,17 @@ final class SearchEngine(val index: Index) {
     // search_after token.
     val topRows = exec.topKSorted(q, filters, req.sort, req.maxResults, req.searchAfter)
       .collect()
-    import spark.implicits._
     // a joinFetch reads each hit's key value (column 7) from this same fetch
     val keyCol = req.joinFetch.map(spec => col(spec.key).cast("string").as("__k")).toSeq
-    val fetched: Map[Long, Row] = index.corpus
-      .join(broadcast(spark.createDataset(topRows.map(_.getLong(0)).toSeq).toDF("docId")),
-        "docId")
-      .select((Seq("docId", "conv_id", "turn_idx", "role", "text", "tool", "ts")
-        .map(col) ++ keyCol): _*)
-      .collect()
-      .map(r => r.getLong(0) -> r).toMap
+    val fetched: Map[Long, Row] =
+      if (topRows.isEmpty) Map.empty
+      else index.corpus
+        // not `isin`: ≤ 10 ids would compile into the generated code
+        .filter(org.apache.spark.sql.GraftColumns.inSet("docId", topRows.map(_.getLong(0)).toSet))
+        .select((Seq("docId", "conv_id", "turn_idx", "role", "text", "tool", "ts")
+          .map(col) ++ keyCol): _*)
+        .collect()
+        .map(r => r.getLong(0) -> r).toMap
     val hitRows: Seq[(Float, Row)] = topRows.toSeq.flatMap(t =>
       fetched.get(t.getLong(0)).map(toFloatScore(t.get(1)) -> _))
     val hits = hitRows.map { case (score, r) =>

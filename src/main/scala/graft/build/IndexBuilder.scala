@@ -40,6 +40,28 @@ final case class Index(
     * `withPositions` — the proximity data phrase queries require). */
   def hasPositions: Boolean = postings.columns.contains("positions")
 
+  private var dictionaryCap: Int = TermDictionary.Cap
+
+  /** This generation's term dictionary on the driver — the analogue of
+    * Lucene's in-memory terms index, which a query reads its per-term
+    * statistics from at plan time — or None when `termStats` has more
+    * than [[TermDictionary.Cap]] rows (queries then keep their pushed
+    * dictionary scans). Read lazily by the first query that needs it: one
+    * bounded collect per generation, never by a build or `load`. A read
+    * that fails (a cancelled search) leaves it unread, and the next query
+    * reads again. An index never changes, so no query re-reads it; a
+    * mutation returns a new generation with its own dictionary. */
+  private[graft] lazy val dictionary: Option[TermDictionary] =
+    TermDictionary.read(termStats, dictionaryCap)
+
+  /** A copy of this generation whose [[dictionary]] holds at most `cap`
+    * terms — the seam tests use to run the over-cap fallback. */
+  private[graft] def withDictionaryCap(cap: Int): Index = {
+    val c = copy()
+    c.dictionaryCap = cap
+    c
+  }
+
   /** Drop every cached table of this bundle. The ownership rule: the
     * caller owns what an operator returns, and no operator releases its
     * input — so whoever replaces a generation (a mutation chain, the
@@ -54,6 +76,61 @@ final case class Index(
     segments.foreach(_.unpersist())
     if (includeCorpus) corpus.unpersist()
     ()
+  }
+}
+
+/** (term, df) of every indexed term as two parallel arrays, terms sorted
+  * in Spark's string order (UTF-8 bytes, i.e. code points) — no boxed
+  * map. Driver memory is about 60 B per term plus the term's characters
+  * (a compact `String` and its array slot, one `long`): about 16 MB for
+  * 8-character terms at [[TermDictionary.Cap]]. */
+final class TermDictionary private (terms: Array[String], dfs: Array[Long]) {
+
+  /** df of `term`, when the index holds it (string equality, as a
+    * lookup in the collected termStats rows). */
+  def df(term: String): Option[Long] = {
+    import scala.collection.Searching.Found
+    scala.collection.immutable.ArraySeq.unsafeWrapArray(terms)
+      .search(term)(TermDictionary.Utf8Order) match {
+      case Found(i) => Some(dfs(i))
+      case _        => None
+    }
+  }
+
+  /** Every (term, df) in term order — the dictionary scan of a
+    * multi-term rewrite. */
+  def entries: Iterator[(String, Long)] = terms.iterator.zip(dfs.iterator)
+}
+
+object TermDictionary {
+
+  /** Most terms an index holds on the driver. */
+  val Cap: Int = 1 << 18
+
+  /** Spark's string order — UTF-8 byte order — which is code point
+    * order. Java's `compareTo` orders UTF-16 units instead, which puts a
+    * supplementary character before U+E000–U+FFFF. */
+  val Utf8Order: Ordering[String] = (a, b) => {
+    var i = 0
+    var c = 0
+    while (c == 0 && i < a.length && i < b.length) {
+      val x = a.codePointAt(i)
+      c = Integer.compare(x, b.codePointAt(i))
+      i += Character.charCount(x)
+    }
+    if (c != 0) c else Integer.compare(a.length, b.length)
+  }
+
+  /** The dictionary of `termStats` (term, df, …): one
+    * `limit(cap + 1).collect()`; None when it has more than `cap` rows. */
+  private[build] def read(termStats: DataFrame, cap: Int): Option[TermDictionary] = {
+    val rows = termStats.select("term", "df").limit(cap + 1).collect()
+    Option.when(rows.length <= cap) {
+      // a null term matches no query term
+      val sorted = rows.collect { case r if !r.isNullAt(0) => (r.getString(0), r.getLong(1)) }
+        .sortBy(_._1)(Utf8Order)
+      new TermDictionary(sorted.map(_._1), sorted.map(_._2))
+    }
   }
 }
 
@@ -384,11 +461,12 @@ object IndexBuilder {
       .write.mode("overwrite").parquet(s"$dir/postings")
   }
 
-  /** The saved termstats layout: sorted by term within each written file,
-    * so query-time per-term lookups (weightsFrame / phraseMatches / WAND
-    * idf collects — each a pushed-down isin scan) prune to ~one row group
-    * per file via parquet min/max stats instead of decoding the whole
-    * dictionary. */
+  /** The saved termstats layout: sorted by term within each written file.
+    * Queries read per-term statistics from the generation's driver-side
+    * [[Index.dictionary]]; over its cap they fall back to pushed-down
+    * dictionary scans (an `isin` per query for df, `rlike` and length
+    * filters for multi-term rewrites), which parquet min/max stats on
+    * `term` prune to about one row group per file. */
   private def writeTermStats(termStats: DataFrame, dir: String): Unit =
     termStats.sortWithinPartitions("term")
       .write.mode("overwrite").parquet(s"$dir/termstats")

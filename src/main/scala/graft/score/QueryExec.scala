@@ -1,6 +1,6 @@
 package graft.score
 
-import graft.build.Index
+import graft.build.{Index, TermDictionary}
 import graft.model._
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -19,11 +19,16 @@ import org.apache.spark.sql.types.ArrayType
   * Plan shape (the Spark-native replacement for the reference's
   * per-shard sequential search loop, Lucene.java:1467-1516):
   *
-  *   parquet scan of postings, filtered to the query's terms and the
+  *   on the driver: df of every query term, and the terms of each
+  *   wildcard/regexp/fuzzy rewrite, from the generation's in-memory
+  *   dictionary ([[graft.build.Index.dictionary]], the reference's terms
+  *   index read at query-plan time) — no Spark job
+  *   → parquet scan of postings, filtered to the query's terms and the
   *   non-scoring attribute predicates (both pushed to the scan — the
   *   analogue of Occur.FILTER legs never entering scoring,
   *   SearchBucket.java:385-452)
-  *   → broadcast join with per-term weights (float idf)
+  *   → per-term weights (float idf) from one literal map column,
+  *     exploded per posting row
   *   → per-row float BM25 score (whole-stage codegen)
   *   → single hash aggregation by docId implementing the boolean algebra
   *     (sum scores; count matched MUST groups; flag MUST_NOT hits)
@@ -31,7 +36,9 @@ import org.apache.spark.sql.types.ArrayType
   *     (per-partition top-k + driver k-way merge, exactly the reference's
   *     shard merge, Lucene.java:1506-1507, but parallel)
   *
-  * One shuffle for the aggregation; the top-k needs no further exchange.
+  * One shuffle for the aggregation and no broadcast: two Spark jobs. A
+  * query with no indexed term runs none. Over the dictionary's cap, term
+  * lookups and rewrites fall back to pushed scans of `termStats`.
   */
 final class QueryExec(val index: Index, val exact: Boolean = false) {
   private val spark = index.corpus.sparkSession
@@ -86,29 +93,18 @@ final class QueryExec(val index: Index, val exact: Boolean = false) {
   }
 
   /** Global (double) idf of each of `terms` the index holds; absent terms
-    * have no entry. df is read from the termStats table in ONE pushed-down
-    * `isin` scan collected to the driver (query terms are few, mirroring
-    * Lucene reading per-term stats at query-plan time). */
+    * have no entry. df comes from the generation's driver-side dictionary
+    * (Lucene reads per-term stats at query-plan time); over its cap, from
+    * ONE pushed-down `isin` scan of termStats collected to the driver. */
   private[graft] def termIdf(terms: Seq[String]): Map[String, Double] = {
     val distinct = terms.distinct
-    val dfMap: Map[String, Long] = index.termStats
-      .filter(col("term").isin(distinct: _*))
-      .select("term", "df").as[(String, Long)].collect().toMap
-    distinct.flatMap(t => dfMap.get(t).map(df =>
-      t -> Bm25.idf(index.stats.docCount, df))).toMap
-  }
-
-  /** Broadcast frame of (term, groupId, weightF) for the query's terms.
-    * The per-term weight folds the clause boost in exactly Lucene's float
-    * op order: weight = boost × (float)idf (BM25Similarity.scorer receives
-    * the propagated boost); the exact/double path mirrors it so the
-    * DuckDB oracle can replay `boost * ln(…)` literally. */
-  private def weightsFrame(termGroups: Seq[(String, Int, Float)]): DataFrame = {
-    val idf = termIdf(termGroups.map(_._1))
-    val rows = termGroups.flatMap { case (t, g, b) =>
-      idf.get(t).map(idfD => (t, g, b * idfD.toFloat, b.toDouble * idfD))
+    val df: String => Option[Long] = index.dictionary match {
+      case Some(d) => d.df
+      case None =>
+        index.termStats.filter(col("term").isin(distinct: _*))
+          .select("term", "df").as[(String, Long)].collect().toMap.get
     }
-    spark.createDataFrame(rows).toDF("term", "groupId", "weightF", "weightD")
+    distinct.flatMap(t => df(t).map(n => t -> Bm25.idf(index.stats.docCount, n))).toMap
   }
 
   /** Evaluate to a frame of (docId, score: float) — matching docs only. */
@@ -154,8 +150,7 @@ final class QueryExec(val index: Index, val exact: Boolean = false) {
       fuzzyMatches(f, filters, boost)
     case w: WildcardQuery =>
       // Lucene multi-term rewrite: expand against the term dictionary,
-      // constant score per matching doc. The dictionary scan stays
-      // distributed (semi-join postings ⟕ matched terms).
+      // constant score per matching doc
       dictionaryExpand(w.regex, filters, boost)
     case r: RegexpQuery =>
       // same CONSTANT_SCORE multi-term rewrite as wildcards, arbitrary
@@ -191,18 +186,26 @@ final class QueryExec(val index: Index, val exact: Boolean = false) {
       .select(col("docId"), constScore(boost).as("score"))
   }
 
-  /** The BM25 term scan: postings pushed-filtered to `terms` and the
-    * non-scoring attribute legs, broadcast-joined with `weights` (term,
-    * weightF, weightD, …), plus the per-row score `tscore`. Filtering
-    * first is sound for MUST_NOT terms too: a doc failing the attribute
-    * filter can never match, and MUST_NOT only removes docs. */
-  private def scoredScan(terms: Seq[String], weights: DataFrame,
-                         filters: Seq[AttrPredicate]): DataFrame =
-    applyFilters(index.postings.filter(col("term").isin(terms: _*)), filters)
-      .join(broadcast(weights), "term")
+  /** The BM25 term scan: postings pushed-filtered to the `weights` terms
+    * and the non-scoring attribute legs; each posting row takes its
+    * term's (groupId, weightF, weightD) rows from one literal map column —
+    * a term listed in two groups yields two rows, as the join did — plus
+    * the per-row score `tscore`. Filtering first is sound for MUST_NOT
+    * terms too: a doc failing the attribute filter can never match, and
+    * MUST_NOT only removes docs. */
+  private def scoredScan(weights: Seq[(String, Int, Float, Double)],
+                         filters: Seq[AttrPredicate]): DataFrame = {
+    val byTerm = weights.groupBy(_._1).map { case (t, ws) =>
+      t -> ws.map { case (_, g, wF, wD) => QueryExec.TermWeight(g, wF, wD) }
+    }
+    val weightsOf = typedLit(byTerm)
+    applyFilters(index.postings.filter(col("term").isin(weights.map(_._1).distinct: _*)),
+        filters)
+      .select(col("*"), inline(weightsOf(col("term"))))
       .withColumn("tscore",
         if (exact) Bm25.scoreColExact(col("tf"), col("norm"), col("weightD"), cacheD)
         else Bm25.scoreCol(col("tf"), col("norm"), col("weightF"), cache))
+  }
 
   /** Single-pass path: one postings scan, one aggregation. */
   private def flatMatches(f: Flat, filters: Seq[AttrPredicate]): DataFrame = {
@@ -212,8 +215,21 @@ final class QueryExec(val index: Index, val exact: Boolean = false) {
         f.should.map { case (t, b) => (t, OccShould, b) } ++
         f.mustNot.map(t => (t, OccNot, 1.0f))
     if (termGroups.isEmpty) return matches(MatchAll, filters)
+    val idf = termIdf(termGroups.map(_._1))
+    // a MUST group without an indexed term, or no indexed term to score
+    // when nothing is required, matches no doc: no scan
+    def indexed(g: Seq[(String, Float)]) = g.exists(t => idf.contains(t._1))
+    if (!f.mustGroups.forall(indexed) || (f.mustGroups.isEmpty && !indexed(f.should)))
+      return matches(MatchNone, filters)
+    // the per-term weight folds the clause boost in exactly Lucene's float
+    // op order: weight = boost × (float)idf (BM25Similarity.scorer
+    // receives the propagated boost); the exact/double path mirrors it so
+    // the DuckDB oracle can replay `boost * ln(…)` literally
+    val weights = termGroups.flatMap { case (t, g, b) =>
+      idf.get(t).map(idfD => (t, g, b * idfD.toFloat, b.toDouble * idfD))
+    }
     val nMust = f.mustGroups.size
-    scoredScan(termGroups.map(_._1).distinct, weightsFrame(termGroups), filters)
+    scoredScan(weights, filters)
       .groupBy(col("docId"))
       .agg(
         sum(when(col("groupId") =!= OccNot, col("tscore"))).as("scoreSum"),
@@ -305,25 +321,77 @@ final class QueryExec(val index: Index, val exact: Boolean = false) {
   }
 
   /** Multi-term CONSTANT_SCORE rewrite: docs containing any dictionary
-    * term matching the anchored regex score `boost` (wildcard + regexp). */
+    * term matching the anchored regex score `boost` (wildcard + regexp).
+    * The driver-side dictionary names the matching terms, and at most
+    * [[QueryExec.MaxTermLiterals]] of them filter the postings scan as
+    * literals (none: no scan); otherwise postings join the termStats rows
+    * the regex matches. */
   private def dictionaryExpand(regex: String, filters: Seq[AttrPredicate],
                                boost: Float): DataFrame = {
-    val matched = index.termStats
-      .filter(col("term").rlike(regex)).select("term")
-    val scan = applyFilters(index.postings.join(matched, "term"), filters)
-    scan.select(col("docId")).distinct()
+    // `rlike`'s semantics: Spark's string of the pattern literal, `find`
+    val re = java.util.regex.Pattern.compile(QueryExec.sparkString(regex))
+    val matched = index.dictionary.map(_.entries.map(_._1).filter(re.matcher(_).find(0)).toSeq)
+    val scan = matched match {
+      case Some(terms) if terms.isEmpty => return matches(MatchNone, filters)
+      case Some(terms) if terms.size <= QueryExec.MaxTermLiterals =>
+        index.postings.filter(col("term").isin(terms: _*))
+      case _ =>
+        index.postings.join(index.termStats.filter(col("term").rlike(regex)).select("term"), "term")
+    }
+    applyFilters(scan, filters).select(col("docId")).distinct()
       .withColumn("score", constScore(boost))
+  }
+
+  /** The expansion of a fuzzy term (see [[fuzzyMatches]]): at most
+    * `maxExpansions` (term, df, boost) rows by (boost desc, term asc), in
+    * Spark's semantics either way — lengths in code points (`length`),
+    * the query term's in UTF-16 units, terms in UTF-8 byte order. Read off
+    * the driver-side dictionary; over its cap, a distributed
+    * term-dictionary scan with PUSHED length/prefix prefilters (the
+    * edit-distance UDF runs only on terms inside the ±maxEdits length
+    * band) and a distributed top-`maxExpansions` — TakeOrderedAndProject,
+    * the shape of Lucene's TopTermsRewrite priority queue. */
+  private[graft] def fuzzyExpansion(f: FuzzyQuery): Seq[(String, Long, Double)] = {
+    val q = f.term
+    val prefix = q.substring(0, math.min(f.prefixLength, q.length))
+    index.dictionary match {
+      case Some(d) =>
+        val p = QueryExec.sparkString(prefix)
+        d.entries.flatMap { case (t, df) =>
+          val n = t.codePointCount(0, t.length)
+          val dist =
+            if (t.startsWith(p) && math.abs(n - q.length) <= f.maxEdits)
+              graft.model.EditDistance.bounded(t, q, f.maxEdits, f.transpositions)
+            else -1
+          Option.when(dist >= 0)((t, df, 1.0 - dist.toDouble / math.min(n, q.length).toDouble))
+        }.toSeq.sorted[(String, Long, Double)] { (a, b) =>
+          val c = java.lang.Double.compare(b._3, a._3)
+          if (c != 0) c else TermDictionary.Utf8Order.compare(a._1, b._1)
+        }.take(f.maxExpansions)
+      case None =>
+        val distUdf = udf((t: String) =>
+          graft.model.EditDistance.bounded(t, q, f.maxEdits, f.transpositions))
+        var dict = index.termStats.filter(
+          length(col("term")).between(lit(q.length - f.maxEdits), lit(q.length + f.maxEdits)))
+        if (prefix.nonEmpty) dict = dict.filter(col("term").startsWith(prefix))
+        dict
+          .withColumn("dist", distUdf(col("term")))
+          .filter(col("dist") >= 0)
+          .withColumn("boost",
+            lit(1.0) - col("dist").cast("double") /
+              least(length(col("term")), lit(q.length)).cast("double"))
+          .select(col("term"), col("df"), col("boost"))
+          .orderBy(col("boost").desc, col("term").asc)
+          .limit(f.maxExpansions)
+          .as[(String, Long, Double)].collect().toSeq
+    }
   }
 
   /** Fuzzy term evaluation — Lucene FuzzyQuery with its default
     * TopTermsBlendedFreqScoringRewrite (see [[graft.model.FuzzyQuery]]).
     *
-    * Plan: distributed term-dictionary scan with PUSHED length/prefix
-    * prefilters (a dictionary at 100 TB is large; the UDF edit-distance
-    * runs only on terms inside the ±maxEdits length band) → distributed
-    * top-`maxExpansions` by (boost desc, term asc) — TakeOrderedAndProject,
-    * the same shape as Lucene's TopTermsRewrite priority queue → collect
-    * the ≤50 expansion rows → blend df = max over the expansion set
+    * Plan: the ≤ maxExpansions expansion rows ([[fuzzyExpansion]]) →
+    * blend df = max over the expansion set
     * (BlendedTermQuery.adjustFrequencies) → the BM25 term scan over the
     * expanded terms with per-row boost × BM25 and the blended idf → one
     * aggregation by docId summing matched expansions (BOOLEAN_REWRITE:
@@ -332,38 +400,19 @@ final class QueryExec(val index: Index, val exact: Boolean = false) {
                            qBoost: Float): DataFrame = {
     if (f.maxEdits <= 0)
       return matches(TermQuery(f.term), filters, qBoost)
-    val q = f.term
-    val distUdf = udf((t: String) =>
-      graft.model.EditDistance.bounded(t, q, f.maxEdits, f.transpositions))
-    var dict = index.termStats.filter(
-      length(col("term")).between(lit(q.length - f.maxEdits), lit(q.length + f.maxEdits)))
-    val prefix = q.substring(0, math.min(f.prefixLength, q.length))
-    if (prefix.nonEmpty) dict = dict.filter(col("term").startsWith(prefix))
-    val expansion = dict
-      .withColumn("dist", distUdf(col("term")))
-      .filter(col("dist") >= 0)
-      .withColumn("boost",
-        lit(1.0) - col("dist").cast("double") /
-          least(length(col("term")), lit(q.length)).cast("double"))
-      .select(col("term"), col("df"), col("boost"))
-      .orderBy(col("boost").desc, col("term").asc)
-      .limit(f.maxExpansions)
-      .collect()
+    val expansion = fuzzyExpansion(f)
     if (expansion.isEmpty) return matches(MatchNone, filters)
 
-    val blendedDf = expansion.map(_.getLong(1)).max
+    val blendedDf = expansion.map(_._2).max
     val idfD = Bm25.idf(index.stats.docCount, blendedDf)
     // per-term weight = (queryBoost × expansionBoost) × idf: float×float
     // in Lucene's float path (the propagated boost multiplies the
     // per-expansion BoostQuery boost before BM25Weight sees it),
     // double×double in exact mode so the DuckDB oracle reproduces it
-    val rows = expansion.map { r =>
-      val boost = r.getDouble(2)
-      (r.getString(0), (qBoost * boost.toFloat) * idfD.toFloat,
-        (qBoost.toDouble * boost) * idfD)
-    }.toSeq
-    val weights = spark.createDataFrame(rows).toDF("term", "weightF", "weightD")
-    scoredScan(rows.map(_._1), weights, filters)
+    val weights = expansion.map { case (t, _, boost) =>
+      (t, OccShould, (qBoost * boost.toFloat) * idfD.toFloat, (qBoost.toDouble * boost) * idfD)
+    }
+    scoredScan(weights, filters)
       .groupBy(col("docId"))
       .agg(sum(col("tscore")).cast(scoreType).as("score"))
   }
@@ -504,6 +553,19 @@ object QueryExec {
     * accept it for the single-pass plan (one aggregation instead of one
     * per nesting level). The recursive path (used whenever flattening
     * fails) matches the reference's clause-boundary rounding exactly. */
+  /** Most matched terms a wildcard/regexp rewrite filters the postings
+    * scan with as literals; more join a termStats scan instead. */
+  val MaxTermLiterals: Int = 1024
+
+  /** (groupId, weightF, weightD) of one query-term occurrence: the value
+    * type of [[scoredScan]]'s literal weights map. */
+  private final case class TermWeight(groupId: Int, weightF: Float, weightD: Double)
+
+  /** The string Spark compares against for a string literal `s`: its
+    * UTF-8 encoding decoded back (an unpaired surrogate becomes `?`). */
+  private def sparkString(s: String): String =
+    org.apache.spark.unsafe.types.UTF8String.fromString(s).toString
+
   private final case class Flat(
       mustGroups: Seq[Seq[(String, Float)]], should: Seq[(String, Float)],
       mustNot: Seq[String])

@@ -329,6 +329,146 @@ class ApiSpec extends SparkSuite {
     assert((System.nanoTime() - t0) / 1e9 < 15.0)
   }
 
+  /** The job-group id of every Spark job started while attached. */
+  private final class JobGroups extends org.apache.spark.scheduler.SparkListener {
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+      groups.add(Option(e.properties).flatMap(p =>
+        Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+  }
+
+  /** The job groups of the Spark jobs `f` starts, once the listener bus
+    * has delivered their events. */
+  private def jobGroupsOf[T](f: => T): (T, Seq[String]) = {
+    val sc = spark.sparkContext
+    val l = new JobGroups
+    org.apache.spark.ListenerBusDrain(sc)
+    sc.addSparkListener(l)
+    try {
+      val r = f
+      org.apache.spark.ListenerBusDrain(sc)
+      (r, l.groups.toArray(Array.empty[String]).toSeq)
+    } finally sc.removeSparkListener(l)
+  }
+
+  private lazy val positionalEngine =
+    SearchEngine.build(TranscriptGen.tiny(spark), Analyzers.Icat, withPositions = true)
+
+  test("request path job budget: ≤ 3 Spark jobs per search, 4 with a leg or corpus join") {
+    val e = positionalEngine
+    val page1 = SearchRequest(text = Some("needle_3"), maxResults = 3)
+    val shapes = Seq(
+      "term" -> page1,
+      "or" -> SearchRequest(text = Some("needle_3 hydrogen")),
+      "and" -> SearchRequest(text = Some("+needle_3 +ambiguous")),
+      "and not" -> SearchRequest(text = Some("+needle_3 -ambiguous")),
+      "role filter" -> SearchRequest(text = Some("ambiguous"), filter = Map("role" -> Seq("assistant"))),
+      "ts range" -> SearchRequest(text = Some("ambiguous"),
+        lower = Some("202601010000"), upper = Some("202601312359")),
+      "page 2" -> page1.copy(searchAfter = e.search(page1).searchAfter),
+      "wildcard" -> SearchRequest(text = Some("needle_*")),
+      "regexp" -> SearchRequest(text = Some("/needle_[0-4]/")),
+      "fuzzy" -> SearchRequest(text = Some("hydrgen~")),
+      "phrase" -> SearchRequest(text = Some("\"w0000 w0001\"")),
+      "ts desc" -> SearchRequest(text = Some("ambiguous"), sort = SortSpec(Seq(("ts", false)))),
+      "absent term" -> SearchRequest(text = Some("zzzzqqq")),
+      "absent must term" -> SearchRequest(text = Some("+needle_3 +zzzzqqq")))
+    val budget = Map("phrase" -> 4, "ts desc" -> 4, "absent term" -> 0, "absent must term" -> 0)
+      .withDefaultValue(3)
+    shapes.foreach { case (name, req) =>
+      val warm = e.search(req) // reads the dictionary on the first shape
+      val group = s"graft-budget-$name"
+      val (r, groups) = jobGroupsOf(e.searchWithTimeout(req, 60, Some(group)))
+      assert(r.map(_.hits) === Right(warm.hits), name)
+      assert(groups.forall(_ == group), s"$name: $groups")
+      assert(groups.size <= budget(name), s"$name ran ${groups.size} jobs")
+      assert(warm.hits.isEmpty === name.startsWith("absent"), name)
+    }
+  }
+
+  test("the dictionary is read once per generation; a new generation reads its own") {
+    import org.apache.spark.sql.functions.{col, udf}
+    import spark.implicits._
+    val reads = spark.sparkContext.longAccumulator("termStats rows read")
+    val counted = udf { (_: String) => reads.add(1); true }
+    val idx = engine.index.copy(termStats = engine.index.termStats.filter(counted(col("term"))))
+    val req = SearchRequest(text = Some("needle_3 hydrogen"))
+    val first = new SearchEngine(idx).search(req)
+    val n = reads.value
+    assert(n > 0)
+    // a second engine over the same index, and every rewrite, reads no row
+    val second = new SearchEngine(idx)
+    assert(second.search(req).hits === first.hits)
+    Seq("needle_*", "/needle_[0-4]/", "hydrgen~", "+needle_3 -ambiguous")
+      .foreach(t => second.search(SearchRequest(text = Some(t))))
+    assert(reads.value === n)
+
+    // a mutation's generation finds a term its parent's dictionary lacks,
+    // with the idf the oracle gives over the new corpus
+    val term = "zzzdictterm"
+    assert(new QueryExec(idx).termIdf(Seq(term)).isEmpty)
+    val turns = Seq(Turn("zz-dict", 0, "user", s"$term needle_3", None,
+      new java.sql.Timestamp(1767225600000L))).toDS()
+    val g = Maintenance.addTurns(idx, turns, Analyzers.Icat)
+    val o = NaiveOracle.fromTurns(g.corpus
+      .select("docId", "conv_id", "turn_idx", "role", "text", "tool", "ts").collect()
+      .map(r => (r.getLong(0), Turn(r.getString(1), r.getInt(2), r.getString(3),
+        r.getString(4), Option(r.getString(5)), r.getTimestamp(6)))).toIndexedSeq,
+      Analyzers.Icat)
+    val want = math.log(1d + (o.docCount - o.df(term) + 0.5d) / (o.df(term) + 0.5d))
+    assert(new QueryExec(g).termIdf(Seq(term)) === Map(term -> want))
+    val hits = new SearchEngine(g).search(SearchRequest(text = Some(term)))
+    val wantHits = o.topK(TermQuery(term), Nil, 10)
+    assert(hits.hits.map(h => (h.docId, h.score)) === wantHits)
+    g.unpersistAll(includeCorpus = false)
+  }
+
+  test("a repeated request shape compiles no new classes, for k = 10 and k = 100") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    Seq(10, 100).foreach { k =>
+      def req(i: Int) = SearchRequest(text = Some(s"needle_$i"), maxResults = k)
+      // the warm-up also takes the data-dependent paths: needle_3 makes the
+      // scoring aggregation fall back to sorting, which compiles once
+      (0 to 3).foreach(i => engine.search(req(i)))
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val ids = (4 to 6).map(i => engine.search(req(i)).hits.map(_.docId))
+      assert(ids.distinct.size === ids.size, "each request fetches other docIds")
+      assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount === before, s"k = $k")
+    }
+  }
+
+  test("after a cancelled search the next one on the same engine succeeds in its own group") {
+    import org.apache.spark.sql.functions.{col, udf}
+    // every row stalls while the flag is up: first the dictionary read,
+    // then (once the dictionary is read) the postings scan
+    val stall = udf { (_: String) => if (ApiSpec.stalled) Thread.sleep(30000); true }
+    val idx = engine.index.copy(
+      postings = engine.index.postings.filter(stall(col("term"))),
+      termStats = engine.index.termStats.filter(stall(col("term"))))
+    val e = new SearchEngine(idx)
+    val sc = spark.sparkContext
+    val req = SearchRequest(text = Some("needle_3"), maxResults = 3)
+    def cancelled(group: String): Unit = {
+      ApiSpec.stalled = true
+      try assert(e.searchWithTimeout(req, 2, Some(group)).isLeft)
+      finally ApiSpec.stalled = false
+      def running = sc.statusTracker.getJobIdsForGroup(group)
+        .flatMap(id => sc.statusTracker.getJobInfo(id))
+        .exists(_.status() == org.apache.spark.JobExecutionStatus.RUNNING)
+      val deadline = System.currentTimeMillis() + 10000
+      while (running && System.currentTimeMillis() < deadline) Thread.sleep(100)
+      assert(!running, s"$group still runs")
+    }
+    val want = engine.search(req).hits
+    Seq("dictionary", "scan").foreach { stage =>
+      cancelled(s"graft-test-cancel-$stage")
+      val group = s"graft-test-after-$stage"
+      val (r, groups) = jobGroupsOf(e.searchWithTimeout(req, 60, Some(group)))
+      assert(r.map(_.hits) === Right(want), stage)
+      assert(groups.nonEmpty && groups.forall(_ == group), s"$stage: $groups")
+    }
+  }
+
   test("facetRanges: single-pass counts match per-bucket filters incl. overlap") {
     import org.apache.spark.sql.functions._
     val ranges = Seq(
@@ -458,4 +598,10 @@ class ApiSpec extends SparkSuite {
     assert(rows(streamedPos, cols) === batchRows(positional, cols))
     positional.unpersistAll()
   }
+}
+
+object ApiSpec {
+  /** Whether the fault test's stalling scans sleep (read on executors,
+    * which share this JVM in local mode). */
+  @volatile var stalled = false
 }

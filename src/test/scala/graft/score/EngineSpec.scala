@@ -3,7 +3,7 @@ package graft.score
 import graft.SparkSuite
 import graft.analysis.Analyzers
 import graft.api.{Json, SearchEngine}
-import graft.build.IndexBuilder
+import graft.build.{Index, IndexBuilder}
 import graft.corpus.TranscriptGen
 import graft.model._
 
@@ -32,16 +32,17 @@ class EngineSpec extends SparkSuite {
       analyzePos = s => Analyzers.Icat.positional(s))
 
   private def engineTopK(q: Query, filters: Seq[AttrPredicate], k: Int,
-                         after: Option[AfterToken] = None): Seq[(Long, Float)] = {
-    new QueryExec(engine.index).topK(q, filters, k, after)
+                         after: Option[AfterToken] = None,
+                         index: Index = engine.index): Seq[(Long, Float)] = {
+    new QueryExec(index).topK(q, filters, k, after)
       .collect().map(r => (r.getLong(0), r.getFloat(1))).toSeq
   }
 
   private def checkParity(text: String, filters: Seq[AttrPredicate] = Nil,
-                          k: Int = 10): Unit = {
+                          k: Int = 10, index: Index = engine.index): Unit = {
     val q = parse(text)
     val want = oracle.topK(q, filters, k)
-    val got = engineTopK(q, filters, k)
+    val got = engineTopK(q, filters, k, index = index)
     assert(got.map(_._1) === want.map(_._1), s"rank mismatch for '$text'")
     got.zip(want).foreach { case ((gid, gs), (wid, ws)) =>
       assert(gid === wid)
@@ -88,6 +89,24 @@ class EngineSpec extends SparkSuite {
     checkParity("ambiguous", Seq(NumRange("turn_idx", 1.0, 3.0)), k = 30)
     checkParity("ambiguous", Seq(NumRange("turn_idx", 1.0, 3.0, loInc = false, hiInc = false)), k = 30)
   }
+
+  test("queries with no indexed term match nothing, with or without the dictionary") {
+    Seq(engine.index, engine.index.withDictionaryCap(0)).foreach { index =>
+      Seq("zzzzqqq", "zzzzqqq -needle_3", "+needle_3 +zzzzqqq", "+zzzzqqq needle_3",
+          "needle_3 zzzzqqq", "zzzz*", "/zzzz.*/", "\"w0000 zzzzqqq\"").foreach { t =>
+        checkParity(t, k = 30, index = index)
+      }
+    }
+  }
+
+  test("over its dictionary cap the engine keeps the pushed scans and equals the oracle") {
+    val capped = engine.index.withDictionaryCap(0)
+    assert(engine.index.dictionary.isDefined && capped.dictionary.isEmpty)
+    Seq("needle_3 hydrogen", "+needle_3 +ambiguous", "+needle_3 -ambiguous",
+        "\"w0000 w0001\"", "needle_*", "/needle_[0-4]/", "hydrgen~", "+needle_* hydrgen~")
+      .foreach(t => checkParity(t, k = 30, index = capped))
+  }
+
   test("wildcard prefix (constant score)") { checkParity("needle_*", k = 50) }
   test("wildcard ? and case-lowering") { checkParity("NEEDLE_?", k = 50) }
   test("wildcard mixed with scored term") { checkParity("rare_00* hydrogen", k = 30) }

@@ -100,6 +100,48 @@ class FuzzySpec extends SparkSuite {
     parity(FuzzyQuery("spark", maxExpansions = 2), "maxExpansions 2")
   }
 
+  test("driver-side expansion keeps Spark's semantics: code points, UTF-8 order") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.lit
+    // 𝐤 (U+1D424) is one code point in two UTF-16 units; ｋ (U+FF4B) is
+    // one unit. In UTF-8 (code point) order "abｋ" < "ab𝐤"; in UTF-16
+    // order "ab𝐤" < "abｋ"
+    val terms = Seq("abｋ", "ab𝐤", "abxy", "𝐤", "𝐤𝐤", "𝐤𝐤x", "spark", "sparｋ", "spar𝐤")
+    val rows = terms.indices.flatMap(i =>
+      Seq((i.toLong, terms(i), 1 + i % 3), ((i + 1L) % terms.size, terms(i), 1)))
+    val postings = rows.toDF("docId", "term", "tf")
+      .withColumn("norm", lit(graft.build.SmallFloat.intToByte4(4)))
+    val idx = graft.build.IndexBuilder.fromPostings(
+      terms.indices.map(_.toLong).toDF("docId"), postings, "simple")
+    val driver = new QueryExec(idx)
+    val scan = new QueryExec(idx.withDictionaryCap(0)) // the distributed expansion
+    assert(idx.dictionary.isDefined && scan.index.dictionary.isEmpty)
+    // every term is in two docs; the dictionary finds each as the scan does
+    assert(terms.flatMap(t => idx.dictionary.get.df(t)) === terms.map(_ => 2L))
+    assert(driver.termIdf(terms :+ "abk") === scan.termIdf(terms :+ "abk"))
+    val queries = Seq(
+      FuzzyQuery("abcd"),
+      FuzzyQuery("abcd", maxExpansions = 2), // a boost tie, cut by term order
+      FuzzyQuery("𝐤𝐤"),                      // length band in code points
+      FuzzyQuery("𝐤𝐤", maxEdits = 1),
+      FuzzyQuery("spark", maxExpansions = 2),
+      FuzzyQuery("spar𝐤", prefixLength = 5)) // the prefix splits 𝐤
+    queries.foreach { q =>
+      val got = driver.fuzzyExpansion(q)
+      assert(got === scan.fuzzyExpansion(q), q)
+      def scored(e: QueryExec) = e.topK(q, Nil, 20).collect()
+        .map(r => (r.getLong(0), java.lang.Float.floatToIntBits(r.getFloat(1)))).toSeq
+      assert(scored(driver) === scored(scan), q)
+    }
+    // the cases above do reach Spark's semantics, not Java's String ones
+    assert(driver.fuzzyExpansion(FuzzyQuery("abcd", maxExpansions = 2)).map(_._1) ===
+      Seq("abxy", "abｋ"))
+    assert(!driver.fuzzyExpansion(FuzzyQuery("𝐤𝐤")).map(_._1).contains("𝐤"))
+    assert(driver.fuzzyExpansion(FuzzyQuery("𝐤𝐤")).find(_._1 == "𝐤𝐤x").map(_._3) ===
+      Some(1.0 - 1.0 / 3))
+    idx.unpersistAll()
+  }
+
   test("maxEdits 0 degenerates to the exact term") {
     val fz = exec.topK(FuzzyQuery("spark", maxEdits = 0), Nil, 20)
       .collect().map(r => (r.getLong(0), r.getFloat(1))).toSeq
