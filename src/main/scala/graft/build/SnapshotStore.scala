@@ -42,10 +42,10 @@ final class SnapshotStore(root: String) {
 
   /** Write `index` as a new version and commit it (atomic pointer swap).
     * Returns the new version name. */
-  def commit(index: Index, writeSegments: Boolean = false): String = {
+  def commit(index: Index): String = {
     val v = nextVersion
     val dir = rootPath.resolve(v).toString
-    IndexBuilder.save(index, dir, writeSegments = writeSegments)
+    IndexBuilder.save(index, dir)
     val staged = rootPath.resolve(s".LATEST.$v.tmp")
     Files.writeString(staged, v)
     Files.move(staged, latestFile,

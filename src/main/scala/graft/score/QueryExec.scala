@@ -16,34 +16,45 @@ import org.apache.spark.sql.types.ArrayType
   * `keywordLeg` (every fielded keyword query), `scoredScan` (every BM25
   * term scan), the phrase leg-join and `dictionaryExpand`.
   *
-  * Plan shape (the Spark-native replacement for the reference's
-  * per-shard sequential search loop, Lucene.java:1467-1516):
+  * One boolean algebra (Lucene's one `BooleanWeight` scorer tree; the
+  * Spark-native replacement for the reference's per-shard sequential
+  * search loop, Lucene.java:1467-1516). Every boolean, nested or not, has
+  * this plan shape:
   *
-  *   on the driver: df of every query term, and the terms of each
-  *   wildcard/regexp/fuzzy rewrite, from the generation's in-memory
-  *   dictionary ([[graft.build.Index.dictionary]], the reference's terms
-  *   index read at query-plan time) — no Spark job
-  *   → parquet scan of postings, filtered to the query's terms and the
-  *   non-scoring attribute predicates (both pushed to the scan — the
-  *   analogue of Occur.FILTER legs never entering scoring,
+  *   on the driver: each clause sorted once into a leg tagged with its
+  *   occur ([[legs]]): term legs and frame legs; df of every query term,
+  *   and the terms of each wildcard/regexp/fuzzy rewrite, from the
+  *   generation's in-memory dictionary ([[graft.build.Index.dictionary]],
+  *   the reference's terms index read at query-plan time) — no Spark job
+  *   → ONE parquet scan of postings for all term legs, filtered to their
+  *   terms and the non-scoring attribute predicates (both pushed to the
+  *   scan — the analogue of Occur.FILTER legs never entering scoring,
   *   SearchBucket.java:385-452)
   *   → per-term weights (float idf) from one literal map column,
   *     exploded per posting row
   *   → per-row float BM25 score (whole-stage codegen)
-  *   → single hash aggregation by docId implementing the boolean algebra
-  *     (sum scores; count matched MUST groups; flag MUST_NOT hits)
+  *   → union with each frame leg's rows (a phrase leg-join, a keyword
+  *     column scan, a multi-term rewrite, a fuzzy expansion or a nested
+  *     boolean, each scored as its own clause)
+  *   → ONE hash aggregation by docId implementing the boolean algebra
+  *     ([[aggregate]]: sum the non-MUST_NOT scores; one flag per MUST
+  *     leg; one MUST_NOT flag)
   *   → orderBy(score desc, docId asc).limit(k)  ⇒  TakeOrderedAndProject
   *     (per-partition top-k + driver k-way merge, exactly the reference's
   *     shard merge, Lucene.java:1506-1507, but parallel)
   *
-  * One shuffle for the aggregation and no broadcast: two Spark jobs. A
-  * query with no indexed term runs none. Over the dictionary's cap, term
-  * lookups and rewrites fall back to pushed scans of `termStats`.
+  * No semi- or anti-join and no broadcast: a boolean of terms and keyword
+  * fields, whatever their occur, runs two Spark jobs (the aggregation's
+  * shuffle and the top-k), a search three with its stored-field fetch;
+  * one phrase, fuzzy, wildcard or nested-boolean leg adds one (its own
+  * join or aggregation). A query with no indexed term runs none. Over the
+  * dictionary's cap, term lookups and rewrites fall back to pushed scans
+  * of `termStats`.
   */
 final class QueryExec(val index: Index, val exact: Boolean = false) {
   private val spark = index.corpus.sparkSession
   import spark.implicits._
-  import QueryExec.Flat
+  import QueryExec.{Frame, Leg, Terms}
 
   private val avgdlD: Double = index.stats.sumTotalTermFreq / index.stats.docCount.toDouble
   private val avgdlF: Float = avgdlD.toFloat
@@ -53,26 +64,32 @@ final class QueryExec(val index: Index, val exact: Boolean = false) {
   private def constScore(boost: Float): Column =
     if (exact) lit(boost.toDouble) else lit(boost)
 
-  // occur markers for the single-pass aggregation
+  // occur tags of a boolean's legs; a MUST leg is tagged with its index
   private val OccShould = -1
   private val OccNot = -2
 
-  private def flatten(q: BoolQuery, boost: Float): Option[Flat] = {
-    def asTerms(n: Query, b: Float): Option[Seq[(String, Float)]] = n match {
-      case TermQuery(t)     => Some(Seq((t, b)))
-      case Boosted(q2, b2)  => asTerms(q2, b * b2)
-      case BoolQuery(Nil, sh, Nil, Nil) =>
-        val ts = sh.map(asTerms(_, b))
-        if (ts.forall(_.isDefined)) Some(ts.flatMap(_.get)) else None
+  /** Sort each clause of `q` once into a leg tagged with its occur (see
+    * [[QueryExec.Leg]]). A term — a `TermQuery` under any `Boosted`
+    * wrappers — is a term leg; a nested pure-SHOULD group of terms is one
+    * too, but only when every clause of `q` is term-shaped. Every other
+    * clause is a frame. MUST and SHOULD legs carry `boost` (Lucene
+    * propagates boosts into leaf weights, so a `Boosted` wrapper
+    * multiplies in); MUST_NOT legs are non-scoring and carry 1. */
+  private def legs(q: BoolQuery, boost: Float): Seq[Leg] = {
+    def asTerms(n: Query, b: Float, groups: Boolean): Option[Seq[(String, Float)]] = n match {
+      case TermQuery(t)    => Some(Seq((t, b)))
+      case Boosted(q2, b2) => asTerms(q2, b * b2, groups)
+      case BoolQuery(Nil, sh, Nil, Nil) if groups && sh.nonEmpty =>
+        val ts = sh.map(asTerms(_, b, groups))
+        Option.when(ts.forall(_.isDefined))(ts.flatMap(_.get))
       case _ => None
     }
-    val must = q.must.map(asTerms(_, boost))
-    val should = q.should.map(asTerms(_, boost))
-    val mustNot = q.mustNot.map(asTerms(_, 1.0f))
-    if ((must ++ should ++ mustNot).forall(_.isDefined))
-      Some(Flat(must.map(_.get), should.flatMap(_.get),
-        mustNot.flatMap(_.get).map(_._1)))
-    else None
+    val clauses = q.must.zipWithIndex.map { case (c, i) => (c, i, boost) } ++
+      q.should.map((_, OccShould, boost)) ++ q.mustNot.map((_, OccNot, 1.0f))
+    val groups = clauses.forall { case (c, _, b) => asTerms(c, b, groups = true).isDefined }
+    clauses.map { case (c, occ, b) =>
+      asTerms(c, b, groups).fold[Leg](Frame(occ, c, b))(Terms(occ, _))
+    }
   }
 
   /** Apply FILTER predicates to a scan: predicates whose columns the scan
@@ -160,17 +177,12 @@ final class QueryExec(val index: Index, val exact: Boolean = false) {
       // Lucene BooleanQuery with ONLY prohibited clauses matches nothing:
       // the reference falls back to MatchAllDocsQuery only when the query
       // is EMPTY (SearchBucket.java:636-642), never for `-term` alone —
-      // a pure-negative query has no scoring/required leg to seed from.
-      if (bq.must.isEmpty && bq.should.isEmpty && bq.mustNot.nonEmpty)
-        return matches(MatchNone, filters)
-      val withFilters =
-        if (bq.filter.nonEmpty) bq.copy(filter = Nil) else bq
+      // a pure-negative query has no scoring/required leg to seed from; a
+      // filter-only one matches every doc its filters admit.
       val allFilters = filters ++ bq.filter
-      flatten(withFilters, boost) match {
-        case Some(f) if f.mustGroups.nonEmpty || f.should.nonEmpty =>
-          flatMatches(f, allFilters)
-        case _ => recursiveMatches(withFilters, allFilters, boost)
-      }
+      if (bq.must.nonEmpty || bq.should.nonEmpty) boolMatches(legs(bq, boost), allFilters)
+      else if (bq.mustNot.nonEmpty) matches(MatchNone, filters)
+      else matches(MatchAll, allFilters, boost)
   }
 
   /** Constant-score leg over a keyword attribute column: docs whose value
@@ -189,10 +201,10 @@ final class QueryExec(val index: Index, val exact: Boolean = false) {
   /** The BM25 term scan: postings pushed-filtered to the `weights` terms
     * and the non-scoring attribute legs; each posting row takes its
     * term's (groupId, weightF, weightD) rows from one literal map column —
-    * a term listed in two groups yields two rows, as the join did — plus
-    * the per-row score `tscore`. Filtering first is sound for MUST_NOT
-    * terms too: a doc failing the attribute filter can never match, and
-    * MUST_NOT only removes docs. */
+    * a term listed in two groups yields two rows — and yields
+    * (docId, groupId, tscore), `tscore` the per-row score. Filtering first
+    * is sound for MUST_NOT terms too: a doc failing the attribute filter
+    * can never match, and MUST_NOT only removes docs. */
   private def scoredScan(weights: Seq[(String, Int, Float, Double)],
                          filters: Seq[AttrPredicate]): DataFrame = {
     val byTerm = weights.groupBy(_._1).map { case (t, ws) =>
@@ -202,42 +214,59 @@ final class QueryExec(val index: Index, val exact: Boolean = false) {
     applyFilters(index.postings.filter(col("term").isin(weights.map(_._1).distinct: _*)),
         filters)
       .select(col("*"), inline(weightsOf(col("term"))))
-      .withColumn("tscore",
-        if (exact) Bm25.scoreColExact(col("tf"), col("norm"), col("weightD"), cacheD)
-        else Bm25.scoreCol(col("tf"), col("norm"), col("weightF"), cache))
+      .select(col("docId"), col("groupId"),
+        (if (exact) Bm25.scoreColExact(col("tf"), col("norm"), col("weightD"), cacheD)
+         else Bm25.scoreCol(col("tf"), col("norm"), col("weightF"), cache)).as("tscore"))
   }
 
-  /** Single-pass path: one postings scan, one aggregation. */
-  private def flatMatches(f: Flat, filters: Seq[AttrPredicate]): DataFrame = {
-    val termGroups: Seq[(String, Int, Float)] =
-      f.mustGroups.zipWithIndex.flatMap { case (g, i) =>
-        g.map { case (t, b) => (t, i, b) } } ++
-        f.should.map { case (t, b) => (t, OccShould, b) } ++
-        f.mustNot.map(t => (t, OccNot, 1.0f))
-    if (termGroups.isEmpty) return matches(MatchAll, filters)
-    val idf = termIdf(termGroups.map(_._1))
-    // a MUST group without an indexed term, or no indexed term to score
-    // when nothing is required, matches no doc: no scan
-    def indexed(g: Seq[(String, Float)]) = g.exists(t => idf.contains(t._1))
-    if (!f.mustGroups.forall(indexed) || (f.mustGroups.isEmpty && !indexed(f.should)))
+  /** The boolean algebra: the term legs feed one [[scoredScan]], each
+    * frame leg is its clause's own `matches` frame — its score cast at
+    * the clause boundary, as a Lucene sub-scorer returns a float — and
+    * [[aggregate]] groups their union by docId once. */
+  private def boolMatches(legs: Seq[Leg], filters: Seq[AttrPredicate]): DataFrame = {
+    val terms = legs.flatMap {
+      case Terms(occ, ts) => ts.map { case (t, b) => (t, occ, b) }
+      case _: Frame       => Nil
+    }
+    val idf = if (terms.isEmpty) Map.empty[String, Double] else termIdf(terms.map(_._1))
+    // a MUST term leg without an indexed term, or no leg left to score,
+    // matches no doc: no scan
+    def live(l: Leg) = l match {
+      case Terms(_, ts) => ts.exists(t => idf.contains(t._1))
+      case _: Frame     => true
+    }
+    if (!legs.filter(_.occ >= 0).forall(live) || !legs.exists(l => l.occ != OccNot && live(l)))
       return matches(MatchNone, filters)
     // the per-term weight folds the clause boost in exactly Lucene's float
     // op order: weight = boost × (float)idf (BM25Similarity.scorer
     // receives the propagated boost); the exact/double path mirrors it so
     // the DuckDB oracle can replay `boost * ln(…)` literally
-    val weights = termGroups.flatMap { case (t, g, b) =>
+    val weights = terms.flatMap { case (t, g, b) =>
       idf.get(t).map(idfD => (t, g, b * idfD.toFloat, b.toDouble * idfD))
     }
-    val nMust = f.mustGroups.size
-    scoredScan(weights, filters)
-      .groupBy(col("docId"))
-      .agg(
-        sum(when(col("groupId") =!= OccNot, col("tscore"))).as("scoreSum"),
-        size(collect_set(when(col("groupId") >= 0, col("groupId")))).as("mustHit"),
-        max(when(col("groupId") === OccNot, 1)).as("notHit"),
-        max(when(col("groupId") =!= OccNot, 1)).as("anyHit"))
-      .filter(col("mustHit") === nMust && col("notHit").isNull && col("anyHit") === 1)
-      .select(col("docId"), col("scoreSum").cast(scoreType).as("score"))
+    val frames = legs.collect { case Frame(occ, q, b) =>
+      matches(q, filters, b).select(col("docId"), lit(occ).as("groupId"), col("score").as("tscore"))
+    }
+    val rows = Option.when(weights.nonEmpty)(scoredScan(weights, filters)) ++ frames
+    aggregate(rows.reduce(_ union _), legs.count(_.occ >= 0), legs.exists(_.occ == OccNot))
+  }
+
+  /** The one docId aggregation of (docId, groupId, tscore) rows — the
+    * reference's one BooleanWeight pass. The score sums every row but the
+    * MUST_NOT ones; a doc matches when it has a row of each of the
+    * `nMust` MUST legs (flag `g<i>`, as in the `bm25_grouped` oracle SQL)
+    * and, when `hasNot`, no MUST_NOT row. A doc appears only through some
+    * leg's row, so one without a MUST_NOT row has a scored one. */
+  private def aggregate(rows: DataFrame, nMust: Int, hasNot: Boolean): DataFrame = {
+    val groupId = col("groupId")
+    val score = if (hasNot) sum(when(groupId =!= OccNot, col("tscore"))) else sum(col("tscore"))
+    val mustHit = (0 until nMust).map(i => max(when(groupId === i, 1)).as(s"g$i"))
+    val notHit = Option.when(hasNot)(max(when(groupId === OccNot, 1)).as("notHit"))
+    val agg = rows.groupBy(col("docId"))
+      .agg(score.cast(scoreType).as("score"), mustHit ++ notHit: _*)
+    val matched = (0 until nMust).map(i => col(s"g$i") === 1) ++
+      notHit.map(_ => col("notHit").isNull)
+    matched.reduceOption(_ && _).fold(agg)(agg.filter).select("docId", "score")
   }
 
   /** (Multi-)phrase evaluation over positional postings — Lucene
@@ -282,10 +311,7 @@ final class QueryExec(val index: Index, val exact: Boolean = false) {
           Seq(rebased.as(s"base$i"))
         scan.select(cols: _*)
       } else {
-        // functions.flatten qualified: the boolean-flattening helper above
-        // shadows it in this scope
-        val aggs = Seq(sort_array(org.apache.spark.sql.functions.flatten(
-          collect_list(rebased))).as(s"base$i")) ++
+        val aggs = Seq(sort_array(flatten(collect_list(rebased))).as(s"base$i")) ++
           (if (i == 0) Seq(first(col("norm")).as("norm")) else Nil)
         scan.groupBy("docId").agg(aggs.head, aggs.tail: _*)
       }
@@ -393,9 +419,9 @@ final class QueryExec(val index: Index, val exact: Boolean = false) {
     * Plan: the ≤ maxExpansions expansion rows ([[fuzzyExpansion]]) →
     * blend df = max over the expansion set
     * (BlendedTermQuery.adjustFrequencies) → the BM25 term scan over the
-    * expanded terms with per-row boost × BM25 and the blended idf → one
-    * aggregation by docId summing matched expansions (BOOLEAN_REWRITE:
-    * SHOULD clauses sum). */
+    * expanded terms with per-row boost × BM25 and the blended idf → the
+    * boolean [[aggregate]] of these SHOULD-only rows, summing matched
+    * expansions (BOOLEAN_REWRITE: SHOULD clauses sum). */
   private def fuzzyMatches(f: FuzzyQuery, filters: Seq[AttrPredicate],
                            qBoost: Float): DataFrame = {
     if (f.maxEdits <= 0)
@@ -412,33 +438,7 @@ final class QueryExec(val index: Index, val exact: Boolean = false) {
     val weights = expansion.map { case (t, _, boost) =>
       (t, OccShould, (qBoost * boost.toFloat) * idfD.toFloat, (qBoost.toDouble * boost) * idfD)
     }
-    scoredScan(weights, filters)
-      .groupBy(col("docId"))
-      .agg(sum(col("tscore")).cast(scoreType).as("score"))
-  }
-
-  /** General recursive path for arbitrarily nested boolean trees: the
-    * boost reaches the MUST and SHOULD legs; MUST_NOT legs are non-scoring. */
-  private def recursiveMatches(bq: BoolQuery, filters: Seq[AttrPredicate],
-                               boost: Float): DataFrame = {
-    val mustFrames = bq.must.map(matches(_, filters, boost))
-    val shouldFrames = bq.should.map(matches(_, filters, boost))
-
-    val scoringUnion = (mustFrames ++ shouldFrames) match {
-      case Nil => matches(MatchAll, filters, boost)
-      case fs  => fs.reduce(_ unionAll _)
-        .groupBy("docId").agg(sum(col("score")).cast(scoreType).as("score"))
-    }
-    // MUST semantics: doc must appear in every must frame
-    val withMust = mustFrames.foldLeft(scoringUnion) { (acc, m) =>
-      acc.join(m.select(col("docId").as("mdocId")).distinct(),
-        col("docId") === col("mdocId"), "left_semi")
-    }
-    // MUST_NOT: anti join
-    bq.mustNot.map(matches(_, filters, 1.0f)).foldLeft(withMust) { (acc, n) =>
-      acc.join(n.select(col("docId").as("ndocId")).distinct(),
-        col("docId") === col("ndocId"), "left_anti")
-    }
+    aggregate(scoredScan(weights, filters), nMust = 0, hasNot = false)
   }
 
   /** Top-k by relevance, the default sort (see [[topKSorted]]). */
@@ -455,13 +455,20 @@ final class QueryExec(val index: Index, val exact: Boolean = false) {
     * Returns (docId, score, sort fields…) limited to k — Catalyst plans
     * TakeOrderedAndProject.
     *
-    * A relevance-sorted first page of a pure-should disjunction with no
-    * filters routes to the WAND kernel (per-term whole-list bounds) when
-    * segments exist. */
+    * A relevance-sorted first page with no filters routes to the WAND
+    * kernel (per-term whole-list bounds) when segments exist and the
+    * query's legs are distinct SHOULD terms of boost 1 and nothing else:
+    * the boolean path scores a repeated clause twice, WAND would not. */
   def topKSorted(q: Query, filters: Seq[AttrPredicate], sort: SortSpec, k: Int,
                  after: Option[AfterToken] = None): DataFrame = {
     if (sort.isScore && after.isEmpty && filters.isEmpty && index.segments.isDefined) {
-      pureShouldTerms(q).foreach { terms =>
+      val ls = q match {
+        case t: TermQuery                       => legs(BoolQuery(should = Seq(t)), 1.0f)
+        case bq: BoolQuery if bq.filter.isEmpty => legs(bq, 1.0f)
+        case _                                  => Nil
+      }
+      val terms = ls.collect { case Terms(OccShould, Seq((t, 1.0f))) => t }
+      if (terms.nonEmpty && terms.size == ls.size && terms.distinct.size == terms.size) {
         val idf = termIdf(terms)
         if (idf.isEmpty)
           return matches(MatchNone).orderBy(col("score").desc, col("docId").asc)
@@ -477,20 +484,6 @@ final class QueryExec(val index: Index, val exact: Boolean = false) {
     after.map(a => keyed.filter(afterPredicate(keyed, sort, a))).getOrElse(keyed)
       .orderBy(sortCols: _*).limit(k)
       .select((Seq(col("docId"), col("score")) ++ sort.fields.map(f => col(f._1))): _*)
-  }
-
-  /** Pure-should distinct analyzed terms, when the query is exactly that
-    * shape (the WAND-routable disjunction). Duplicate terms fall through:
-    * the boolean path scores a repeated clause twice, WAND would not. */
-  private def pureShouldTerms(q: Query): Option[Seq[String]] = q match {
-    case TermQuery(t) => Some(Seq(t))
-    case BoolQuery(Nil, should, Nil, Nil) =>
-      val ts = should.map { case TermQuery(t) => Some(t); case _ => None }
-      if (ts.forall(_.isDefined)) {
-        val terms = ts.map(_.get)
-        if (terms.distinct.size == terms.size) Some(terms) else None
-      } else None
-    case _ => None
   }
 
   /** The keyset search_after predicate: rows strictly after the token in
@@ -537,22 +530,6 @@ final class QueryExec(val index: Index, val exact: Boolean = false) {
 }
 
 object QueryExec {
-  /** A flattened boolean query: MUST groups (a group matches when any of
-    * its terms match — the multi-token-analysis/synonym case), flat
-    * SHOULD terms, flat MUST_NOT terms. Every scoring term carries its
-    * cumulative boost (Lucene propagates boosts into leaf weights —
-    * BooleanWeight hands its boost to every scoring sub-weight — so a
-    * `Boosted` wrapper distributes multiplicatively while flattening;
-    * MUST_NOT legs are non-scoring and drop boosts).
-    *
-    * Documented rounding deviation: flattening a nested pure-SHOULD group
-    * folds its terms into ONE double-accumulated sum, whereas Lucene (and
-    * the NaiveOracle) cast each nested clause's sum to float at the
-    * clause boundary before the outer sum. The difference is ≤ a few ulps
-    * of float and can only flip the order of score-TIES' neighbours; we
-    * accept it for the single-pass plan (one aggregation instead of one
-    * per nesting level). The recursive path (used whenever flattening
-    * fails) matches the reference's clause-boundary rounding exactly. */
   /** Most matched terms a wildcard/regexp rewrite filters the postings
     * scan with as literals; more join a termStats scan instead. */
   val MaxTermLiterals: Int = 1024
@@ -566,9 +543,30 @@ object QueryExec {
   private def sparkString(s: String): String =
     org.apache.spark.unsafe.types.UTF8String.fromString(s).toString
 
-  private final case class Flat(
-      mustGroups: Seq[Seq[(String, Float)]], should: Seq[(String, Float)],
-      mustNot: Seq[String])
+  /** One clause of a boolean, sorted once by `legs` and tagged with its
+    * occur `occ`: a MUST clause's index, `OccShould` or `OccNot`. */
+  private sealed trait Leg { def occ: Int }
+
+  /** A clause whose (term, cumulative boost) rows feed the boolean's one
+    * postings scan: a term, or a MUST/SHOULD group matching when any of
+    * its terms does (the multi-token-analysis/synonym case).
+    *
+    * Documented rounding deviation, and exactly where it applies: a nested
+    * pure-SHOULD group folds into term rows only when every clause of its
+    * parent boolean is term-shaped (a term, a boosted term or such a
+    * group, nested to any depth). Its terms then join ONE
+    * double-accumulated sum with their siblings, whereas Lucene (and the
+    * NaiveOracle) cast each nested clause's sum to float at the clause
+    * boundary before the outer sum. The difference is ≤ a few ulps of
+    * float and can only flip the order of score-TIES' neighbours; we
+    * accept it for the single scan. Next to any [[Frame]], a nested group
+    * is a frame and keeps the reference's clause-boundary rounding. */
+  private final case class Terms(occ: Int, terms: Seq[(String, Float)]) extends Leg
+
+  /** A clause evaluated as its own `matches(q, filters, boost)` frame —
+    * phrase, keyword field, wildcard, regexp, fuzzy, match-all or nested
+    * boolean — its score cast at the clause boundary. */
+  private final case class Frame(occ: Int, q: Query, boost: Float) extends Leg
 
   /** Sloppy-phrase fractional frequency over the k rebased, ascending
     * position arrays of one document (slot 0 = anchors). Semantics are

@@ -5,23 +5,14 @@ import graft.analysis.Analyzers
 import graft.build.Maintenance
 import graft.corpus.TranscriptGen
 import graft.model._
-import graft.score.{NaiveOracle, QueryExec}
+import graft.score.{OracleParity, QueryExec}
 
 /** JSON surface, facet response shape, maintenance ops, streaming batch
   * transform. */
 class ApiSpec extends SparkSuite {
 
   private lazy val engine = SearchEngine.build(TranscriptGen.tiny(spark), Analyzers.Icat)
-  private lazy val oracle: NaiveOracle = {
-    val rows = engine.index.corpus
-      .select("docId", "conv_id", "turn_idx", "role", "text", "tool", "ts")
-      .collect()
-      .map { r =>
-        (r.getLong(0), Turn(r.getString(1), r.getInt(2), r.getString(3),
-          r.getString(4), Option(r.getString(5)), r.getTimestamp(6)))
-      }
-    NaiveOracle.fromTurns(rows.toIndexedSeq, Analyzers.Icat)
-  }
+  private lazy val oracle = OracleParity.oracleOf(engine.index.corpus, Analyzers.Icat)
 
   test("JSON request parse mirrors the reference shape") {
     val req = Json.parseRequest(
@@ -372,9 +363,19 @@ class ApiSpec extends SparkSuite {
       "phrase" -> SearchRequest(text = Some("\"w0000 w0001\"")),
       "ts desc" -> SearchRequest(text = Some("ambiguous"), sort = SortSpec(Seq(("ts", false)))),
       "absent term" -> SearchRequest(text = Some("zzzzqqq")),
-      "absent must term" -> SearchRequest(text = Some("+needle_3 +zzzzqqq")))
-    val budget = Map("phrase" -> 4, "ts desc" -> 4, "absent term" -> 0, "absent must term" -> 0)
-      .withDefaultValue(3)
+      "absent must term" -> SearchRequest(text = Some("+needle_3 +zzzzqqq")),
+      "or keyword" -> SearchRequest(text = Some("needle_3 role:assistant")),
+      "and keyword not keyword" -> SearchRequest(text = Some("+needle_3 +role:assistant -tool:bash")),
+      "or phrase" -> SearchRequest(text = Some("needle_3 \"w0000 w0001\"")),
+      "and or phrase" -> SearchRequest(text = Some("+needle_3 \"w0000 w0001\"")),
+      "and not phrase" -> SearchRequest(text = Some("+ambiguous -\"w0000 w0001\"")),
+      "and or fuzzy" -> SearchRequest(text = Some("+ambiguous hydrgen~")),
+      "or wildcard" -> SearchRequest(text = Some("ambiguous needle_*")))
+    // one phrase, fuzzy, wildcard or nested-boolean leg adds its own join
+    // or aggregation to the boolean's one scan and aggregation
+    val budget = Map("phrase" -> 4, "ts desc" -> 4, "absent term" -> 0, "absent must term" -> 0,
+      "or phrase" -> 4, "and or phrase" -> 4, "and not phrase" -> 4, "and or fuzzy" -> 4,
+      "or wildcard" -> 4).withDefaultValue(3)
     shapes.foreach { case (name, req) =>
       val warm = e.search(req) // reads the dictionary on the first shape
       val group = s"graft-budget-$name"
@@ -410,11 +411,7 @@ class ApiSpec extends SparkSuite {
     val turns = Seq(Turn("zz-dict", 0, "user", s"$term needle_3", None,
       new java.sql.Timestamp(1767225600000L))).toDS()
     val g = Maintenance.addTurns(idx, turns, Analyzers.Icat)
-    val o = NaiveOracle.fromTurns(g.corpus
-      .select("docId", "conv_id", "turn_idx", "role", "text", "tool", "ts").collect()
-      .map(r => (r.getLong(0), Turn(r.getString(1), r.getInt(2), r.getString(3),
-        r.getString(4), Option(r.getString(5)), r.getTimestamp(6)))).toIndexedSeq,
-      Analyzers.Icat)
+    val o = OracleParity.oracleOf(g.corpus, Analyzers.Icat)
     val want = math.log(1d + (o.docCount - o.df(term) + 0.5d) / (o.df(term) + 0.5d))
     assert(new QueryExec(g).termIdf(Seq(term)) === Map(term -> want))
     val hits = new SearchEngine(g).search(SearchRequest(text = Some(term)))
@@ -427,8 +424,7 @@ class ApiSpec extends SparkSuite {
     import org.apache.spark.metrics.source.CodegenMetrics
     Seq(10, 100).foreach { k =>
       def req(i: Int) = SearchRequest(text = Some(s"needle_$i"), maxResults = k)
-      // the warm-up also takes the data-dependent paths: needle_3 makes the
-      // scoring aggregation fall back to sorting, which compiles once
+      // the warm-up compiles each class the shape's plan generates once
       (0 to 3).foreach(i => engine.search(req(i)))
       val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       val ids = (4 to 6).map(i => engine.search(req(i)).hits.map(_.docId))

@@ -17,16 +17,7 @@ class BoolSyntaxSpec extends SparkSuite {
 
   private lazy val turns = TranscriptGen.tiny(spark)
   private lazy val engine = SearchEngine.build(turns, Analyzers.Icat, withPositions = true)
-  private lazy val oracle: NaiveOracle = {
-    val rows = engine.index.corpus
-      .select("docId", "conv_id", "turn_idx", "role", "text", "tool", "ts")
-      .collect()
-      .map { r =>
-        (r.getLong(0), Turn(r.getString(1), r.getInt(2), r.getString(3),
-          r.getString(4), Option(r.getString(5)), r.getTimestamp(6)))
-      }
-    NaiveOracle.fromTurns(rows.toIndexedSeq, Analyzers.Icat)
-  }
+  private lazy val oracle = OracleParity.oracleOf(engine.index.corpus, Analyzers.Icat)
 
   private def parse(text: String): Query =
     QueryText.parse(text, s => Analyzers.Icat(s).terms,
@@ -36,15 +27,8 @@ class BoolSyntaxSpec extends SparkSuite {
     checkParity(parse(text), text, k)
 
   private def checkParity(q: Query, text: String, k: Int): Unit = {
-    val want = oracle.topK(q, Nil, k)
-    val got = new QueryExec(engine.index).topK(q, Nil, k)
-      .collect().map(r => (r.getLong(0), r.getFloat(1))).toSeq
-    assert(got.map(_._1) === want.map(_._1), s"rank mismatch for '$text'")
-    got.zip(want).foreach { case ((gid, gs), (wid, ws)) =>
-      assert(gid === wid)
-      assert(math.abs(gs - ws) <= math.abs(ws) * 1e-5 + 1e-7,
-        s"score mismatch for '$text' doc $gid: engine=$gs oracle=$ws")
-    }
+    OracleParity.assertSameTopK(OracleParity.hits(new QueryExec(engine.index).topK(q, Nil, k)),
+      oracle.topK(q, Nil, k), s"'$text'")
   }
 
   // ---- parser goldens --------------------------------------------
@@ -142,6 +126,7 @@ class BoolSyntaxSpec extends SparkSuite {
     checkParity("\"w0000 w0001\"^2 needle_3")
     checkParity("((needle_3 hydrogen)^2 ambiguous)^3")
     checkParity("(needle_3 \"w0000 w0001\")^2 +ambiguous")
+    OracleParity.mixedLegs.foreach(checkParity(_))
   }
 
   test("boosted constant-score leg parity: fielded keyword ^3") {

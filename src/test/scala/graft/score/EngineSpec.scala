@@ -16,16 +16,7 @@ class EngineSpec extends SparkSuite {
 
   private lazy val turns = TranscriptGen.tiny(spark)
   private lazy val engine = SearchEngine.build(turns, Analyzers.Icat, withPositions = true)
-  private lazy val oracle: NaiveOracle = {
-    val rows = engine.index.corpus
-      .select("docId", "conv_id", "turn_idx", "role", "text", "tool", "ts")
-      .collect()
-      .map { r =>
-        (r.getLong(0), Turn(r.getString(1), r.getInt(2), r.getString(3),
-          r.getString(4), Option(r.getString(5)), r.getTimestamp(6)))
-      }
-    NaiveOracle.fromTurns(rows.toIndexedSeq, Analyzers.Icat)
-  }
+  private lazy val oracle = OracleParity.oracleOf(engine.index.corpus, Analyzers.Icat)
 
   private def parse(text: String): Query =
     QueryText.parse(text, s => Analyzers.Icat(s).terms,
@@ -34,21 +25,14 @@ class EngineSpec extends SparkSuite {
   private def engineTopK(q: Query, filters: Seq[AttrPredicate], k: Int,
                          after: Option[AfterToken] = None,
                          index: Index = engine.index): Seq[(Long, Float)] = {
-    new QueryExec(index).topK(q, filters, k, after)
-      .collect().map(r => (r.getLong(0), r.getFloat(1))).toSeq
+    OracleParity.hits(new QueryExec(index).topK(q, filters, k, after))
   }
 
   private def checkParity(text: String, filters: Seq[AttrPredicate] = Nil,
                           k: Int = 10, index: Index = engine.index): Unit = {
     val q = parse(text)
-    val want = oracle.topK(q, filters, k)
-    val got = engineTopK(q, filters, k, index = index)
-    assert(got.map(_._1) === want.map(_._1), s"rank mismatch for '$text'")
-    got.zip(want).foreach { case ((gid, gs), (wid, ws)) =>
-      assert(gid === wid)
-      assert(math.abs(gs - ws) <= math.abs(ws) * 1e-5 + 1e-7,
-        s"score mismatch for '$text' doc $gid: engine=$gs oracle=$ws")
-    }
+    OracleParity.assertSameTopK(engineTopK(q, filters, k, index = index),
+      oracle.topK(q, filters, k), s"'$text'")
   }
 
   test("corpus is deterministic and docIds dense") {
@@ -143,6 +127,8 @@ class EngineSpec extends SparkSuite {
 
   test("q20 phrase with attribute filter routes like any scoring leg") {
     checkParity("\"w0000 w0001\"", Seq(FieldEquals("role", "assistant")), k = 30)
+    // every leg kind under every occur, filtered the same way
+    OracleParity.mixedLegs.foreach(checkParity(_, Seq(FieldEquals("role", "assistant")), k = 20))
   }
 
   test("q21 sloppy phrase: ~N window, transposition cost, fractional freq") {

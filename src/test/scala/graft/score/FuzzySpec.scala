@@ -38,14 +38,8 @@ class FuzzySpec extends SparkSuite {
     }, Analyzers.Simple)
 
   private def parity(q: Query, clue: String): Unit = {
-    val got = exec.topK(q, Nil, 20)
-      .collect().map(r => (r.getLong(0), r.getFloat(1))).toSeq
-    val want = oracle.topK(q, Nil, 20)
-    assert(got.map(_._1) === want.map(_._1), s"rank mismatch: $clue")
-    got.zip(want).foreach { case ((gid, gs), (_, ws)) =>
-      assert(math.abs(gs - ws) <= math.abs(ws) * 1e-5 + 1e-7,
-        s"score mismatch ($clue) doc $gid: engine=$gs oracle=$ws")
-    }
+    OracleParity.assertSameTopK(OracleParity.hits(exec.topK(q, Nil, 20)),
+      oracle.topK(q, Nil, 20), clue)
   }
 
   test("EditDistance: OSA transpositions vs plain Levenshtein") {

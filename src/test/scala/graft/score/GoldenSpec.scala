@@ -17,14 +17,7 @@ class GoldenSpec extends SparkSuite {
 
   private lazy val engine = SearchEngine.build(TranscriptGen.tiny(spark), Analyzers.Icat)
   private lazy val exec = new QueryExec(engine.index)
-  private lazy val oracle: NaiveOracle = {
-    val rows = engine.index.corpus
-      .select("docId", "conv_id", "turn_idx", "role", "text", "tool", "ts")
-      .collect()
-      .map(r => (r.getLong(0), Turn(r.getString(1), r.getInt(2), r.getString(3),
-        r.getString(4), Option(r.getString(5)), r.getTimestamp(6))))
-    NaiveOracle.fromTurns(rows.toIndexedSeq, Analyzers.Icat)
-  }
+  private lazy val oracle = OracleParity.oracleOf(engine.index.corpus, Analyzers.Icat)
 
   /** A golden file's document; decimals stay exact so a score reads
     * back as the Float its digits name. */

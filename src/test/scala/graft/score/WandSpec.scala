@@ -20,22 +20,13 @@ class WandSpec extends SparkSuite {
   private lazy val segments =
     Segments.pack(engine.index.postings, engine.index.stats, segSize).cache()
 
-  private def idfOf(terms: Seq[String]): Map[String, Double] = {
-    import org.apache.spark.sql.functions.col
-    val dfm = engine.index.termStats
-      .filter(col("term").isin(terms: _*))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    terms.flatMap(t => dfm.get(t).map(df =>
-      t -> Bm25.idf(engine.index.stats.docCount, df))).toMap
-  }
-
   private def checkWand(text: String, k: Int = 10): Unit = {
     val terms = text.split(" ").flatMap(Analyzers.Icat(_).terms).toSeq
-    val want = new QueryExec(engine.index)
-      .topK(QueryText.parse(text, s => Analyzers.Icat(s).terms), Nil, k)
-      .collect().map(r => (r.getLong(0), r.getFloat(1))).toSeq
-    val got = Wand.topK(segments, engine.index.stats, idfOf(terms), k, segSize)
-      .collect().map(r => (r.getLong(0), r.getFloat(1))).toSeq
+    val exec = new QueryExec(engine.index)
+    val want = OracleParity.hits(
+      exec.topK(QueryText.parse(text, s => Analyzers.Icat(s).terms), Nil, k))
+    val got = OracleParity.hits(
+      Wand.topK(segments, engine.index.stats, exec.termIdf(terms), k, segSize))
     assert(got === want, s"WAND mismatch for '$text'")
   }
 
