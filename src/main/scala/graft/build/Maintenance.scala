@@ -35,13 +35,19 @@ object Maintenance {
     * a compaction that re-runs DocIds.assign over the merged corpus
     * restores the global invariant. The appended turns' DocIds mint is a
     * cache this call leaves behind: their docIds exist only in it, so it
-    * must stay cached while any generation built on it is live. */
+    * must stay cached while any generation built on it is live. A caller
+    * that releases it mints the turns itself and calls [[addMinted]]. */
   def addTurns(index: Index, turns: Dataset[Turn], analyzer: TextAnalyzer): Index = {
     requireAnalyzer(index, analyzer)
+    addMinted(index, graft.corpus.DocIds.forTurns(turns))
+  }
+
+  /** [[addTurns]] of turns the caller minted with `DocIds.forTurns`,
+    * analyzed with the index's analyzer. The mint stays the caller's: it
+    * releases it (`unpersist()`) once no generation built on it is live. */
+  def addMinted(index: Index, minted: DataFrame): Index = {
     val base = index.corpus.agg(coalesce(max(col("docId")), lit(-1L))).collect()(0).getLong(0)
-    val newCorpus = graft.corpus.DocIds.forTurns(turns)
-      .withColumn("docId", col("docId") + lit(base + 1))
-    mutate(index, removed = None, added = Some(newCorpus))
+    mutate(index, removed = None, added = Some(minted.withColumn("docId", col("docId") + lit(base + 1))))
   }
 
   /** Update = delete + add (reference: Lucene.java:327-330, 1788-1830).

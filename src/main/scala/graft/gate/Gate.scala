@@ -471,11 +471,13 @@ object Gate {
         val newTurns = (0 until 5).map(i => graft.model.Turn(f"zz-conv-$i%02d", 0,
           "xx", "spark table spark merge", None,
           new java.sql.Timestamp(1767225600000L))).toDS()
-        val after = graft.build.Maintenance.addTurns(idx, newTurns, Analyzers.Simple)
+        val minted = graft.corpus.DocIds.forTurns(newTurns)
+        val after = graft.build.Maintenance.addMinted(idx, minted)
         val out = new QueryExec(after, exact = true).topK(TermQuery("spark"), Nil, 20)
           .select(col("docId").as("doc_id"), round(col("score"), 4).as("score"))
         val rows = out.collect().toSeq
-        after.unpersistAll(includeCorpus = false)
+        after.unpersistAll(includeCorpus = false) // transient mutation result
+        minted.unpersist()
         s.createDataFrame(s.sparkContext.parallelize(rows), out.schema)
       },
       Some(s"""WITH fdocs AS (

@@ -73,42 +73,19 @@ final class NaiveOracle(docs: Seq[NaiveOracle.Doc]) {
       if (d.terms.exists(t => re.findFirstIn(t).isDefined)) Some(boost) else None
     case r: FieldRegexpQuery =>
       val re = r.regex.r
-      val value: Option[String] = r.field match {
-        case "role"    => Some(d.role)
-        case "tool"    => d.tool
-        case "conv_id" => Some(d.convId)
-        case other     => sys.error(s"unknown keyword field $other")
-      }
-      if (value.exists(v => re.findFirstIn(v).isDefined)) Some(boost) else None
+      if (keyword(d, r.field).exists(v => re.findFirstIn(v).isDefined)) Some(boost) else None
     case p: PhraseQuery => phraseScore(p, d, boost)
     case f: FuzzyQuery  => fuzzyScore(f, d, boost)
     case f: FieldFuzzyQuery =>
-      val value: Option[String] = f.field match {
-        case "role"    => Some(d.role)
-        case "tool"    => d.tool
-        case "conv_id" => Some(d.convId)
-        case other     => sys.error(s"unknown keyword field $other")
-      }
-      if (value.exists(v => NaiveOracle.editDistance(v, f.value, f.transpositions) <= f.maxEdits))
+      if (keyword(d, f.field).exists(v =>
+            NaiveOracle.editDistance(v, f.value, f.transpositions) <= f.maxEdits))
         Some(boost)
       else None
     case FieldMatchQuery(f, v) =>
-      val m = f match {
-        case "role"    => d.role == v
-        case "tool"    => d.tool.contains(v)
-        case "conv_id" => d.convId == v
-        case other     => sys.error(s"unknown keyword field $other")
-      }
-      if (m) Some(boost) else None
+      if (keyword(d, f).contains(v)) Some(boost) else None
     case w: FieldWildcardQuery =>
       val re = w.regex.r
-      val value: Option[String] = w.field match {
-        case "role"    => Some(d.role)
-        case "tool"    => d.tool
-        case "conv_id" => Some(d.convId)
-        case other     => sys.error(s"unknown keyword field $other")
-      }
-      if (value.exists(v => re.findFirstIn(v).isDefined)) Some(boost) else None
+      if (keyword(d, w.field).exists(v => re.findFirstIn(v).isDefined)) Some(boost) else None
     case BoolQuery(must, should, mustNot, filter) =>
       if (!filter.forall(matchesAttr(_, d))) return None
       if (mustNot.exists(scoreDoc(_, d, 1.0f).isDefined)) return None
@@ -201,15 +178,17 @@ final class NaiveOracle(docs: Seq[NaiveOracle.Doc]) {
     }
   }
 
+  /** A keyword attribute's value (None = null). */
+  private def keyword(d: Doc, field: String): Option[String] = field match {
+    case "role"    => Some(d.role)
+    case "tool"    => d.tool
+    case "conv_id" => Some(d.convId)
+    case other     => sys.error(s"unknown keyword field $other")
+  }
+
   def matchesAttr(p: AttrPredicate, d: Doc): Boolean = p match {
-    case FieldEquals("role", v) => d.role == v
-    case FieldEquals("tool", v) => d.tool.contains(v)
-    case FieldEquals("conv_id", v) => d.convId == v
-    case FieldEquals(f, _)      => sys.error(s"unknown field $f")
-    case FieldIn("role", vs)    => vs.contains(d.role)
-    case FieldIn("tool", vs)    => d.tool.exists(vs.contains)
-    case FieldIn("conv_id", vs) => vs.contains(d.convId)
-    case FieldIn(f, _)          => sys.error(s"unknown field $f")
+    case FieldEquals(f, v)      => keyword(d, f).contains(v)
+    case FieldIn(f, vs)         => keyword(d, f).exists(vs.contains)
     case TsRange(lo, hi)        => d.tsMs >= lo && d.tsMs <= hi
     case NumRange(f, lo, hi, loInc, hiInc) =>
       val v: Double = f match {
@@ -223,95 +202,54 @@ final class NaiveOracle(docs: Seq[NaiveOracle.Doc]) {
       throw new UnsupportedOperationException(s"NaiveOracle does not model numeric SI fields: $p")
   }
 
-  /** Full-scan top-k: score every doc, sort (score desc, docId asc),
-    * apply the keyset search_after predicate, take k. A token without a
-    * score keeps the docs after its docId, whatever their score. */
+  /** Top-k by relevance, the default sort (see [[topKSorted]]). */
   def topK(q: Query, filters: Seq[AttrPredicate], k: Int,
-           after: Option[AfterToken] = None): Seq[(Long, Float)] = {
-    val hits = docs.flatMap { d =>
-      if (!filters.forall(matchesAttr(_, d))) None
-      else scoreDoc(q, d).map(s => (d.docId, s))
-    }
-    val sorted = hits.sortBy { case (id, s) => (-s, id) }
-    val paged = after match {
-      case Some(a) =>
-        sorted.filter { case (id, sc) =>
-          a.score match {
-            case Some(s) => sc < s || (sc == s && id > a.docId)
-            case None    => id > a.docId
-          }
-        }
-      case None => sorted
-    }
-    paged.take(k)
-  }
+           after: Option[AfterToken] = None): Seq[(Long, Float)] =
+    topKSorted(q, filters, Nil, k, after)
 
-  /** Field-sorted top-k over matching docs, any corpus column as a sort
-    * key (reference: typed sortField doc values, SearchBucket.java:959-992)
-    * with optional keyset pagination over the same lexicographic
-    * (fields..., docId) key the engine uses. None/null sorts first on asc
-    * and last on desc, matching Spark's default null ordering. */
+  /** Full-scan top-k: score every doc, sort, apply the keyset
+    * search_after predicate, take k. The sort keys are `sort` — any corpus
+    * column (reference: typed sortField doc values,
+    * SearchBucket.java:959-992) — or relevance (score desc) when none is
+    * given, then docId asc: the lexicographic key the engine uses.
+    * None/null sorts first on asc and last on desc, matching Spark's
+    * default null ordering. The token's values pair with the leading keys,
+    * so a token without a score pages a relevance sort by docId alone. */
   def topKSorted(q: Query, filters: Seq[AttrPredicate],
                  sort: Seq[(String, Boolean)], k: Int,
                  after: Option[AfterToken] = None): Seq[(Long, Float)] = {
+    val keys = if (sort.isEmpty) Seq(("score", false)) else sort
+    def value(d: Doc, score: Float, f: String): Any = f match {
+      case "score"    => score
+      case "ts"       => d.tsMs
+      case "turn_idx" => d.turnIdx.toLong
+      case other      => keyword(d, other).orNull
+    }
+    // null is the smallest value (Spark: nulls first asc = nulls last desc)
+    def cmp(x: Any, y: Any): Int = (x, y) match {
+      case (null, null)           => 0
+      case (null, _)              => -1
+      case (_, null)              => 1
+      case (a: Float, b: Number)  => java.lang.Float.compare(a, b.floatValue)
+      case (a: Long, b: Number)   => java.lang.Long.compare(a, b.longValue)
+      case (a: String, b: String) => a.compareTo(b)
+      case _ => sys.error(s"incomparable sort values $x and $y")
+    }
+    // the order of (values, docId) keys: < 0 when `x` sorts first
+    def order(x: Seq[Any], xId: Long, y: Seq[Any], yId: Long): Int =
+      keys.iterator.zip(x.iterator.zip(y.iterator))
+        .map { case ((_, asc), (a, b)) => if (asc) cmp(a, b) else -cmp(a, b) }
+        .find(_ != 0).getOrElse(java.lang.Long.compare(xId, yId))
     val hits = docs.flatMap { d =>
       if (!filters.forall(matchesAttr(_, d))) None
-      else scoreDoc(q, d).map(s => (d, s))
+      else scoreDoc(q, d).map(s => (d.docId, s, keys.map(f => value(d, s, f._1))))
     }
-    // per-field compare with None as the smallest value (Spark: nulls
-    // first asc = nulls last desc = reverse of the same total order)
-    def cmpField(f: String, d1: Doc, d2: Doc): Int = f match {
-      case "ts"       => java.lang.Long.compare(d1.tsMs, d2.tsMs)
-      case "turn_idx" => Integer.compare(d1.turnIdx, d2.turnIdx)
-      case "role"     => d1.role.compareTo(d2.role)
-      case "conv_id"  => d1.convId.compareTo(d2.convId)
-      case "tool"     => (d1.tool, d2.tool) match {
-        case (None, None) => 0
-        case (None, _)    => -1
-        case (_, None)    => 1
-        case (Some(a), Some(b)) => a.compareTo(b)
-      }
-      case other => sys.error(s"unsupported sort field $other")
+    val sorted = hits.sortWith { case ((i, _, x), (j, _, y)) => order(x, i, y, j) < 0 }
+    val paged = after.fold(sorted) { a =>
+      val vs = if (sort.isEmpty) a.score.toSeq else a.fields
+      sorted.filter { case (id, _, x) => order(x, id, vs, a.docId) > 0 }
     }
-    def lessThan(d1: Doc, d2: Doc): Boolean = {
-      sort.foreach { case (f, asc) =>
-        val c = cmpField(f, d1, d2)
-        if (c != 0) return if (asc) c < 0 else c > 0
-      }
-      d1.docId < d2.docId
-    }
-    def fieldValue(d: Doc, f: String): Any = f match {
-      case "ts"       => d.tsMs
-      case "turn_idx" => d.turnIdx
-      case "role"     => d.role
-      case "conv_id"  => d.convId
-      case "tool"     => d.tool.orNull
-      case other      => sys.error(s"unsupported sort field $other")
-    }
-    // keyset: keep docs strictly after the token in the total order
-    def afterPred(d: Doc, a: AfterToken): Boolean = {
-      sort.zip(a.fields).foreach { case ((f, asc), av) =>
-        val dv = fieldValue(d, f)
-        val c = (dv, av) match {
-          case (x: Long, y: Long)     => java.lang.Long.compare(x, y)
-          case (x: Int, y: Int)       => Integer.compare(x, y)
-          case (x: Int, y: Long)      => java.lang.Long.compare(x.toLong, y)
-          case (x: String, y: String) => x.compareTo(y)
-          case (null, null)           => 0
-          case (null, _)              => -1
-          case (_, null)              => 1
-          case _ => sys.error(s"incomparable after value $av for $f")
-        }
-        if (c != 0) return if (asc) c > 0 else c < 0
-      }
-      d.docId > a.docId
-    }
-    val sorted = hits.sortWith { case ((d1, _), (d2, _)) => lessThan(d1, d2) }
-    val paged = after match {
-      case Some(a) => sorted.filter { case (d, _) => afterPred(d, a) }
-      case None    => sorted
-    }
-    paged.take(k).map { case (d, s) => (d.docId, s) }
+    paged.take(k).map { case (id, s, _) => (id, s) }
   }
 }
 

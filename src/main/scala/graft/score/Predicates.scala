@@ -27,7 +27,11 @@ object Predicates {
     case FieldEquals(f, v) => col(f) === lit(v)
     case FieldIn(f, vs)    => if (vs.isEmpty) lit(false) else col(f).isin(vs: _*)
     case TsRange(lo, hi)   =>
-      col("ts") >= lit(new java.sql.Timestamp(lo)) && col("ts") <= lit(new java.sql.Timestamp(hi))
+      // an open side (Long.Min/MaxValue: no bound given) compares nothing —
+      // as a timestamp literal it would overflow Spark's microseconds
+      Seq(Option.when(lo != Long.MinValue)(col("ts") >= lit(new java.sql.Timestamp(lo))),
+        Option.when(hi != Long.MaxValue)(col("ts") <= lit(new java.sql.Timestamp(hi))))
+        .flatten.reduceOption(_ && _).getOrElse(lit(true))
     case NumRange(f, lo, hi, loInc, hiInc) =>
       val l = if (loInc) col(f) >= lit(lo) else col(f) > lit(lo)
       val h = if (hiInc) col(f) <= lit(hi) else col(f) < lit(hi)

@@ -46,8 +46,9 @@ import org.apache.spark.sql.types.ArrayType
   * No semi- or anti-join and no broadcast: a boolean of terms and keyword
   * fields, whatever their occur, runs two Spark jobs (the aggregation's
   * shuffle and the top-k), a search three with its stored-field fetch;
-  * one phrase, fuzzy, wildcard or nested-boolean leg adds one (its own
-  * join or aggregation). A query with no indexed term runs none. Over the
+  * one phrase, fuzzy, wildcard or nested-boolean leg next to other legs
+  * adds one (its own join or aggregation), and a boolean of that one leg
+  * alone is that leg's frame. A query with no indexed term runs none. Over the
   * dictionary's cap, term lookups and rewrites fall back to pushed scans
   * of `termStats`.
   */
@@ -222,8 +223,15 @@ final class QueryExec(val index: Index, val exact: Boolean = false) {
   /** The boolean algebra: the term legs feed one [[scoredScan]], each
     * frame leg is its clause's own `matches` frame — its score cast at
     * the clause boundary, as a Lucene sub-scorer returns a float — and
-    * [[aggregate]] groups their union by docId once. */
+    * [[aggregate]] groups their union by docId once. A lone scoring frame
+    * is the boolean: its rows are already one per doc, and summing one
+    * score and casting it back is the identity. */
   private def boolMatches(legs: Seq[Leg], filters: Seq[AttrPredicate]): DataFrame = {
+    legs match {
+      case Seq(Frame(occ, q, b)) if occ != OccNot =>
+        return matches(q, filters, b).select("docId", "score")
+      case _ =>
+    }
     val terms = legs.flatMap {
       case Terms(occ, ts) => ts.map { case (t, b) => (t, occ, b) }
       case _: Frame       => Nil

@@ -3,14 +3,14 @@ package graft
 import graft.analysis.{Analyzers, PorterStemmer, WordBreak}
 import graft.build.SmallFloat
 import graft.model._
-import graft.score.NaiveOracle
+import graft.score.{NaiveOracle, OracleParity}
 import org.scalacheck.{Gen, Prop, Test => ScTest}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pure-Scala property tests (FIXTURES.md §4): analyzer determinism,
-  * SmallFloat quantization laws, postings invariants on the naive oracle,
-  * pagination laws. Runs scalacheck directly (no scalatestplus bridge in
-  * the offline cache). */
+  * SmallFloat quantization laws, postings invariants and pagination laws
+  * on the naive oracle over the harness's generated corpora. Runs
+  * scalacheck directly (no scalatestplus bridge in the offline cache). */
 class PropertySpec extends AnyFunSuite {
   private def check(p: Prop): Unit = {
     val res = ScTest.check(ScTest.Parameters.default.withMinSuccessfulTests(60), p)
@@ -54,18 +54,17 @@ class PropertySpec extends AnyFunSuite {
     })
   }
 
-  private def mkOracle(docs: List[String]): NaiveOracle = {
-    val turns = docs.zipWithIndex.map { case (t, i) =>
-      (i.toLong, Turn(f"c$i%04d", 0, "user", t, None, new java.sql.Timestamp(i * 1000L)))
-    }
-    NaiveOracle.fromTurns(turns, Analyzers.Icat)
-  }
+  // the harness's corpus generator (graft.score.OracleParity); a
+  // generated corpus lists its turns in docId order
+  private val corpora = OracleParity.corpusGen(Int.MaxValue)
+  private def oracleOf(c: OracleParity.Generated): NaiveOracle =
+    NaiveOracle.fromTurns(c.turns.zipWithIndex.map { case (t, i) => (i.toLong, t) }, c.analyzer)
+  private val term: Gen[TermQuery] =
+    Gen.oneOf(OracleParity.vocabulary).map(w => TermQuery(Analyzers.Icat(w).terms.head))
 
   test("oracle postings invariants: df bounds, topK ordering, pagination") {
-    val corpusGen = Gen.listOfN(30, text.suchThat(_.trim.nonEmpty))
-    check(Prop.forAll(corpusGen, word) { (docs, w) =>
-      val o = mkOracle(docs)
-      val q = TermQuery(PorterStemmer.stem(w))
+    check(Prop.forAll(corpora, term) { (c, q) =>
+      val o = oracleOf(c)
       val top = o.topK(q, Nil, 100)
       // sorted by score desc, docId asc
       val sortedOk = top.sliding(2).forall {
@@ -77,23 +76,22 @@ class PropertySpec extends AnyFunSuite {
       val p2 = p1.lastOption.map(h =>
         o.topK(q, Nil, 3, Some(AfterToken(h._1, Some(h._2), Nil)))).getOrElse(Nil)
       val pagesOk = (p1 ++ p2) == top.take(p1.size + p2.size)
-      sortedOk && pagesOk
+      sortedOk && pagesOk && o.df(q.term) == top.size && top.size <= c.turns.size
     })
   }
 
   test("boolean algebra laws on the oracle: AND ⊆ OR, NOT removes, FILTER intersects") {
-    val corpusGen = Gen.listOfN(25, text.suchThat(_.trim.nonEmpty))
-    check(Prop.forAll(corpusGen, word, word) { (docs, w1, w2) =>
-      val o = mkOracle(docs)
-      val t1 = TermQuery(PorterStemmer.stem(w1))
-      val t2 = TermQuery(PorterStemmer.stem(w2))
+    check(Prop.forAll(corpora, term, term) { (c, t1, t2) =>
+      val o = oracleOf(c)
       val and = o.topK(BoolQuery(must = Seq(t1, t2)), Nil, 1000).map(_._1).toSet
       val or = o.topK(BoolQuery(should = Seq(t1, t2)), Nil, 1000).map(_._1).toSet
       val not = o.topK(BoolQuery(must = Seq(t1), mustNot = Seq(t2)), Nil, 1000).map(_._1).toSet
       val only1 = o.topK(t1, Nil, 1000).map(_._1).toSet
+      val filtered = o.topK(t1, Seq(FieldEquals("role", "user")), 1000).map(_._1).toSet
+      val users = o.topK(MatchAll, Seq(FieldEquals("role", "user")), 1000).map(_._1).toSet
       and.subsetOf(or) && and.subsetOf(only1) &&
         not.subsetOf(only1) && (not intersect and).isEmpty &&
-        (not union and) == only1
+        (not union and) == only1 && filtered == (only1 intersect users)
     })
   }
 

@@ -361,6 +361,7 @@ class ApiSpec extends SparkSuite {
       "regexp" -> SearchRequest(text = Some("/needle_[0-4]/")),
       "fuzzy" -> SearchRequest(text = Some("hydrgen~")),
       "phrase" -> SearchRequest(text = Some("\"w0000 w0001\"")),
+      "keyword" -> SearchRequest(text = Some("role:assistant")),
       "ts desc" -> SearchRequest(text = Some("ambiguous"), sort = SortSpec(Seq(("ts", false)))),
       "absent term" -> SearchRequest(text = Some("zzzzqqq")),
       "absent must term" -> SearchRequest(text = Some("+needle_3 +zzzzqqq")),
@@ -372,8 +373,9 @@ class ApiSpec extends SparkSuite {
       "and or fuzzy" -> SearchRequest(text = Some("+ambiguous hydrgen~")),
       "or wildcard" -> SearchRequest(text = Some("ambiguous needle_*")))
     // one phrase, fuzzy, wildcard or nested-boolean leg adds its own join
-    // or aggregation to the boolean's one scan and aggregation
-    val budget = Map("phrase" -> 4, "ts desc" -> 4, "absent term" -> 0, "absent must term" -> 0,
+    // or aggregation to the boolean's one scan and aggregation; a boolean
+    // of that one leg alone is the leg's frame
+    val budget = Map("ts desc" -> 4, "absent term" -> 0, "absent must term" -> 0,
       "or phrase" -> 4, "and or phrase" -> 4, "and not phrase" -> 4, "and or fuzzy" -> 4,
       "or wildcard" -> 4).withDefaultValue(3)
     shapes.foreach { case (name, req) =>

@@ -15,6 +15,17 @@ class GateSpec extends SparkSuite {
     * same zero rows — e.g. prohibited-only boolean matches nothing). */
   private val expectedEmpty = Set("bm25_pure_not")
 
+  // registered before the per-query tests: every run of maint_add_rescore
+  // mints the same plan, so a later run would reuse a left-behind mint
+  // and persist nothing new — only the first run in the JVM can show one
+  test("maint_add_rescore leaves no cache behind: a run persists nothing new") {
+    val sc = spark.sparkContext
+    Gate.queries("maint_delete_rescore")(spark, sfDir).collect() // the standing maintenance index
+    val standing = sc.getPersistentRDDs.keySet
+    Gate.queries("maint_add_rescore")(spark, sfDir).collect()
+    assert(sc.getPersistentRDDs.keySet === standing)
+  }
+
   (Gate.all ++ PipelineGate.all).foreach { gq =>
     test(s"gate query ${gq.name} runs and returns rows") {
       val df = gq.fn(spark, sfDir)

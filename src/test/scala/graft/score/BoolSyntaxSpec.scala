@@ -2,34 +2,23 @@ package graft.score
 
 import graft.SparkSuite
 import graft.analysis.Analyzers
-import graft.api.SearchEngine
 import graft.model._
 
 /** StandardQueryParser boolean-structure surface (reference:
   * DocumentMapping.java:120-146 — the service hands user query strings to
   * Lucene's StandardQueryParser, whose grammar accepts `( … )` grouping,
   * uppercase AND/OR/NOT (`&&`/`||`/`!`) operators and `^N` boosts;
-  * StandardSyntaxParser.jj): parser goldens plus engine-vs-NaiveOracle
-  * score parity for grouped and boosted queries. */
+  * StandardSyntaxParser.jj): parser goldens, plus the [[Pinned]] harness
+  * cases of grouped and boosted queries. */
 class BoolSyntaxSpec extends SparkSuite {
 
-  import graft.corpus.TranscriptGen
-
-  private lazy val turns = TranscriptGen.tiny(spark)
-  private lazy val engine = SearchEngine.build(turns, Analyzers.Icat, withPositions = true)
-  private lazy val oracle = OracleParity.oracleOf(engine.index.corpus, Analyzers.Icat)
+  private lazy val engine = OracleParity.engine(OracleParity.Tiny)
 
   private def parse(text: String): Query =
     QueryText.parse(text, s => Analyzers.Icat(s).terms,
       analyzePos = s => Analyzers.Icat.positional(s))
 
-  private def checkParity(text: String, k: Int = 20): Unit =
-    checkParity(parse(text), text, k)
-
-  private def checkParity(q: Query, text: String, k: Int): Unit = {
-    OracleParity.assertSameTopK(OracleParity.hits(new QueryExec(engine.index).topK(q, Nil, k)),
-      oracle.topK(q, Nil, k), s"'$text'")
-  }
+  Pinned.in("BoolSyntaxSpec").foreach(p => test(p.name)(OracleParity.check(p)))
 
   // ---- parser goldens --------------------------------------------
 
@@ -97,11 +86,7 @@ class BoolSyntaxSpec extends SparkSuite {
     assert(parse("()") === MatchAll)
   }
 
-  // ---- engine vs oracle parity ------------------------------------
-
-  test("grouped boolean parity: (a OR b) AND c") {
-    checkParity("(needle_3 OR hydrogen) AND ambiguous")
-  }
+  // ---- engine behaviour -------------------------------------------
 
   test("grouped equals flat where semantics coincide") {
     val grouped = parse("(needle_3 OR hydrogen)")
@@ -112,47 +97,16 @@ class BoolSyntaxSpec extends SparkSuite {
     assert(g === f)
   }
 
-  test("boosted term parity and effect") {
-    checkParity("needle_3^2 hydrogen")
-    // the boost actually moves the score: 2x weight > 1x weight
+  test("a ^2 boost moves a term's score: 2x weight > 1x weight") {
     val exec = new QueryExec(engine.index)
     val plain = exec.topK(parse("needle_3"), Nil, 1).collect()(0).getFloat(1)
     val boosted = exec.topK(parse("needle_3^2"), Nil, 1).collect()(0).getFloat(1)
     assert(boosted > plain * 1.5f)
   }
 
-  test("boosted group distributes into leaves (Lucene boost propagation)") {
-    checkParity("(needle_3 hydrogen)^2 +ambiguous")
-    checkParity("\"w0000 w0001\"^2 needle_3")
-    checkParity("((needle_3 hydrogen)^2 ambiguous)^3")
-    checkParity("(needle_3 \"w0000 w0001\")^2 +ambiguous")
-    OracleParity.mixedLegs.foreach(checkParity(_))
-  }
-
-  test("boosted constant-score leg parity: fielded keyword ^3") {
-    checkParity("role:assistant^3 needle_3")
-    checkParity("needle_*^2 hydrogen")
-    checkParity("/rare_00[0-9]/^2 needle_3")
-    checkParity("tool:b*^3 needle_3")
-  }
-
-  test("boosted fuzzy parity") {
-    checkParity("needle_3~1^2")
-  }
-
-  test("AND NOT parity") {
-    checkParity("needle_3 AND NOT ambiguous")
-  }
-
-  test("boosted filter-only group scores its boost, like any match-all leg") {
-    val filterOnly = BoolQuery(filter = Seq(FieldEquals("role", "assistant")))
-    checkParity(BoolQuery(should = Seq(Boosted(filterOnly, 3.0f), TermQuery("needle_3"))),
-      "(FILTER role:assistant)^3 needle_3", 20)
-  }
-
   test("oracle refuses sloppy phrases instead of scoring them as exact") {
     val e = intercept[IllegalArgumentException] {
-      oracle.topK(parse("\"w0000 w0001\"~2^2 needle_3"), Nil, 20)
+      OracleParity.oracle(OracleParity.Tiny).topK(parse("\"w0000 w0001\"~2^2 needle_3"), Nil, 20)
     }
     assert(e.getMessage.contains("sloppy"))
   }

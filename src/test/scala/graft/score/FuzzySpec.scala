@@ -2,45 +2,19 @@ package graft.score
 
 import graft.SparkSuite
 import graft.analysis.Analyzers
-import graft.api.SearchEngine
 import graft.model._
 
 /** Fuzzy-query semantics (graft.model.FuzzyQuery — Lucene FuzzyQuery with
   * its TopTermsBlendedFreqScoringRewrite default): dictionary expansion
   * within maxEdits, boost = 1 − edits/min(lengths), blended df, OSA
   * transpositions. The engine's distributed path must agree with the
-  * independent NaiveOracle full-scan implementation on ids AND scores. */
+  * independent NaiveOracle full-scan implementation on ids AND scores:
+  * the [[Pinned]] harness cases over [[Pinned.FuzzyTexts]]. */
 class FuzzySpec extends SparkSuite {
 
-  private def mkTurns(texts: Seq[String]) = {
-    import spark.implicits._
-    texts.zipWithIndex.map { case (t, i) =>
-      Turn("conv-0", i, if (i % 2 == 0) "user" else "asistant", t, None,
-        new java.sql.Timestamp(1767225600000L + i * 60000L))
-    }.toDS()
-  }
+  private lazy val exec = new QueryExec(OracleParity.engine(Pinned.FuzzyTexts).index)
 
-  private val texts = Seq(
-    "spark shuffles the spark plan",      // spark tf 2
-    "sprak typo of spark",                // transposition neighbor + exact
-    "spars vectors stay sparse",          // spars, sparse
-    "sharp knives cut parts",             // sharp (2 edits), parts
-    "the part and the sort of it",        // part, sort
-    "sparkle is not spark but near",      // sparkle (2 edits incl len)
-    "plain words only here")
-  private lazy val engine =
-    SearchEngine.build(mkTurns(texts), Analyzers.Simple)
-  private lazy val exec = new QueryExec(engine.index)
-  private lazy val oracle = NaiveOracle.fromTurns(
-    texts.zipWithIndex.map { case (t, i) =>
-      (i.toLong, Turn("conv-0", i, if (i % 2 == 0) "user" else "asistant", t,
-        None, new java.sql.Timestamp(1767225600000L + i * 60000L)))
-    }, Analyzers.Simple)
-
-  private def parity(q: Query, clue: String): Unit = {
-    OracleParity.assertSameTopK(OracleParity.hits(exec.topK(q, Nil, 20)),
-      oracle.topK(q, Nil, 20), clue)
-  }
+  Pinned.in("FuzzySpec").foreach(p => test(p.name)(OracleParity.check(p)))
 
   test("EditDistance: OSA transpositions vs plain Levenshtein") {
     import graft.model.EditDistance.bounded
@@ -61,14 +35,6 @@ class FuzzySpec extends SparkSuite {
     }
   }
 
-  test("fuzzy expansion scores with blended df and boost — oracle parity") {
-    parity(FuzzyQuery("spark"), "spark~2")
-    parity(FuzzyQuery("spark", maxEdits = 1), "spark~1")
-    parity(FuzzyQuery("sark", maxEdits = 2, transpositions = false), "sark no-transpose")
-    parity(FuzzyQuery("sprak", maxEdits = 1), "sprak~1 transposition")
-    parity(FuzzyQuery("zzzz"), "no expansion at all")
-  }
-
   test("transpositions=true admits a transposed pair that plain rejects") {
     val on = exec.topK(FuzzyQuery("sprak", maxEdits = 1), Nil, 20)
       .collect().map(_.getLong(0)).toSet
@@ -79,8 +45,7 @@ class FuzzySpec extends SparkSuite {
     assert(off === Set(1L)) // only the doc containing literal 'sprak'
   }
 
-  test("prefixLength restricts expansion; maxExpansions caps by boost") {
-    parity(FuzzyQuery("spark", maxEdits = 2, prefixLength = 2), "prefix sp")
+  test("prefixLength and maxExpansions pin the expansion's docs") {
     val pref = exec.topK(FuzzyQuery("park", maxEdits = 1, prefixLength = 1), Nil, 20)
       .collect().map(_.getLong(0)).toSet
     // prefix 'p': only 'part' (park→part 1 edit; 'parts' is 2) — 'spark'
@@ -90,8 +55,6 @@ class FuzzySpec extends SparkSuite {
     val capped = exec.topK(FuzzyQuery("spark", maxExpansions = 1), Nil, 20)
       .collect().map(_.getLong(0)).toSet
     assert(capped === Set(0L, 1L, 5L)) // docs containing literal 'spark'
-    parity(FuzzyQuery("spark", maxExpansions = 1), "maxExpansions 1")
-    parity(FuzzyQuery("spark", maxExpansions = 2), "maxExpansions 2")
   }
 
   test("driver-side expansion keeps Spark's semantics: code points, UTF-8 order") {
@@ -157,29 +120,19 @@ class FuzzySpec extends SparkSuite {
     assert(p("sark~3") ===
       BoolQuery(should = Seq(TermQuery("sark"), TermQuery("3"))))
     assert(p("~sark") === BoolQuery(should = Seq(TermQuery("sark"))))
+    assert(p("sark~ -typo") === BoolQuery(should = Seq(FuzzyQuery("sark", 2)),
+      mustNot = Seq(TermQuery("typo"))))
   }
 
-  test("fielded fuzzy: constant score, bounded distance on the attribute") {
+  test("fielded fuzzy pins: the attribute's docs at constant score") {
     // role values: 'user' (even docs), 'asistant' (odd). usr~1 → user
     val got = exec.topK(FieldFuzzyQuery("role", "usr", 1), Nil, 20)
       .collect().map(r => (r.getLong(0), r.getFloat(1))).toSeq
     assert(got.map(_._1) === Seq(0L, 2L, 4L, 6L))
     assert(got.forall(_._2 === 1.0f))
-    parity(FieldFuzzyQuery("role", "usr", 1), "role:usr~1")
     // assistant~1 matches the misspelled 'asistant' (1 deletion)
     val odd = exec.topK(FieldFuzzyQuery("role", "assistant", 1), Nil, 20)
       .collect().map(_.getLong(0)).toSeq
     assert(odd === Seq(1L, 3L, 5L))
-    parity(FieldFuzzyQuery("role", "nosuch", 1), "fielded no match")
-  }
-
-  test("fuzzy inside boolean trees and through the search facade") {
-    parity(BoolQuery(must = Seq(FuzzyQuery("spark", 1)),
-      mustNot = Seq(TermQuery("typo"))), "+spark~1 -typo")
-    val resp = engine.search(SearchRequest(text = Some("sark~ -typo"),
-      maxResults = 10))
-    val want = oracle.topK(BoolQuery(should = Seq(FuzzyQuery("sark", 2)),
-      mustNot = Seq(TermQuery("typo"))), Nil, 10)
-    assert(resp.hits.map(_.docId) === want.map(_._1))
   }
 }

@@ -60,51 +60,20 @@ class PhraseSpec extends SparkSuite {
     assert(hits(engine, "\"data morphology file\"") === Seq(2L))
   }
 
-  // synonym-stacked slots: `mr` ⟷ `molecular replacement` spans
-  // positions, `h` ⟷ `hydrogen` stacks two terms on ONE position
-  private val synonymTexts = Seq(
-    "data mr file", "data molecular replacement file", "data morphology file",
-    "mr data file", "data mr mr file", "file data mr",
-    "hydrogen data file", "data hydrogen hydrogen", "h data mr")
-  private lazy val synonymEngine = SearchEngine.build(mkTurns(synonymTexts),
-    Analyzers.IcatSynonym, withPositions = true)
-
-  private def parseSynonym(text: String): Query =
-    QueryText.parse(text, s => Analyzers.IcatSynonym(s).terms,
-      analyzePos = s => Analyzers.IcatSynonym.positional(s))
-
-  private def ranked(text: String): Seq[(Long, Float)] =
-    new QueryExec(synonymEngine.index).topK(parseSynonym(text), Nil, 20)
-      .collect().map(r => (r.getLong(0), r.getFloat(1))).toSeq
-
-  test("oracle parity on the synonym corpus (scores, not just ids)") {
-    val turns = synonymTexts.zipWithIndex.map { case (t, i) =>
-      (i.toLong, Turn("conv-0", i, "user", t, None,
-        new java.sql.Timestamp(1767225600000L + i * 60000L)))
-    }
-    val oracle = NaiveOracle.fromTurns(turns, Analyzers.IcatSynonym)
-    for (qt <- Seq("\"data mr\"", "\"mr file\"", "\"data mr file\"",
-                   "\"molecular replacement\"", "\"mr mr\"", "\"hydrogen\"",
-                   "\"hydrogen data\"", "\"data hydrogen mr\"", "\"h data\"")) {
-      val got = ranked(qt)
-      val want = oracle.topK(parseSynonym(qt), Nil, 20)
-      assert(got.map(_._1) === want.map(_._1), s"rank mismatch for $qt")
-      got.zip(want).foreach { case ((gid, gs), (_, ws)) =>
-        assert(math.abs(gs - ws) <= math.abs(ws) * 1e-5 + 1e-7,
-          s"score mismatch for $qt doc $gid: engine=$gs oracle=$ws")
-      }
-    }
-  }
+  Pinned.in("PhraseSpec").foreach(p => test(p.name)(OracleParity.check(p)))
 
   test("sloppy phrases over synonym-stacked slots (pinned results)") {
     // the oracle scores exact phrases only, so these pin the engine: a
     // stacked slot's alternatives union their rebased positions per doc
-    val dataMr = ranked("\"data mr\"~1")
+    val engine = OracleParity.engine(Pinned.SynonymTexts)
+    def top(text: String): Seq[(Long, Float)] =
+      engine.search(SearchRequest(text = Some(text), maxResults = 20)).hits.map(h => (h.docId, h.score))
+    val dataMr = top("\"data mr\"~1")
     assert(dataMr.map(_._1) === Seq(0L, 1L, 5L, 8L, 4L))
     assert(dataMr.take(4).map(_._2).distinct.size === 1)
     assert(dataMr(3)._2 > dataMr(4)._2)
-    assert(ranked("\"hydrogen data\"~2").map(_._1) === Seq(6L, 8L, 7L))
-    assert(ranked("\"file hydrogen\"~3").map(_._1) === Seq(6L))
+    assert(top("\"hydrogen data\"~2").map(_._1) === Seq(6L, 8L, 7L))
+    assert(top("\"file hydrogen\"~3").map(_._1) === Seq(6L))
   }
 
   test("sloppy two-pointer kernel ≡ brute-force first-minimum rescan") {

@@ -2,52 +2,51 @@ package graft.score
 
 import graft.SparkSuite
 import graft.analysis.Analyzers
-import graft.api.SearchEngine
 import graft.build.Segments
-import graft.corpus.TranscriptGen
 import graft.model._
 
 /** The block-max WAND kernel must be result-identical to the naive
-  * DataFrame top-k (which is itself oracle-verified in EngineSpec) —
-  * SURVEY.md §7.3 item 5: "kernel result must equal the naive full-scan
-  * top-k on every test corpus". Small segment size forces many segments
-  * so the per-segment top-k + global merge path is actually exercised. */
+  * full-scan top-k — SURVEY.md §7.3 item 5: "kernel result must equal the
+  * naive full-scan top-k on every test corpus". Each [[Pinned]] case runs
+  * on the harness's servings and straight through `Wand.topK` over the
+  * segments serving, whose small segments ([[OracleParity.SegSize]] docs)
+  * exercise the per-segment top-k + global merge path. */
 class WandSpec extends SparkSuite {
 
-  private val segSize = 64 // tiny segments: ~10 segments on the tiny corpus
+  private lazy val served = OracleParity.served(OracleParity.Tiny)
+  private lazy val engine = served.engine
+  private lazy val segIndex = served.serving("segments").index
+  private lazy val segments = segIndex.segments.get
+  private val segSize = OracleParity.SegSize
 
-  private lazy val engine = SearchEngine.build(TranscriptGen.tiny(spark), Analyzers.Icat)
-  private lazy val segments =
-    Segments.pack(engine.index.postings, engine.index.stats, segSize).cache()
-
-  private def checkWand(text: String, k: Int = 10): Unit = {
-    val terms = text.split(" ").flatMap(Analyzers.Icat(_).terms).toSeq
-    val exec = new QueryExec(engine.index)
-    val want = OracleParity.hits(
-      exec.topK(QueryText.parse(text, s => Analyzers.Icat(s).terms), Nil, k))
-    val got = OracleParity.hits(
-      Wand.topK(segments, engine.index.stats, exec.termIdf(terms), k, segSize))
-    assert(got === want, s"WAND mismatch for '$text'")
-  }
-
-  test("single term") { checkWand("needle_3") }
-  test("two-term OR") { checkWand("needle_3 hydrogen") }
-  test("hot zipf OR") { checkWand("w0000 w0001", 50) }
-  test("rare + hot mix") { checkWand("rare_001 w0002 needle_7", 25) }
-  test("ambiguous (norm quantization)") { checkWand("ambiguous", 40) }
+  // each case through the facade on every serving, and through the
+  // kernel itself, whatever QueryExec routes
+  Pinned.in("WandSpec").foreach(p => test(p.name) {
+    OracleParity.check(p)
+    p.requests.foreach { r =>
+      val terms = Analyzers.Icat(r.text).terms.toSeq
+      val got = Wand.topK(segments, segIndex.stats, new QueryExec(segIndex).termIdf(terms), r.k, segSize)
+      OracleParity.differs(OracleParity.hitsOf(got), served.oracle.topK(
+        QueryText.parse(r.text, s => Analyzers.Icat(s).terms), Nil, r.k)).foreach(m => fail(s"Wand.topK: $m"))
+    }
+  })
 
   test("auto-routing: QueryExec runs WAND when segments are present") {
-    val withSegs = engine.index.copy(segments = Some(segments), segSize = segSize)
-    val routed = new QueryExec(withSegs)
+    val routed = new QueryExec(segIndex)
     val flat = new QueryExec(engine.index)
     val q = QueryText.parse("needle_3 hydrogen", s => Analyzers.Icat(s).terms)
+    // the kernel's plan is its per-segment flatMapGroups; the boolean path has none
+    def kernel(df: org.apache.spark.sql.DataFrame) = df.queryExecution.analyzed
+      .find(_.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.MapGroups]).isDefined
+    assert(kernel(routed.topK(q, Nil, 10)) && !kernel(flat.topK(q, Nil, 10)))
     val a = routed.topK(q, Nil, 10).collect().map(r => (r.getLong(0), r.getFloat(1))).toSeq
     val b = flat.topK(q, Nil, 10).collect().map(r => (r.getLong(0), r.getFloat(1))).toSeq
     assert(a === b)
     // filtered / cursored / must queries must NOT route (still correct)
-    val c = routed.topK(q, Seq(graft.model.FieldEquals("role", "user")), 10).collect()
+    val c = routed.topK(q, Seq(graft.model.FieldEquals("role", "user")), 10)
     val d = flat.topK(q, Seq(graft.model.FieldEquals("role", "user")), 10).collect()
-    assert(c.map(_.getLong(0)).toSeq === d.map(_.getLong(0)).toSeq)
+    assert(!kernel(c))
+    assert(c.collect().map(_.getLong(0)).toSeq === d.map(_.getLong(0)).toSeq)
   }
 
   test("segment packing invariants: delta decode, df, block bounds") {
