@@ -1,9 +1,11 @@
 package graft.build
 
 import graft.analysis.{Analyzers, TextAnalyzer}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.json4s._
+import java.nio.file.{Files, Paths}
 
 /** Global collection statistics needed by BM25 (reference semantics:
   * Lucene's per-index CollectionStatistics; we use one logical index —
@@ -142,7 +144,7 @@ object IndexBuilder {
     * tiny corpus), PropagateEmptyRelation folds the CollectMetrics node
     * away and the observation completes with a ZERO-FIELD row — so the
     * empty case must read as its aggregate's identity, not a crash. */
-  private def obsLong(obs: org.apache.spark.sql.Observation,
+  private def obsLong(obs: Observation,
                       key: String, default: Long): Long = {
     // `future` completes when the observed action finishes (the public
     // blocking `get` throws on the zero-field row instead of defaulting)
@@ -228,8 +230,8 @@ object IndexBuilder {
 
   /** Analyzed narrow projection: one finished posting row per (doc, term)
     * — per-doc tf counted inside the projection, no shuffle. This is the
-    * one place text becomes posting rows (batch build, at-scale build,
-    * checkpointed build and every streaming micro-batch).
+    * one place text becomes posting rows (batch build, at-scale build and
+    * every streaming micro-batch).
     *
     * `input` has `docId` and `text`; every other input column is carried
     * through unchanged onto each of the doc's rows, after
@@ -327,24 +329,54 @@ object IndexBuilder {
           ++ attrCols: _*)
   }
 
-  /** At-scale build: analyze → ONE salted shuffle → sorted parquet write,
-    * then stats from the written table. Unlike build()+save(), this never
-    * materializes the exploded posting rows into a deserialized cache —
-    * at 100 TB you cannot hold the postings of a build in executor
-    * memory, and even locally the cache write is the non-scaling step.
+  /** Target posting rows per docId group of [[buildAndSave]] (~10⁹): a
+    * group is the unit a rerun keeps or rebuilds, so it is sized as a job
+    * of 256 tasks — every corpus this repository builds is one group. */
+  private val TargetGroupRows: Long = TargetShuffleRows * 256
+
+  /** What a group's manifest must match for a rerun to keep the group. */
+  private[build] final case class BuildKey(analyzer: String, positions: Boolean,
+                                           groups: Int, corpusRows: Long)
+
+  /** A published docId group: its build and its lineage counters, read
+    * off the group write's observations — rows read, tokens (Σ tf),
+    * posting rows, zero-token docs, and an order-free checksum (xor of
+    * xxhash64(term, docId, tf) over the written rows). */
+  private[build] final case class GroupManifest(group: Int, key: BuildKey, rows: Long,
+      tokens: Long, postings: Long, emptyDocs: Long, checksum: Long)
+
+  /** At-scale build: analyze → ONE salted shuffle → sorted parquet write
+    * per docId group. Unlike build()+save(), this never materializes the
+    * exploded posting rows into a deserialized cache — at 100 TB you
+    * cannot hold the postings of a build in executor memory, and even
+    * locally the cache write is the non-scaling step.
     * Passes over the data:
     *   1. a 1/`SampleRate` deterministic doc sample is analyzed to
     *      estimate hot terms (heavy-hitter sketch — a term whose sampled
-    *      df clears threshold/SampleRate is salted);
-    *   2. the full narrow analyze feeds the salted, sorted postings write
-    *      ([[writePostings]]) — the one shuffle, carrying finished
-    *      posting rows;
-    *   3. termStats + global stats aggregate over the WRITTEN columnar
-    *      table, reading only (term, docId, tf).
+    *      df clears threshold/SampleRate is salted) and the posting
+    *      volume, which sets the group count and shuffle partitions;
+    *   2. per group, the full narrow analyze feeds the salted, sorted
+    *      postings write ([[writeGroups]]) — the one shuffle;
+    *   3. termStats aggregate over the WRITTEN columnar table, reading
+    *      only (term, tf); the global stats add up the group manifests.
+    *
+    * Resume: `meta.json` is the one commit marker, removed before any
+    * table is written and written last. Rerunning the same call over a
+    * directory without it keeps every group whose manifest matches the
+    * build ([[BuildKey]] — the corpus's row count, not its rows: a rerun
+    * must pass the same corpus) and rebuilds the others. A fresh
+    * directory, or one holding a complete index, is built in full.
     */
   def buildAndSave(corpusWithIds: DataFrame, analyzer: TextAnalyzer, dir: String,
                    hotDfThreshold: Long = 1000000L, writeCorpus: Boolean = true,
-                   withPositions: Boolean = false): Index = {
+                   withPositions: Boolean = false): Index =
+    buildInGroups(corpusWithIds, analyzer, dir, hotDfThreshold, writeCorpus, withPositions,
+      groups = None)
+
+  /** [[buildAndSave]] with the group count given, not sampled (tests). */
+  private[build] def buildInGroups(corpusWithIds: DataFrame, analyzer: TextAnalyzer,
+                                   dir: String, hotDfThreshold: Long, writeCorpus: Boolean,
+                                   withPositions: Boolean, groups: Option[Int]): Index = {
     val spark = corpusWithIds.sparkSession
     val input = postingsInput(corpusWithIds)
 
@@ -354,93 +386,163 @@ object IndexBuilder {
     // frame, instead of a persist + second aggregate job (each small
     // serial job in this path idles every core at high parallelism)
     val sampled = input.filter(pmod(xxhash64(col("docId")), lit(SampleRate)) === 0)
-    val sampleObs = org.apache.spark.sql.Observation()
+    val sampleObs = Observation()
     val hotTerms = analyzedPostings(sampled, analyzer)
       .observe(sampleObs, count(lit(1)).as("rows"))
       .groupBy("term").agg(count(lit(1)).as("sdf"))
       .filter(col("sdf") * SampleRate >= hotDfThreshold)
       .select("term").collect().map(_.getString(0)).toSet
     val estPostings = obsLong(sampleObs, "rows", 0L) * SampleRate
+    val nGroups = groups.getOrElse((estPostings / TargetGroupRows + 1).toInt)
 
-    // Partition the ONE salted shuffle by DATA VOLUME, not core count:
-    // with partitions tied to parallelism, per-partition sort volume
-    // grows linearly with the corpus until sortWithinPartitions spills
-    // and the build turns superlinear (measured: 2.5× turns → 5.3× the
-    // 8-core wall). ~TargetShuffleRows posting rows (~≤300 MB unsafe
+    // Partition each group's salted shuffle by DATA VOLUME, not core
+    // count: with partitions tied to parallelism, per-partition sort
+    // volume grows linearly with the corpus until sortWithinPartitions
+    // spills and the build turns superlinear (measured: 2.5× turns → 5.3×
+    // the 8-core wall). ~TargetShuffleRows posting rows (~≤300 MB unsafe
     // rows) per partition keeps every sort in execution memory at any
-    // corpus size — at 10^12 postings this yields ~250k tasks, the
-    // shape a 1000-executor cluster wants — while the numShufflePartitions
-    // floor keeps every core busy on small corpora.
+    // corpus size, while the numShufflePartitions floor keeps every core
+    // busy on small corpora.
     val n = math.max(spark.sessionState.conf.numShufflePartitions.toLong,
-                     estPostings / TargetShuffleRows + 1).toInt
+                     estPostings / nGroups / TargetShuffleRows + 1).toInt
 
-    // zero-token docs ride along as ONE null-term sentinel row each, so
-    // the exact Lucene docCount (docs with ≥1 term) falls out of
-    // corpusCount − sentinelCount below — no distinct-docId shuffle over
-    // the full postings table (which defeats partial aggregation: every
-    // term-partitioned partition sees most docIds, so the "distinct"
-    // shuffles nearly the whole docId column and scales with I/O, not
-    // cores)
-    // GLOBAL stats ride the write action itself (map-side Observation on
-    // the analyzed rows, before the shuffle): sumTotalTermFreq = sum(tf)
-    // (sentinel rows carry tf null, which sum skips), empty-doc count =
-    // the sentinel rows. The previous shape re-derived both from a
-    // persisted post-write aggregate with two collect jobs — serial
-    // floor on every build.
-    val buildObs = org.apache.spark.sql.Observation()
-    writePostings(
-      analyzedPostings(input, analyzer, keepEmptyDocs = true,
-          withPositions = withPositions)
-        .observe(buildObs,
-          sum(col("tf").cast("long")).as("sttf"),
-          count(when(col("term").isNull, lit(1))).as("emptyDocs")),
-      hotTerms, n, dir)
-    val sttf = obsLong(buildObs, "sttf", 0L)
-    val emptyDocs = obsLong(buildObs, "emptyDocs", 0L)
+    // the corpus row count (cached by DocIds.assign) keys the groups.
+    // Zero-token docs ride along as ONE null-term sentinel row each, so
+    // the exact Lucene docCount (docs with ≥1 term) is corpusRows −
+    // Σ emptyDocs — no distinct-docId shuffle over the full postings table
+    // (every term-partitioned partition sees most docIds, so a "distinct"
+    // shuffles nearly the whole docId column); sumTotalTermFreq = Σ tokens
+    // (sentinels carry tf null, which sum skips).
+    val corpusRows = corpusWithIds.count()
+    val manifests = writeGroups(dir,
+      BuildKey(analyzer.name, withPositions, nGroups, corpusRows), input,
+      analyzedPostings(_, analyzer, keepEmptyDocs = true, withPositions = withPositions),
+      hotTerms, n)
 
     // ONE post-write job: the per-term stats table, aggregated from the
     // written columnar postings (reads only term + tf); no extra exchange
     // — the groupBy's own partitioning is kept
-    val written = spark.read.parquet(s"$dir/postings")
-    val postings = written.filter(col("term").isNotNull)
+    val postings = readPostings(spark, dir)
     writeTermStats(postings.groupBy(col("term"))
       .agg(count(lit(1)).as("df"), sum(col("tf")).as("cf")), dir)
-    // docCount needs only the corpus row count (cached by DocIds.assign)
-    val docCount = corpusWithIds.count() - emptyDocs
+    val docCount = corpusRows - manifests.map(_.emptyDocs).sum
     val stats =
-      if (docCount == 0L) CorpusStats(0L, 0L) else CorpusStats(docCount, sttf)
+      if (docCount == 0L) CorpusStats(0L, 0L)
+      else CorpusStats(docCount, manifests.map(_.tokens).sum)
     if (writeCorpus) corpusWithIds.write.mode("overwrite").parquet(s"$dir/corpus")
 
-    writeMeta(dir, analyzer.name, stats, Segments.DefaultSegSize, hasSegments = false)
+    writeMeta(dir, analyzer.name, stats, nGroups)
 
     Index(corpusWithIds, postings, spark.read.parquet(s"$dir/termstats"),
       stats, analyzer.name)
   }
 
-  /** Persist the index as a directory of parquet tables + metadata, in
-    * the same layout as [[buildAndSave]]: salted, term-sorted postings
-    * ([[writePostings]]; a term is hot when its df ≥ `hotDfThreshold`)
-    * and term-sorted termstats.
+  /** Persist an in-memory index in the layout of [[buildAndSave]], through
+    * the same writer: one docId group of salted, term-sorted postings (a
+    * term is hot when its df ≥ `hotDfThreshold`), term-sorted termstats,
+    * and `meta.json` last. Its key's corpus rows are the index's docCount.
     */
   def save(index: Index, dir: String, hotDfThreshold: Long = 1000000L,
-           writeSegments: Boolean = false, segSize: Int = Segments.DefaultSegSize,
            writeCorpus: Boolean = true): Unit = {
+    val hotTerms = index.termStats
+      .filter(col("df") >= hotDfThreshold)
+      .select("term").collect().map(_.getString(0)).toSet
+    writeGroups(dir,
+      BuildKey(index.analyzerName, index.hasPositions, 1, index.stats.docCount),
+      index.postings, identity, hotTerms,
+      index.corpus.sparkSession.sessionState.conf.numShufflePartitions)
     // stored fields: when the corpus already lives in a source table the
     // rewrite is optional (Lucene must store fields; we have the table)
     if (writeCorpus) index.corpus.write.mode("overwrite").parquet(s"$dir/corpus")
     writeTermStats(index.termStats, dir)
-
-    val hotTerms = index.termStats
-      .filter(col("df") >= hotDfThreshold)
-      .select("term").collect().map(_.getString(0)).toSet
-    writePostings(index.postings, hotTerms,
-      index.corpus.sparkSession.sessionState.conf.numShufflePartitions, dir)
-
-    if (writeSegments)
-      Segments.save(Segments.pack(index.postings, index.stats, segSize), s"$dir/segments")
-
-    writeMeta(dir, index.analyzerName, index.stats, segSize, writeSegments)
+    writeMeta(dir, index.analyzerName, index.stats, groups = 1)
   }
+
+  /** The one postings writer, shared by [[buildAndSave]] and [[save]]:
+    * `input` rows fall into `key.groups` docId groups (docId mod groups);
+    * each group's rows become posting rows through `toPostings`, are
+    * written ([[writePostings]]) to a staging directory, renamed to
+    * `postings/group=G`, and get `manifests/G.json`, whose counters are
+    * observations on the write itself: no extra job.
+    *
+    * Without `meta.json` in `dir`, a group whose manifest matches `key`
+    * is kept as it is. Every other manifest and group directory is
+    * removed before anything is written: the manifests first, then
+    * `meta.json` (a kill in between leaves a complete index that no rerun
+    * resumes from). The caller writes `meta.json` last. Returns every
+    * group's manifest, in group order. */
+  private def writeGroups(dir: String, key: BuildKey, input: DataFrame,
+                          toPostings: DataFrame => DataFrame, hotTerms: Set[String],
+                          n: Int): Seq[GroupManifest] = {
+    val fs = new Path(dir).getFileSystem(input.sparkSession.sparkContext.hadoopConfiguration)
+    val meta = new Path(s"$dir/meta.json")
+    def groupDir(g: Int) = new Path(s"$dir/postings/group=$g")
+    val kept =
+      if (fs.exists(meta)) Map.empty[Int, GroupManifest]
+      else (0 until key.groups).flatMap(readManifest(dir, _))
+        .filter(m => m.key == key && fs.exists(groupDir(m.group)))
+        .map(m => m.group -> m).toMap
+    def prune(sub: String, name: Int => String): Unit = {
+      val p = new Path(s"$dir/$sub")
+      val keep = kept.keySet.map(name)
+      if (fs.exists(p))
+        fs.listStatus(p).map(_.getPath).filterNot(c => keep(c.getName)).foreach(fs.delete(_, true))
+    }
+    prune("manifests", g => s"$g.json")
+    fs.delete(meta, false)
+    prune("postings", g => s"group=$g")
+    Seq("postings", "manifests").foreach(sub => fs.mkdirs(new Path(s"$dir/$sub")))
+
+    val manifests = (0 until key.groups).map { g =>
+      kept.getOrElse(g, {
+        val rowsObs = Observation()
+        val writeObs = Observation()
+        val staged = s"$dir/_staging/group=$g"
+        writePostings(
+          toPostings(input.filter(pmod(col("docId"), lit(key.groups)) === g)
+              .observe(rowsObs, count(lit(1)).as("rows")))
+            .observe(writeObs,
+              sum(col("tf").cast("long")).as("tokens"),
+              count(col("term")).as("postings"),
+              count(when(col("term").isNull, lit(1))).as("emptyDocs"),
+              bit_xor(xxhash64(col("term"), col("docId"), col("tf"))).as("checksum")),
+          hotTerms, n, staged)
+        require(fs.rename(new Path(staged), groupDir(g)), s"could not publish $staged")
+        val m = GroupManifest(g, key, obsLong(rowsObs, "rows", 0L),
+          obsLong(writeObs, "tokens", 0L), obsLong(writeObs, "postings", 0L),
+          obsLong(writeObs, "emptyDocs", 0L), obsLong(writeObs, "checksum", 0L))
+        writeManifest(dir, m)
+        m
+      })
+    }
+    fs.delete(new Path(s"$dir/_staging"), true)
+    manifests
+  }
+
+  private def manifestPath(dir: String, g: Int): String = s"$dir/manifests/$g.json"
+
+  private def writeManifest(dir: String, m: GroupManifest): Unit =
+    graft.api.Json.writeFile(manifestPath(dir, m.group), JObject(
+      "group" -> JInt(m.group), "analyzer" -> JString(m.key.analyzer),
+      "positions" -> JBool(m.key.positions), "groups" -> JInt(m.key.groups),
+      "corpusRows" -> JLong(m.key.corpusRows), "rows" -> JLong(m.rows),
+      "tokens" -> JLong(m.tokens), "postings" -> JLong(m.postings),
+      "emptyDocs" -> JLong(m.emptyDocs), "checksum" -> JLong(m.checksum)))
+
+  /** Group `g`'s manifest, or None when absent or unreadable (cut short). */
+  private[build] def readManifest(dir: String, g: Int): Option[GroupManifest] =
+    scala.util.Try {
+      val m = graft.api.Json.readFile(manifestPath(dir, g))
+      def long(k: String): Long = graft.api.Json.long(m \ k).get
+      val analyzer = m \ "analyzer" match {
+        case JString(a) => a
+        case other      => sys.error(s"analyzer: $other")
+      }
+      GroupManifest(g,
+        BuildKey(analyzer, m \ "positions" == JBool(true), long("groups").toInt,
+          long("corpusRows")),
+        long("rows"), long("tokens"), long("postings"), long("emptyDocs"), long("checksum"))
+    }.toOption
 
   /** The saved postings layout: hash-distributed over `n` partitions on
     * (term, salt) — a hot term's rows are salted by docId across
@@ -449,7 +551,7 @@ object IndexBuilder {
     * partition, so parquet row-group min/max stats on `term` prune
     * query-term lookups. */
   private def writePostings(postings: DataFrame, hotTerms: Set[String], n: Int,
-                            dir: String): Unit = {
+                            path: String): Unit = {
     val bHot = postings.sparkSession.sparkContext.broadcast(hotTerms)
     val isHot = udf((t: String) => bHot.value.contains(t))
     postings
@@ -458,8 +560,14 @@ object IndexBuilder {
       .repartition(n, col("term"), col("_salt"))
       .drop("_salt")
       .sortWithinPartitions("term", "docId")
-      .write.mode("overwrite").parquet(s"$dir/postings")
+      .write.mode("overwrite").parquet(path)
   }
+
+  /** The live postings of a saved index: every group as one table. The
+    * null-term sentinel rows of zero-token docs (docCount bookkeeping) are
+    * filtered at the scan. */
+  private def readPostings(spark: SparkSession, dir: String): DataFrame =
+    spark.read.parquet(s"$dir/postings").drop("group").filter(col("term").isNotNull)
 
   /** The saved termstats layout: sorted by term within each written file.
     * Queries read per-term statistics from the generation's driver-side
@@ -471,25 +579,25 @@ object IndexBuilder {
     termStats.sortWithinPartitions("term")
       .write.mode("overwrite").parquet(s"$dir/termstats")
 
-  /** The index's `meta.json`: analyzer, global stats and segment layout,
-    * read back by [[load]]. */
+  /** The index's `meta.json` — analyzer, global stats and group count,
+    * read back by [[load]] — and its commit marker, written last. */
   private def writeMeta(dir: String, analyzerName: String, stats: CorpusStats,
-                        segSize: Int, hasSegments: Boolean): Unit = {
-    val meta = JObject(
+                        groups: Int): Unit =
+    graft.api.Json.writeFile(s"$dir/meta.json", JObject(
       "analyzer" -> JString(analyzerName),
       "docCount" -> JLong(stats.docCount),
       "sumTotalTermFreq" -> JLong(stats.sumTotalTermFreq),
-      "segSize" -> JInt(segSize),
-      "hasSegments" -> JBool(hasSegments),
-      "version" -> JInt(1))
-    graft.api.Json.writeFile(s"$dir/meta.json", meta)
-  }
+      "groups" -> JInt(groups),
+      "version" -> JInt(2)))
 
-  /** Load a persisted index. The directory must contain a corpus table
-    * (write with `writeCorpus = true`); corpus-less saves are
+  /** Load a persisted index. A directory without `meta.json` is an
+    * incomplete build and is refused. The directory must contain a corpus
+    * table (write with `writeCorpus = true`); corpus-less saves are
     * postings-only artifacts for throughput benchmarking. */
   def load(spark: SparkSession, dir: String): Index = {
-    require(java.nio.file.Files.exists(java.nio.file.Paths.get(s"$dir/corpus")),
+    require(Files.exists(Paths.get(s"$dir/meta.json")),
+      s"$dir has no meta.json: an incomplete build (rerun it to resume) or not an index")
+    require(Files.exists(Paths.get(s"$dir/corpus")),
       s"$dir has no corpus table — saved with writeCorpus=false?")
     val meta = graft.api.Json.readFile(s"$dir/meta.json")
     def long(k: String): Long = graft.api.Json.long(meta \ k)
@@ -498,19 +606,11 @@ object IndexBuilder {
       case JString(a) => a
       case _          => throw new IllegalArgumentException("missing analyzer in meta.json")
     }
-    val hasSegments = meta \ "hasSegments" == JBool(true)
     Index(
       corpus = spark.read.parquet(s"$dir/corpus"),
-      // buildAndSave artifacts carry one null-term sentinel row per
-      // zero-token doc (docCount bookkeeping); the live view filters them
-      // (pushed to the scan, free on sentinel-less save() artifacts)
-      postings = spark.read.parquet(s"$dir/postings").filter(col("term").isNotNull),
+      postings = readPostings(spark, dir),
       termStats = spark.read.parquet(s"$dir/termstats"),
       stats = CorpusStats(long("docCount"), long("sumTotalTermFreq")),
-      analyzerName = analyzerName,
-      segments = if (hasSegments) Some(spark.read.parquet(s"$dir/segments")) else None,
-      // files written before segSize was recorded use the default layout
-      segSize = if (meta \ "segSize" == JNothing) Segments.DefaultSegSize
-                else long("segSize").toInt)
+      analyzerName = analyzerName)
   }
 }

@@ -1,7 +1,7 @@
 package graft.build
 
 import graft.score.Bm25
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Packed segment layout — the Spark-native analogue of Lucene's
@@ -89,15 +89,4 @@ object Segments {
         col("p._3").as("norms"), col("p._4").as("blockLast"),
         col("p._5").as("blockMax"))
   }
-
-  /** Persist segments partitioned by segId hash, term-sorted within
-    * partitions (parquet row-group min/max on `term` prunes query scans). */
-  def save(segments: DataFrame, dir: String): Unit = {
-    segments
-      .repartition(segments.sparkSession.sessionState.conf.numShufflePartitions, col("segId"))
-      .sortWithinPartitions("term", "segId")
-      .write.mode("overwrite").parquet(dir)
-  }
-
-  def load(spark: SparkSession, dir: String): DataFrame = spark.read.parquet(dir)
 }

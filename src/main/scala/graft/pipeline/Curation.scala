@@ -362,7 +362,11 @@ object Curation {
     * corpus-composition analytic behind "how much of source A is also
     * in source B" (mirror detection, crawl-overlap audits, and the
     * corpus-vs-corpus view of [[decontaminate]]).
-    * Returns (src_a, src_b, inter, sz_a, sz_b, jaccard), src_a < src_b.
+    * Returns (src_a, src_b, inter, sz_a, sz_b, jaccard), src_a < src_b,
+    * as an UNPERSISTED local relation: its rows were collected and
+    * assembled on the driver, so it holds no cache and the caller has
+    * nothing to release (unlike [[mixToBudget]], whose persisted frame
+    * the caller owns).
     *
     * Plan at 100 TB: sources are a corpus-level enum (handfuls, not
     * millions), so each source gets a BIT and the whole report derives

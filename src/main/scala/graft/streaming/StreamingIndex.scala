@@ -112,24 +112,12 @@ object StreamingIndex {
       .start()
   }
 
-  /** Streaming append with INGEST-TIME surrogate-collision detection
-    * (round 4 — previously a collision was caught only when someone ran
-    * [[compact]], so merged postings could serve wrong scores in the
-    * meantime). foreachBatch checks each micro-batch's distinct
-    * (docId, conv_id, turn_idx) triples
-    *   (a) within the batch (two distinct keys minting one docId), and
-    *   (b) against a keys sidecar table accumulated from every prior
-    *       batch (the batch's few keys broadcast into a join against it),
-    * and FAILS THE BATCH — stopping the stream with the error — before
-    * any colliding posting is appended. The sidecar is one small row per
-    * ingested turn (docId + natural key), written transactionally with
-    * the postings inside the same foreachBatch; at 10^12 turns it is the
-    * id↔key directory a re-keying compaction needs anyway. Re-ingesting
-    * the SAME natural key is not a collision (it is an update/replay and
-    * resolves at compaction, like the reference's modify-update path).
-    *
-    * `surrogate` is injectable so tests can force collisions; production
-    * uses the xxhash64 default. */
+  /** Streaming append with INGEST-TIME surrogate-collision detection:
+    * each micro-batch passes [[requireNoCollision]] against the `keysDir`
+    * sidecar before its postings and keys are appended; a collision fails
+    * the batch and stops the stream (without it, merged postings would
+    * serve wrong scores until a [[compact]]). `surrogate` is injectable so
+    * tests can force collisions. */
   def startChecked(spark: SparkSession, inDir: String, outDir: String,
                    keysDir: String, checkpointDir: String, triggerSecs: Int = 5,
                    analyzer: TextAnalyzer = Analyzers.Icat,
@@ -140,39 +128,45 @@ object StreamingIndex {
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val posts = postingsFor(batch, analyzer, withPositions, surrogate)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val keys = posts.select("docId", "conv_id", "turn_idx").distinct().persist()
         try {
-          val keys = posts.select("docId", "conv_id", "turn_idx").distinct()
-            .persist()
-          // (a) within-batch: one surrogate, two distinct natural keys
-          val dupIn = keys.groupBy("docId").agg(count(lit(1)).as("nkeys"))
-            .filter(col("nkeys") > 1).limit(20).collect()
-          if (dupIn.nonEmpty)
-            throw new IllegalStateException(
-              s"surrogate docId collision WITHIN micro-batch on ids " +
-                s"${dupIn.map(_.getLong(0)).mkString(",")} — batch rejected")
-          // (b) cross-batch: same surrogate, different natural key in the
-          // accumulated keys table
-          if (java.nio.file.Files.exists(java.nio.file.Paths.get(keysDir))) {
-            val prior = spark.read.parquet(keysDir)
-              .toDF("docId", "p_conv", "p_turn")
-            val clash = prior.join(broadcast(keys), Seq("docId"))
-              .filter(col("p_conv") =!= col("conv_id") ||
-                col("p_turn") =!= col("turn_idx"))
-              .select("docId").limit(20).collect()
-            if (clash.nonEmpty)
-              throw new IllegalStateException(
-                s"surrogate docId collision ACROSS micro-batches on ids " +
-                  s"${clash.map(_.getLong(0)).mkString(",")} — batch rejected")
-          }
+          requireNoCollision(keys, keysDir)
           posts.write.mode("append").parquet(outDir)
           keys.write.mode("append").parquet(keysDir)
-          keys.unpersist()
-          ()
-        } finally { posts.unpersist(); () }
+        } finally { keys.unpersist(); posts.unpersist(); () }
       }
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.ProcessingTime(s"$triggerSecs seconds"))
       .start()
+  }
+
+  /** The surrogate-collision check of a micro-batch's distinct
+    * (docId, conv_id, turn_idx) `keys`: (a) within the batch, two natural
+    * keys minting one docId; (b) across batches, against the `keysDir`
+    * sidecar of every prior batch (the batch's few keys broadcast into a
+    * join). Throws before the caller appends anything; the caller then
+    * appends `keys` to `keysDir` — one small row per ingested turn, the
+    * id↔key directory a re-keying compaction needs anyway. Re-ingesting
+    * the SAME natural key is a replay, not a collision (it resolves at
+    * compaction, like the reference's modify-update path). */
+  private def requireNoCollision(keys: DataFrame, keysDir: String): Unit = {
+    val dupIn = keys.groupBy("docId").agg(count(lit(1)).as("nkeys"))
+      .filter(col("nkeys") > 1).limit(20).collect()
+    if (dupIn.nonEmpty)
+      throw new IllegalStateException(
+        s"surrogate docId collision WITHIN micro-batch on ids " +
+          s"${dupIn.map(_.getLong(0)).mkString(",")} — batch rejected")
+    if (java.nio.file.Files.exists(java.nio.file.Paths.get(keysDir))) {
+      val clash = keys.sparkSession.read.parquet(keysDir)
+        .toDF("docId", "p_conv", "p_turn")
+        .join(broadcast(keys), Seq("docId"))
+        .filter(col("p_conv") =!= col("conv_id") || col("p_turn") =!= col("turn_idx"))
+        .select("docId").limit(20).collect()
+      if (clash.nonEmpty)
+        throw new IllegalStateException(
+          s"surrogate docId collision ACROSS micro-batches on ids " +
+            s"${clash.map(_.getLong(0)).mkString(",")} — batch rejected")
+    }
   }
 
   /** Streaming append with ONLINE NEAR-DUPLICATE SUPPRESSION — the
@@ -183,6 +177,8 @@ object StreamingIndex {
     * appended).
     *
     * Per micro-batch:
+    *   (0) [[requireNoCollision]] over every turn of the batch, against
+    *       the `keys` sidecar under `dedupDir`.
     *   (1) WITHIN-BATCH: per-doc MinHash signatures (narrow, no
     *       shuffle) → LSH band keys → band self-join on the batch →
     *       signature-agreement estimate ≥ `estThreshold` → connected
@@ -198,6 +194,7 @@ object StreamingIndex {
     *       std-error on j≈0.8 is ~0.05). The prior copy always wins.
     *   (3) Appends, all inside the same foreachBatch: postings of the
     *       kept turns, band + signature sidecar rows of the kept docs,
+    *       a keys sidecar row for every turn of the batch, kept or not,
     *       and a dups sidecar row (docId, natural key, dup_of, est,
     *       scope ∈ batch|corpus) for every suppressed turn — the audit
     *       trail a curation pipeline reports from.
@@ -207,14 +204,16 @@ object StreamingIndex {
     * per-batch probe cost is bounded by the batch's bucket set, not the
     * corpus (a key-value store would make it O(batch) — out of scope
     * for a parquet-native engine, and the bucketed layout is the same
-    * directory-pruned probe shape the materialized ANN index uses). */
+    * directory-pruned probe shape the materialized ANN index uses).
+    * `surrogate` is injectable so tests can force collisions. */
   def startDeduped(spark: SparkSession, inDir: String, outDir: String,
                    dedupDir: String, checkpointDir: String,
                    estThreshold: Double = 0.8, numHashes: Int = 64,
                    bands: Int = 16, shingleN: Int = 5, seed: Long = 42L,
                    buckets: Int = 256, triggerSecs: Int = 5,
                    analyzer: TextAnalyzer = Analyzers.Icat,
-                   withPositions: Boolean = false): StreamingQuery = {
+                   withPositions: Boolean = false,
+                   surrogate: org.apache.spark.sql.Column = defaultSurrogate): StreamingQuery = {
     require(numHashes % bands == 0,
       s"bands ($bands) must divide numHashes ($numHashes)")
     require(buckets > 0, s"need buckets > 0, got $buckets")
@@ -222,6 +221,7 @@ object StreamingIndex {
     val bandsDir = s"$dedupDir/bands"
     val sigsDir = s"$dedupDir/sigs"
     val dupsDir = s"$dedupDir/dups"
+    val keysDir = s"$dedupDir/keys"
     import graft.pipeline.Dedup
     import org.apache.spark.storage.StorageLevel
     def agree(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
@@ -229,14 +229,17 @@ object StreamingIndex {
     val stream = spark.readStream.schema(turnSchema).parquet(inDir)
     stream.writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val turns = batch.withColumn("docId", defaultSurrogate)
+        val turns = batch.withColumn("docId", surrogate)
           .persist(StorageLevel.MEMORY_AND_DISK)
-        val pinned = scala.collection.mutable.ArrayBuffer[DataFrame](turns)
+        val keys = turns.select("docId", "conv_id", "turn_idx").distinct().persist()
+        val pinned = scala.collection.mutable.ArrayBuffer[DataFrame](turns, keys)
         def pin(df: DataFrame): DataFrame = {
           val p = df.persist(StorageLevel.MEMORY_AND_DISK)
           p.count(); pinned += p; p
         }
         try {
+          // (0) surrogate collisions
+          requireNoCollision(keys, keysDir)
           val sigs = pin(Dedup.minhashSignatures(
             turns.select(col("docId"), col("text")), numHashes, seed,
             shingleN, "docId", "text"))
@@ -301,8 +304,9 @@ object StreamingIndex {
           // (3) transactional appends: postings of kept turns, sidecars
           // of kept docs, audit rows of dropped turns
           val keptTurns = turns.join(allDrops.select("docId"), Seq("docId"), "left_anti")
-          postingsFor(keptTurns.drop("docId"), analyzer, withPositions)
+          postingsFor(keptTurns.drop("docId"), analyzer, withPositions, surrogate)
             .write.mode("append").parquet(outDir)
+          keys.write.mode("append").parquet(keysDir)
           if (allDrops.count() > 0)
             allDrops.join(turns.select("docId", "conv_id", "turn_idx"), "docId")
               .write.mode("append").parquet(dupsDir)

@@ -320,28 +320,6 @@ class ApiSpec extends SparkSuite {
     assert((System.nanoTime() - t0) / 1e9 < 15.0)
   }
 
-  /** The job-group id of every Spark job started while attached. */
-  private final class JobGroups extends org.apache.spark.scheduler.SparkListener {
-    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-      groups.add(Option(e.properties).flatMap(p =>
-        Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
-  }
-
-  /** The job groups of the Spark jobs `f` starts, once the listener bus
-    * has delivered their events. */
-  private def jobGroupsOf[T](f: => T): (T, Seq[String]) = {
-    val sc = spark.sparkContext
-    val l = new JobGroups
-    org.apache.spark.ListenerBusDrain(sc)
-    sc.addSparkListener(l)
-    try {
-      val r = f
-      org.apache.spark.ListenerBusDrain(sc)
-      (r, l.groups.toArray(Array.empty[String]).toSeq)
-    } finally sc.removeSparkListener(l)
-  }
-
   private lazy val positionalEngine =
     SearchEngine.build(TranscriptGen.tiny(spark), Analyzers.Icat, withPositions = true)
 

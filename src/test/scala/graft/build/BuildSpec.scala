@@ -1,15 +1,56 @@
 package graft.build
 
 import graft.SparkSuite
-import graft.analysis.Analyzers
+import graft.analysis.{Analyzers, PosAnalyzed, TextAnalyzer}
 import graft.corpus.{DocIds, TranscriptGen}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import java.nio.file.{Files, Paths}
 
-/** Salted-build equivalence and checkpoint/resume (FIXTURES.md §4-5). */
+/** Salted-build equivalence, the commit marker and per-group
+  * checkpoint/resume (FIXTURES.md §6). */
 class BuildSpec extends SparkSuite {
 
   private lazy val corpus = DocIds.forTurns(TranscriptGen.tiny(spark)).cache()
   private lazy val index = IndexBuilder.build(corpus, Analyzers.Icat)
+
+  private def tmp(prefix: String): String = Files.createTempDirectory(prefix).toString
+
+  /** buildAndSave over `groups` docId groups. */
+  private def grouped(c: DataFrame, dir: String, groups: Int,
+                      analyzer: TextAnalyzer = Analyzers.Icat,
+                      withPositions: Boolean = false): Index =
+    IndexBuilder.buildInGroups(c, analyzer, dir, hotDfThreshold = 50L, writeCorpus = true,
+      withPositions = withPositions, groups = Some(groups))
+
+  /** What a kill mid-build leaves: groups `gs` lost their outputs and
+    * manifests, and no meta.json was written. */
+  private def kill(dir: String, gs: Int*): Unit = {
+    val fs = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+    gs.foreach { g =>
+      Files.delete(Paths.get(s"$dir/manifests/$g.json"))
+      fs.delete(new org.apache.hadoop.fs.Path(s"$dir/postings/group=$g"), true)
+    }
+    Files.delete(Paths.get(s"$dir/meta.json"))
+  }
+
+  private def manifests(dir: String, groups: Int): Seq[IndexBuilder.GroupManifest] =
+    (0 until groups).map(g => IndexBuilder.readManifest(dir, g).get)
+
+  /** Group `g`'s manifest mtime and its files' names and mtimes. */
+  private def stamps(dir: String, g: Int): (Any, Set[(String, Any)]) = {
+    val files = Files.list(Paths.get(s"$dir/postings/group=$g"))
+    try {
+      import scala.jdk.CollectionConverters._
+      (Files.getLastModifiedTime(Paths.get(s"$dir/manifests/$g.json")),
+        files.iterator().asScala.map(f => (f.getFileName.toString,
+          Files.getLastModifiedTime(f): Any)).toSet)
+    } finally files.close()
+  }
+
+  private def rows(df: DataFrame, cols: Seq[String]): Seq[Seq[Any]] =
+    df.select(cols.map(col): _*).orderBy(cols.head, cols.tail: _*)
+      .collect().map(_.toSeq).toSeq
 
   test("buildAndSave produces the same postings, termStats and stats as build+save") {
     val dir = java.nio.file.Files.createTempDirectory("graft-bas").toString
@@ -52,24 +93,17 @@ class BuildSpec extends SparkSuite {
           graft.model.Turn("c0", i, "user", t.replace(' ', sep), None, ts) }.toDS()
       val engine = graft.api.SearchEngine.build(turns, Analyzers.Separator(sep))
       val dir = java.nio.file.Files.createTempDirectory("graft-sep").toString
-      IndexBuilder.save(engine.index, dir, segSize = 64)
+      IndexBuilder.save(engine.index, dir)
       val meta = org.json4s.jackson.JsonMethods.parse(
         java.nio.file.Files.readString(java.nio.file.Paths.get(s"$dir/meta.json")))
       assert((meta \ "analyzer") === org.json4s.JString(s"sep_$sep"))
       val loaded = graft.api.SearchEngine.load(spark, dir)
       assert(loaded.index.analyzerName === s"sep_$sep")
       assert(loaded.index.analyzer === Analyzers.Separator(sep))
-      assert(loaded.index.segSize === 64)
       val req = graft.model.SearchRequest(text = Some("gamma"))
       val got = loaded.search(req).hits
       assert(got.map(_.text).sorted === Seq(s"beta${sep}gamma", "gamma"))
       assert(got === engine.search(req).hits)
-      // a meta.json written before segSize was recorded loads the default layout
-      val metaPath = java.nio.file.Paths.get(s"$dir/meta.json")
-      java.nio.file.Files.writeString(metaPath,
-        java.nio.file.Files.readString(metaPath).replaceAll(""""segSize":[0-9]+,""", ""))
-      val old = IndexBuilder.load(spark, dir)
-      assert(old.segSize === Segments.DefaultSegSize && old.analyzerName === s"sep_$sep")
     }
   }
 
@@ -97,65 +131,145 @@ class BuildSpec extends SparkSuite {
   }
 
   test("checkpointed build resumes without recomputing finished groups") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
-    val nGroups = 4
+    val dir = tmp("graft-ckpt")
+    val groups = 4
+    val cols = Seq("term", "docId", "tf", "norm")
+    val full = rows(grouped(corpus, dir, groups).postings, cols)
+    val survivors = Seq(0, 2)
+    val stamped = survivors.map(stamps(dir, _))
+    kill(dir, 1, 3)
 
-    // full build
-    val r1 = Checkpoint.buildPostings(corpus, Analyzers.Icat, dir, nGroups)
-    assert(r1.groupsBuilt === (0 until nGroups))
-    val full = Checkpoint.loadPostings(spark, dir)
-      .orderBy("term", "docId").collect()
+    val resumed = grouped(corpus, dir, groups)
+    // only the lost groups ran again: the survivors' manifests and files
+    // are the ones the first run wrote
+    assert(survivors.map(stamps(dir, _)) === stamped)
+    assert(rows(resumed.postings, cols) === full)
 
-    // simulate a kill: wipe two groups' outputs + manifests
-    import java.nio.file.{Files, Paths}
-    Seq(1, 3).foreach { g =>
-      Files.delete(Paths.get(s"$dir/manifests/$g.json"))
-      val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(s"$dir/postings/group=$g"), true)
+    // lineage counters: Σ group tokens == global sumTotalTermFreq, Σ rows
+    // == the corpus, and each checksum re-verifies its written group
+    val ms = manifests(dir, groups)
+    assert(ms.map(_.group) === (0 until groups))
+    assert(ms.map(_.tokens).sum === resumed.stats.sumTotalTermFreq)
+    assert(ms.map(_.rows).sum === corpus.count())
+    assert(ms.map(_.postings).sum === full.size.toLong)
+    ms.foreach { m =>
+      val written = spark.read.parquet(s"$dir/postings/group=${m.group}")
+      assert(written.agg(bit_xor(xxhash64(col("term"), col("docId"), col("tf"))))
+        .head().getLong(0) === m.checksum, s"group ${m.group}")
     }
-    // stamp surviving manifests to detect recompute
-    val stamp0 = Files.getLastModifiedTime(Paths.get(s"$dir/manifests/0.json"))
-
-    val r2 = Checkpoint.buildPostings(corpus, Analyzers.Icat, dir, nGroups)
-    assert(r2.groupsBuilt.toSet === Set(1, 3))
-    assert(r2.groupsSkipped.toSet === Set(0, 2))
-    assert(Files.getLastModifiedTime(Paths.get(s"$dir/manifests/0.json")) === stamp0)
-
-    val resumed = Checkpoint.loadPostings(spark, dir)
-      .orderBy("term", "docId").collect()
-    assert(resumed.length === full.length)
-    assert(resumed.map(_.toString).toSeq === full.map(_.toString).toSeq)
-
-    // lineage counters: Σ group tokens == global sumTotalTermFreq
-    val meta = Files.readString(Paths.get(s"$dir/meta.json"))
-    val sttf = "\"sumTotalTermFreq\":(\\d+)".r.findFirstMatchIn(meta).get.group(1).toLong
-    assert(r2.manifests.map(_.tokens).sum === sttf)
-    assert(r2.manifests.map(_.rows).sum === corpus.count())
+    assert(resumed.stats === index.stats)
+    assert(IndexBuilder.load(spark, dir).stats === index.stats)
   }
 
   test("checkpoint meta.json parses when the analyzer name holds a quote") {
     import org.json4s._
     val sep = Analyzers.Separator('"')
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt-sep").toString
-    val r = Checkpoint.buildPostings(corpus.limit(40), sep, dir, 2)
+    val c = corpus.filter(col("docId") < 40)
+    val dir = tmp("graft-ckpt-sep")
+    grouped(c, dir, 2, sep)
     val meta = org.json4s.jackson.JsonMethods.parse(
-      java.nio.file.Files.readString(java.nio.file.Paths.get(s"$dir/meta.json")))
+      Files.readString(Paths.get(s"$dir/meta.json")))
+    val ms = manifests(dir, 2)
     assert((meta \ "analyzer") === JString("sep_\""))
-    assert((meta \ "sumTotalTermFreq") === JInt(r.manifests.map(_.tokens).sum))
-    assert((meta \ "nGroups") === JInt(2))
-    assert(r.manifests.map(m => Checkpoint.readManifest(dir, m.group)) ===
-      r.manifests.map(Some(_)))
+    assert((meta \ "groups") === JInt(2))
+    assert((meta \ "sumTotalTermFreq") === JInt(ms.map(_.tokens).sum))
+    assert(ms.map(_.key) === Seq.fill(2)(
+      IndexBuilder.BuildKey("sep_\"", positions = false, groups = 2, corpusRows = c.count())))
+    // the manifests' parsed key matches the build's: a rerun without the
+    // commit marker keeps both groups
+    val stamped = (0 until 2).map(stamps(dir, _))
+    Files.delete(Paths.get(s"$dir/meta.json"))
+    grouped(c, dir, 2, sep)
+    assert((0 until 2).map(stamps(dir, _)) === stamped)
+    assert(IndexBuilder.load(spark, dir).analyzer === sep)
   }
 
   test("checkpointed postings equal the one-shot builder's postings") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt2").toString
-    Checkpoint.buildPostings(corpus, Analyzers.Icat, dir, 3)
-    val a = Checkpoint.loadPostings(spark, dir)
-      .select("term", "docId", "tf", "norm")
-      .orderBy("term", "docId").collect().map(_.toString).toSeq
-    val b = index.postings
-      .select("term", "docId", "tf", "norm")
-      .orderBy("term", "docId").collect().map(_.toString).toSeq
-    assert(a === b)
+    val dir = tmp("graft-ckpt2")
+    grouped(corpus, dir, 3, withPositions = true)
+    kill(dir, 1)
+    grouped(corpus, dir, 3, withPositions = true)
+    val resumed = IndexBuilder.load(spark, dir)
+    val oneShot = IndexBuilder.build(corpus, Analyzers.Icat, withPositions = true)
+    val cols = oneShot.postings.columns.toSeq
+    assert(resumed.postings.columns.toSeq === cols)
+    assert(rows(resumed.postings, cols) === rows(oneShot.postings, cols))
+    assert(rows(resumed.termStats, Seq("term", "df", "cf")) ===
+      rows(oneShot.termStats, Seq("term", "df", "cf")))
+    assert(resumed.stats === oneShot.stats)
+    val req = graft.model.SearchRequest(text = Some("needle_3 \"w0000 w0001\""))
+    val hits = new graft.api.SearchEngine(resumed).search(req).hits
+    assert(hits.nonEmpty)
+    assert(hits === new graft.api.SearchEngine(oneShot).search(req).hits)
+    oneShot.unpersistAll(includeCorpus = false)
+  }
+
+  test("a failed rebuild leaves no meta.json, and load refuses the incomplete build") {
+    val dir = tmp("graft-fail")
+    IndexBuilder.buildAndSave(corpus, Analyzers.Icat, dir)
+    assert(IndexBuilder.load(spark, dir).stats === index.stats)
+    // a doc outside the 1-in-100 hot-term sample, so the analyzer throws
+    // in the postings write, not before it
+    val marker = corpus.filter(pmod(xxhash64(col("docId")), lit(100)) =!= 0)
+      .select("text").head().getString(0)
+    intercept[Exception] {
+      IndexBuilder.buildAndSave(corpus, BuildSpec.Throwing(marker), dir)
+    }
+    assert(!Files.exists(Paths.get(s"$dir/meta.json")))
+    val refused = intercept[IllegalArgumentException](IndexBuilder.load(spark, dir))
+    assert(refused.getMessage.contains("incomplete build"), refused.getMessage)
+  }
+
+  test("two buildAndSave calls into one directory serve the second corpus") {
+    val dir = tmp("graft-twice")
+    IndexBuilder.buildAndSave(corpus, Analyzers.Icat, dir, hotDfThreshold = 50L)
+    // same rows, analyzer and group count as the first build: only its
+    // meta.json tells the second call to build in full
+    val second = corpus.withColumn("text", concat(col("text"), lit(" zebra")))
+    IndexBuilder.buildAndSave(second, Analyzers.Icat, dir, hotDfThreshold = 50L)
+    val loaded = IndexBuilder.load(spark, dir)
+    val oneShot = IndexBuilder.build(second, Analyzers.Icat)
+    val cols = Seq("term", "docId", "tf", "norm")
+    assert(rows(loaded.postings, cols) === rows(oneShot.postings, cols))
+    assert(rows(loaded.termStats, Seq("term", "df", "cf")) ===
+      rows(oneShot.termStats, Seq("term", "df", "cf")))
+    assert(loaded.stats === oneShot.stats)
+    assert(rows(loaded.corpus, Seq("docId", "text")) === rows(second, Seq("docId", "text")))
+    oneShot.unpersistAll(includeCorpus = false)
+  }
+
+  test("build job budget: one buildAndSave of the tiny corpus runs 11 Spark jobs") {
+    corpus.count()
+    val sc = spark.sparkContext
+    val dir = tmp("graft-jobs")
+    val group = "graft-build-budget"
+    val (_, groups) = jobGroupsOf {
+      sc.setJobGroup(group, "buildAndSave")
+      try IndexBuilder.buildAndSave(corpus, Analyzers.Icat, dir) finally sc.clearJobGroup()
+    }
+    assert(groups.forall(_ == group), groups)
+    assert(groups.size === 11)
+  }
+
+  test("a grouped build and a resumed build persist nothing beyond the caller's corpus") {
+    corpus.count()
+    val sc = spark.sparkContext
+    val standing = sc.getPersistentRDDs.keySet
+    val dir = tmp("graft-leak")
+    grouped(corpus, dir, 3)
+    kill(dir, 1)
+    grouped(corpus, dir, 3)
+    assert(sc.getPersistentRDDs.keySet === standing)
+  }
+}
+
+object BuildSpec {
+
+  /** Icat, except that it throws on one text. */
+  final case class Throwing(marker: String) extends TextAnalyzer {
+    def positional(text: String): PosAnalyzed =
+      if (text == marker) throw new IllegalStateException("marker text")
+      else Analyzers.Icat.positional(text)
+    def name: String = Analyzers.Icat.name
   }
 }

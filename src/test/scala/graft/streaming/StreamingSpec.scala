@@ -198,6 +198,42 @@ class StreamingSpec extends SparkSuite {
     assert(spark.read.parquet(s"$base/dd/sigs").count() === 3)
   }
 
+  test("deduped ingest fails a colliding batch before appending anything") {
+    import spark.implicits._
+    val base = java.nio.file.Files.createTempDirectory("graft-streamddc").toString
+    val inDir = s"$base/in"
+    new java.io.File(inDir).mkdirs()
+    // the forced-collision surrogate of the checked-ingest test
+    val collide = pmod(col("turn_idx").cast("long"), lit(2L))
+    def turn(conv: String, idx: Int, text: String) =
+      graft.model.Turn(conv, idx, "user", text, None, new java.sql.Timestamp(0L))
+    def drive(): Unit = {
+      val q = StreamingIndex.startDeduped(spark, inDir, s"$base/out", s"$base/dd",
+        s"$base/ck", shingleN = 3, buckets = 8, triggerSecs = 1, surrogate = collide)
+      try q.processAllAvailable() finally q.stop()
+    }
+    def messages(t: Throwable): Seq[String] =
+      Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ messages(x.getCause))
+
+    // batch 1: distinct surrogates (turn_idx 0, 1) — passes, and its keys
+    // land in the dedup directory's sidecar
+    Seq(turn("conv-a", 0, "hello there"), turn("conv-a", 1, "general kenobi"))
+      .toDS().toDF().coalesce(1).write.mode("overwrite").parquet(inDir)
+    drive()
+    val before = spark.read.parquet(s"$base/out").count()
+    assert(before > 0)
+    assert(spark.read.parquet(s"$base/dd/keys").count() === 2)
+
+    // batch 2: another conversation's turn 2 takes conv-a/0's surrogate
+    Seq(turn("conv-b", 2, "boom"))
+      .toDS().toDF().coalesce(1).write.mode("append").parquet(inDir)
+    val e = intercept[Exception](drive())
+    assert(messages(e).exists(_.contains("ACROSS micro-batches")), messages(e).mkString(" | "))
+    assert(spark.read.parquet(s"$base/out").count() === before) // nothing appended
+    assert(spark.read.parquet(s"$base/dd/keys").count() === 2)
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$base/dd/dups")))
+  }
+
   test("checked ingest with the real surrogate equals the unchecked stream") {
     val base = java.nio.file.Files.createTempDirectory("graft-streamok").toString
     val inDir = s"$base/in"
