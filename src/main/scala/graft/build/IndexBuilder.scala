@@ -2,7 +2,7 @@ package graft.build
 
 import graft.analysis.{Analyzers, TextAnalyzer}
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.json4s._
 import java.nio.file.{Files, Paths}
@@ -329,21 +329,20 @@ object IndexBuilder {
           ++ attrCols: _*)
   }
 
-  /** Target posting rows per docId group of [[buildAndSave]] (~10⁹): a
-    * group is the unit a rerun keeps or rebuilds, so it is sized as a job
-    * of 256 tasks — every corpus this repository builds is one group. */
-  private val TargetGroupRows: Long = TargetShuffleRows * 256
+  /** The build a group was written by. */
+  private[build] final case class BuildKey(analyzer: String, positions: Boolean, groups: Int)
 
-  /** What a group's manifest must match for a rerun to keep the group. */
-  private[build] final case class BuildKey(analyzer: String, positions: Boolean,
-                                           groups: Int, corpusRows: Long)
-
-  /** A published docId group: its build and its lineage counters, read
-    * off the group write's observations — rows read, tokens (Σ tf),
-    * posting rows, zero-token docs, and an order-free checksum (xor of
-    * xxhash64(term, docId, tf) over the written rows). */
+  /** A published docId group: its build, its input — rows read (corpus
+    * rows for [[buildAndSave]], posting rows for [[save]]) and their
+    * [[inputHash]] — and its lineage counters: tokens (Σ tf), posting
+    * rows, zero-token docs, and an order-free checksum (xor of
+    * xxhash64(term, docId, tf) over the written rows). All are read off
+    * the group write's observations. */
   private[build] final case class GroupManifest(group: Int, key: BuildKey, rows: Long,
-      tokens: Long, postings: Long, emptyDocs: Long, checksum: Long)
+      inputHash: Long, tokens: Long, postings: Long, emptyDocs: Long, checksum: Long)
+
+  /** Xor of xxhash64 over every column of `df`'s rows: order-free. */
+  private def inputHash(df: DataFrame): Column = bit_xor(xxhash64(df.columns.toSeq.map(col): _*))
 
   /** At-scale build: analyze → ONE salted shuffle → sorted parquet write
     * per docId group. Unlike build()+save(), this never materializes the
@@ -354,29 +353,35 @@ object IndexBuilder {
     *   1. a 1/`SampleRate` deterministic doc sample is analyzed to
     *      estimate hot terms (heavy-hitter sketch — a term whose sampled
     *      df clears threshold/SampleRate is salted) and the posting
-    *      volume, which sets the group count and shuffle partitions;
-    *   2. per group, the full narrow analyze feeds the salted, sorted
+    *      volume, which sets the shuffle partitions;
+    *   2. each group's input rows and [[inputHash]], which a rerun
+    *      compares with the group's manifest;
+    *   3. per group, the full narrow analyze feeds the salted, sorted
     *      postings write ([[writeGroups]]) — the one shuffle;
-    *   3. termStats aggregate over the WRITTEN columnar table, reading
+    *   4. termStats aggregate over the WRITTEN columnar table, reading
     *      only (term, tf); the global stats add up the group manifests.
     *
+    * One docId group: a group's write scans the whole input and keeps its
+    * docId residue, so G groups read the corpus G times, serially — more
+    * wait for that cost to be measured (ROADMAP item 7). Tests reach
+    * several groups through [[buildInGroups]].
+    *
     * Resume: `meta.json` is the one commit marker, removed before any
-    * table is written and written last. Rerunning the same call over a
-    * directory without it keeps every group whose manifest matches the
-    * build ([[BuildKey]] — the corpus's row count, not its rows: a rerun
-    * must pass the same corpus) and rebuilds the others. A fresh
-    * directory, or one holding a complete index, is built in full.
+    * table is written and written last. Rerunning over a directory
+    * without it keeps every group whose manifest matches the build
+    * ([[BuildKey]]) and the group's input, and rebuilds the others. A
+    * fresh directory, or one holding a complete index, is built in full.
     */
   def buildAndSave(corpusWithIds: DataFrame, analyzer: TextAnalyzer, dir: String,
                    hotDfThreshold: Long = 1000000L, writeCorpus: Boolean = true,
                    withPositions: Boolean = false): Index =
     buildInGroups(corpusWithIds, analyzer, dir, hotDfThreshold, writeCorpus, withPositions,
-      groups = None)
+      groups = 1)
 
-  /** [[buildAndSave]] with the group count given, not sampled (tests). */
+  /** [[buildAndSave]] over `groups` docId groups (tests). */
   private[build] def buildInGroups(corpusWithIds: DataFrame, analyzer: TextAnalyzer,
                                    dir: String, hotDfThreshold: Long, writeCorpus: Boolean,
-                                   withPositions: Boolean, groups: Option[Int]): Index = {
+                                   withPositions: Boolean, groups: Int): Index = {
     val spark = corpusWithIds.sparkSession
     val input = postingsInput(corpusWithIds)
 
@@ -393,7 +398,6 @@ object IndexBuilder {
       .filter(col("sdf") * SampleRate >= hotDfThreshold)
       .select("term").collect().map(_.getString(0)).toSet
     val estPostings = obsLong(sampleObs, "rows", 0L) * SampleRate
-    val nGroups = groups.getOrElse((estPostings / TargetGroupRows + 1).toInt)
 
     // Partition each group's salted shuffle by DATA VOLUME, not core
     // count: with partitions tied to parallelism, per-partition sort
@@ -404,20 +408,22 @@ object IndexBuilder {
     // corpus size, while the numShufflePartitions floor keeps every core
     // busy on small corpora.
     val n = math.max(spark.sessionState.conf.numShufflePartitions.toLong,
-                     estPostings / nGroups / TargetShuffleRows + 1).toInt
+                     estPostings / groups / TargetShuffleRows + 1).toInt
 
-    // the corpus row count (cached by DocIds.assign) keys the groups.
-    // Zero-token docs ride along as ONE null-term sentinel row each, so
-    // the exact Lucene docCount (docs with ≥1 term) is corpusRows −
-    // Σ emptyDocs — no distinct-docId shuffle over the full postings table
-    // (every term-partitioned partition sees most docIds, so a "distinct"
+    // each group's input rows and hash, its own job: an empty sample makes
+    // adaptive execution drop the sample job's observed nodes. Zero-token
+    // docs ride along as ONE null-term sentinel row each, so the exact
+    // Lucene docCount (docs with ≥1 term) is the corpus rows − Σ emptyDocs
+    // — no distinct-docId shuffle over the full postings table (every
+    // term-partitioned partition sees most docIds, so a "distinct"
     // shuffles nearly the whole docId column); sumTotalTermFreq = Σ tokens
     // (sentinels carry tf null, which sum skips).
-    val corpusRows = corpusWithIds.count()
-    val manifests = writeGroups(dir,
-      BuildKey(analyzer.name, withPositions, nGroups, corpusRows), input,
+    val inputs = input.groupBy(pmod(col("docId"), lit(groups)).cast("int"))
+      .agg(count(lit(1)), inputHash(input)).collect()
+      .map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2))).toMap
+    val manifests = writeGroups(dir, BuildKey(analyzer.name, withPositions, groups), input,
       analyzedPostings(_, analyzer, keepEmptyDocs = true, withPositions = withPositions),
-      hotTerms, n)
+      hotTerms, n, Some(g => inputs.getOrElse(g, (0L, 0L))))
 
     // ONE post-write job: the per-term stats table, aggregated from the
     // written columnar postings (reads only term + tf); no extra exchange
@@ -425,13 +431,13 @@ object IndexBuilder {
     val postings = readPostings(spark, dir)
     writeTermStats(postings.groupBy(col("term"))
       .agg(count(lit(1)).as("df"), sum(col("tf")).as("cf")), dir)
-    val docCount = corpusRows - manifests.map(_.emptyDocs).sum
+    val docCount = manifests.map(m => m.rows - m.emptyDocs).sum
     val stats =
       if (docCount == 0L) CorpusStats(0L, 0L)
       else CorpusStats(docCount, manifests.map(_.tokens).sum)
     if (writeCorpus) corpusWithIds.write.mode("overwrite").parquet(s"$dir/corpus")
 
-    writeMeta(dir, analyzer.name, stats, nGroups)
+    writeMeta(dir, analyzer.name, stats, groups)
 
     Index(corpusWithIds, postings, spark.read.parquet(s"$dir/termstats"),
       stats, analyzer.name)
@@ -440,17 +446,16 @@ object IndexBuilder {
   /** Persist an in-memory index in the layout of [[buildAndSave]], through
     * the same writer: one docId group of salted, term-sorted postings (a
     * term is hot when its df ≥ `hotDfThreshold`), term-sorted termstats,
-    * and `meta.json` last. Its key's corpus rows are the index's docCount.
-    */
+    * and `meta.json` last. It has nothing to resume: every group is
+    * written. */
   def save(index: Index, dir: String, hotDfThreshold: Long = 1000000L,
            writeCorpus: Boolean = true): Unit = {
     val hotTerms = index.termStats
       .filter(col("df") >= hotDfThreshold)
       .select("term").collect().map(_.getString(0)).toSet
-    writeGroups(dir,
-      BuildKey(index.analyzerName, index.hasPositions, 1, index.stats.docCount),
+    writeGroups(dir, BuildKey(index.analyzerName, index.hasPositions, 1),
       index.postings, identity, hotTerms,
-      index.corpus.sparkSession.sessionState.conf.numShufflePartitions)
+      index.corpus.sparkSession.sessionState.conf.numShufflePartitions, resumeFrom = None)
     // stored fields: when the corpus already lives in a source table the
     // rewrite is optional (Lucene must store fields; we have the table)
     if (writeCorpus) index.corpus.write.mode("overwrite").parquet(s"$dir/corpus")
@@ -461,27 +466,29 @@ object IndexBuilder {
   /** The one postings writer, shared by [[buildAndSave]] and [[save]]:
     * `input` rows fall into `key.groups` docId groups (docId mod groups);
     * each group's rows become posting rows through `toPostings`, are
-    * written ([[writePostings]]) to a staging directory, renamed to
-    * `postings/group=G`, and get `manifests/G.json`, whose counters are
+    * written ([[writePostings]]) to `postings/group=G`, and then get
+    * `manifests/G.json` — the group's publish marker — whose counters are
     * observations on the write itself: no extra job.
     *
-    * Without `meta.json` in `dir`, a group whose manifest matches `key`
-    * is kept as it is. Every other manifest and group directory is
-    * removed before anything is written: the manifests first, then
+    * With `resumeFrom` (group → its input rows and [[inputHash]]) and
+    * without `meta.json` in `dir`, a group whose manifest matches `key`
+    * and its input is kept as it is. Every other manifest and group
+    * directory is removed before anything is written: the manifests first, then
     * `meta.json` (a kill in between leaves a complete index that no rerun
     * resumes from). The caller writes `meta.json` last. Returns every
     * group's manifest, in group order. */
   private def writeGroups(dir: String, key: BuildKey, input: DataFrame,
                           toPostings: DataFrame => DataFrame, hotTerms: Set[String],
-                          n: Int): Seq[GroupManifest] = {
+                          n: Int, resumeFrom: Option[Int => (Long, Long)]): Seq[GroupManifest] = {
     val fs = new Path(dir).getFileSystem(input.sparkSession.sparkContext.hadoopConfiguration)
     val meta = new Path(s"$dir/meta.json")
-    def groupDir(g: Int) = new Path(s"$dir/postings/group=$g")
-    val kept =
-      if (fs.exists(meta)) Map.empty[Int, GroupManifest]
-      else (0 until key.groups).flatMap(readManifest(dir, _))
-        .filter(m => m.key == key && fs.exists(groupDir(m.group)))
+    def groupDir(g: Int) = s"$dir/postings/group=$g"
+    val kept = resumeFrom.filterNot(_ => fs.exists(meta)).fold(Map.empty[Int, GroupManifest]) {
+      in => (0 until key.groups).flatMap(readManifest(dir, _))
+        .filter(m => m.key == key && in(m.group) == ((m.rows, m.inputHash)) &&
+          fs.exists(new Path(groupDir(m.group))))
         .map(m => m.group -> m).toMap
+    }
     def prune(sub: String, name: Int => String): Unit = {
       val p = new Path(s"$dir/$sub")
       val keep = kept.keySet.map(name)
@@ -491,32 +498,28 @@ object IndexBuilder {
     prune("manifests", g => s"$g.json")
     fs.delete(meta, false)
     prune("postings", g => s"group=$g")
-    Seq("postings", "manifests").foreach(sub => fs.mkdirs(new Path(s"$dir/$sub")))
+    fs.mkdirs(new Path(s"$dir/manifests"))
 
-    val manifests = (0 until key.groups).map { g =>
+    (0 until key.groups).map { g =>
       kept.getOrElse(g, {
         val rowsObs = Observation()
         val writeObs = Observation()
-        val staged = s"$dir/_staging/group=$g"
         writePostings(
           toPostings(input.filter(pmod(col("docId"), lit(key.groups)) === g)
-              .observe(rowsObs, count(lit(1)).as("rows")))
+              .observe(rowsObs, count(lit(1)).as("rows"), inputHash(input).as("hash")))
             .observe(writeObs,
               sum(col("tf").cast("long")).as("tokens"),
               count(col("term")).as("postings"),
               count(when(col("term").isNull, lit(1))).as("emptyDocs"),
               bit_xor(xxhash64(col("term"), col("docId"), col("tf"))).as("checksum")),
-          hotTerms, n, staged)
-        require(fs.rename(new Path(staged), groupDir(g)), s"could not publish $staged")
-        val m = GroupManifest(g, key, obsLong(rowsObs, "rows", 0L),
+          hotTerms, n, groupDir(g))
+        val m = GroupManifest(g, key, obsLong(rowsObs, "rows", 0L), obsLong(rowsObs, "hash", 0L),
           obsLong(writeObs, "tokens", 0L), obsLong(writeObs, "postings", 0L),
           obsLong(writeObs, "emptyDocs", 0L), obsLong(writeObs, "checksum", 0L))
         writeManifest(dir, m)
         m
       })
     }
-    fs.delete(new Path(s"$dir/_staging"), true)
-    manifests
   }
 
   private def manifestPath(dir: String, g: Int): String = s"$dir/manifests/$g.json"
@@ -525,7 +528,7 @@ object IndexBuilder {
     graft.api.Json.writeFile(manifestPath(dir, m.group), JObject(
       "group" -> JInt(m.group), "analyzer" -> JString(m.key.analyzer),
       "positions" -> JBool(m.key.positions), "groups" -> JInt(m.key.groups),
-      "corpusRows" -> JLong(m.key.corpusRows), "rows" -> JLong(m.rows),
+      "rows" -> JLong(m.rows), "inputHash" -> JLong(m.inputHash),
       "tokens" -> JLong(m.tokens), "postings" -> JLong(m.postings),
       "emptyDocs" -> JLong(m.emptyDocs), "checksum" -> JLong(m.checksum)))
 
@@ -539,9 +542,9 @@ object IndexBuilder {
         case other      => sys.error(s"analyzer: $other")
       }
       GroupManifest(g,
-        BuildKey(analyzer, m \ "positions" == JBool(true), long("groups").toInt,
-          long("corpusRows")),
-        long("rows"), long("tokens"), long("postings"), long("emptyDocs"), long("checksum"))
+        BuildKey(analyzer, m \ "positions" == JBool(true), long("groups").toInt),
+        long("rows"), long("inputHash"), long("tokens"), long("postings"), long("emptyDocs"),
+        long("checksum"))
     }.toOption
 
   /** The saved postings layout: hash-distributed over `n` partitions on

@@ -21,7 +21,7 @@ class BuildSpec extends SparkSuite {
                       analyzer: TextAnalyzer = Analyzers.Icat,
                       withPositions: Boolean = false): Index =
     IndexBuilder.buildInGroups(c, analyzer, dir, hotDfThreshold = 50L, writeCorpus = true,
-      withPositions = withPositions, groups = Some(groups))
+      withPositions = withPositions, groups = groups)
 
   /** What a kill mid-build leaves: groups `gs` lost their outputs and
     * manifests, and no meta.json was written. */
@@ -82,6 +82,14 @@ class BuildSpec extends SparkSuite {
     assert(saved.postings.columns.toSeq === index.postings.columns.toSeq)
     assert(rows(saved.postings) === rows(index.postings))
     assert(saved.stats === index.stats)
+    // save's writer input is the index's postings: its one group read
+    // every posting row, and no zero-token sentinel
+    val postingRows = index.postings.count()
+    val Seq(m) = manifests(dir2, 1)
+    assert(m.rows === postingRows)
+    assert(m.postings === postingRows)
+    assert(m.tokens === index.stats.sumTotalTermFreq)
+    assert(m.emptyDocs === 0L)
   }
 
   test("meta.json round trip keeps a separator analyzer whose char is JSON syntax") {
@@ -174,7 +182,14 @@ class BuildSpec extends SparkSuite {
     assert((meta \ "groups") === JInt(2))
     assert((meta \ "sumTotalTermFreq") === JInt(ms.map(_.tokens).sum))
     assert(ms.map(_.key) === Seq.fill(2)(
-      IndexBuilder.BuildKey("sep_\"", positions = false, groups = 2, corpusRows = c.count())))
+      IndexBuilder.BuildKey("sep_\"", positions = false, groups = 2)))
+    // each group's input: its corpus rows and their hash
+    val input = IndexBuilder.postingsInput(c)
+    assert(ms.map(m => (m.rows, m.inputHash)) === (0 until 2).map { g =>
+      val r = input.filter(pmod(col("docId"), lit(2)) === g)
+        .agg(count(lit(1)), bit_xor(xxhash64(input.columns.toSeq.map(col): _*))).head()
+      (r.getLong(0), r.getLong(1))
+    })
     // the manifests' parsed key matches the build's: a rerun without the
     // commit marker keeps both groups
     val stamped = (0 until 2).map(stamps(dir, _))
@@ -235,6 +250,46 @@ class BuildSpec extends SparkSuite {
       rows(oneShot.termStats, Seq("term", "df", "cf")))
     assert(loaded.stats === oneShot.stats)
     assert(rows(loaded.corpus, Seq("docId", "text")) === rows(second, Seq("docId", "text")))
+    oneShot.unpersistAll(includeCorpus = false)
+  }
+
+  test("a killed save does not leak into a save of another index of the same docCount") {
+    val dir = tmp("graft-resave")
+    IndexBuilder.save(index, dir)
+    // what a commit killed after its group was published leaves
+    Files.delete(Paths.get(s"$dir/meta.json"))
+    // same docs, terms, tf and group count: only the attributes differ
+    val other = IndexBuilder.build(corpus.withColumn("role", lit("zz")), Analyzers.Icat)
+    assert(other.stats === index.stats)
+    IndexBuilder.save(other, dir)
+    val loaded = IndexBuilder.load(spark, dir)
+    assert(loaded.postings.filter(col("role") =!= "zz").isEmpty)
+    val cols = other.postings.columns.toSeq
+    assert(rows(loaded.postings, cols) === rows(other.postings, cols))
+    other.unpersistAll(includeCorpus = false)
+  }
+
+  test("a killed build rerun over an edited corpus of the same row count serves the edit") {
+    val dir = tmp("graft-edit")
+    IndexBuilder.buildAndSave(corpus, Analyzers.Icat, dir, hotDfThreshold = 50L)
+    Files.delete(Paths.get(s"$dir/meta.json"))
+    val edited = corpus.withColumn("text",
+      when(col("docId") === 5L, concat(col("text"), lit(" zebra"))).otherwise(col("text")))
+    IndexBuilder.buildAndSave(edited, Analyzers.Icat, dir, hotDfThreshold = 50L)
+    val loaded = IndexBuilder.load(spark, dir)
+    val oneShot = IndexBuilder.build(edited, Analyzers.Icat)
+    assert(loaded.postings.filter(col("term") === "zebra").count() === 1L)
+    assert(loaded.stats === oneShot.stats)
+    val cols = oneShot.postings.columns.toSeq
+    assert(rows(loaded.postings, cols) === rows(oneShot.postings, cols))
+    // over two groups, only the edited doc's group is rebuilt
+    val dir2 = tmp("graft-edit2")
+    grouped(corpus, dir2, 2)
+    val even = stamps(dir2, 0)
+    Files.delete(Paths.get(s"$dir2/meta.json"))
+    grouped(edited, dir2, 2)
+    assert(stamps(dir2, 0) === even)
+    assert(rows(IndexBuilder.load(spark, dir2).postings, cols) === rows(oneShot.postings, cols))
     oneShot.unpersistAll(includeCorpus = false)
   }
 
